@@ -11,14 +11,16 @@ arrow-udf-runtime/src/python/mod.rs:456-656):
 
 Spark realization — a genuinely distributed two-phase plan:
 
-  phase 1 (map side):  ``mapInPandas`` over input partitions; each partition
-      locally groups by key and folds its rows into one partial state per
-      key.  Partial states are pickled to a binary column, so only
-      ``O(groups)`` bytes shuffle — the same reason Spark's own hash
-      aggregate does map-side combine.  At 100 TB this is the difference
-      between shuffling the table and shuffling a few KB per key.
-  phase 2 (reduce side): ``groupBy(keys).applyInPandas`` merges partial
-      states with ``merge`` and applies ``finish``.
+  phase 1 (map side):  ``mapInArrow`` over input partitions
+      (:func:`build_multi_fold`); each partition locally groups by key and
+      folds its rows into one partial state per key.  Partial states are
+      pickled to a binary column, so only ``O(groups)`` bytes shuffle —
+      the same reason Spark's own hash aggregate does map-side combine.
+      At 100 TB this is the difference between shuffling the table and
+      shuffling a few KB per key.
+  phase 2 (reduce side): a native ``collect_list`` of the states per key,
+      then one vectorized UDF call per batch of groups that merges them
+      with ``merge`` and applies ``finish``.
 
 This exercises the reference's ``merge`` exactly the way its distributed
 hosts do (partial + final agg).  Pickle-typed opaque state
@@ -34,11 +36,16 @@ sliding-window retraction.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import pickle
 from dataclasses import dataclass
-from typing import Any, Callable, Iterator, Optional, Sequence
+from typing import Any, Callable, Optional, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,196 +56,169 @@ from ..plans.types import ExtField, parse_type
 __all__ = ["AggregateFunction", "udaf", "build_multi_fold"]
 
 
+#: phase-1 chunk caps: incoming Arrow batches (Spark sends 10k rows each)
+#: merge into chunks of at most this many rows or bytes before grouping,
+#: so each key is visited once per chunk rather than once per batch.  The
+#: byte cap bounds a task's fold memory to one chunk plus its sorted copy
+#: and pandas views (a few times 64 MiB).
+_CHUNK_ROWS = 1 << 18
+_CHUNK_BYTES = 64 << 20
+#: groups of at most this many rows fold through per-row ``accumulate``,
+#: larger ones through one ``accumulate_batch`` call.  Measured call costs
+#: (Xeon, 4 cores, pandas 2.2): a pandas slice plus ``accumulate_batch``
+#: costs ~65-70 us for sum_udaf and ~600 us for weighted_avg, against
+#: ~0.45 and ~0.77 us per row through ``accumulate``: break-even at ~150
+#: and ~800 rows.  Taking the lower keeps every group within a few
+#: hundred microseconds of its faster path.
+_ROW_FOLD_MAX = 128
+#: Arrow hash aggregate per built-in partial kind: over a chunk's rows
+#: (COUNT(*) counts the never-NULL group id column), then over the chunk
+#: partials of one group
+_BP_CHUNK_FN = {"count_star": "count", "sum_int": "sum"}
+_BP_MERGE_FN = {"count_star": "sum", "count": "sum", "sum_int": "sum"}
+#: stands in for NaN in Python group keys (NaN != NaN defeats dict lookup)
+_NAN_KEY = object()
+
+
 def build_multi_fold(
     udafs: Sequence["AggregateFunction"],
     by_n: int,
     arg_ns: Sequence[int],
-    bp_kinds: Sequence[tuple],
+    bp_kinds: Sequence[tuple] = (),
+    retract: bool = False,
 ):
-    """Map-side fold for the two-phase SQL rewrite (r11 perf, guide §2.3).
+    """The map-side phase-1 fold of both two-phase fronts: the
+    ``Registry.sql`` mapfold view and :meth:`AggregateFunction.agg`.
 
     Returns a ``mapInArrow`` function over a projection laid out as
     ``[group keys (by_n)] + [udaf-0 args] + ... + [one col per non-star
-    built-in partial]`` that emits ONE row per (group, input partition):
-    ``[keys] + [pickled state per udaf] + [built-in partial per bp]``.
+    built-in partial]``, plus one boolean ops column when ``retract``
+    (rows where it is true are retracted).  It emits ONE row per (group,
+    input partition): ``[keys] + [pickled state per udaf, __st{u}] +
+    [built-in partial per bp, __bp{j}]``.  The fold runs before any
+    exchange, so only O(groups x partitions) state rows shuffle.
 
-    This replaces the ``collect_list(named_struct(...)) -> __pfold``
-    phase-1 pipeline: the fold happens BEFORE any exchange, so only
-    O(groups x partitions) small state rows cross the shuffle instead of
-    every raw value re-packed as collected arrays — the scale-correct
-    shape — and the per-row JVM struct boxing + Python dict unpacking of
-    the pfold path disappears (measured ~0.6 s per 600k-row arm at
-    sf0.1).
+    Batches merge into chunks (``_CHUNK_ROWS`` / ``_CHUNK_BYTES``) and
+    each chunk is grouped once, vectorized: the key columns are
+    dictionary-encoded and a stable sort of the combined codes lays each
+    group out as one contiguous slice.  The slices' Python keys then map
+    to partition-wide groups with the equality of Spark's GROUP BY: NULL
+    is its own group, all NaNs form one group, and -0.0 joins 0.0.  Per
+    (group, chunk) the state then takes one ``accumulate_batch`` call on a
+    pandas slice, or per-row ``accumulate`` over Python values when the
+    group has at most ``_ROW_FOLD_MAX`` rows (the UDAF contract makes the
+    two equivalent).
 
     ``bp_kinds`` entries are ``(kind, col_idx_or_None)`` with kind one of
     ``count_star | count | sum_int | min | max``.  Built-in partials are
     restricted by the caller to shapes that are EXACT under this fold:
     COUNT is a row count; SUM over integral types wraps in int64 exactly
     like Spark's long partial sum (merge order is irrelevant modulo
-    2^64); MIN/MAX are order-free.  Order-sensitive partials (float/
-    decimal SUM, AVG) never reach this path.
+    2^64); MIN/MAX are order-free, with float NaN greater than every
+    value as in Spark.  Order-sensitive partials (float/decimal SUM, AVG)
+    never reach this path.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    n_udafs = len(udafs)
-    creates = [f.create_state for f in udafs]
-    accs = [f.accumulate for f in udafs]
-    acc_bs = [f.accumulate_batch for f in udafs]
-    arg_offs = []
-    off = by_n
-    for n in arg_ns:
-        arg_offs.append(off)
-        off += n
-    bp_base = off
+    # the closure captures the user callables only: an AggregateFunction
+    # may hold an unpicklable cached Spark UDF wrapper
+    fns = [
+        (f.create_state, f.accumulate, f.accumulate_batch, f.retract)
+        for f in udafs
+    ]
+    arg_offs = list(itertools.accumulate(arg_ns, initial=0))
+    bp_chunk = [_BP_CHUNK_FN.get(k, k) for k, _ci in bp_kinds]
+    bp_merge = [_BP_MERGE_FN.get(k, k) for k, _ci in bp_kinds]
 
     def fold(batches):
-        states: dict[tuple, list] = {}
-        # per-bp accumulators: count -> int, sum_int -> int64, min/max -> value
-        bps: dict[tuple, list] = {}
-        out_schema = None
-        for rb in batches:
-            if out_schema is None:
-                fields = [
-                    pa.field(rb.schema.field(i).name, rb.schema.field(i).type)
-                    for i in range(by_n)
-                ] + [pa.field(f"__st{i}", pa.binary()) for i in range(n_udafs)]
-                for j, (kind, ci) in enumerate(bp_kinds):
-                    if kind in ("count_star", "count", "sum_int"):
-                        t = pa.int64()
-                    else:  # min / max keep the input type
-                        t = rb.schema.field(ci).type
-                    fields.append(pa.field(f"__bp{j}", t))
-                out_schema = pa.schema(fields)
-            if rb.num_rows == 0:
-                continue
-            if by_n:
-                keys_pdf = pd.DataFrame(
-                    {f"c{i}": _exact_series(rb.column(i)) for i in range(by_n)}
-                )
-                groups = keys_pdf.groupby(
-                    [f"c{i}" for i in range(by_n)], dropna=False, sort=False
-                ).indices
-            else:
-                groups = {(): np.arange(rb.num_rows)}
-            # one vectorized gather per column per BATCH, then contiguous
-            # positional slices per group: per-group fancy indexing
-            # (.iloc[idx], ~400 µs a call) made high-cardinality keys
-            # pathological (~10k groups per 10k-row batch on the
-            # decorrelated per-partkey fold); a slice is ~5 µs
-            gkeys = list(groups)
-            idx_list = [groups[key] for key in gkeys]
-            order = np.concatenate(idx_list)
-            bounds = np.cumsum([0] + [len(ix) for ix in idx_list])
-            args_sorted = [
-                _exact_series(rb.column(i))
-                .take(order)
-                .reset_index(drop=True)
-                for i in range(by_n, bp_base)
-            ]
-            # python-value views for the tiny-group fast path: a pandas
-            # slice + accumulate_batch costs ~50-100 µs even on 1 row, so
-            # groups of a few rows fold through plain accumulate over
-            # pre-extracted python values (~2 µs/row) — the UDAF contract
-            # makes accumulate_batch ≡ repeated accumulate (pfold itself
-            # picks between them by availability)
-            args_lists = [s.tolist() for s in args_sorted]
-            order_pa = pa.array(order, pa.int64())
-            bp_sorted = {
-                j: rb.column(ci).take(order_pa)
-                for j, (kind, ci) in enumerate(bp_kinds)
-                if ci is not None
-            }
-            for gi, key in enumerate(gkeys):
-                k = key if isinstance(key, tuple) else (key,)
-                a0, a1 = int(bounds[gi]), int(bounds[gi + 1])
-                sts = states.get(k)
-                if sts is None:
-                    sts = [c() for c in creates]
-                    states[k] = sts
-                    bps[k] = [None] * len(bp_kinds)
-                for u in range(n_udafs):
-                    if acc_bs[u] is not None and a1 - a0 > 8:
-                        sts[u] = acc_bs[u](
-                            sts[u],
-                            *[
-                                args_sorted[arg_offs[u] - by_n + a].iloc[
-                                    a0:a1
-                                ]
-                                for a in range(arg_ns[u])
-                            ],
-                        )
-                    else:
-                        st = sts[u]
-                        for row in zip(
-                            *[
-                                args_lists[arg_offs[u] - by_n + a][a0:a1]
-                                for a in range(arg_ns[u])
-                            ]
-                        ):
-                            st = accs[u](
-                                st,
-                                *[None if _is_null(v) else v for v in row],
-                            )
-                        sts[u] = st
-                bacc = bps[k]
-                for j, (kind, ci) in enumerate(bp_kinds):
-                    if kind == "count_star":
-                        bacc[j] = (bacc[j] or 0) + (a1 - a0)
-                        continue
-                    valid = bp_sorted[j].slice(a0, a1 - a0).drop_null()
-                    if kind == "count":
-                        bacc[j] = (bacc[j] or 0) + len(valid)
-                    elif len(valid) == 0:
-                        continue  # all-NULL slice leaves the partial as is
-                    elif kind == "sum_int":
-                        s = np.add.reduce(
-                            valid.to_numpy(zero_copy_only=False).astype(
-                                np.int64, copy=False
-                            )
-                        )
-                        prev = bacc[j]
-                        bacc[j] = int(
-                            np.int64(s)
-                            if prev is None
-                            else np.int64(prev) + np.int64(s)
-                        )
-                    else:
-                        import pyarrow.compute as pc
+        index: dict[tuple, int] = {}  # python group key -> group id
+        states: list[list] = []  # group id -> one state per udaf
+        key_parts: list[list] = []  # Arrow keys of each chunk's new groups
+        bp_parts: list[tuple] = []  # (group ids, partials) per chunk
 
-                        mm = pc.min_max(valid)
-                        v = mm["min" if kind == "min" else "max"].as_py()
-                        prev = bacc[j]
-                        if prev is None:
-                            bacc[j] = v
-                        elif kind == "min":
-                            bacc[j] = v if v < prev else prev
-                        else:
-                            bacc[j] = v if v > prev else prev
-        if out_schema is None:  # empty partition, schema unknown
+        def fold_chunk(cols):
+            n = len(cols[0])
+            if by_n:
+                keys = cols[:by_n]
+                codes = _group_codes(keys)
+                order = np.argsort(codes, kind="stable")
+                codes = codes[order]
+                starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+                reps = [k.take(order[starts]) for k in keys]
+                pykeys = zip(*map(_key_values, reps))
+                order = pa.array(order)
+                cols = [c.take(order) for c in cols[by_n:]]
+            else:
+                starts, pykeys = [0], [()]
+            bounds = list(starts) + [n]
+            gids, new = [], []
+            for i, k in enumerate(pykeys):
+                g = index.get(k)
+                if g is None:
+                    g = index[k] = len(states)
+                    states.append([create() for create, *_ in fns])
+                    new.append(i)
+                gids.append(g)
+            if new and by_n:
+                new = pa.array(new, pa.int64())
+                key_parts.append([r.take(new) for r in reps])
+            spans = list(zip(gids, bounds, bounds[1:]))
+            ops = cols[arg_offs[-1]].to_pylist() if retract else None
+            for u, fn in enumerate(fns):
+                args = cols[arg_offs[u] : arg_offs[u + 1]]
+                _fold_spans(fn, u, args, ops, spans, states)
+            if bp_kinds:
+                row_gids = pa.array(np.repeat(gids, np.diff(bounds)), pa.int64())
+                bp_parts.append(
+                    _reduce_partials(
+                        row_gids,
+                        [
+                            row_gids if ci is None else cols[ci - by_n]
+                            for _k, ci in bp_kinds
+                        ],
+                        bp_chunk,
+                    )
+                )
+
+        schema = None
+        buf: list = []
+        rows = size = 0
+        for rb in batches:
+            schema = rb.schema
+            if rb.num_rows:
+                buf.append(rb)
+                rows += rb.num_rows
+                size += rb.nbytes
+            if rows >= _CHUNK_ROWS or size >= _CHUNK_BYTES:
+                fold_chunk(_merged_columns(buf))
+                buf, rows, size = [], 0, 0
+        if schema is None:  # empty partition, schema unknown
             return
-        keys = list(states)
-        cols = [
-            pa.array(
-                [_np_unbox(k[i]) for k in keys],
-                type=out_schema.field(i).type,
-            )
+        if buf:
+            fold_chunk(_merged_columns(buf))
+        fields = [
+            pa.field(schema.field(i).name, schema.field(i).type)
             for i in range(by_n)
         ]
-        for u in range(n_udafs):
-            cols.append(
-                pa.array(
-                    [pickle.dumps(states[k][u]) for k in keys], pa.binary()
-                )
-            )
-        for j in range(len(bp_kinds)):
-            cols.append(
-                pa.array(
-                    [bps[k][j] for k in keys],
-                    type=out_schema.field(by_n + n_udafs + j).type,
-                )
-            )
-        yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+        out = [
+            pa.concat_arrays([p[i] for p in key_parts])
+            if key_parts
+            else pa.array([], f.type)
+            for i, f in enumerate(fields)
+        ]
+        for u in range(len(fns)):
+            fields.append(pa.field(f"__st{u}", pa.binary()))
+            out.append(pa.array([pickle.dumps(st[u]) for st in states], pa.binary()))
+        merged = [None] * len(bp_kinds)
+        if bp_parts:
+            merged = _reduce_partials(
+                pa.concat_arrays([g for g, _p in bp_parts]),
+                [pa.concat_arrays([p[j] for _g, p in bp_parts]) for j in range(len(bp_kinds))],
+                bp_merge,
+            )[1]
+        for j, (kind, ci) in enumerate(bp_kinds):
+            t = schema.field(ci).type if kind in ("min", "max") else pa.int64()
+            fields.append(pa.field(f"__bp{j}", t))
+            out.append(pa.array([], t) if merged[j] is None else merged[j].cast(t))
+        yield pa.RecordBatch.from_arrays(out, schema=pa.schema(fields))
 
     return fold
 
@@ -255,8 +235,6 @@ def _is_null(v) -> bool:
 
 #: Arrow int type id -> pandas masked dtype, for exact null-bearing batches
 def _nullable_int_dtype(t):
-    import pyarrow as pa
-
     return {
         pa.int8(): pd.Int8Dtype(),
         pa.int16(): pd.Int16Dtype(),
@@ -275,23 +253,109 @@ def _exact_series(col) -> pd.Series:
     int64-with-NULLs becomes masked ``Int64`` (all 64 bits intact) rather
     than float64, whose 53-bit mantissa silently corrupts large values
     (e.g. KMV hashes) before the aggregate ever sees them (ADVICE r4)."""
-    import pyarrow as pa
-
     if col.null_count and pa.types.is_integer(col.type):
         return col.to_pandas(types_mapper=_nullable_int_dtype)
     return col.to_pandas()
 
 
-def _np_unbox(v):
-    """numpy/pandas scalar group key -> plain python (or None) for pa.array."""
-    if v is None:
-        return None
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    return v.item() if hasattr(v, "item") else v
+def _merged_columns(batches) -> list:
+    """Record batches -> one contiguous Arrow array per column."""
+    t = pa.Table.from_batches(batches).combine_chunks()
+    return [c.chunk(0) for c in t.columns]
+
+
+def _group_codes(keys) -> np.ndarray:
+    """One int64 code per row, equal exactly where every key column is
+    equal (NULL equal to NULL, as in GROUP BY)."""
+    code, card = np.zeros(len(keys[0]), np.int64), 1
+    for k in keys:
+        enc = pc.dictionary_encode(k, null_encoding="encode")
+        n = len(enc.dictionary)
+        if card * n >= 1 << 62:  # re-densify before the product overflows
+            code = np.unique(code, return_inverse=True)[1]
+            card = int(code.max()) + 1
+        code = code * n + enc.indices.to_numpy()
+        card *= n
+    return code
+
+
+def _key_values(col) -> list:
+    """Python values of a key column, equal and hashed alike where
+    Spark's GROUP BY equates them (-0.0 == 0.0 holds in Python)."""
+    vals = col.to_pylist()
+    if pa.types.is_floating(col.type):
+        return [_NAN_KEY if v != v else v for v in vals]
+    return vals
+
+
+def _py_values(col, series: pd.Series) -> list:
+    """Python values of an argument column with NULL (and float NaN) as
+    None, checked per value only when the column has any."""
+    vals = series.tolist()
+    if col.null_count or (
+        pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py()
+    ):
+        return [None if _is_null(v) else v for v in vals]
+    return vals
+
+
+def _fold_spans(fn, u, args, ops, spans, states) -> None:
+    """Fold one chunk's group-sorted argument columns into state ``u`` of
+    each ``(group id, start, end)`` span: one ``accumulate_batch`` call
+    for a group above ``_ROW_FOLD_MAX`` rows, per-row ``accumulate`` (or
+    ``retract`` where ``ops`` is true) otherwise."""
+    _create, acc, acc_b, ret = fn
+    if ops is not None:
+        acc_b = None  # mixed accumulate/retract folds row by row
+    series = [_exact_series(a) for a in args]
+    rows = None
+    if acc_b is None or any(a1 - a0 <= _ROW_FOLD_MAX for _g, a0, a1 in spans):
+        rows = [_py_values(a, s) for a, s in zip(args, series)]
+    # functools.reduce loops in C: twice as fast as a Python loop here
+    step = acc if len(args) == 1 else (lambda s, row: acc(s, *row))
+    for g, a0, a1 in spans:
+        st = states[g]
+        if acc_b is not None and a1 - a0 > _ROW_FOLD_MAX:
+            st[u] = acc_b(st[u], *[s.iloc[a0:a1] for s in series])
+        elif ops is not None:
+            s = st[u]
+            for row, op in zip(zip(*[r[a0:a1] for r in rows]), ops[a0:a1]):
+                s = ret(s, *row) if op else acc(s, *row)
+            st[u] = s
+        elif len(args) == 1:
+            st[u] = functools.reduce(step, rows[0][a0:a1], st[u])
+        else:
+            st[u] = functools.reduce(step, zip(*[r[a0:a1] for r in rows]), st[u])
+
+
+def _reduce_partials(gid, cols, fns) -> tuple:
+    """Reduce built-in partial columns per group id with Arrow's hash
+    aggregates, one of ``count | sum | min | max`` per column.  Returns
+    the distinct ids ascending and one array per column in that order.
+    Float MIN/MAX follow Spark's ordering, where NaN is greater than every
+    value (Arrow's skip NaN)."""
+    data, aggs, nan_cols = {"__g": gid}, [], set()
+    for j, (c, f) in enumerate(zip(cols, fns)):
+        if f in ("min", "max") and pa.types.is_floating(c.type):
+            nan = pc.is_nan(c)
+            data[f"n{j}"] = nan
+            aggs.append((f"n{j}", "any"))
+            nan_cols.add(j)
+            c = pc.if_else(nan, pa.scalar(None, c.type), c)
+        data[f"c{j}"] = c
+        aggs.append((f"c{j}", f))
+    t = pa.table(data).group_by("__g", use_threads=False).aggregate(aggs)
+    t = t.sort_by("__g")
+    out = []
+    for j, f in enumerate(fns):
+        v = t[f"c{j}_{f}"]
+        if j in nan_cols:
+            has_nan = t[f"n{j}_any"]
+            if f == "min":  # NaN only when the group has nothing else
+                has_nan = pc.and_(has_nan, pc.is_null(v))
+            v = pc.if_else(has_nan, pa.scalar(float("nan"), v.type), v)
+        out.append(v.combine_chunks())
+    return t["__g"].combine_chunks(), out
 
 
 @dataclass
@@ -533,108 +597,6 @@ class AggregateFunction:
         return pandas_udf(mergevec_fn, returnType=self.result_field.dtype)
 
     # ------------------------------------------------------------------
-    def _fold_partition(
-        self, by_n: int, arg_n: int, ops_col: bool
-    ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-        """Phase-1 worker: partition -> one pickled partial state per key."""
-        create, acc, ret = self.create_state, self.accumulate, self.retract
-        acc_batch = self.accumulate_batch
-
-        if acc_batch is not None and not ops_col:
-
-            def fold_vec(batches):
-                """Arrow-native phase 1 (fed by ``mapInArrow``): int columns
-                with NULLs convert to pandas masked ``Int64`` — exact to all
-                64 bits — instead of mapInPandas' lossy float64 coercion
-                (which silently destroys hash/int bits above 2^53)."""
-                import numpy as np
-                import pyarrow as pa
-
-                states: dict[tuple, Any] = {}
-                out_schema = None
-                for rb in batches:
-                    if out_schema is None:
-                        out_schema = pa.schema(
-                            [
-                                pa.field(f"k{i}", rb.schema.field(i).type)
-                                for i in range(by_n)
-                            ]
-                            + [pa.field("state", pa.binary())]
-                        )
-                    if rb.num_rows == 0:
-                        continue
-                    arg_series = [
-                        _exact_series(rb.column(by_n + i)) for i in range(arg_n)
-                    ]
-                    if by_n:
-                        # _exact_series for KEYS too: int64 keys in a
-                        # NULL-bearing batch must not round-trip through
-                        # float64 (2^53+1 and 2^53 would merge into one
-                        # group under a silently-corrupted key)
-                        keys_pdf = pd.DataFrame(
-                            {f"c{i}": _exact_series(rb.column(i)) for i in range(by_n)}
-                        )
-                        groups = keys_pdf.groupby(
-                            [f"c{i}" for i in range(by_n)], dropna=False, sort=False
-                        ).indices
-                    else:
-                        groups = {(): np.arange(rb.num_rows)}
-                    for key, idx in groups.items():
-                        k = key if isinstance(key, tuple) else (key,)
-                        st = states.get(k)
-                        if st is None and k not in states:
-                            st = create()
-                        states[k] = acc_batch(
-                            st,
-                            *[
-                                s.iloc[idx].reset_index(drop=True)
-                                for s in arg_series
-                            ],
-                        )
-                if out_schema is None:  # empty partition, schema unknown
-                    return
-                cols = [
-                    pa.array(
-                        [_np_unbox(k[i]) for k in states],
-                        type=out_schema.field(i).type,
-                    )
-                    for i in range(by_n)
-                ] + [pa.array([pickle.dumps(s) for s in states.values()], pa.binary())]
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
-
-            return fold_vec
-
-        def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            states: dict[tuple, Any] = {}
-            key_rows: dict[tuple, tuple] = {}
-            for pdf in batches:
-                cols = [pdf.iloc[:, i].tolist() for i in range(pdf.shape[1])]
-                n = len(pdf)
-                for r in range(n):
-                    key = tuple(cols[i][r] for i in range(by_n))
-                    args = [
-                        None if _is_null(v) else v
-                        for v in (cols[by_n + i][r] for i in range(arg_n))
-                    ]
-                    st = states.get(key)
-                    if st is None and key not in states:
-                        st = create()
-                        key_rows[key] = key
-                    if ops_col:
-                        is_retract = bool(cols[by_n + arg_n][r])
-                        st = ret(st, *args) if is_retract else acc(st, *args)
-                    else:
-                        st = acc(st, *args)
-                    states[key] = st
-            out = [key_rows[k] + (pickle.dumps(s),) for k, s in states.items()]
-            names = [f"k{i}" for i in range(by_n)] + ["state"]
-            yield pd.DataFrame(out, columns=names) if out else pd.DataFrame(
-                columns=names
-            )
-
-        return fold
-
-    # ------------------------------------------------------------------
     def agg(
         self,
         df: DataFrame,
@@ -644,43 +606,38 @@ class AggregateFunction:
     ) -> DataFrame:
         """Distributed grouped aggregation: ``by`` key cols, ``args`` inputs."""
         by = list(by)
-        args = list(args)
-        sel = by + args + ([_ops_col] if _ops_col else [])
-        proj = df.select(*sel)
-
-        phase1_schema = T.StructType(
-            [T.StructField(f"k{i}", df.schema[c].dataType) for i, c in enumerate(by)]
-            + [T.StructField("state", T.BinaryType())]
-        )
-        fold = self._fold_partition(len(by), len(args), _ops_col is not None)
-        if self.accumulate_batch is not None and _ops_col is None:
-            # Arrow-native phase 1: exact nullable-int batches (no float64
-            # coercion of NULL-bearing int columns) and one less conversion
-            partials = proj.mapInArrow(fold, schema=phase1_schema)
-        else:
-            partials = proj.mapInPandas(fold, schema=phase1_schema)
-
         knames = [f"k{i}" for i in range(len(by))]
+        proj = df.select(
+            *[F.col(c).alias(k) for c, k in zip(by, knames)],
+            *args,
+            *([_ops_col] if _ops_col else []),
+        )
+        phase1_schema = T.StructType(
+            [T.StructField(k, df.schema[c].dataType) for c, k in zip(by, knames)]
+            + [T.StructField("__st0", T.BinaryType())]
+        )
+        # phase 1 over Arrow batches: exact nullable ints (no float64
+        # coercion of NULL-bearing int columns, which destroys bits above
+        # 2^53) and one conversion less than mapInPandas
+        fold = build_multi_fold(
+            [self], len(by), [len(args)], retract=_ops_col is not None
+        )
+        partials = proj.mapInArrow(fold, schema=phase1_schema)
         # merge+finish VECTORIZED (r10 perf): a native collect_list of the
         # O(partitions)-bounded pickled states per key (map-side partial,
         # codegen) and ONE scalar pandas UDF invocation per Arrow batch of
         # groups — applyInPandas called Python once per group, which at
         # high key cardinality is pure per-call overhead.  State merge
         # order stays arbitrary (UDAF contract: commutative+associative).
-        result = (
+        return (
             partials.groupBy(*knames)
-            .agg(F.collect_list("state").alias("__aus_states"))
+            .agg(F.collect_list("__st0").alias("__aus_states"))
             .select(
-                *knames,
+                *[F.col(k).alias(c) for k, c in zip(knames, by)],
                 self.as_spark_mergevec()(F.col("__aus_states")).alias(
                     self.sig.name
                 ),
             )
-        )
-        # restore user-facing key column names
-        renames = dict(zip(knames, by))
-        return result.select(
-            *[F.col(k).alias(renames[k]) for k in knames], F.col(self.sig.name)
         )
 
     def agg_all(self, df: DataFrame, args: Sequence[str]) -> DataFrame:

@@ -12,12 +12,18 @@ from __future__ import annotations
 
 import itertools
 import re
+import threading
 import warnings
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any, Optional
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
+
+
+#: per thread, the names of the mapfold views the running ``Registry.sql``
+#: call registered (None outside a call)
+_FOLD_VIEWS = threading.local()
 
 
 def _split_top_level(text: str) -> list[str]:
@@ -390,29 +396,37 @@ class Registry:
         if not used:
             return spark.sql(query)
         self.register_sql(spark)
-        rewritten = self._rewrite_two_phase(query, used, spark=spark)
-        if rewritten is None:
-            if self._strict_sql:
-                raise ValueError(
-                    "query shape not rewritable to two-phase aggregation "
-                    "and strict SQL mode refuses the single-phase "
-                    "GROUPED_AGG fallback (every row of a group on one "
-                    "worker). Simplify the query to a provable shape "
-                    "(single GROUP BY block, plain column group keys, "
-                    "no subqueries in the select list / HAVING / ORDER "
-                    "BY), or use the DataFrame "
-                    "AggregateFunction.agg(df, by=..., args=...) path, "
-                    "or re-register with register_sql(strict=False)."
-                )
-            warnings.warn(
-                "query shape not rewritable to two-phase aggregation; "
-                "running single-phase GROUPED_AGG (every row of a group "
-                "moves to one worker)",
-                RuntimeWarning,
-                stacklevel=2,
+        # mapfold views the rewrite registers are dropped once the query
+        # is analyzed: the analyzed plan keeps the view's subtree inline
+        created = _FOLD_VIEWS.names = []
+        try:
+            rewritten = self._rewrite_two_phase(query, used, spark=spark)
+            if rewritten is not None:
+                return spark.sql(rewritten)
+        finally:
+            _FOLD_VIEWS.names = None
+            for name in created:
+                spark.catalog.dropTempView(name)
+        if self._strict_sql:
+            raise ValueError(
+                "query shape not rewritable to two-phase aggregation "
+                "and strict SQL mode refuses the single-phase "
+                "GROUPED_AGG fallback (every row of a group on one "
+                "worker). Simplify the query to a provable shape "
+                "(single GROUP BY block, plain column group keys, "
+                "no subqueries in the select list / HAVING / ORDER "
+                "BY), or use the DataFrame "
+                "AggregateFunction.agg(df, by=..., args=...) path, "
+                "or re-register with register_sql(strict=False)."
             )
-            return spark.sql(query)
-        return spark.sql(rewritten)
+        warnings.warn(
+            "query shape not rewritable to two-phase aggregation; "
+            "running single-phase GROUPED_AGG (every row of a group "
+            "moves to one worker)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return spark.sql(query)
 
     def _rewrite_two_phase(
         self, query: str, used: set[str], spark: "SparkSession | None" = None
@@ -1071,6 +1085,9 @@ class Registry:
             )
             fields = df_src.schema.fields
             by_n = len(g_names)
+            nested = (T.ArrayType, T.MapType, T.StructType)
+            if any(isinstance(f.dataType, nested) for f in fields[:by_n]):
+                return None  # the fold groups atomic keys only
             bp_base = by_n + sum(arg_ns)
             int_t = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
             mm_t = int_t + (
@@ -1120,12 +1137,19 @@ class Registry:
             # repartition-to-cores here was A/B-measured SLOWER locally
             # (hi-card 5.4 s vs 4.6 s without): it multiplies the
             # (group x partition) state count by cores/width and pays an
-            # exchange of every raw row — the per-group cost is bounded by
-            # the vectorized fold instead (see build_multi_fold).
+            # exchange of every raw row.  The per-group cost is bounded in
+            # the fold instead: it merges batches into chunks of up to
+            # 256k rows / 64 MiB (the per-task memory cap), groups each
+            # chunk once with a vectorized sort, and so pays Python once
+            # per (group, chunk), not per (group, 10k-row batch); see
+            # build_multi_fold.
             fold = build_multi_fold(udafs, by_n, arg_ns, kinds)
             view_df = df_src.mapInArrow(fold, schema=T.StructType(out_fields))
             name = f"__aus_fold_{next(self._MAPFOLD_SEQ)}"
             view_df.createOrReplaceTempView(name)
+            names = getattr(_FOLD_VIEWS, "names", None)
+            if names is not None:
+                names.append(name)
             return name
         except Exception:
             return None  # unprovable — pure-SQL pipeline handles it

@@ -271,6 +271,36 @@ def test_bare_sql_agg_rewritten_two_phase(spark, sf_dir):
     _assert_two_phase_phase1(p, "count_udaf")
 
 
+def _under(plan: str, node: str) -> str:
+    """The plan-tree lines below each ``node`` line (its subtrees)."""
+    import re
+
+    out, depth = [], None
+    for line in plan.splitlines():
+        m = re.search(r"[A-Za-z]", line)
+        if m is None:
+            continue
+        d = m.start()
+        if depth is not None and d > depth:
+            out.append(line)
+            continue
+        depth = d if node in line else None
+    return "\n".join(out)
+
+
+def test_two_phase_fold_runs_before_any_exchange(spark, sf_dir):
+    """Both two-phase fronts fold map-side: the MapInArrow fold of the
+    Registry.sql rewrite and of AggregateFunction.agg reads the scan with
+    no Exchange below it, so only pickled states shuffle."""
+    from arrow_udf_spark.queries import QUERIES
+
+    for name in ("sql_agg_bare_two_phase", "sum_udaf"):
+        p = _plan(QUERIES[name](spark, sf_dir))
+        below = _under(p, "MapInArrow")
+        assert "Scan" in below, (name, p)
+        assert "Exchange" not in below, (name, p)
+
+
 def test_registry_sql_passthrough_without_aggs(spark, sf_dir):
     """Queries with no registered aggregate run unchanged through the
     scale-safe front door."""

@@ -525,3 +525,93 @@ def test_pivot_matches_native_builtin(spark):
     plan = ours._jdf.queryExecution().executedPlan().toString()
     assert "sum_udaf__mergevec" in plan
     assert "MapInArrow" in plan or "sum_udaf__pfold" in plan
+
+
+def _mapfold_vs_native(spark, rows, schema, select):
+    """Run ``select`` (``{A}`` marks the aggregate: sum_udaf on our side,
+    native SUM on Spark's) through Registry.sql and natively; return both
+    row sets, asserting ours took the map-side fold."""
+    import math
+
+    from arrow_udf_spark import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(rows, schema).createOrReplaceTempView("mf_ref")
+    ours = GLOBAL.sql(spark, select.format(A="sum_udaf"))
+    plan = ours._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+
+    def norm(r):
+        return tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
+                     for v in r)
+
+    return (
+        sorted(map(norm, ours.collect()), key=repr),
+        sorted(map(norm, spark.sql(select.format(A="SUM")).collect()), key=repr),
+    )
+
+
+def test_mapfold_null_nan_zero_keys_match_native(spark):
+    """Double keys NULL and NaN are separate groups; -0.0 joins 0.0."""
+    nan = float("nan")
+    ours, native = _mapfold_vs_native(
+        spark,
+        [(None, 1), (nan, 2), (None, 4), (nan, 8), (0.0, 16), (-0.0, 32)],
+        "k double, v bigint",
+        "SELECT k, {A}(v) AS s, COUNT(*) AS c FROM mf_ref GROUP BY k",
+    )
+    assert ours == native
+    assert len(ours) == 3
+
+
+def test_mapfold_float_min_max_match_native(spark):
+    """Float MIN/MAX partials order NaN above every value, as Spark does:
+    MAX over data with NaN is NaN, MIN is NaN only without other values."""
+    nan = float("nan")
+    ours, native = _mapfold_vs_native(
+        spark,
+        [("a", 1, 1.0), ("a", 2, nan), ("a", 4, 3.0), ("b", 8, nan),
+         ("b", 16, None), ("c", 32, None), ("d", 64, -2.5), ("d", 1, 7.0)],
+        "g string, v bigint, x double",
+        "SELECT g, {A}(v) AS s, MAX(x) AS mx, MIN(x) AS mn, "
+        "MAX(CAST(x AS FLOAT)) AS mxf, MIN(CAST(x AS FLOAT)) AS mnf "
+        "FROM mf_ref GROUP BY g",
+    )
+    assert ours == native
+
+
+def test_registry_sql_drops_fold_views(spark):
+    """The mapfold view of each rewrite is dropped once the query is
+    analyzed; the returned DataFrame still runs after the drop."""
+    from arrow_udf_spark import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame([("a", 1), ("a", 2), ("b", 5)], "g string, v bigint") \
+        .createOrReplaceTempView("mf_views")
+    before = {t.name for t in spark.catalog.listTables()}
+    dfs = [
+        GLOBAL.sql(spark, "SELECT g, sum_udaf(v) AS s FROM mf_views GROUP BY g")
+        for _ in range(3)
+    ]
+    assert {t.name for t in spark.catalog.listTables()} == before
+    for df in dfs:
+        assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+        assert sorted(map(tuple, df.collect())) == [("a", 3), ("b", 5)]
+
+
+def test_nested_group_key_falls_back_to_sql_pipeline(spark):
+    """The fold groups atomic keys only: a struct group key takes the
+    pure-SQL phase 1 and still matches native GROUP BY."""
+    from arrow_udf_spark import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(
+        [((1, "a"), 1), ((1, "a"), 2), ((2, "b"), 4), (None, 8)],
+        "s struct<i: int, t: string>, v bigint",
+    ).createOrReplaceTempView("mf_nested")
+    q = "SELECT s, {A}(v) AS t FROM mf_nested GROUP BY s"
+    ours = GLOBAL.sql(spark, q.format(A="sum_udaf"))
+    assert "MapInArrow" not in ours._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(str, ours.collect())) == sorted(
+        map(str, spark.sql(q.format(A="SUM")).collect())
+    )
