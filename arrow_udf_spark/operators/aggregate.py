@@ -265,27 +265,49 @@ def _merged_columns(batches) -> list:
 
 
 def _group_codes(keys) -> np.ndarray:
-    """One int64 code per row, equal exactly where every key column is
-    equal (NULL equal to NULL, as in GROUP BY)."""
+    """One int64 code per row, equal where every key column is equal
+    (NULL equal to NULL, as in GROUP BY).  Atomic columns are Arrow
+    dictionary-encoded; struct and array columns are coded from their
+    Python key values, which Arrow cannot encode."""
     code, card = np.zeros(len(keys[0]), np.int64), 1
     for k in keys:
-        enc = pc.dictionary_encode(k, null_encoding="encode")
-        n = len(enc.dictionary)
+        if pa.types.is_nested(k.type):
+            ids: dict = {}
+            idx = np.fromiter(
+                (ids.setdefault(v, len(ids)) for v in _key_values(k)),
+                np.int64,
+                len(k),
+            )
+            n = len(ids)
+        else:
+            enc = pc.dictionary_encode(k, null_encoding="encode")
+            n, idx = len(enc.dictionary), enc.indices.to_numpy()
         if card * n >= 1 << 62:  # re-densify before the product overflows
             code = np.unique(code, return_inverse=True)[1]
             card = int(code.max()) + 1
-        code = code * n + enc.indices.to_numpy()
+        code = code * n + idx
         card *= n
     return code
 
 
 def _key_values(col) -> list:
-    """Python values of a key column, equal and hashed alike where
-    Spark's GROUP BY equates them (-0.0 == 0.0 holds in Python)."""
+    """Hashable Python values of a key column, equal and hashed alike
+    where Spark's GROUP BY equates them, inside struct and array values
+    too: NaN equals NaN, and -0.0 == 0.0 already holds in Python."""
     vals = col.to_pylist()
-    if pa.types.is_floating(col.type):
-        return [_NAN_KEY if v != v else v for v in vals]
+    if pa.types.is_floating(col.type) or pa.types.is_nested(col.type):
+        return [_norm_key(v) for v in vals]
     return vals
+
+
+def _norm_key(v):
+    if isinstance(v, float):
+        return _NAN_KEY if v != v else v
+    if isinstance(v, dict):  # struct: field order is fixed by the type
+        return tuple(map(_norm_key, v.values()))
+    if isinstance(v, list):
+        return tuple(map(_norm_key, v))
+    return v
 
 
 def _py_values(col, series: pd.Series) -> list:
@@ -405,7 +427,7 @@ class AggregateFunction:
             "a raw spark.sql() call evaluates this without partial "
             "aggregation (every row of a group moves to one worker). Run SQL "
             "through Registry.sql(spark, query) — it rewrites bare aggregate "
-            "calls to the salted two-phase __partial/__merge plan — or use "
+            "calls to the two-phase map-side fold + merge plan — or use "
             "the DataFrame AggregateFunction.agg(df, by=..., args=...) path.",
             RuntimeWarning,
             stacklevel=2,
@@ -514,57 +536,6 @@ class AggregateFunction:
         )
 
     # ------------------------------------------------------------------
-    def as_spark_pfold(self):
-        """SQL two-phase surface, phase-1 VECTORIZED form (r10 perf): a
-        scalar pandas UDF over ``collect_list(named_struct(...))`` rows.
-
-        The GROUPED_AGG ``__partial`` surface costs one Python UDF
-        invocation per (group, salt) — on a high-cardinality key that is
-        O(K·S) calls of ~1 row each, pure per-call overhead (measured:
-        sql_agg_correlated_two_phase's inner per-partkey agg, see
-        OPTIMIZATION_r10.md).  Here the grouping itself runs as a NATIVE
-        ``collect_list`` aggregate (map-side partial_collect_list, whole
-        stage codegen) and Python sees whole Arrow batches of groups —
-        one invocation per ~10k groups instead of one per group.  The
-        fold inside is the same accumulate/accumulate_batch the
-        ``__partial`` path runs, so the state stream is semantically
-        identical; struct-wrapping the args preserves NULLs
-        (``collect_list`` drops bare NULL elements, never structs).
-
-        NOT memoized on the instance: a used pandas_udf wrapper holds a
-        JVM handle, and streaming closures (streaming_running_agg)
-        pickle the AggregateFunction — a cached wrapper attribute makes
-        the instance unpicklable (found by the r10 replica sweep).
-        """
-        from pyspark.sql.functions import pandas_udf
-
-        create, acc, acc_b = self.create_state, self.accumulate, self.accumulate_batch
-
-        def pfold_fn(vals: pd.Series) -> pd.Series:
-            out = []
-            for arr in vals:
-                st = create()
-                if arr is not None and len(arr) > 0:
-                    ks = [f"a{i}" for i in range(len(arr[0]))]
-                    if acc_b is not None:
-                        st = acc_b(
-                            st, *[pd.Series([r[k] for r in arr]) for k in ks]
-                        )
-                    else:
-                        for r in arr:
-                            st = acc(
-                                st,
-                                *[
-                                    None if _is_null(r[k]) else r[k]
-                                    for k in ks
-                                ],
-                            )
-                out.append(pickle.dumps(st))
-            return pd.Series(out, dtype=object)
-
-        pfold_fn.__name__ = f"{self.sig.name}__pfold"
-        return pandas_udf(pfold_fn, returnType=T.BinaryType())
-
     def as_spark_mergevec(self):
         """Phase-2 VECTORIZED form (r10 perf): scalar pandas UDF over
         ``collect_list(<pickled state>)`` rows — merge + finish for a whole
@@ -575,7 +546,10 @@ class AggregateFunction:
         the GROUPED_AGG/applyInPandas surfaces — the UDAF contract makes
         merge commutative+associative, so the result is unchanged.
 
-        NOT memoized on the instance (see :meth:`as_spark_pfold`)."""
+        NOT memoized on the instance: a used pandas_udf wrapper holds a
+        JVM handle, and streaming closures (streaming_running_agg)
+        pickle the AggregateFunction — a cached wrapper attribute makes
+        the instance unpicklable."""
         from pyspark.sql.functions import pandas_udf
 
         merge, finish = self.merge, self.finish

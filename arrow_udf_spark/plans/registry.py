@@ -93,19 +93,6 @@ class Registry:
     #: GROUPED_AGG SQL surface is never registered and unprovable query
     #: shapes raise instead of falling back to it
     _strict_sql: bool = False
-    #: partial-stage salt granularity for the two-phase SQL rewrite.
-    #: None (default) salts by ``spark_partition_id()`` — one partial
-    #: state per (group, input partition), maximal hot-key spread.  An
-    #: integer S salts by ``pmod(spark_partition_id(), S)`` instead: a
-    #: hot key still folds S ways, but the partial stage creates at most
-    #: S (not P) states per group — the lever for HIGH-CARDINALITY group
-    #: keys on small-rows-per-key data, where O(K*P) pandas GROUPED_AGG
-    #: invocations of ~1 row each are pure per-call overhead (measured:
-    #: sql_agg_correlated_two_phase's inner per-partkey agg at sf0.1,
-    #: ~20k keys x 32 partitions, ~30 rows/key — see PLANS.md).  The
-    #: result is provably identical for ANY S: merge is associative and
-    #: commutative over partial states by the UDAF contract.
-    salt_buckets: "int | None" = None
     #: register_sql memo (r11 perf): a repeat registration of the full
     #: catalog costs ~0.5 s of py4j round trips per call, and every
     #: two-phase SQL query used to pay it inside the timed region.  Keyed
@@ -230,19 +217,15 @@ class Registry:
                     spark.udf.register(
                         f"{sql_name}__merge", f.as_spark_grouped_agg_merge()
                     )
-                    # vectorized pair the two-phase rewrite emits (r10
-                    # perf): native collect_list grouping + batched scalar
-                    # fold/merge — one Python call per Arrow batch of
-                    # groups instead of one GROUPED_AGG call per group
-                    spark.udf.register(
-                        f"{sql_name}__pfold", f.as_spark_pfold()
-                    )
+                    # batched merge the two-phase rewrite emits over the
+                    # map-side fold's states: one Python call per Arrow
+                    # batch of groups instead of one GROUPED_AGG call per
+                    # group
                     spark.udf.register(
                         f"{sql_name}__mergevec", f.as_spark_mergevec()
                     )
                     registered.append(f"{sql_name}__partial")
                     registered.append(f"{sql_name}__merge")
-                    registered.append(f"{sql_name}__pfold")
                     registered.append(f"{sql_name}__mergevec")
                     bare_ok = False
                     if strict:
@@ -266,7 +249,7 @@ class Registry:
     # ------------------------------------------------------------------
     #: GROUP BY is optional: a GLOBAL aggregate (SELECT agg(x) FROM t) is
     #: the worst single-phase case — EVERY row moves to one worker — so it
-    #: needs the salted two-phase rewrite most of all
+    #: needs the two-phase rewrite most of all
     _GROUPBY_SHAPE = re.compile(
         r"(?is)^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<frm>.*?)"
         r"(?:\s+WHERE\s+(?P<where>.*?))?"
@@ -279,17 +262,37 @@ class Registry:
         r"(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?$"
     )
     _PLAIN_COL = re.compile(r"(?i)^[A-Za-z_][\w.]*$")
-    #: built-in aggregates the rewriter folds through the salted U pass:
-    #: native partial per (group, salt), then re-aggregate the partials —
-    #: SUM of partial COUNTs/SUMs, MIN of MINs, MAX of MAXes (exactly the
-    #: partial/merge arithmetic Spark's own two-level Aggregate performs,
-    #: since the salt is spark_partition_id()).  AVG has no single-fn
-    #: merge (needs sum+count) and keeps the joined-B form.
+    #: built-in aggregates the map-side fold computes as one partial per
+    #: (group, input partition), re-aggregated in U: SUM of partial
+    #: COUNTs/SUMs, MIN of MINs, MAX of MAXes (the partial/merge
+    #: arithmetic of Spark's own two-level Aggregate).  AVG has no
+    #: single-fn merge (needs sum+count) and keeps the joined-B form.
     _B_FOLD_MERGE = {
         "count": "COALESCE(SUM({p}), 0)",
         "sum": "SUM({p})",
         "min": "MIN({p})",
         "max": "MAX({p})",
+    }
+    #: mapfold admissibility by the Spark type name of an analyzed source
+    #: column: ``key`` when the fold groups by it with Spark's GROUP BY
+    #: equality, plus the built-in partials it computes exactly over it
+    #: (COUNT takes any type).  Float and decimal SUM are absent: added in
+    #: another order than Spark's, they drift, so they take the joined B
+    #: aggregate.  Struct and array keys need every field / element type
+    #: admissible as a key.
+    _FOLD_TYPES = {
+        **dict.fromkeys(
+            ("byte", "short", "integer", "long"), {"key", "sum", "min", "max"}
+        ),
+        **dict.fromkeys(
+            (
+                "float", "double", "decimal", "string", "binary", "boolean",
+                "date", "timestamp", "timestamp_ntz",
+            ),
+            {"key", "min", "max"},
+        ),
+        "struct": {"key"},
+        "array": {"key"},
     }
     #: built-in aggregates routed to the natively-aggregated B subquery —
     #: Spark plans these partial+final itself, so they are scale-safe
@@ -331,6 +334,13 @@ class Registry:
         "union", "intersect", "except", "join", "on", "exists", "with",
         "over", "lateral", "values", "qualify",
     }
+    #: words that never name a select item without AS: Spark reads
+    #: ``x IS NULL`` or ``CASE ... END`` as one expression
+    _NOT_ALIAS = _UNSAFE_BARE_WORDS | {
+        "and", "or", "not", "is", "null", "true", "false", "in", "like",
+        "rlike", "ilike", "between", "escape", "case", "when", "then",
+        "else", "end", "as", "asc", "desc", "nulls", "distinct", "div",
+    }
     #: window functions the select-item rewriter may pass through with an
     #: ``OVER (...)`` clause.  Built-in aggregates (_BUILTIN_AGGS) are also
     #: legal as window functions (``SUM(...) OVER ()`` share-of-total).
@@ -349,6 +359,19 @@ class Registry:
         "preceding", "following", "current", "row", "and",
     }
 
+    #: what the loud refusals of :meth:`sql` tell the user to do instead
+    _REWRITE_HINT = (
+        "Simplify the query to a provable shape (single GROUP BY block, "
+        "no UDAF inside a CTE body, no subqueries in the select list / "
+        "HAVING / ORDER BY), or use the DataFrame "
+        "AggregateFunction.agg(df, by=..., args=...) path"
+    )
+    #: Spark's refusals of a single-phase pandas UDAF plan
+    _SINGLE_PHASE_REFUSED = {
+        "INVALID_PANDAS_UDF_PLACEMENT",
+        "UNSUPPORTED_FEATURE.PANDAS_UDAF_IN_PIVOT",
+    }
+
     def sql(self, spark: "SparkSession", query: str) -> "DataFrame":
         """Run SQL with bare aggregate names made scale-safe by default.
 
@@ -357,31 +380,31 @@ class Registry:
         (the reference's hosts always run partial+final agg,
         arrow-udf-runtime/src/python/mod.rs:456-656).  This front door
         rewrites ``agg(args)`` calls over a single-block ``GROUP BY`` into
-        the salted two-phase ``agg__partial`` / ``agg__merge`` composition:
-        each group's rows fold into one pickled state per input partition
-        (``spark_partition_id()`` salt), and only O(groups x partitions)
-        states reach the final merge — the same plan shape as
-        ``AggregateFunction.agg``.
+        the two-phase plan of ``AggregateFunction.agg``: a map-side
+        ``mapInArrow`` fold turns each group's rows into one pickled state
+        per input partition before any exchange, and ``agg__mergevec``
+        merges only those O(groups x partitions) states.
 
         Queries that don't call a registered aggregate run unchanged.
-        Provable shapes include expression group keys (GROUP BY
-        pmod(x, 10)), a leading non-RECURSIVE CTE block (rewritten main
-        block, CTE bodies verbatim — refused if a CTE body itself calls a
-        UDAF), window functions over the grouped result (rank() OVER
-        (ORDER BY sum_udaf(v)), CAST-wrapped too), and top-level set
-        operations (each UNION/INTERSECT/EXCEPT arm rewrites
-        independently; the trailing ORDER BY/LIMIT binds to the union),
-        and multi-grouping clauses (GROUP BY ROLLUP/CUBE/GROUPING SETS
-        over plain columns — the salted inner aggregates at the finest
-        granularity, U re-aggregates the partials under the original
+        Provable shapes include expression and qualified group keys
+        (GROUP BY pmod(x, 10), GROUP BY e.k), a leading non-RECURSIVE CTE
+        block (rewritten main block, CTE bodies verbatim — refused if a
+        CTE body itself calls a UDAF), window functions over the grouped
+        result (rank() OVER (ORDER BY sum_udaf(v)), CAST-wrapped too),
+        top-level set operations (each UNION/INTERSECT/EXCEPT arm
+        rewrites independently; the trailing ORDER BY/LIMIT binds to the
+        union), multi-grouping clauses (GROUP BY ROLLUP/CUBE/GROUPING
+        SETS over plain columns — the fold runs at the finest
+        granularity, U re-aggregates the states under the original
         clause, and a grouping_id() join keeps data-NULL groups distinct
         from super-aggregate rows), and top-level PIVOT over a named
         projection (expanded to the GROUP BY + CASE form — which native
         Spark cannot even run with a pandas UDAF head,
         UNSUPPORTED_FEATURE.PANDAS_UDAF_IN_PIVOT).
         Anything unprovable falls back to the single-phase form with the
-        registration warning (or raises under
-        ``register_sql(strict=True)``).
+        registration warning, raises under ``register_sql(strict=True)``,
+        and raises ``ValueError`` where Spark refuses the single-phase
+        plan (a UDAF next to a native aggregate, a UDAF in PIVOT).
         """
         agg_names = {
             n
@@ -400,7 +423,7 @@ class Registry:
         # is analyzed: the analyzed plan keeps the view's subtree inline
         created = _FOLD_VIEWS.names = []
         try:
-            rewritten = self._rewrite_two_phase(query, used, spark=spark)
+            rewritten = self._rewrite_two_phase(query, used, spark)
             if rewritten is not None:
                 return spark.sql(rewritten)
         finally:
@@ -412,11 +435,7 @@ class Registry:
                 "query shape not rewritable to two-phase aggregation "
                 "and strict SQL mode refuses the single-phase "
                 "GROUPED_AGG fallback (every row of a group on one "
-                "worker). Simplify the query to a provable shape "
-                "(single GROUP BY block, plain column group keys, "
-                "no subqueries in the select list / HAVING / ORDER "
-                "BY), or use the DataFrame "
-                "AggregateFunction.agg(df, by=..., args=...) path, "
+                f"worker). {self._REWRITE_HINT}, "
                 "or re-register with register_sql(strict=False)."
             )
         warnings.warn(
@@ -426,39 +445,66 @@ class Registry:
             RuntimeWarning,
             stacklevel=2,
         )
-        return spark.sql(query)
+        from pyspark.errors import AnalysisException
+
+        try:
+            df = spark.sql(query)
+            # Spark refuses a pandas UDAF next to a native aggregate only
+            # when it plans the query
+            df._jdf.queryExecution().executedPlan()
+            return df
+        except AnalysisException as e:
+            if e.getCondition() not in self._SINGLE_PHASE_REFUSED:
+                raise
+            raise ValueError(
+                "query shape not rewritable to two-phase aggregation, and "
+                f"Spark refuses its single-phase form ({e.getCondition()}). "
+                f"{self._REWRITE_HINT}."
+            ) from e
 
     def _rewrite_two_phase(
-        self, query: str, used: set[str], spark: "SparkSession | None" = None
+        self,
+        query: str,
+        used: set[str],
+        spark: "SparkSession",
+        scope: str = "",
     ) -> Optional[str]:
         """Rewrite to the scale-safe composed form.
 
         Every aggregate CALL in the select list and the HAVING / ORDER BY
         tail becomes a column of one of two grouped subqueries:
 
-        - **U**: registered UDAFs as the salted ``__partial``/``__merge``
-          two-phase pair (one ``__u{i}`` column per distinct call);
+        - **U**: registered UDAFs merge (``__mergevec``) the pickled
+          states of the map-side fold view (:meth:`_build_mapfold_view`),
+          one ``__u{i}`` column per distinct call;
         - **B**: built-in aggregates.  COUNT/SUM/MIN/MAX (no DISTINCT)
-          FOLD into U's salted pass — a native partial per (group, salt)
-          merged by SUM/MIN/MAX in U, byte-for-byte the partial/merge
-          arithmetic Spark's own two-level Aggregate performs (the salt
-          IS spark_partition_id()), so the source is evaluated ONCE and
-          there is no U/B join.  Anything else (AVG, stddev, DISTINCT
-          args) becomes a separate plain native aggregation joined to U
-          on the (null-safe ``<=>``) group keys — Spark plans those
-          partial+final itself, so B is scale-safe by construction, and
-          it must be a separate subquery when it exists at all.
+          FOLD into the same view when its type table computes their
+          partials exactly: one partial per (group, input partition),
+          merged by SUM/MIN/MAX in U — the partial/merge arithmetic
+          Spark's own two-level Aggregate performs — so the source is
+          evaluated ONCE and there is no U/B join.  Anything else (AVG,
+          stddev, DISTINCT args, float or decimal SUM) becomes a separate
+          plain native aggregation joined to U on the (null-safe ``<=>``)
+          group keys — Spark plans those partial+final itself, so B is
+          scale-safe by construction.
 
         HAVING becomes a plain WHERE over the merged columns and ORDER
         BY references them directly, so no analyzer magic is needed to
-        resolve aggregates above the merge.  In the joined-B fallback
-        B's group keys are renamed ``__bg{i}`` so every original name
-        stays unambiguous.
+        resolve aggregates above the merge.  In the joined-B form B's
+        group keys are renamed ``__bg{i}`` so every original name stays
+        unambiguous.
+
+        ``scope`` is the CTE prefix of an enclosing query, inside which a
+        set-op arm, PIVOT core or decorrelated subquery analyzes its fold
+        view.  Returns None when the shape is unprovable or the fold view
+        cannot be built.
         """
         sw = self._split_with(query)
         if sw is None:
             return None  # malformed / RECURSIVE CTE block — fall back
         cte_prefix, main = sw
+        pre = f"{cte_prefix} " if cte_prefix else ""
+        scope = scope or pre
         if cte_prefix and any(
             re.search(rf"(?i)\b{re.escape(n)}\s*\(", cte_prefix)
             for n in used
@@ -492,19 +538,13 @@ class Registry:
                 ):
                     rb = blk.strip()  # no UDAF — verbatim
                 else:
-                    # NOTE: the block rewrites WITHOUT the CTE prefix in
-                    # scope, so the mapfold view construction inside (which
-                    # must analyze the block's source standalone) falls
-                    # back to the pure-SQL pipeline when the block
-                    # references a CTE name.
-                    rb = self._rewrite_two_phase(blk, used, spark=spark)
+                    rb = self._rewrite_two_phase(blk, used, spark, scope)
                     if rb is None:
                         return None
                 parts.append((rb, op))
             out_sql = parts[0][0]
             for rb, op in parts[1:]:
                 out_sql += f" {op} {rb}"
-            pre = f"{cte_prefix} " if cte_prefix else ""
             return f"{pre}{out_sql}{union_tail}"
         if self._has_top_level_kw(main, "PIVOT"):
             # PIVOT with a UDAF head: expand to the GROUP BY + CASE form
@@ -515,13 +555,12 @@ class Registry:
             if expanded is None:
                 return None
             core, outer_items, tail = expanded
-            rb = self._rewrite_two_phase(core, used, spark=spark)
+            rb = self._rewrite_two_phase(core, used, spark, scope)
             if rb is None:
                 return None
             # the outermost projection applies the PUBLIC pivot column
             # names (possibly backticked literals) — the core rewrites
             # under plain internal aliases the select-item parser accepts
-            pre = f"{cte_prefix} " if cte_prefix else ""
             sql = f"SELECT {outer_items} FROM ({rb}) __aus_pvt"
             return f"{pre}{sql} {tail}" if tail else f"{pre}{sql}"
         m = self._GROUPBY_SHAPE.match(main)
@@ -540,7 +579,9 @@ class Registry:
             re.search(rf"(?i)\b{re.escape(n)}\s*\(", where_txt)
             for n in used
         ):
-            dc = self._decorrelate_where(frm_txt, where_txt, used, spark=spark)
+            dc = self._decorrelate_where(
+                frm_txt, where_txt, used, spark, scope
+            )
             if dc is None:
                 return None
             frm_txt, where_txt = dc
@@ -552,7 +593,6 @@ class Registry:
                 grp_sql = (
                     f" GROUP BY {m.group('grp')}" if m.group("grp") else ""
                 )
-                pre = f"{cte_prefix} " if cte_prefix else ""
                 return (
                     f"{pre}SELECT {m.group('sel')} FROM {frm_txt} "
                     f"WHERE {where_txt}{grp_sql}{m.group('tail') or ''}"
@@ -560,7 +600,7 @@ class Registry:
         grp_items = _split_top_level(m.group("grp")) if m.group("grp") else []
         # multi-grouping clauses (GROUP BY ROLLUP(a, b) / CUBE(a, b) /
         # GROUPING SETS ((a, b), (a), ())): the clause text passes to the
-        # U and B subqueries VERBATIM, the salted inner aggregates at the
+        # U and B subqueries VERBATIM, the fold runs at the
         # FINEST granularity (every mentioned column — each grouping set
         # is a subset, so merging finest states into any set's groups is
         # exact by merge associativity), and both sides project
@@ -595,24 +635,21 @@ class Registry:
                     return None
                 multi_clause = grp_items[0]
                 grp_items = cols  # the finest keys drive everything else
-        plain_keys = all(self._PLAIN_COL.match(g) for g in grp_items)
-        if multi_clause is not None and not plain_keys:
-            return None
-        if not plain_keys:
-            # EXPRESSION group keys (GROUP BY pmod(x, 10), date_trunc
-            # ('day', ts), ...): provable when every expression is built
-            # from columns/literals and whitelisted deterministic scalar
-            # functions — each key is aliased __g{i} through the U/B
-            # subqueries, and a select item that textually matches a key
-            # expression resolves to that alias.  Anything unprovable
-            # still falls back to single-phase.
-            for g in grp_items:
-                if not self._PLAIN_COL.match(g) and not self._safe_group_expr(g):
-                    return None
-        g_names = (
-            grp_items if plain_keys
-            else [f"__g{i}" for i in range(len(grp_items))]
-        )
+        # EXPRESSION group keys (GROUP BY pmod(x, 10), date_trunc('day',
+        # ts), ...) are provable when built from columns/literals and
+        # whitelisted deterministic scalar functions.  A bare column key
+        # keeps its name through the fold view and U; qualified (e.k)
+        # and expression keys ride as __g{i}, and a select item that
+        # textually matches a key resolves to that name.
+        for g in grp_items:
+            if not self._PLAIN_COL.match(g) and not self._safe_group_expr(g):
+                return None
+        g_names = [
+            g if re.fullmatch(r"[A-Za-z_]\w*", g) else f"__g{i}"
+            for i, g in enumerate(grp_items)
+        ]
+        if multi_clause is not None and g_names != grp_items:
+            return None  # U re-groups under the clause text verbatim
 
         def _norm(e: str) -> str:
             # normalize case/whitespace OUTSIDE quoted literals only:
@@ -638,33 +675,30 @@ class Registry:
 
         grp_norm = {_norm(g): i for i, g in enumerate(grp_items)}
         sel_items = _split_top_level(m.group("sel"))
-        inner_aggs: list[str] = []  # native collect_list exprs in the salted agg
-        pf_cols: list[str] = []  # vectorized __pfold exprs (vals -> state)
-        u_cols: list[str] = []  # __mergevec exprs projected by U as __u{i}
         agg_args: list[tuple] = []  # (udaf name, [arg exprs]) per __u{i}
         b_cols: list = []  # built-in agg calls as (name, args) -> __b{i}
         memo: dict = {}  # lowercased call -> replacement token
         outer_items: list[str] = []
         grp_set = {g.lower() for g in grp_items}
 
+        def _rw(e: str) -> Optional[str]:
+            return self._rewrite_agg_calls(e, used, agg_args, b_cols, memo)
+
+        def _rw_key(e: str) -> Optional[str]:
+            # the U column of a group key expression, or None
+            gi = grp_norm.get(_norm(e))
+            return None if gi is None else g_names[gi]
+
         def _rw_spec_expr(e: str) -> Optional[str]:
             # a window-spec / window-arg expression above the merge can
             # only be a group key (plain or aliased expression key) or an
             # aggregate call (rewritten to its __u/__b column) — anything
             # else does not exist in the outer scope
-            gi2 = grp_norm.get(_norm(e))
-            if gi2 is not None:
-                return g_names[gi2]
-            es = e.strip()
-            if self._PLAIN_COL.match(es) and es.lower() in grp_set:
-                return es
-            rw = self._rewrite_agg_calls(
-                e, used, inner_aggs, u_cols, b_cols, memo, pf_cols,
-                agg_args,
-            )
-            if rw is None or rw == e:
-                return None
-            return rw
+            key = _rw_key(e)
+            if key is not None:
+                return key
+            rw = _rw(e)
+            return None if rw == e else rw
 
         def _rw_win(expr_src: str) -> Optional[tuple]:
             """Rewrite a ``head(args) OVER (spec)`` select item: window
@@ -724,16 +758,9 @@ class Registry:
                 return None
             args_rw = ""
             if args.strip():
-                gia = grp_norm.get(_norm(args))
-                if gia is not None:
-                    args_rw = g_names[gia]
-                else:
-                    args_rw = self._rewrite_agg_calls(
-                        args, used, inner_aggs, u_cols, b_cols, memo,
-                        pf_cols, agg_args,
-                    )
-                    if args_rw is None:
-                        return None
+                args_rw = _rw_key(args) or _rw(args)
+                if args_rw is None:
+                    return None
             sm = re.match(
                 r"(?is)^\s*(?:PARTITION\s+BY\s+(?P<pb>.*?))?"
                 r"(?:\s*ORDER\s+BY\s+(?P<ob>.*?))?"
@@ -775,26 +802,16 @@ class Registry:
                 parts.append(" ".join(frame.split()))
             return f"{head}({args_rw}) OVER ({' '.join(parts)})", hl
         for item in sel_items:
-            if self._PLAIN_COL.match(item) and item.lower() in grp_set:
-                outer_items.append(item)
-                continue
-            # split a trailing top-level "AS alias" off the expression;
-            # aliasless single calls (incl. the CAST(agg(x) AS T) shape)
-            # default to the function name, matching Registry's old
-            # behavior; any other aliasless expression is unprovable
-            gm = re.match(
-                r"(?is)^(?P<e>.+?)\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$", item
-            )
-            expr_src = gm.group("e") if gm else item
-            alias = gm.group("alias") if gm else None
-            gi = grp_norm.get(_norm(expr_src))
-            if gi is not None:
-                # the select item IS a group key (possibly aliased)
+            expr_src, alias = self._split_alias(item)
+            key = _rw_key(expr_src)
+            if key is not None:
+                # the select item IS a group key (possibly aliased); a
+                # bare column keeps Spark's output name (e.k -> k)
                 if alias is None:
-                    if not self._PLAIN_COL.match(item):
+                    if not self._PLAIN_COL.match(expr_src):
                         return None  # expression key needs an alias
-                    alias = item
-                outer_items.append(f"{g_names[gi]} AS {alias}")
+                    alias = expr_src.rsplit(".", 1)[-1]
+                outer_items.append(key if key == alias else f"{key} AS {alias}")
                 continue
             if multi_clause is not None and re.match(
                 r"(?is)^\s*grouping_id\s*\(\s*\)\s*$", expr_src
@@ -808,15 +825,15 @@ class Registry:
                     return None
                 outer_items.append(f"{wrw[0]} AS {alias or wrw[1]}")
                 continue
+            # aliasless single calls (incl. the CAST(agg(x) AS T) shape)
+            # default to the function name; any other aliasless
+            # expression is unprovable
             if alias is None:
                 am = self._AGG_ITEM.match(item)
                 if am is None:
                     return None
                 alias = am.group("fn").lower()
-            rewritten = self._rewrite_agg_calls(
-                expr_src, used, inner_aggs, u_cols, b_cols, memo, pf_cols,
-                agg_args,
-            )
+            rewritten = _rw(expr_src)
             if rewritten is None or rewritten == expr_src:
                 return None  # no aggregate found / unprovable shape
             outer_items.append(f"{rewritten} AS {alias}")
@@ -833,9 +850,12 @@ class Registry:
                 alias_map[am2.group("a").lower()] = f"({am2.group('e')})"
 
         def _subst_aliases(expr: str) -> str:
+            # group keys (qualified ones too) to their U names, then
+            # select aliases to their expressions
             return re.sub(
-                r"[A-Za-z_]\w*",
-                lambda mm: alias_map.get(mm.group(0).lower(), mm.group(0)),
+                r"(?<![\w.])[A-Za-z_][\w.]*",
+                lambda mm: _rw_key(mm.group(0))
+                or alias_map.get(mm.group(0).lower(), mm.group(0)),
                 expr,
             )
 
@@ -849,10 +869,7 @@ class Registry:
             if hav is not None:
                 if not grp_items:
                     return None  # HAVING without GROUP BY — let Spark error
-                hav_rw = self._rewrite_agg_calls(
-                    hav, used, inner_aggs, u_cols, b_cols, memo, pf_cols,
-                    agg_args,
-                )
+                hav_rw = _rw(hav)
                 if hav_rw is None:
                     return None
                 having_sql = f" WHERE {_subst_aliases(hav_rw)}"
@@ -866,115 +883,50 @@ class Registry:
                         it,
                     )
                     expr, suffix = sm.group("e"), sm.group("suffix") or ""
-                    if not self._PLAIN_COL.match(expr):
-                        expr = self._rewrite_agg_calls(
-                            expr, used, inner_aggs, u_cols, b_cols, memo,
-                            pf_cols, agg_args,
-                        )
-                        if expr is None:
-                            return None
+                    expr = _rw_key(expr) or (
+                        expr if self._PLAIN_COL.match(expr) else _rw(expr)
+                    )
+                    if expr is None:
+                        return None
                     items.append(expr + suffix)
                 order_sql = f" ORDER BY {', '.join(items)}"
             if limit is not None:
                 limit_sql = f" LIMIT {limit}"
-        if not u_cols:
+        if not agg_args:
             return None  # no registered-UDAF call — nothing to protect
-        grp = ", ".join(grp_items)  # raw key expressions (GROUP BY text)
-        # inner/U projections carry the keys under their stable names:
-        # identical to the raw text for plain keys, `expr AS __g{i}` for
-        # expression keys
-        grp_sel = ", ".join(
-            g if plain_keys else f"{g} AS {g_names[i]}"
-            for i, g in enumerate(grp_items)
-        )
-        gnames = ", ".join(g_names)
         where = f" WHERE {where_txt}" if where_txt else ""
-        src = f"(SELECT * FROM {frm_txt}{where})"
-        salt = (
-            "spark_partition_id()"
-            if self.salt_buckets is None
-            else f"pmod(spark_partition_id(), {int(self.salt_buckets)})"
+        src = f"FROM {frm_txt}{where}"
+        fold = self._build_mapfold_view(
+            spark, scope, src, grp_items, g_names, agg_args, b_cols
         )
-        # B-fold (r10 opt): when every built-in aggregate is
-        # COUNT/SUM/MIN/MAX without DISTINCT, compute its native partial
-        # per (group, salt) INSIDE the salted U pass and merge with
-        # SUM/MIN/MAX in U.  The salt is spark_partition_id(), so the
-        # per-salt partial is byte-for-byte the per-partition partial
-        # Spark's own two-level Aggregate computes — the fold changes no
-        # value, and it deletes the whole B subquery: the SECOND
-        # evaluation of the source (a full extra scan + joins + any
-        # decorrelated derived table re-run) and the U/B join.  COUNT
-        # merges through COALESCE(SUM(..), 0) because the global
-        # no-GROUP-BY shape yields one NULL-state row on empty input
-        # where COUNT must say 0 (keyed groups exist only where rows
-        # do).  Anything else — AVG, stddev, DISTINCT args — keeps the
-        # legacy joined-B form below.
-        fold_b = bool(b_cols) and all(
-            bn.lower() in self._B_FOLD_MERGE
-            and not re.match(r"(?is)^\s*DISTINCT\b", ba)
-            for bn, ba in b_cols
-        )
-        bp_inner: list[str] = []
-        bp_mid: list[str] = []
-        bp_merge: list[str] = []
+        if fold is None:
+            return None
+        view, fold_b = fold
+        gnames = ", ".join(g_names)
+        u_cols = [
+            f"{self._agg_sql_names[ln]}__mergevec(collect_list(__st{i})) "
+            f"AS __u{i}"
+            for i, (ln, _args) in enumerate(agg_args)
+        ]
         if fold_b:
-            for bi, (bn, ba) in enumerate(b_cols):
-                bp_inner.append(f"{bn}({ba}) AS __bp{bi}")
-                bp_mid.append(f"__bp{bi}")
-                merged = self._B_FOLD_MERGE[bn.lower()].format(
-                    p=f"__bp{bi}"
-                )
-                bp_merge.append(f"{merged} AS __b{bi}")
+            # COUNT merges through COALESCE(SUM(..), 0) because the global
+            # no-GROUP-BY shape yields one NULL-state row on empty input
+            # where COUNT must say 0 (keyed groups exist only where rows
+            # do)
+            u_cols += [
+                f"{self._B_FOLD_MERGE[bn.lower()].format(p=f'__bp{j}')} "
+                f"AS __b{j}"
+                for j, (bn, _ba) in enumerate(b_cols)
+            ]
         # multi-grouping: U re-aggregates the finest partial states under
         # the ORIGINAL rollup/cube/sets clause (merge associativity makes
         # that exact); grouping_id() disambiguates data-NULL keys from
         # super-aggregate rows in the U/B join
         u_grp = multi_clause if multi_clause is not None else gnames
         u_gid = ", grouping_id() AS __gid" if multi_clause is not None else ""
-        # phase 1, preferred shape (r11 perf, guide §2.3/§8): a map-side
-        # ``mapInArrow`` multi-fold view — rows fold to ONE pickled state
-        # per (group, input partition) BEFORE any exchange, so only
-        # O(groups x partitions) state rows shuffle (the collect_list
-        # pipeline below re-packs every raw value into arrays and ships
-        # them all through the first exchange), and the per-row struct
-        # boxing + __pfold dict unpacking disappears.  Falls back to the
-        # pure-SQL pipeline whenever the shape is unprovable (no session,
-        # qualified keys, unsupported built-in partial types, analysis
-        # errors e.g. set-op blocks referencing a CTE).
-        u_from = None
-        if spark is not None:
-            u_from = self._build_mapfold_view(
-                spark,
-                f"{cte_prefix} " if cte_prefix else "",
-                src,
-                grp_items,
-                g_names,
-                plain_keys,
-                agg_args,
-                b_cols if fold_b else [],
-            )
-        if u_from is None:
-            inner = (
-                f"SELECT {grp_sel}{', ' if grp_sel else ''}"
-                f"{', '.join(inner_aggs + bp_inner)} "
-                f"FROM (SELECT *, {salt} AS __aus_salt "
-                f"FROM {src} __aus_src) __aus_salted "
-                f"GROUP BY {grp}{', ' if grp else ''}__aus_salt"
-            )
-            # the vectorized phase-1 fold: one batched __pfold projection
-            # over the natively collected (group, salt) arg lists — Python
-            # runs once per Arrow batch of groups, not once per group (r10
-            # perf; see as_spark_pfold)
-            mid = (
-                f"SELECT {gnames}{', ' if gnames else ''}"
-                f"{', '.join(bp_mid + pf_cols)} "
-                f"FROM ({inner}) __aus_vals"
-            )
-            u_from = f"({mid})"
         u = (
             f"SELECT {gnames}{u_gid}{', ' if gnames else ''}"
-            f"{', '.join(u_cols + bp_merge)} "
-            f"FROM {u_from} __aus_partials"
+            f"{', '.join(u_cols)} FROM {view} __aus_partials"
             + (f" GROUP BY {u_grp}" if u_grp else "")
         )
         from_sql = f"({u}) __aus_u"
@@ -986,11 +938,9 @@ class Registry:
             bg = [f"{g} AS __bg{i}" for i, g in enumerate(grp_items)]
             if multi_clause is not None:
                 bg.append("grouping_id() AS __bgid")
-            b_grp = multi_clause if multi_clause is not None else grp
+            b_grp = multi_clause or ", ".join(grp_items)
             b = (
-                f"SELECT "
-                f"{', '.join(bg + b_cols_sql) if bg else ', '.join(b_cols_sql)} "
-                f"FROM {src} __aus_bsrc"
+                f"SELECT {', '.join(bg + b_cols_sql)} {src}"
                 + (f" GROUP BY {b_grp}" if b_grp else "")
             )
             if grp_items:
@@ -1006,7 +956,6 @@ class Registry:
         # the CTE prefix rides verbatim above the rewritten main block:
         # Spark scopes a query's CTEs over every subquery of the following
         # SELECT, so the U/B subqueries still resolve the CTE names
-        pre = f"{cte_prefix} " if cte_prefix else ""
         return (
             f"{pre}SELECT {', '.join(outer_items)} FROM {from_sql}"
             f"{having_sql}{order_sql}{limit_sql}"
@@ -1019,140 +968,137 @@ class Registry:
     def _build_mapfold_view(
         self,
         spark,
-        pre: str,
+        scope: str,
         src: str,
         grp_items: list,
         g_names: list,
-        plain_keys: bool,
         agg_args: list,
-        bp_cols: list,
-    ) -> Optional[str]:
+        b_cols: list,
+    ) -> Optional[tuple[str, bool]]:
         """Register a temp view computing the two-phase PARTIAL states
-        with a map-side ``mapInArrow`` multi-fold (r11 perf; guide
-        §2.3/§8): one pickled state per (group, input partition) plus the
-        foldable built-in partials, all BEFORE any exchange.  The view's
-        columns are exactly what the U subquery's merge expressions
-        reference (``g_names`` + ``__st{i}`` + ``__bp{j}``), so the
-        caller only swaps U's FROM clause.
+        with a map-side ``mapInArrow`` multi-fold: one pickled state per
+        (group, input partition) plus the foldable built-in partials, all
+        BEFORE any exchange, so only O(groups x partitions) state rows
+        shuffle.  The view's columns are exactly what U's merge
+        expressions reference: ``g_names`` + ``__st{i}`` + ``__bp{j}``.
 
-        Returns the view name, or None when the shape is unprovable —
-        qualified group keys, a built-in partial whose type is not
-        exactly foldable in Python (float/decimal SUM stays on the
-        native-partial SQL path, which IS order-exact), or any analysis
-        error (e.g. a set-op block referencing a CTE out of scope).  The
-        caller then emits the pure-SQL pipeline unchanged."""
+        ``src`` is the ``FROM ... [WHERE ...]`` text of the query block,
+        analyzed inside ``scope`` (the CTE prefix).  Fold admissibility is
+        checked against the analyzed types in ``_FOLD_TYPES``: the group
+        keys must be admissible, and the built-in partials fold only as a
+        whole — one the fold cannot compute exactly sends every built-in
+        call to the joined B aggregate.  Returns ``(view name, built-ins
+        folded)``, or None when the source does not analyze or a key type
+        is not admissible."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import types as T
+
+        from ..operators.aggregate import build_multi_fold
+
+        udafs = [
+            next(f for f in self._fns[ln] if f.sig.kind == "aggregate")
+            for ln, _args in agg_args
+        ]
+        sel = [g if g == n else f"{g} AS {n}" for g, n in zip(grp_items, g_names)]
+        arg_ns = []
+        for ui, (_ln, args_) in enumerate(agg_args):
+            arg_ns.append(len(args_))
+            sel += [f"{a} AS __aua{ui}_{ai}" for ai, a in enumerate(args_)]
+        n_in = len(sel)  # key + UDAF argument columns
+        fold_b = bool(b_cols) and all(
+            bn.lower() in self._B_FOLD_MERGE
+            and not re.match(r"(?is)^\s*DISTINCT\b", ba)
+            and len(_split_top_level(ba)) == 1
+            for bn, ba in b_cols
+        )
+        star = [bn.lower() == "count" and ba.strip() == "*" for bn, ba in b_cols]
+        if fold_b:
+            sel += [
+                f"{ba} AS __aub{j}"
+                for j, (_bn, ba) in enumerate(b_cols)
+                if not star[j]
+            ]
         try:
-            from ..operators.aggregate import build_multi_fold
-            from pyspark.sql import types as T
+            df_src = spark.sql(f"{scope}SELECT {', '.join(sel)} {src}")
+        except AnalysisException:
+            return None
+        fields = df_src.schema.fields
+        by_n = len(g_names)
+        if not all(self._fold_key_ok(f.dataType) for f in fields[:by_n]):
+            return None
+        kinds: list[tuple] = []
+        ci = n_in
+        for j, (bn, _ba) in enumerate(b_cols if fold_b else []):
+            kind = bn.lower()
+            if star[j]:
+                kinds.append(("count_star", None))
+                continue
+            tname = fields[ci].dataType.typeName()
+            if kind != "count" and kind not in self._FOLD_TYPES.get(tname, ()):
+                fold_b, kinds = False, []
+                df_src = df_src.select(*df_src.columns[:n_in])
+                break
+            kinds.append(("sum_int" if kind == "sum" else kind, ci))
+            ci += 1
+        out_fields = [
+            T.StructField(f.name, f.dataType) for f in fields[:by_n]
+        ] + [T.StructField(f"__st{u}", T.BinaryType()) for u in range(len(udafs))]
+        for j, (kind, ci) in enumerate(kinds):
+            dt = fields[ci].dataType if kind in ("min", "max") else T.LongType()
+            out_fields.append(T.StructField(f"__bp{j}", dt))
+        # The fold parallelizes at its INPUT width (local fixture: ~3
+        # scan tasks; real scale: far wider than the core count, so it
+        # runs map-side with ZERO exchanges).  A round-robin
+        # repartition-to-cores here was A/B-measured SLOWER locally
+        # (hi-card 5.4 s vs 4.6 s without): it multiplies the
+        # (group x partition) state count by cores/width and pays an
+        # exchange of every raw row.  The per-group cost is bounded in
+        # the fold instead: it merges batches into chunks of up to
+        # 256k rows / 64 MiB (the per-task memory cap), groups each
+        # chunk once with a vectorized sort, and so pays Python once
+        # per (group, chunk), not per (group, 10k-row batch); see
+        # build_multi_fold.
+        fold = build_multi_fold(udafs, by_n, arg_ns, kinds)
+        view_df = df_src.mapInArrow(fold, schema=T.StructType(out_fields))
+        name = f"__aus_fold_{next(self._MAPFOLD_SEQ)}"
+        view_df.createOrReplaceTempView(name)
+        names = getattr(_FOLD_VIEWS, "names", None)
+        if names is not None:
+            names.append(name)
+        return name, fold_b
 
-            for g in g_names:
-                if "." in g:
-                    return None  # qualified key — view cannot carry it
-            udafs = []
-            for ln, _args in agg_args:
-                udafs.append(
-                    next(
-                        f
-                        for f in self._fns[ln]
-                        if f.sig.kind == "aggregate"
-                    )
-                )
-            key_sel = [
-                g_names[i] if plain_keys else f"{grp_items[i]} AS {g_names[i]}"
-                for i in range(len(g_names))
-            ]
-            arg_sel: list[str] = []
-            arg_ns: list[int] = []
-            for ui, (_ln, args_) in enumerate(agg_args):
-                arg_ns.append(len(args_))
-                for ai, a in enumerate(args_):
-                    arg_sel.append(f"{a} AS __aua{ui}_{ai}")
-            bp_sel: list[str] = []
-            bp_specs: list[tuple] = []  # (kind, rel idx into bp_sel | None)
-            for bn, ba in bp_cols:
-                bnl = bn.lower()
-                ba_s = ba.strip()
-                if bnl == "count" and ba_s == "*":
-                    bp_specs.append(("count_star", None))
-                    continue
-                if len(_split_top_level(ba)) != 1:
-                    return None  # multi-arg built-in — not foldable here
-                bp_specs.append((bnl, len(bp_sel)))
-                bp_sel.append(f"{ba_s} AS __aub{len(bp_sel)}")
-            df_src = spark.sql(
-                f"{pre}SELECT {', '.join(key_sel + arg_sel + bp_sel)} "
-                f"FROM {src} __aus_src"
-            )
-            fields = df_src.schema.fields
-            by_n = len(g_names)
-            nested = (T.ArrayType, T.MapType, T.StructType)
-            if any(isinstance(f.dataType, nested) for f in fields[:by_n]):
-                return None  # the fold groups atomic keys only
-            bp_base = by_n + sum(arg_ns)
-            int_t = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-            mm_t = int_t + (
-                T.FloatType,
-                T.DoubleType,
-                T.StringType,
-                T.DateType,
-                T.TimestampType,
-                T.BooleanType,
-            )
-            kinds: list[tuple] = []
-            for kind, rel in bp_specs:
-                if kind == "count_star":
-                    kinds.append(("count_star", None))
-                    continue
-                ci = bp_base + rel
-                dt = fields[ci].dataType
-                if kind == "count":
-                    kinds.append(("count", ci))
-                elif kind == "sum":
-                    if not isinstance(dt, int_t):
-                        return None  # float/decimal SUM: order-sensitive
-                    kinds.append(("sum_int", ci))
-                elif kind in ("min", "max"):
-                    if not isinstance(dt, mm_t):
-                        return None
-                    kinds.append((kind, ci))
-                else:
-                    return None
-            out_fields = [
-                T.StructField(fields[i].name, fields[i].dataType)
-                for i in range(by_n)
-            ] + [
-                T.StructField(f"__st{u}", T.BinaryType())
-                for u in range(len(udafs))
-            ]
-            for j, (kind, ci) in enumerate(kinds):
-                dt = (
-                    T.LongType()
-                    if kind in ("count_star", "count", "sum_int")
-                    else fields[ci].dataType
-                )
-                out_fields.append(T.StructField(f"__bp{j}", dt))
-            # The fold parallelizes at its INPUT width (local fixture: ~3
-            # scan tasks; real scale: far wider than the core count, so it
-            # runs map-side with ZERO exchanges).  A round-robin
-            # repartition-to-cores here was A/B-measured SLOWER locally
-            # (hi-card 5.4 s vs 4.6 s without): it multiplies the
-            # (group x partition) state count by cores/width and pays an
-            # exchange of every raw row.  The per-group cost is bounded in
-            # the fold instead: it merges batches into chunks of up to
-            # 256k rows / 64 MiB (the per-task memory cap), groups each
-            # chunk once with a vectorized sort, and so pays Python once
-            # per (group, chunk), not per (group, 10k-row batch); see
-            # build_multi_fold.
-            fold = build_multi_fold(udafs, by_n, arg_ns, kinds)
-            view_df = df_src.mapInArrow(fold, schema=T.StructType(out_fields))
-            name = f"__aus_fold_{next(self._MAPFOLD_SEQ)}"
-            view_df.createOrReplaceTempView(name)
-            names = getattr(_FOLD_VIEWS, "names", None)
-            if names is not None:
-                names.append(name)
-            return name
-        except Exception:
-            return None  # unprovable — pure-SQL pipeline handles it
+    @classmethod
+    def _fold_key_ok(cls, dt) -> bool:
+        """True when the fold can group by a column of Spark type ``dt``
+        (``_FOLD_TYPES``), struct fields and array elements included."""
+        name = dt.typeName()
+        if "key" not in cls._FOLD_TYPES.get(name, ()):
+            return False
+        if name == "struct":
+            return all(cls._fold_key_ok(f.dataType) for f in dt.fields)
+        return name != "array" or cls._fold_key_ok(dt.elementType)
+
+    @classmethod
+    def _split_alias(cls, item: str) -> tuple[str, Optional[str]]:
+        """Split a select item into ``(expression, alias or None)``:
+        ``expr AS name``, or Spark's implicit ``expr name`` when neither
+        ``name`` nor the word before it is a keyword (``x IS NULL`` and
+        ``a + b`` carry no alias; ``CASE ... END s`` does)."""
+        m = re.match(
+            r"(?is)^(?P<e>.+?)\s+(?P<as>AS\s+)?(?P<a>[A-Za-z_]\w*)\s*$", item
+        )
+        if m is None:
+            return item, None
+        e, alias = m.group("e"), m.group("a")
+        if not m.group("as"):
+            last = re.search(r"\w*$", e).group(0).lower()
+            if (
+                alias.lower() in cls._NOT_ALIAS
+                or not re.search(r"[\w)]$", e)
+                or (last in cls._NOT_ALIAS and last != "end")
+            ):
+                return item, None
+        return e, alias
 
     def _safe_group_expr(self, expr: str) -> bool:
         """True when a GROUP BY expression is provably safe to alias
@@ -1339,7 +1285,7 @@ class Registry:
     }
 
     def _decorrelate_where(
-        self, frm: str, where: str, used: set, spark=None
+        self, frm: str, where: str, used: set, spark, scope: str
     ) -> Optional[tuple[str, str]]:
         """Decorrelate every UDAF-headed correlated scalar aggregate
         subquery in a WHERE conjunction — the TPC-H q17 shape:
@@ -1356,7 +1302,7 @@ class Registry:
         conjunct on NULL filters the row, and the inner join drops
         exactly those rows (Spark's own RewriteCorrelatedScalarSubquery
         plays the same trick).  The derived table itself re-enters
-        ``_rewrite_two_phase``, so the UDAF runs salted partial/merge.
+        ``_rewrite_two_phase``, so the UDAF runs its two-phase fold/merge.
 
         The provable contract (anything else returns None → loud
         fallback): subquery has ONE table with a MANDATORY alias; every
@@ -1378,7 +1324,7 @@ class Registry:
             ):
                 new_pieces.append(piece)
                 continue
-            rep = self._decorrelate_conjunct(piece, used, ci, spark=spark)
+            rep = self._decorrelate_conjunct(piece, used, ci, spark, scope)
             if rep is None:
                 return None  # a UDAF call we cannot make scale-safe
             conjuncts, derived = rep
@@ -1393,7 +1339,7 @@ class Registry:
         )
 
     def _decorrelate_conjunct(
-        self, piece: str, used: set, ci: int, spark=None
+        self, piece: str, used: set, ci: int, spark, scope: str
     ) -> Optional[tuple[list[str], str]]:
         """One conjunct ``lhs OP (SELECT ...)`` → (replacement conjunct
         list, derived-table SQL).  See _decorrelate_where."""
@@ -1561,7 +1507,7 @@ class Registry:
             # side; the two-phase global agg is the worst single-phase
             # case this front door exists for)
             sub_sql = f"SELECT {item_s} AS __cv FROM {tbl}{inner_where}"
-        sub_rw = self._rewrite_two_phase(sub_sql, used, spark=spark)
+        sub_rw = self._rewrite_two_phase(sub_sql, used, spark, scope)
         if sub_rw is None:
             return None
         out_conds = [f"{lhs} {op} {alias}.__cv"]
@@ -1889,20 +1835,15 @@ class Registry:
         self,
         expr: str,
         used: set,
-        inner_aggs: list,
-        u_cols: list,
+        agg_args: list,
         b_cols: list,
         memo: dict,
-        pf_cols: list,
-        agg_args: "list | None" = None,
     ) -> Optional[str]:
         """Replace every aggregate CALL in ``expr`` with a column token:
-        registered UDAFs become ``__u{i}`` (the arg struct's native
-        ``collect_list`` goes to ``inner_aggs``, the vectorized
-        ``__pfold`` projection to ``pf_cols``, the ``__mergevec``
-        projection to ``u_cols``), built-in aggregates become ``__b{i}``
-        (the raw call goes to ``b_cols`` for the natively-aggregated B
-        subquery).  ``memo`` dedupes identical calls onto one column
+        registered UDAFs become ``__u{i}`` (name and argument texts go to
+        ``agg_args`` for the fold view and U's merge), built-in aggregates
+        become ``__b{i}`` (the raw call goes to ``b_cols``, folded into
+        the view or run in the natively-aggregated B subquery).  ``memo`` dedupes identical calls onto one column
         (SELECT sum_udaf(q) ... HAVING sum_udaf(q) > 5 folds the partial
         once, not twice).  Whitelisted scalar functions are recursed
         into; anything unprovable returns None (→ single-phase
@@ -1965,32 +1906,8 @@ class Registry:
                     # pandas UDF either — fall back loudly
                     return None
                 if key not in memo:
-                    sql_name = self._agg_sql_names[ln]
-                    idx = len(u_cols)
-                    # the args are collected NATIVELY per (group, salt)
-                    # (map-side partial_collect_list, codegen) and folded
-                    # to a state by the batched __pfold scalar UDF —
-                    # replaces the per-group GROUPED_AGG __partial call.
-                    # named_struct wrapping preserves NULL args
-                    # (collect_list drops bare NULL elements).
-                    struct_expr = "named_struct({})".format(
-                        ", ".join(
-                            f"'a{i}', {a}" for i, a in enumerate(arg_items)
-                        )
-                    )
-                    inner_aggs.append(
-                        f"collect_list({struct_expr}) AS __vals{idx}"
-                    )
-                    pf_cols.append(
-                        f"{sql_name}__pfold(__vals{idx}) AS __st{idx}"
-                    )
-                    u_cols.append(
-                        f"{sql_name}__mergevec(collect_list(__st{idx})) "
-                        f"AS __u{idx}"
-                    )
-                    if agg_args is not None:
-                        agg_args.append((ln, list(arg_items)))
-                    memo[key] = f"__u{idx}"
+                    memo[key] = f"__u{len(agg_args)}"
+                    agg_args.append((ln, arg_items))
                 out.append(memo[key])
             elif ln in self._BUILTIN_AGGS:
                 if key not in memo:
@@ -1999,10 +1916,7 @@ class Registry:
                     memo[key] = f"__b{idx}"
                 out.append(memo[key])
             elif ln in self._SCALAR_PASSTHROUGH:
-                sub = self._rewrite_agg_calls(
-                    args, used, inner_aggs, u_cols, b_cols, memo, pf_cols,
-                    agg_args,
-                )
+                sub = self._rewrite_agg_calls(args, used, agg_args, b_cols, memo)
                 if sub is None:
                     return None
                 out.append(f"{name}({sub})")

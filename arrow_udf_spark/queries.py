@@ -544,13 +544,13 @@ def q_sum_udaf_two_phase_sql(spark, sf):
 def q_sql_agg_bare_two_phase(spark, sf):
     """The scale-safe SQL front door (``Registry.sql``): a user writes the
     BARE aggregate names over a skewed GROUP BY and the registry rewrites
-    the query to the salted two-phase ``__partial``/``__merge`` composition
-    automatically — no single worker ever folds a whole hot group, and only
-    O(groups x partitions) pickled states reach the final merge.  Closes
-    the round-4 'registered GROUPED_AGG warns but does not compose' gap:
-    the bare name IS the two-phase plan now.  Plan shape asserted in
-    tests/test_plans.py (partial+merge present, no bare single-phase
-    aggregate)."""
+    the query to the two-phase plan automatically — a map-side
+    ``mapInArrow`` fold view turns each group's rows into one pickled
+    state per input partition, so no single worker ever folds a whole hot
+    group, and only O(groups x partitions) states reach the
+    ``__mergevec`` merge.  The bare name IS the two-phase plan.  Plan
+    shape asserted in tests/test_plans.py (fold with no Exchange below
+    it, merge present, no bare single-phase aggregate)."""
     from .plans.registry import GLOBAL
 
     li = t(spark, sf, "lineitem").withColumn("q", F.col("l_quantity").cast("long"))
@@ -580,9 +580,9 @@ def q_sql_agg_expr_key_two_phase(spark, sf):
     """EXPRESSION group keys through the scale-safe SQL front door (the
     round-7 widening of the two-phase surface): ``GROUP BY
     pmod(l_orderkey, 7)`` is provably deterministic (whitelisted scalar
-    over a column), so the registry aliases it ``__g0`` through the
-    salted U subquery, the native B subquery, and their null-safe join —
-    no single-phase fallback, no analyzer magic.  HAVING on the select
+    over a column), so the registry aliases it ``__g0`` through the fold
+    view and the merge, where COUNT(*) folds as a native partial — no
+    single-phase fallback, no analyzer magic.  HAVING on the select
     alias and ORDER BY ride along.  Unknown functions in a key still
     fall back loudly (unit-tested)."""
     from .plans.registry import GLOBAL
@@ -621,8 +621,8 @@ def q_sql_agg_window_two_phase(spark, sf):
     result, so the rewriter leaves ``rank() OVER (...)`` and the
     share-of-total ``SUM(SUM(q)) OVER ()`` in the outer query and
     replaces every aggregate inside their args / ORDER BY with its merged
-    column — the UDAF still runs salted two-phase underneath, and the
-    window sees only O(groups) rows.  A registered UDAF as the window
+    column — the UDAF still runs two-phase (fold view + merge)
+    underneath, and the window sees only O(groups) rows.  A registered UDAF as the window
     HEAD is refused (strict raises): a GROUPED_AGG pandas UDF over window
     frames is the every-row-to-one-worker trap itself.  Unit coverage in
     tests/test_registry.py (PARTITION BY keys, frames, refusal shapes)."""
@@ -665,8 +665,8 @@ def q_sql_agg_cte_two_phase(spark, sf):
     """CTE blocks through the scale-safe SQL front door (the r8 widening
     with window functions): a leading non-RECURSIVE ``WITH`` prefix rides
     verbatim above the rewritten main block — Spark scopes a query's CTEs
-    over every subquery of the following SELECT, so the salted U and
-    native B subqueries resolve the CTE names unchanged.  A UDAF call
+    over every subquery of the following SELECT, and the fold view is
+    analyzed inside the same prefix, so both resolve the CTE names.  A UDAF call
     INSIDE a CTE body is refused (it would silently stay single-phase),
     as is RECURSIVE; both unit-tested in tests/test_advice_r8.py."""
     from .plans.registry import GLOBAL
@@ -705,8 +705,8 @@ def q_sql_agg_cte_two_phase(spark, sf):
 def q_sql_agg_union_two_phase(spark, sf):
     """SET OPERATIONS through the scale-safe SQL front door (the r8
     widening closing the last multi-block residual): each UNION ALL arm
-    rewrites to its own salted two-phase composition independently (the
-    scopes share nothing — fresh partial/merge columns per block; arms
+    rewrites to its own two-phase composition independently (the scopes
+    share nothing — a fresh fold view and merge per block; arms
     with no UDAF call pass verbatim), and the trailing ORDER BY binds to
     the UNION per the grammar, stripped off the last block and
     re-appended above the reassembly.  Unprovable arms (DISTINCT args)
@@ -746,8 +746,8 @@ def q_sql_agg_union_two_phase(spark, sf):
 def q_sql_agg_rollup_two_phase(spark, sf):
     """MULTI-GROUPING clauses through the scale-safe SQL front door (the
     r8 widening after set ops): ``GROUP BY ROLLUP/CUBE/GROUPING SETS``
-    rides the two-phase rewrite — the salted inner aggregates at the
-    FINEST granularity, U re-aggregates the partial states under the
+    rides the two-phase rewrite — the fold view runs at the FINEST
+    granularity, U re-aggregates the partial states under the
     ORIGINAL clause (exact by merge associativity: every grouping set is
     a subset of the finest keys), and both U and B project
     ``grouping_id()`` so their join tells a data-NULL group from a
@@ -793,7 +793,7 @@ def q_sql_agg_pivot_two_phase(spark, sf):
     ``SELECT * FROM (projection) PIVOT (udaf(col) FOR col IN
     (literals))`` — expands to the GROUP BY + CASE form (exactly Spark's
     own ResolvePivot expansion for null-ignoring aggregates) and rides
-    the salted two-phase rewrite underneath.  Native Spark REFUSES
+    the two-phase rewrite underneath.  Native Spark REFUSES
     pandas UDAFs in PIVOT outright (UNSUPPORTED_FEATURE.
     PANDAS_UDAF_IN_PIVOT), so this front door is the only way to run
     one at all — and it runs partial+merge.  Output names/order match
@@ -838,18 +838,14 @@ def q_sql_agg_correlated_two_phase(spark, sf):
     TPC-H q17 shape: ``WHERE qty * 5 < (SELECT udaf(l2.qty) FROM
     lineitem l2 WHERE l2.l_partkey = p.p_partkey)``.  The rewriter
     decorrelates the provable equi-key shape into a GROUP-BY-key derived
-    table (itself salted two-phase underneath) comma-joined into FROM —
+    table (itself two-phase underneath) comma-joined into FROM —
     exact because the subquery is NULL when no inner row matches, a
     positive comparison conjunct on NULL filters the row, and the inner
     join drops exactly those rows (Spark's own
     RewriteCorrelatedScalarSubquery plays the same trick; COUNT-headed
     KEYED subqueries refuse since COUNT is 0-not-NULL on empty).  The
     outer UDAF then rides the normal two-phase path over the joined
-    source, so BOTH aggregation scopes run partial+merge.  Contract for
-    that continuation: the outer SELECT/GROUP BY/tail reference join
-    columns UNQUALIFIED (they aggregate the flattened join output; the
-    WHERE keeps its qualifiers — it evaluates inside the join scope).
-    Non-equi correlation, unqualified columns inside the SUBQUERY,
+    source, so BOTH aggregation scopes run partial+merge.  Non-equi correlation, unqualified columns inside the SUBQUERY,
     OR-guarded conjuncts all refuse loudly (unit-tested in
     tests/test_advice_r9.py; hypothesis referee vs the native
     single-phase result in tests/test_properties_r9.py).
@@ -893,11 +889,10 @@ def q_sql_agg_correlated_two_phase(spark, sf):
 def q_sql_agg_having_two_phase(spark, sf):
     """HAVING + aggregate-ORDER-BY through the scale-safe SQL front door
     (closes the r5 'silent single-phase fallback for tails' gap): the
-    registry rewrites the UDAF calls in the tail to __partial/__merge
-    columns of the salted U subquery, routes COUNT(*) to a natively
-    two-phase B subquery (Spark refuses pandas + native aggregates in one
-    Aggregate), joins them null-safely on the group key, and turns HAVING
-    into a plain WHERE over the join.  The integer-only HAVING predicate
+    registry rewrites the UDAF calls in the tail to merge columns over
+    the fold view, folds COUNT(*) into the same view as a native partial
+    (Spark refuses pandas + native aggregates in one Aggregate), and
+    turns HAVING into a plain WHERE over the merged columns.  The integer-only HAVING predicate
     (avg quantity > 25.5 spelled as sum*2 > 51*count) is exact in both
     engines at any SF.  Plan shape asserted in tests/test_plans.py."""
     from .plans.registry import GLOBAL
@@ -9425,7 +9420,7 @@ _GATE_PRIORITY = [
     #      them and the driver has no row for them yet; asserted by
     #      tests/test_gate_window.py);
     #   2. changed THIS round by the optimization work — the vectorized
-    #      two-phase UDAF rewrite (__pfold/__mergevec), the DataFrame
+    #      two-phase UDAF rewrite (batched __mergevec merge), the DataFrame
     #      agg() merge, the fused BPE trainer loops, and the
     #      localCheckpoint staging pipelines — these carry the round's
     #      plan-mechanics risk and must re-prove under the driver gate;

@@ -19,70 +19,54 @@ from decimal import Decimal
 import pytest
 
 
-def _reg():
-    from arrow_udf_spark.plans.registry import Registry
-
-    r = Registry()
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    return r
-
-
 # -- 1. scalar subqueries must not be hoisted ------------------------------
 
 
-def test_scalar_subquery_in_having_falls_back():
-    r = _reg()
+def test_scalar_subquery_in_having_falls_back(rewrite):
     q = (
         "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
         "HAVING s > (SELECT max(y) FROM u)"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_scalar_subquery_in_select_falls_back():
-    r = _reg()
+def test_scalar_subquery_in_select_falls_back(rewrite):
     q = (
         "SELECT g, sum_udaf(x) + (SELECT max(y) FROM u) AS s "
         "FROM t GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_exists_subquery_in_having_falls_back():
-    r = _reg()
+def test_exists_subquery_in_having_falls_back(rewrite):
     q = (
         "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
         "HAVING EXISTS (SELECT 1 FROM u)"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_scalar_subquery_in_order_by_falls_back():
-    r = _reg()
+def test_scalar_subquery_in_order_by_falls_back(rewrite):
     q = (
         "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
         "ORDER BY sum_udaf(x) - (SELECT max(y) FROM u)"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_plain_having_still_rewrites():
+def test_plain_having_still_rewrites(rewrite):
     """The fix must not regress the provable shapes."""
-    r = _reg()
-    ok = r._rewrite_two_phase(
+    ok = rewrite(
         "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "HAVING sum_udaf(x) > 5 AND g IS NOT NULL",
-        {"sum_udaf"},
+        "HAVING sum_udaf(x) > 5 AND g IS NOT NULL"
     )
     assert ok is not None and "__u0" in ok
 
 
-def test_having_with_builtin_and_case_still_rewrites():
-    r = _reg()
-    ok = r._rewrite_two_phase(
+def test_having_with_builtin_and_case_still_rewrites(rewrite):
+    ok = rewrite(
         "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "HAVING CASE WHEN count(x) > 2 THEN sum_udaf(x) ELSE 0 END > 5",
-        {"sum_udaf"},
+        "HAVING CASE WHEN count(x) > 2 THEN sum_udaf(x) ELSE 0 END > 5"
     )
     assert ok is not None and "__b0" in ok and "__u0" in ok
 
@@ -90,24 +74,22 @@ def test_having_with_builtin_and_case_still_rewrites():
 # -- 2. unbalanced tails from the shape regex ------------------------------
 
 
-def test_where_subquery_with_order_by_falls_back():
+def test_where_subquery_with_order_by_falls_back(rewrite):
     """_GROUPBY_SHAPE truncates WHERE at the inner ORDER BY; the depth
     guard in _split_tail rejects the resulting ``ORDER BY z)`` tail."""
-    r = _reg()
     q = (
         "SELECT sum_udaf(x) AS s FROM t "
         "WHERE x IN (SELECT y FROM u ORDER BY z)"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_where_subquery_with_order_by_limit_falls_back():
-    r = _reg()
+def test_where_subquery_with_order_by_limit_falls_back(rewrite):
     q = (
         "SELECT g, sum_udaf(x) AS s FROM t "
         "WHERE x IN (SELECT y FROM u ORDER BY z LIMIT 5) GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
 def test_split_tail_depth_guard():

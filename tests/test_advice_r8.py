@@ -5,7 +5,7 @@ the r8 rewriter widenings (CTE prefix, window passthrough).
    literals when matching select items to expression group keys —
    date_format(ts,'mm') is NOT the date_format(ts,'MM') group key.
 2. (low) the CTE-prefix splitter (_split_with) is wired into
-   _rewrite_two_phase: WITH blocks ride verbatim above the rewritten
+   the two-phase rewrite: WITH blocks ride verbatim above the rewritten
    main SELECT; RECURSIVE and UDAF-in-CTE-body shapes are refused.
 3. (low->feature) window functions pass through the two-phase rewrite:
    the OVER() call stays in the outer query with every inner aggregate
@@ -23,171 +23,149 @@ the r8 rewriter widenings (CTE prefix, window passthrough).
 import pytest
 
 
-def _reg():
-    from arrow_udf_spark.plans.registry import Registry
-
-    r = Registry()
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    return r
-
-
 # -- 1. quoted literals are case/space-significant in group-key match ------
 
 
-def test_literal_case_not_folded_in_group_key_match():
-    r = _reg()
+def test_literal_case_not_folded_in_group_key_match(rewrite):
     # 'mm' vs 'MM': different expressions — must NOT resolve to the key
     # (falls back: the item is neither a key nor an aggregate)
     q = (
         "SELECT date_format(ts, 'mm') AS d, sum_udaf(v) AS s "
         "FROM t GROUP BY date_format(ts, 'MM')"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_literal_exact_match_still_resolves():
-    r = _reg()
+def test_literal_exact_match_still_resolves(rewrite):
     # same literal, different OUTER whitespace/case — still the key
     q = (
         "SELECT DATE_FORMAT(ts,'MM') AS d, sum_udaf(v) AS s "
         "FROM t GROUP BY date_format( ts , 'MM' )"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None and "__g0 AS d" in ok
 
 
-def test_literal_internal_spaces_significant():
-    r = _reg()
+def test_literal_internal_spaces_significant(rewrite):
     # 'a b' vs 'ab': stripping spaces inside the literal would alias the
     # wrong expression as the key
     q = (
         "SELECT concat(x, 'a b') AS k, sum_udaf(v) AS s "
         "FROM t GROUP BY concat(x, 'ab')"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
 # -- 2. CTE prefix rides above the rewritten main block --------------------
 
 
-def test_cte_prefix_preserved():
-    r = _reg()
+def test_cte_prefix_preserved(rewrite):
     q = (
         "WITH big AS (SELECT * FROM t WHERE v > 10) "
         "SELECT g, sum_udaf(v) AS s FROM big GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
     assert ok.startswith("WITH big AS (SELECT * FROM t WHERE v > 10)")
-    assert "sum_udaf__pfold" in ok and "sum_udaf__mergevec" in ok
+    assert "FROM __aus_fold_" in ok and "sum_udaf__mergevec" in ok
 
 
-def test_cte_multiple_and_column_aliases():
-    r = _reg()
+def test_cte_multiple_and_column_aliases(rewrite):
     q = (
         "WITH a (x) AS (SELECT v FROM t), b AS (SELECT x AS v, 1 AS g FROM a) "
         "SELECT g, sum_udaf(v) AS s FROM b GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None and ok.startswith("WITH a (x) AS")
 
 
-def test_cte_recursive_refused():
-    r = _reg()
+def test_cte_recursive_refused(rewrite):
     q = (
         "WITH RECURSIVE c AS (SELECT 1 AS n UNION ALL SELECT n+1 FROM c) "
         "SELECT g, sum_udaf(v) AS s FROM t GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_cte_body_with_udaf_refused():
-    r = _reg()
+def test_cte_body_with_udaf_refused(rewrite):
     # the UDAF inside the CTE body would stay single-phase — refuse
     q = (
         "WITH pre AS (SELECT g, sum_udaf(v) AS s FROM t GROUP BY g) "
         "SELECT g, sum_udaf(s) AS s2 FROM pre GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
 # -- 3. window-function passthrough ---------------------------------------
 
 
-def test_window_rank_over_udaf():
-    r = _reg()
+def test_window_rank_over_udaf(rewrite):
     q = (
         "SELECT g, sum_udaf(v) AS s, "
         "rank() OVER (ORDER BY sum_udaf(v) DESC) AS rnk "
         "FROM t GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
     assert "rank() OVER (ORDER BY __u0 DESC) AS rnk" in ok
 
 
-def test_window_share_of_total():
-    r = _reg()
+def test_window_share_of_total(rewrite):
     q = (
         "SELECT g, sum_udaf(v) AS s, SUM(SUM(v)) OVER () AS total "
         "FROM t GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None and "SUM(__b0) OVER ()" in ok
 
 
-def test_window_partition_by_group_key_and_frame():
-    r = _reg()
+def test_window_partition_by_group_key_and_frame(rewrite):
     q = (
         "SELECT g, h, sum_udaf(v) AS s, "
         "row_number() OVER (PARTITION BY g ORDER BY sum_udaf(v) DESC "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rn "
         "FROM t GROUP BY g, h"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
     assert "PARTITION BY g ORDER BY __u0 DESC" in ok
     assert "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW" in ok
 
 
-def test_window_udaf_head_refused():
-    r = _reg()
+def test_window_udaf_head_refused(rewrite):
     # GROUPED_AGG over window frames = the every-row-to-one-worker trap
     q = (
         "SELECT g, sum_udaf(v) OVER (PARTITION BY g) AS s "
         "FROM t GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_window_unknown_head_refused():
-    r = _reg()
+def test_window_unknown_head_refused(rewrite):
     q = (
         "SELECT g, sum_udaf(v) AS s, "
         "my_mystery_fn() OVER (ORDER BY g) AS m FROM t GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_window_non_key_column_in_spec_refused():
-    r = _reg()
+def test_window_non_key_column_in_spec_refused(rewrite):
     # v is neither a group key nor an aggregate — it does not exist
     # above the merge
     q = (
         "SELECT g, sum_udaf(v) AS s, rank() OVER (ORDER BY v) AS rnk "
         "FROM t GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_window_over_expression_group_key():
-    r = _reg()
+def test_window_over_expression_group_key(rewrite):
     q = (
         "SELECT pmod(x, 7) AS b, sum_udaf(v) AS s, "
         "rank() OVER (PARTITION BY pmod(x, 7) ORDER BY sum_udaf(v)) AS rnk "
         "FROM t GROUP BY pmod(x, 7)"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None and "PARTITION BY __g0 ORDER BY __u0" in ok
 
 
@@ -289,87 +267,82 @@ def test_asof_forward_basic_semantics_hold(spark):
 # -- 7. set operations between aggregate blocks (r8 widening) --------------
 
 
-def test_union_all_both_blocks_rewritten():
-    r = _reg()
+def test_union_all_both_blocks_rewritten(rewrite):
     q = (
         "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
         "UNION ALL SELECT g, sum_udaf(v) AS s FROM b GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
-    assert ok.count("sum_udaf__pfold") == 2  # independent per-block pairs
+    # an independent fold view and merge per block
+    assert ok.count("FROM __aus_fold_") == 2
+    assert ok.count("sum_udaf__mergevec") == 2
     assert " UNION ALL " in ok
 
 
-def test_union_mixed_blocks_verbatim_passthrough():
-    r = _reg()
+def test_union_mixed_blocks_verbatim_passthrough(rewrite):
     # second block calls no UDAF — passes through verbatim
     q = (
         "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
         "UNION SELECT g, SUM(v) AS s FROM b GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
-    assert ok.count("sum_udaf__pfold") == 1
+    assert ok.count("FROM __aus_fold_") == 1
     assert "SELECT g, SUM(v) AS s FROM b GROUP BY g" in ok
 
 
-def test_union_level_order_by_limit_preserved():
-    r = _reg()
+def test_union_level_order_by_limit_preserved(rewrite):
     q = (
         "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
         "UNION ALL SELECT g, sum_udaf(v) AS s FROM b GROUP BY g "
         "ORDER BY s DESC LIMIT 5"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
     # the tail binds to the UNION, not the last block
     assert ok.endswith("ORDER BY s DESC LIMIT 5")
-    assert ok.count("sum_udaf__pfold") == 2
+    assert ok.count("FROM __aus_fold_") == 2
 
 
-def test_union_expression_order_key_refused():
-    r = _reg()
+def test_union_expression_order_key_refused(rewrite):
     q = (
         "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
         "UNION ALL SELECT g, sum_udaf(v) AS s FROM b GROUP BY g "
         "ORDER BY s + 1"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
-def test_intersect_and_except_supported():
-    r = _reg()
+def test_intersect_and_except_supported(rewrite):
     for op in ("INTERSECT", "EXCEPT ALL"):
         q = (
             f"SELECT g, sum_udaf(v) AS s FROM a GROUP BY g {op} "
             "SELECT g, sum_udaf(v) AS s FROM b GROUP BY g"
         )
-        ok = r._rewrite_two_phase(q, {"sum_udaf"})
+        ok = rewrite(q)
         assert ok is not None and f" {op} " in ok
 
 
-def test_union_inside_subquery_not_split():
-    r = _reg()
+def test_union_inside_subquery_not_split(rewrite):
     # a set op INSIDE parens belongs to the FROM subquery, not the top level
     q = (
         "SELECT g, sum_udaf(v) AS s "
         "FROM (SELECT g, v FROM a UNION ALL SELECT g, v FROM b) "
         "GROUP BY g"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
-    assert ok.count("sum_udaf__pfold") == 1
+    assert ok.count("FROM __aus_fold_") == 1
 
 
-def test_union_unrewritable_block_refuses_whole_query():
-    r = _reg()
+def test_union_unrewritable_block_refuses_whole_query(rewrite):
     # DISTINCT arg in block 2 is unprovable -> the WHOLE query falls back
     q = (
         "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
         "UNION ALL SELECT g, sum_udaf(DISTINCT v) AS s FROM b GROUP BY g"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
 def test_union_end_to_end(spark):
@@ -400,51 +373,48 @@ def test_union_end_to_end(spark):
 # -- 8. multi-grouping clauses (ROLLUP / CUBE / GROUPING SETS, r8) ---------
 
 
-def test_rollup_rewritten_with_grouping_id_join():
-    r = _reg()
+def test_rollup_rewritten_with_grouping_id_join(rewrite):
     q = (
         "SELECT a, b, sum_udaf(v) AS s, COUNT(*) AS c "
         "FROM t GROUP BY ROLLUP(a, b)"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None
-    # inner aggregates at the finest granularity, salted
-    assert "GROUP BY a, b, __aus_salt" in ok
-    # U re-aggregates under the ORIGINAL clause; the COUNT folds through
-    # the same salted pass (finest partial counts summed by the rollup),
-    # so B — a second full-source aggregation — no longer exists
+    # U reads the fold's states at the finest granularity (a, b) and
+    # re-aggregates them under the ORIGINAL clause; the COUNT folds into
+    # the same view (finest partial counts summed by the rollup), so B —
+    # a second full-source aggregation — does not exist
+    assert "SELECT a, b, grouping_id() AS __gid" in ok
+    assert "FROM __aus_fold_" in ok
     assert ok.count("GROUP BY ROLLUP(a, b)") == 1
-    assert "COUNT(*) AS __bp0" in ok and "__aus_b" not in ok
+    assert "COALESCE(SUM(__bp0), 0) AS __b0" in ok and "__aus_b" not in ok
     # grouping_id() still projected for GROUPING()/outer references
     assert "grouping_id() AS __gid" in ok
 
 
-def test_grouping_sets_and_cube_rewritten():
-    r = _reg()
+def test_grouping_sets_and_cube_rewritten(rewrite):
     for clause in ("CUBE(a, b)", "GROUPING SETS ((a, b), (a), ())"):
         q = f"SELECT a, b, sum_udaf(v) AS s FROM t GROUP BY {clause}"
-        ok = r._rewrite_two_phase(q, {"sum_udaf"})
+        ok = rewrite(q)
         assert ok is not None, clause
         assert f"GROUP BY {clause}" in ok
 
 
-def test_grouping_id_select_item_reuses_gid():
-    r = _reg()
+def test_grouping_id_select_item_reuses_gid(rewrite):
     q = (
         "SELECT a, grouping_id() AS gid, sum_udaf(v) AS s "
         "FROM t GROUP BY ROLLUP(a)"
     )
-    ok = r._rewrite_two_phase(q, {"sum_udaf"})
+    ok = rewrite(q)
     assert ok is not None and "__gid AS gid" in ok
 
 
-def test_rollup_expression_member_refused():
-    r = _reg()
+def test_rollup_expression_member_refused(rewrite):
     q = (
         "SELECT pmod(x, 2) AS p, sum_udaf(v) AS s "
         "FROM t GROUP BY ROLLUP(pmod(x, 2))"
     )
-    assert r._rewrite_two_phase(q, {"sum_udaf"}) is None
+    assert rewrite(q) is None
 
 
 def test_rollup_end_to_end(spark):

@@ -129,36 +129,28 @@ def test_dsir_one_sided_toks_col(spark):
 # -- 4. correlated-subquery rewrite: contract and refusals ------------------
 
 
-def _reg():
-    from arrow_udf_spark.plans.registry import Registry
-
-    r = Registry()
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    r._agg_sql_names.setdefault("count_udaf", "count_udaf")
-    return r
-
-
 _U = {"sum_udaf", "count_udaf"}
 
 
-def test_q17_shape_decorrelates():
-    r = _reg()
+def test_q17_shape_decorrelates(rewrite, spark):
+    from arrow_udf_spark.plans.registry import GLOBAL
+
     q = (
         "SELECT g, CAST(sum_udaf(v) AS BIGINT) AS s FROM t o "
         "WHERE o.q * 5 < (SELECT sum_udaf(i.q) FROM t i "
         "WHERE i.k = o.k) GROUP BY g"
     )
-    rw = r._rewrite_two_phase(q, _U)
-    assert rw is not None
-    # the derived table carries the two-phase agg keyed by the join key
-    assert "__aus_corr0" in rw and "sum_udaf__mergevec" in rw
-    assert "__aus_corr0.__ck0 = o.k" in rw
-    # the outer UDAF is ALSO two-phase (two distinct merge scopes)
-    assert rw.count("sum_udaf__pfold") == 2
+    rw = rewrite(q, _U)
+    assert rw is not None and "sum_udaf__mergevec" in rw
+    # the derived table carries the two-phase agg keyed by the join key;
+    # it joins the outer block's source, which its fold view reads
+    plan = GLOBAL.sql(spark, q)._jdf.queryExecution().analyzed().toString()
+    assert "__aus_corr0" in plan and "__ck0" in plan
+    # the outer UDAF is ALSO two-phase (two distinct fold views)
+    assert plan.count("MapInArrow") == 2
 
 
-def test_builtin_outer_returns_directly():
-    r = _reg()
+def test_builtin_outer_returns_directly(rewrite):
     # outer aggregates are native SUM/COUNT: after decorrelation nothing
     # else needs protecting, so the rewrite returns the joined form
     # without wrapping the outer block
@@ -167,19 +159,18 @@ def test_builtin_outer_returns_directly():
         "WHERE o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k) "
         "GROUP BY g"
     )
-    rw = r._rewrite_two_phase(q, _U)
+    rw = rewrite(q, _U)
     assert rw is not None and "__aus_corr0" in rw
     assert "__aus_u" in rw  # the subquery's own two-phase scope
     assert "SELECT g, CAST(SUM(v) AS BIGINT) AS s" in rw  # outer verbatim
 
 
-def test_uncorrelated_global_cross_joins():
-    r = _reg()
+def test_uncorrelated_global_cross_joins(rewrite):
     q = (
         "SELECT o.id FROM t o "
         "WHERE o.q < (SELECT count_udaf(i.v) FROM t i)"
     )
-    rw = r._rewrite_two_phase(q, _U)
+    rw = rewrite(q, _U)
     assert rw is not None and "__aus_corr0" in rw
     assert "__ck" not in rw  # no key columns — single-row cross join
 
@@ -206,52 +197,11 @@ def test_uncorrelated_global_cross_joins():
         "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k AND rand(i.j) > 0)",
     ],
 )
-def test_correlated_refusals(where):
-    r = _reg()
-    assert r._rewrite_two_phase(f"SELECT o.a FROM t o WHERE {where}", _U) is None
+def test_correlated_refusals(rewrite, where):
+    assert rewrite(f"SELECT o.a FROM t o WHERE {where}", _U) is None
 
 
-def test_count_allowed_uncorrelated():
+def test_count_allowed_uncorrelated(rewrite):
     # global aggregates always yield exactly one row — COUNT is exact
-    r = _reg()
     q = "SELECT o.a FROM t o WHERE o.q < (SELECT count_udaf(i.q) FROM t i WHERE i.q > 0)"
-    assert r._rewrite_two_phase(q, _U) is not None
-
-
-# -- 5. salt_buckets knob: identical results, coarser partial salt ----------
-
-
-def test_salt_buckets_changes_salt_expr_only():
-    r = _reg()
-    q = "SELECT g, CAST(sum_udaf(v) AS BIGINT) AS s FROM t GROUP BY g"
-    default = r._rewrite_two_phase(q, _U)
-    assert "spark_partition_id() AS __aus_salt" in default
-    r.salt_buckets = 4
-    coarse = r._rewrite_two_phase(q, _U)
-    assert "pmod(spark_partition_id(), 4) AS __aus_salt" in coarse
-    # nothing else about the rewrite changes
-    assert default.replace(
-        "spark_partition_id()", "pmod(spark_partition_id(), 4)"
-    ) == coarse
-
-
-def test_salt_buckets_identical_values(spark):
-    from arrow_udf_spark.plans.registry import GLOBAL
-
-    GLOBAL.register_sql(spark)
-    spark.createDataFrame(
-        [(i, i % 3, i * 7 % 11) for i in range(200)],
-        "id long, g long, v long",
-    ).createOrReplaceTempView("salt_t")
-    q = (
-        "SELECT g, CAST(sum_udaf(v) AS BIGINT) AS s "
-        "FROM salt_t GROUP BY g ORDER BY g"
-    )
-    a = GLOBAL.sql(spark, q).collect()
-    old = GLOBAL.salt_buckets
-    try:
-        GLOBAL.salt_buckets = 2
-        b = GLOBAL.sql(spark, q).collect()
-    finally:
-        GLOBAL.salt_buckets = old
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    assert rewrite(q, _U) is not None

@@ -105,3 +105,29 @@ def test_streaming_micro_batch_plan_captured_and_linted(spark, sf_dir):
     # a real micro-batch physical plan, not a placeholder
     assert "Physical Plan" in plan or "HashAggregate" in plan or "Scan" in plan
     assert lint_plan(plan) == []
+
+
+def test_single_phase_pandas_agg_flagged(spark, sf_dir):
+    """A raw spark.sql call of a registered UDAF plans Spark 4.1's
+    single-phase ``ArrowAggregatePython``: the lint flags it, and not the
+    salted ``__partial`` / ``__merge`` pair of sum_udaf_two_phase_sql."""
+    import warnings
+
+    from tools.plan_lint import lint_plan
+
+    from arrow_udf_spark.plans.registry import GLOBAL
+    from arrow_udf_spark.queries import QUERIES
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame([(1, 2), (1, 3)], "k int, v bigint") \
+        .createOrReplaceTempView("lint_single")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        raw = spark.sql("SELECT k, sum_udaf(v) AS s FROM lint_single GROUP BY k")
+    plan = raw._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowAggregatePython" in plan
+    assert "single-phase-pandas-agg" in lint_plan(plan)
+    pair = QUERIES["sum_udaf_two_phase_sql"](spark, sf_dir)
+    plan = pair._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowAggregatePython") == 2
+    assert "single-phase-pandas-agg" not in lint_plan(plan)

@@ -247,20 +247,20 @@ def test_two_phase_sql_agg_salted_plan(spark, sf_dir):
 
 
 def _assert_two_phase_phase1(p: str, name: str) -> None:
-    """The two-phase scale property under EITHER phase-1 shape: the r11
-    map-side MapInArrow fold (states before any exchange) or the salted
-    collect_list -> __pfold SQL pipeline (fallback).  Both end in the
-    batched __mergevec merge; neither leaves a bare single-phase node."""
+    """The two-phase scale property of the Registry.sql rewrite: the
+    map-side MapInArrow fold reads its source with no Exchange below it
+    (states before any exchange), the batched __mergevec merge sits
+    above, and no bare single-phase node is left."""
     import re
 
     assert f"{name}__mergevec" in p
-    assert "MapInArrow" in p or (f"{name}__pfold" in p and "__aus_salt" in p)
+    assert "MapInArrow" in p and "Exchange" not in _under(p, "MapInArrow")
     assert not re.findall(rf"{name}(?!__)", p)
 
 
 def test_bare_sql_agg_rewritten_two_phase(spark, sf_dir):
     """Registry.sql: a query calling the BARE aggregate name over GROUP BY
-    must compile to the salted two-phase shape — partial+merge aggregates
+    must compile to the two-phase shape — map-side fold + merge
     present, no single-phase bare GROUPED_AGG node anywhere in the plan."""
     from arrow_udf_spark.queries import QUERIES
 
@@ -405,11 +405,11 @@ def test_hamming_predicate_streams_through_join(spark, sf_dir):
 
 
 def test_having_sql_agg_rewritten_two_phase(spark, sf_dir):
-    """HAVING / aggregate-ORDER-BY tails must go through the same salted
+    """HAVING / aggregate-ORDER-BY tails must go through the same
     two-phase rewrite (r5 gap: they silently fell back to single-phase
     GROUPED_AGG).  The UDAF calls in the tail resolve to merge columns of
-    the U subquery; COUNT(*) runs natively in B; no bare single-phase
-    aggregate appears anywhere in the plan."""
+    the U subquery; COUNT(*) folds as a native partial into the same
+    view; no bare single-phase aggregate appears anywhere in the plan."""
     import re
 
     from arrow_udf_spark.queries import QUERIES
@@ -418,15 +418,14 @@ def test_having_sql_agg_rewritten_two_phase(spark, sf_dir):
     p = _plan(df)
     _assert_two_phase_phase1(p, "sum_udaf")
     # COUNT(*) is a partial+final composition, never a per-group pandas
-    # agg: native partial_count (SQL pipeline) or the map-side fold's
-    # exactly-foldable __bp partial merged by a native SUM (r11 shape)
-    assert "partial_count" in p or "__bp0" in p
+    # agg: the map-side fold's __bp partial merged by a native SUM
+    assert "__bp0" in p
 
 
 def test_global_sql_agg_rewritten_two_phase(spark, sf_dir):
     """A GLOBAL aggregate (no GROUP BY) is the single worst single-phase
     case — every row of the table on one worker — so Registry.sql must
-    rewrite it to the salted partial/merge pair too."""
+    rewrite it to the two-phase fold/merge pair too."""
     import re
 
     from arrow_udf_spark.plans.registry import GLOBAL
@@ -499,7 +498,7 @@ def test_ivf_persisted_index_partition_prunes(spark, sf_dir):
 
 def test_window_sql_agg_two_phase_plan(spark, sf_dir):
     """r8: a window function through Registry.sql rides ABOVE the merge —
-    the plan carries the salted partial/merge pair, a Window node, and the
+    the plan carries the two-phase fold/merge pair, a Window node, and the
     window's ORDER BY references the merged column (O(groups) rows), never
     a GROUPED_AGG pandas UDF inside a window frame."""
     from arrow_udf_spark.queries import QUERIES
@@ -510,7 +509,7 @@ def test_window_sql_agg_two_phase_plan(spark, sf_dir):
 
 
 def test_cte_sql_agg_two_phase_plan(spark, sf_dir):
-    """r8: a WITH prefix through Registry.sql still compiles to the salted
+    """r8: a WITH prefix through Registry.sql still compiles to the
     two-phase shape (the CTE resolves across the U/B subqueries), with the
     CTE's WHERE pushed into the scan."""
     from arrow_udf_spark.queries import QUERIES

@@ -36,10 +36,12 @@ def tables(draw):
 def _both(spark, q):
     from arrow_udf_spark.plans.registry import GLOBAL
 
-    GLOBAL.register_sql(spark)
-    rw = GLOBAL._rewrite_two_phase(q, {"sum_udaf", "count_udaf"})
-    assert rw is not None and "__aus_corr0" in rw
-    got = sorted(map(tuple, spark.sql(rw).collect()))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = GLOBAL.sql(spark, q)
+    assert not [w for w in caught if "single-phase" in str(w.message)]
+    assert "__aus_corr0" in df._jdf.queryExecution().analyzed().toString()
+    got = sorted(map(tuple, df.collect()))
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
         ref = sorted(map(tuple, spark.sql(q).collect()))
@@ -69,7 +71,7 @@ def test_correlated_with_outer_udaf_matches_native(spark, a):
     schema = "id long, k long, g long, q long, v long"
     spark.createDataFrame(a, schema).createOrReplaceTempView("corr_c")
     # both scopes aggregate: the subquery decorrelates AND the outer
-    # sum_udaf rides the salted two-phase path over the joined source.
+    # sum_udaf rides the two-phase fold path over the joined source.
     # NO builtin aggregate alongside: native Spark refuses a GROUPED_AGG
     # pandas UDF mixed with native aggregates in one Aggregate
     # (INVALID_PANDAS_UDF_PLACEMENT) — the rewrite's U/B split exists

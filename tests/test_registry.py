@@ -1,3 +1,5 @@
+from decimal import Decimal
+
 import pytest
 
 from arrow_udf_spark import Registry, udf
@@ -216,91 +218,67 @@ def test_udaf_overloads_all_get_two_phase_pair(spark):
     assert got[0].s == 45.0
 
 
-def test_two_phase_rewrite_handles_aggregate_tail(spark):
+def test_two_phase_rewrite_handles_aggregate_tail(rewrite):
     """HAVING / aggregate ORDER BY tails ride the two-phase rewrite (r6,
     closing the r5 silent-fallback gap): UDAF calls become __u columns of
-    the salted U subquery; built-in aggregates must NEVER evaluate over
-    partial states — they run natively in the B subquery, joined
-    null-safely on the group keys, and HAVING becomes a WHERE over the
-    join."""
-    from arrow_udf_spark.plans.registry import GLOBAL
-
-    r = GLOBAL
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    used = {"sum_udaf"}
-    ok = r._rewrite_two_phase(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g ORDER BY s DESC LIMIT 5",
-        used,
+    the U subquery over the fold view; built-in aggregates must NEVER
+    evaluate over partial states — they fold into the view as native
+    partials or run in the B subquery, and HAVING becomes a WHERE."""
+    ok = rewrite(
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g ORDER BY s DESC LIMIT 5"
     )
     assert ok is not None and ok.rstrip().endswith("ORDER BY s DESC LIMIT 5")
-    # built-in agg in HAVING -> folded through the salted pass: a native
-    # per-(group, salt) COUNT partial merged by SUM in U (exact — the
-    # same partial/merge arithmetic Spark's Aggregate does), WHERE over
-    # U; the COUNT must aggregate source rows, never partial states
-    ok = r._rewrite_two_phase(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g HAVING COUNT(*) > 5",
-        used,
+    # built-in agg in HAVING -> folded into the view: a per-(group,
+    # partition) COUNT partial merged by SUM in U (exact — the same
+    # partial/merge arithmetic Spark's Aggregate does), WHERE over U;
+    # the COUNT must aggregate source rows, never partial states
+    ok = rewrite(
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g HAVING COUNT(*) > 5"
     )
     assert ok is not None
-    assert "COUNT(*) AS __bp0" in ok and "WHERE __b0 > 5" in ok
+    assert "FROM __aus_fold_" in ok and "WHERE __b0 > 5" in ok
     assert "COALESCE(SUM(__bp0), 0) AS __b0" in ok
     assert "__aus_b" not in ok  # B subquery folded away — no second scan
     assert "COUNT(__st" not in ok  # never counts partial states
     # plain grouped-column HAVING stays a WHERE on U alone (no B join)
-    ok = r._rewrite_two_phase(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g HAVING g > 5", used
-    )
+    ok = rewrite("SELECT g, sum_udaf(x) AS s FROM t GROUP BY g HAVING g > 5")
     assert ok is not None and "WHERE g > 5" in ok and "JOIN" not in ok
     # aggregate ORDER BY rides the same path
-    ok = r._rewrite_two_phase(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g ORDER BY SUM(x)", used
-    )
+    ok = rewrite("SELECT g, sum_udaf(x) AS s FROM t GROUP BY g ORDER BY SUM(x)")
     assert ok is not None and "ORDER BY __b0" in ok
     # UDAF calls in the tail memoize onto the SELECT's partial state
-    ok = r._rewrite_two_phase(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g HAVING sum_udaf(x) > 5",
-        used,
+    ok = rewrite(
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g HAVING sum_udaf(x) > 5"
     )
-    assert ok is not None and ok.count("sum_udaf__pfold(") == 1
+    assert ok is not None and ok.count("sum_udaf__mergevec(") == 1
     assert "WHERE __u0 > 5" in ok
     # unknown (potentially aggregate) calls in the tail must fall back
     assert (
-        r._rewrite_two_phase(
+        rewrite(
             "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-            "HAVING percentile_approx(x, 0.5) > 1",
-            used,
+            "HAVING percentile_approx(x, 0.5) > 1"
         )
         is None
     )
 
 
-def test_two_phase_rewrite_rejects_distinct_args(spark):
+def test_two_phase_rewrite_rejects_distinct_args(rewrite):
     """agg(DISTINCT x) cannot be split into partials (per-partition
     DISTINCT misses cross-partition dupes) — must fall back."""
-    from arrow_udf_spark.plans.registry import GLOBAL
-
-    GLOBAL._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
     assert (
-        GLOBAL._rewrite_two_phase(
-            "SELECT g, sum_udaf(DISTINCT x) AS s FROM t GROUP BY g",
-            {"sum_udaf"},
-        )
+        rewrite("SELECT g, sum_udaf(DISTINCT x) AS s FROM t GROUP BY g")
         is None
     )
 
 
-def test_two_phase_having_resolves_select_aliases(spark):
+def test_two_phase_having_resolves_select_aliases(rewrite):
     """Spark lets HAVING reference a select alias (HAVING sum_qty > N);
     the rewritten WHERE runs over the U/B join BELOW the projection that
     creates the alias, so the rewriter must substitute the alias's
     expression."""
-    from arrow_udf_spark.plans.registry import GLOBAL
-
-    GLOBAL._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    ok = GLOBAL._rewrite_two_phase(
+    ok = rewrite(
         "SELECT g, CAST(sum_udaf(x) AS BIGINT) AS sum_qty FROM t "
-        "GROUP BY g HAVING sum_qty > 100",
-        {"sum_udaf"},
+        "GROUP BY g HAVING sum_qty > 100"
     )
     assert ok is not None
     assert "WHERE (CAST(__u0 AS BIGINT)) > 100" in ok
@@ -374,95 +352,79 @@ def test_register_sql_strict_refuses_single_phase(spark):
         )
 
 
-def test_two_phase_expression_group_keys(spark):
+def test_two_phase_expression_group_keys(rewrite):
     """GROUP BY expressions (pmod, date_trunc, arithmetic over columns)
-    now ride the salted two-phase rewrite: each key is aliased __g{i}
-    through the U/B split and select items matching the key expression
+    ride the two-phase rewrite: each key is aliased __g{i} through the
+    fold view and U, and select items matching the key expression
     resolve to the alias.  Unknown functions in a key still fall back."""
-    r = Registry()
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    used = {"sum_udaf"}
-    ok = r._rewrite_two_phase(
+    ok = rewrite(
         "SELECT pmod(x, 7) AS b, sum_udaf(y) AS s, COUNT(*) AS c "
-        "FROM t GROUP BY pmod(x, 7)",
-        used,
+        "FROM t GROUP BY pmod(x, 7)"
     )
     assert ok is not None
-    assert "pmod(x, 7) AS __g0" in ok
-    assert "COUNT(*) AS __bp0" in ok and "__aus_b" not in ok  # B folded
+    assert "GROUP BY __g0" in ok
+    # B folded into the view
+    assert "COALESCE(SUM(__bp0), 0) AS __b0" in ok and "__aus_b" not in ok
     assert "__g0 AS b" in ok
     # quoted literal inside the key expression
-    ok2 = r._rewrite_two_phase(
+    ok2 = rewrite(
         "SELECT date_trunc('DAY', ts) AS d, sum_udaf(v) AS s "
-        "FROM t GROUP BY date_trunc('DAY', ts)",
-        used,
+        "FROM t GROUP BY date_trunc('DAY', ts)"
     )
     assert ok2 is not None and "__g0 AS d" in ok2
     # expression key without a select alias is unprovable
-    assert r._rewrite_two_phase(
-        "SELECT pmod(x, 7), sum_udaf(y) AS s FROM t GROUP BY pmod(x, 7)",
-        used,
+    assert rewrite(
+        "SELECT pmod(x, 7), sum_udaf(y) AS s FROM t GROUP BY pmod(x, 7)"
     ) is None
     # unknown function in the key -> fallback
-    assert r._rewrite_two_phase(
-        "SELECT hash(x) AS b, sum_udaf(y) AS s FROM t GROUP BY hash(x)",
-        used,
+    assert rewrite(
+        "SELECT hash(x) AS b, sum_udaf(y) AS s FROM t GROUP BY hash(x)"
     ) is None
     # subquery smuggled into a key -> fallback
-    assert r._rewrite_two_phase(
+    assert rewrite(
         "SELECT cast((SELECT max(z) FROM u) AS INT) AS b, sum_udaf(y) AS s "
-        "FROM t GROUP BY cast((SELECT max(z) FROM u) AS INT)",
-        used,
+        "FROM t GROUP BY cast((SELECT max(z) FROM u) AS INT)"
     ) is None
-    # plain-column keys keep their existing (un-aliased) rewrite shape
-    ok3 = r._rewrite_two_phase(
-        "SELECT g, sum_udaf(y) AS s FROM t GROUP BY g", used
-    )
+    # plain-column keys keep their name (no __g alias)
+    ok3 = rewrite("SELECT g, sum_udaf(y) AS s FROM t GROUP BY g")
     assert ok3 is not None and "__g0" not in ok3
 
 
-def test_pivot_expansion_rewrite():
+def test_pivot_expansion_rewrite(rewrite):
     """r8: PIVOT with a UDAF head expands to the GROUP BY + CASE form
     (Spark's own ResolvePivot expansion for null-ignoring aggregates)
-    and then rides the salted two-phase rewrite.  Native Spark refuses
+    and then rides the two-phase rewrite.  Native Spark refuses
     pandas UDAFs in PIVOT outright (UNSUPPORTED_FEATURE.
     PANDAS_UDAF_IN_PIVOT), so the front door is the ONLY way to run
     one — and it runs scale-safe."""
-    r = Registry()
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    used = {"sum_udaf"}
-    q = (
+    main = (
         "SELECT * FROM (SELECT g, k, v FROM t) "
         "PIVOT (sum_udaf(v) FOR k IN ('a' AS ca, 'b' AS cb)) ORDER BY g"
     )
-    ok = r._rewrite_two_phase(q, used)
+    core, _outer, _tail = Registry._expand_pivot(main, {"sum_udaf"})
+    assert "CASE WHEN k = 'a' THEN v END AS __pv0" in core
+    ok = rewrite(main)
     assert ok is not None
-    assert "sum_udaf__pfold" in ok and "sum_udaf__mergevec" in ok
-    assert "CASE WHEN k = 'a' THEN v END AS __pv0" in ok
+    assert "FROM __aus_fold_" in ok and "sum_udaf__mergevec" in ok
     assert "AS ca" in ok and "AS cb" in ok
     # unaliased values name the column after the literal text
-    ok2 = r._rewrite_two_phase(
+    ok2 = rewrite(
         "SELECT * FROM (SELECT g, k, v FROM t) "
-        "PIVOT (sum_udaf(v) FOR k IN ('a', 'b'))",
-        used,
+        "PIVOT (sum_udaf(v) FOR k IN ('a', 'b'))"
     )
     assert ok2 is not None and "AS a" in ok2 and "AS b" in ok2
     # numeric literal values get backticked output names
-    ok3 = r._rewrite_two_phase(
+    ok3 = rewrite(
         "SELECT * FROM (SELECT g, k, v FROM t) "
-        "PIVOT (sum_udaf(v) FOR k IN (1, 2))",
-        used,
+        "PIVOT (sum_udaf(v) FOR k IN (1, 2))"
     )
     assert ok3 is not None and "AS `1`" in ok3 and "AS `2`" in ok3
 
 
-def test_pivot_refusal_shapes():
+def test_pivot_refusal_shapes(rewrite):
     """PIVOT shapes outside the provable grammar refuse (None) rather
     than mangle: non-star outer select, non-literal values, expression
     agg args, no remaining group keys, WHERE after the pivot."""
-    r = Registry()
-    r._agg_sql_names.setdefault("sum_udaf", "sum_udaf")
-    used = {"sum_udaf"}
     bad = [
         # outer select not *
         "SELECT g FROM (SELECT g, k, v FROM t) "
@@ -484,10 +446,10 @@ def test_pivot_refusal_shapes():
         "PIVOT (sum_udaf(v) FOR k IN ('a' AS ca))",
     ]
     for q in bad:
-        assert r._rewrite_two_phase(q, used) is None, q
+        assert rewrite(q) is None, q
     # PIVOT buried in a FROM subquery (no UDAF inside) must not trip the
     # top-level expansion: the k-in-subquery shape is not top level
-    assert not r._has_top_level_kw(
+    assert not Registry._has_top_level_kw(
         "x FROM (SELECT * FROM t PIVOT (SUM(v) FOR k IN ('a'))) GROUP BY x",
         "PIVOT",
     )
@@ -519,35 +481,53 @@ def test_pivot_matches_native_builtin(spark):
     assert [tuple(r) for r in ours.collect()] == [
         tuple(0 if v is None else v for v in r) for r in native.collect()
     ]
-    # and the plan really is two-phase: merge stage present, and phase 1
-    # is either the map-side MapInArrow fold (r11 preferred shape) or the
-    # collect_list -> __pfold SQL pipeline (fallback)
+    # and the plan really is two-phase: merge stage present over the
+    # map-side MapInArrow fold
     plan = ours._jdf.queryExecution().executedPlan().toString()
-    assert "sum_udaf__mergevec" in plan
-    assert "MapInArrow" in plan or "sum_udaf__pfold" in plan
+    assert "sum_udaf__mergevec" in plan and "MapInArrow" in plan
+
+
+def _fold_has_no_exchange_below(plan: str) -> bool:
+    """True when the plan has a MapInArrow node and no Exchange sits in
+    any MapInArrow subtree (the fold runs map-side)."""
+    below, depth = [], None
+    for line in plan.splitlines():
+        d = len(line) - len(line.lstrip(" :+-|"))
+        if depth is not None and d > depth:
+            below.append(line)
+            continue
+        depth = d if "MapInArrow" in line else None
+    return "MapInArrow" in plan and not any("Exchange" in ln for ln in below)
+
+
+def _norm_nan(v):
+    """Row values with NaN as "NaN" (NaN != NaN), inside structs too."""
+    import math
+
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
+    if isinstance(v, (tuple, list)):  # Row or array
+        return tuple(map(_norm_nan, v))
+    return v
 
 
 def _mapfold_vs_native(spark, rows, schema, select):
     """Run ``select`` (``{A}`` marks the aggregate: sum_udaf on our side,
     native SUM on Spark's) through Registry.sql and natively; return both
-    row sets, asserting ours took the map-side fold."""
-    import math
-
+    row sets, asserting ours took the map-side fold and kept Spark's
+    output column names."""
     from arrow_udf_spark import GLOBAL
 
     GLOBAL.register_sql(spark)
     spark.createDataFrame(rows, schema).createOrReplaceTempView("mf_ref")
     ours = GLOBAL.sql(spark, select.format(A="sum_udaf"))
+    native = spark.sql(select.format(A="SUM"))
     plan = ours._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan
-
-    def norm(r):
-        return tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
-                     for v in r)
-
+    assert _fold_has_no_exchange_below(plan), plan
+    assert ours.columns == native.columns
     return (
-        sorted(map(norm, ours.collect()), key=repr),
-        sorted(map(norm, spark.sql(select.format(A="SUM")).collect()), key=repr),
+        sorted(map(_norm_nan, ours.collect()), key=repr),
+        sorted(map(_norm_nan, native.collect()), key=repr),
     )
 
 
@@ -599,9 +579,9 @@ def test_registry_sql_drops_fold_views(spark):
         assert sorted(map(tuple, df.collect())) == [("a", 3), ("b", 5)]
 
 
-def test_nested_group_key_falls_back_to_sql_pipeline(spark):
-    """The fold groups atomic keys only: a struct group key takes the
-    pure-SQL phase 1 and still matches native GROUP BY."""
+def test_nested_group_key_takes_the_fold(spark):
+    """A struct group key takes the map-side fold and matches native
+    GROUP BY."""
     from arrow_udf_spark import GLOBAL
 
     GLOBAL.register_sql(spark)
@@ -611,7 +591,93 @@ def test_nested_group_key_falls_back_to_sql_pipeline(spark):
     ).createOrReplaceTempView("mf_nested")
     q = "SELECT s, {A}(v) AS t FROM mf_nested GROUP BY s"
     ours = GLOBAL.sql(spark, q.format(A="sum_udaf"))
-    assert "MapInArrow" not in ours._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in ours._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(str, ours.collect())) == sorted(
         map(str, spark.sql(q.format(A="SUM")).collect())
     )
+
+
+_NAN = float("nan")
+#: NULL, NaN and -0.0 / 0.0 in every key and built-in column; v is never
+#: NULL, so sum_udaf (0 on an empty fold) and SUM agree on every group
+_EDGE_ROWS = [
+    (1, "a", 1.5, Decimal("1.25"), (1.0, "x"), [1.0, _NAN], 1),
+    (1, "a", _NAN, Decimal("-2.50"), (1.0, "x"), [1.0, _NAN], 2),
+    (2, None, -0.0, None, None, [-0.0], 4),
+    (2, None, 0.0, Decimal("7.00"), (-0.0, None), [0.0], 8),
+    (None, "b", None, Decimal("0.01"), (0.0, None), None, 16),
+    (3, "b", _NAN, Decimal("3.30"), (_NAN, "y"), [], 32),
+    (3, "b", 2.25, Decimal("-0.01"), (_NAN, "y"), [None], 64),
+]
+_EDGE_SCHEMA = (
+    "k int, s string, d double, m decimal(10,2), "
+    "st struct<a: double, b: string>, arr array<double>, v bigint"
+)
+
+
+@pytest.mark.parametrize(
+    "select",
+    [
+        # float and decimal SUM next to the UDAF: joined native aggregate
+        "SELECT k, {A}(v) AS t, SUM(d) AS sd FROM mf_ref GROUP BY k",
+        "SELECT s, {A}(v) AS t, SUM(m) AS sm, MAX(m) AS mm "
+        "FROM mf_ref GROUP BY s",
+        # decimal MIN/MAX and COUNT fold into the view
+        "SELECT k, {A}(v) AS t, MIN(m) AS mn, MAX(m) AS mm, COUNT(*) AS c "
+        "FROM mf_ref GROUP BY k",
+        # struct key with NULL, NaN and -0.0 inside
+        "SELECT st, {A}(v) AS t, COUNT(st) AS c FROM mf_ref GROUP BY st",
+        # array key with NULL, NaN, -0.0 and empty arrays
+        "SELECT arr, {A}(v) AS t FROM mf_ref GROUP BY arr",
+        # a CTE read by both arms of a set operation
+        "WITH c AS (SELECT * FROM mf_ref WHERE v > 1) "
+        "SELECT k, {A}(v) AS t FROM c GROUP BY k "
+        "UNION ALL SELECT k, {A}(v) AS t FROM c WHERE d > 0 GROUP BY k",
+        # qualified key, also in HAVING and ORDER BY
+        "SELECT e.k, {A}(e.v) AS t FROM mf_ref e GROUP BY e.k "
+        "HAVING e.k > 1 ORDER BY e.k",
+        # implicit alias next to a native aggregate
+        "SELECT k, {A}(v) t, COUNT(*) AS c FROM mf_ref GROUP BY k",
+    ],
+)
+def test_fold_matches_native_on_edge_inputs(spark, select):
+    """Inputs the removed collect_list phase 1 used to take (float and
+    decimal built-ins, nested keys, CTE set-op arms) and the shapes it
+    could not run (qualified keys, implicit aliases) all take the map-side
+    fold and match native Spark GROUP BY."""
+    ours, native = _mapfold_vs_native(spark, _EDGE_ROWS, _EDGE_SCHEMA, select)
+    assert ours == native
+
+
+@pytest.mark.parametrize(
+    "query, condition",
+    [
+        (
+            "WITH c AS (SELECT k, sum_udaf(v) AS s, COUNT(*) AS n "
+            "FROM mf_refuse GROUP BY k) SELECT * FROM c",
+            "INVALID_PANDAS_UDF_PLACEMENT",
+        ),
+        (
+            "SELECT * FROM (SELECT k, s, v FROM mf_refuse) "
+            "PIVOT (sum_udaf(v + 1) FOR s IN ('a' AS ca))",
+            "PANDAS_UDAF_IN_PIVOT",
+        ),
+    ],
+)
+def test_refused_single_phase_fallback_raises(spark, query, condition):
+    """When the rewrite refuses a shape whose single-phase plan Spark
+    refuses too, Registry.sql raises a ValueError carrying the rewrite
+    guidance instead of returning a plan that cannot run."""
+    import warnings
+
+    from arrow_udf_spark import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(_EDGE_ROWS, _EDGE_SCHEMA).createOrReplaceTempView(
+        "mf_refuse"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        with pytest.raises(ValueError, match=condition) as err:
+            GLOBAL.sql(spark, query)
+    assert "AggregateFunction.agg" in str(err.value)

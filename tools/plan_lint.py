@@ -14,9 +14,10 @@ class the plan tests guard):
 - ``heavy-above-generate``: a tokenize/transform expression in the
   Project ABOVE a Generate — ExtractGenerator hoisting the expensive
   producer so it recomputes per exploded row.
-- ``single-phase-pandas-agg``: an AggregateInPandas node without the
-  ``__aus_salt``/__partial two-phase shape — every row of a hot group
-  on one worker.
+- ``single-phase-pandas-agg``: a pandas aggregate node
+  (``ArrowAggregatePython`` in Spark 4.1, ``AggregateInPandas`` before)
+  calling anything but the two-phase ``__partial`` / ``__merge`` pair —
+  every row of a hot group on one worker.
 
 Usage:  python tools/plan_lint.py [--record PLANLINT.json] [query ...]
 Exit 1 when any non-whitelisted flag fires.
@@ -134,9 +135,26 @@ def lint_plan(plan: str) -> list[str]:
         ):
             flags.append("heavy-above-generate")
             break
-    if "AggregateInPandas" in plan and "__aus_salt" not in plan:
+    if any(
+        not re.fullmatch(r"\w+__(partial|merge)", call)
+        for call in _pandas_agg_calls(plan)
+    ):
         flags.append("single-phase-pandas-agg")
     return flags
+
+
+def _pandas_agg_calls(plan: str) -> list[str]:
+    """Function names in the aggregate list (the node's second ``[...]``)
+    of every pandas aggregate node in ``plan``."""
+    calls = []
+    for m in re.finditer(r"(?:ArrowAggregatePython|AggregateInPandas) (.*)", plan):
+        text, n = m.group(1), 1
+        while n:  # drop call arguments, innermost first
+            text, n = re.subn(r"\([^()]*\)", "", text)
+        lists = re.findall(r"\[([^\[\]]*)\]", text)
+        if len(lists) > 1:
+            calls += re.findall(r"(?:^|,)\s*(\w+)", lists[1])
+    return calls
 
 
 def main() -> int:
