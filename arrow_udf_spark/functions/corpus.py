@@ -17,6 +17,8 @@ from decimal import Decimal, localcontext
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..operators.scalar import udf
 from ..operators.table import udtf
@@ -27,26 +29,36 @@ from ..operators.aggregate import udaf
 # ---------------------------------------------------------------------------
 
 
+def _i64(a: pa.Array) -> np.ndarray:
+    return a.fill_null(0).to_numpy().astype("int64", copy=False)
+
+
+def _both_valid(a: pa.Array, b: pa.Array) -> np.ndarray:
+    return pc.and_(a.is_valid(), b.is_valid()).to_numpy(zero_copy_only=False)
+
+
+def _gcd(a: pa.Array, b: pa.Array) -> pa.Array:
+    g = np.gcd(_i64(a), _i64(b))
+    if a.null_count or b.null_count:
+        return pa.array(g, mask=~_both_valid(a, b))
+    return pa.array(g)
+
+
 @udf(input_types=["int", "int"], result_type="int", batch=True)
-def gcd(a: pd.Series, b: pd.Series) -> pd.Series:
+def gcd(a: pa.Array, b: pa.Array) -> pa.Array:
     """reference arrow-udf/tests/tests.rs:55-61, examples/rust.rs:23-29."""
-    return pd.Series(np.gcd(a.to_numpy(dtype="int64"), b.to_numpy(dtype="int64")))
+    return _gcd(a, b)
 
 
 @udf(input_types=["bigint", "bigint"], result_type="bigint", name="gcd", batch=True)
-def gcd_i64(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(np.gcd(a.to_numpy(dtype="int64"), b.to_numpy(dtype="int64")))
+def gcd_i64(a: pa.Array, b: pa.Array) -> pa.Array:
+    return _gcd(a, b)
 
 
 @udf(input_types=["int", "int", "int"], result_type="int", name="gcd3", batch=True)
-def gcd3(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
+def gcd3(a: pa.Array, b: pa.Array, c: pa.Array) -> pa.Array:
     """reference arrow-udf-remote/python/example.py:42-45."""
-    return pd.Series(
-        np.gcd(
-            np.gcd(a.to_numpy(dtype="int64"), b.to_numpy(dtype="int64")),
-            c.to_numpy(dtype="int64"),
-        )
-    )
+    return _gcd(_gcd(a, b), c)
 
 
 @udf(
@@ -71,39 +83,37 @@ async def gcd_async(a: int, b: int) -> int:
 
 
 @udf(input_types=["bigint", "bigint"], result_type="bigint", fallible=True, batch=True)
-def div(a: pd.Series, b: pd.Series):
+def div(a: pa.Array, b: pa.Array) -> pa.StructArray:
     """Integer division, row-level divide-by-zero capture — vectorized
-    via the framework's batched-Result protocol (value+error DataFrame):
+    via the framework's batched-Result protocol (value/error StructArray):
     bad rows are masked, never raised, so the whole batch stays numpy.
 
     reference tests/tests.rs:99-102 (+ error-column shape :389-412).
     Truncated division (Rust semantics), not Python floor division.
     """
-    av, bv = a.to_numpy(), b.to_numpy()
-    null = pd.isna(av) | pd.isna(bv)
+    av, bv = _i64(a), _i64(b)
+    null = ~_both_valid(a, b)
     zero = ~null & (bv == 0)
     # INT64_MIN / -1 = 2^63 is unrepresentable in i64 (the reference's Rust
     # i64 division panics on it) -> error row, not a silent wraparound
     ovfl = ~null & ~zero & (av == -(2**63)) & (bv == -1)
     ok = ~(null | zero | ovfl)
-    # nullable Int64 result (mask-backed), never an object array: object ->
-    # Arrow conversion was the hot spot of this UDF, not the division
     data = np.zeros(len(av), dtype="int64")
     if ok.any():
-        ai = av[ok].astype("int64")
-        bi = bv[ok].astype("int64")
+        ai, bi = av[ok], bv[ok]
         # truncated division from floor division: floor + 1 when the signs
         # differ and there is a remainder.  No abs() — np.abs(INT64_MIN)
         # silently overflows to INT64_MIN and corrupts the quotient.
         qf = ai // bi
         r = ai - qf * bi
         data[ok] = qf + ((r != 0) & ((ai < 0) != (bi < 0)))
-    values = pd.array(data, dtype="Int64")
-    values[~ok] = pd.NA
     errors = np.full(len(av), None, dtype=object)
     errors[zero] = "division by zero"
     errors[ovfl] = "integer overflow"
-    return pd.DataFrame({"value": pd.Series(values), "error": pd.Series(errors)})
+    return pa.StructArray.from_arrays(
+        [pa.array(data, mask=~ok), pa.array(errors, pa.string())],
+        names=["value", "error"],
+    )
 
 
 @udf(input_types=["double"], result_type="double", batch=True)
@@ -266,19 +276,14 @@ def _dec_str(d: Decimal) -> str:
     return format(d, "f")
 
 
-def _decimal_add_slow(a: pd.Series, b: pd.Series) -> pd.Series:
+def _decimal_add_slow(a: pa.Array, b: pa.Array) -> list:
     """Arbitrary-precision reference path: one Decimal context per batch."""
     with localcontext() as ctx:
         ctx.prec = 1000  # arbitrary precision, like PG unconstrained numeric
-        return pd.Series(
-            [
-                None
-                if (x is None or x != x or y is None or y != y)
-                else _dec_str(Decimal(x) + Decimal(y))
-                for x, y in zip(a.tolist(), b.tolist())
-            ],
-            dtype=object,
-        )
+        return [
+            None if x is None or y is None else _dec_str(Decimal(x) + Decimal(y))
+            for x, y in zip(a.to_pylist(), b.to_pylist())
+        ]
 
 
 def _decimal_scales(arr) -> tuple[int, int]:
@@ -290,8 +295,6 @@ def _decimal_scales(arr) -> tuple[int, int]:
     notation ('1.5E+1') has no chars-after-dot scale, yet Arrow's decimal
     parser accepts it — refuse those batches so they take the exact
     Decimal loop instead of rendering at a bogus scale."""
-    import pyarrow.compute as pc
-
     if pc.any(pc.match_substring(arr, "e", ignore_case=True)).as_py():
         raise ValueError("exponent notation: scale not derivable from text")
     dot = pc.find_substring(arr, ".")
@@ -308,7 +311,7 @@ def _decimal_scales(arr) -> tuple[int, int]:
     name="decimal_add",
     batch=True,
 )
-def decimal_add(a: pd.Series, b: pd.Series):
+def decimal_add(a: pa.Array, b: pa.Array) -> pa.Array:
     """Exact arbitrary-precision add — reference example/src/lib.rs:54-57,
     tests/tests.rs:573-592.
 
@@ -320,25 +323,18 @@ def decimal_add(a: pd.Series, b: pd.Series):
     test_properties.py).  (A numpy ``np.char`` cents path was measured
     3.5x SLOWER than the Decimal loop — numpy string kernels are
     object-level loops — and a pandas ``.str`` variant 2.8x slower.)"""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     try:
-        aa = pa.Array.from_pandas(a)
-        ab = pa.Array.from_pandas(b)
-        amn, amx = _decimal_scales(aa)
-        bmn, bmx = _decimal_scales(ab)
+        amn, amx = _decimal_scales(a)
+        bmn, bmx = _decimal_scales(b)
         if amn != amx or bmn != bmx or max(amx, bmx) > 18:
             raise ValueError("non-uniform or wide scale: arrow path inexact")
         s = max(amx, bmx)
-        da = pc.cast(aa, pa.decimal128(36, s))
-        db = pc.cast(ab, pa.decimal128(36, s))
-        out = pc.cast(pc.add(da, db), pa.string())
-        res = out.to_pandas()
+        da = pc.cast(a, pa.decimal128(36, s))
+        db = pc.cast(b, pa.decimal128(36, s))
         # Decimal-loop rendering has no trailing ".0*" beyond the operand
         # scale and never uses scientific notation; arrow's decimal->string
         # matches both properties at fixed scale s, including "0.00" signs.
-        return res.where(res.notna(), None)
+        return pc.cast(pc.add(da, db), pa.string())
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError, ValueError, OverflowError):
         return _decimal_add_slow(a, b)
 
@@ -652,12 +648,9 @@ def series(n):
         yield i
 
 
-series.vectorize(
-    lambda n: [
-        range(int(v)) if v is not None and v == v else ()
-        for v in n.tolist()
-    ]
-)
+@series.vectorize
+def _series_batch(n: pa.Array):
+    return [range(v) if v is not None else () for v in n.to_pylist()]
 
 
 @udtf(input_types=["string"], result_type="struct<key:string,value:string>", name="key_values")
@@ -685,14 +678,14 @@ def json_array_elements(j):
 
 
 @json_array_elements.vectorize
-def _json_array_elements_batch(col: pd.Series):
+def _json_array_elements_batch(col: pa.Array):
     """Fallible vectorized fan-out: one tight loop per batch instead of the
     generic per-row tuple machinery (~2.5x on the events JSON bench)."""
     loads, dumps = json.loads, json.dumps
     outs: list = []
     errs: list = []
-    for j in col.tolist():
-        if j is None or j != j:
+    for j in col.to_pylist():
+        if j is None:
             outs.append(())
             errs.append(None)
             continue

@@ -8,16 +8,22 @@ arrow-udf-runtime/src/javascript/mod.rs:536-625 and python server
 
 Design (SURVEY.md §2.A A1-A4, A11, A12):
 
-- Functions execute as **pandas UDFs** — Arrow-batched, vectorized transfer
-  between the JVM and the Python worker.  This is Spark's analogue of the
-  reference's FFI / Flight boundary, and its fastest Python path.
-- ``batch=True`` functions receive whole :class:`pandas.Series` columns
-  (the reference's batched/columnar mode, A11); ``batch=False`` functions
-  are called once per row (the reference's default row loop, A1) inside the
-  worker, still amortized over Arrow batches.
-- ``CallMode.RETURN_NULL_ON_NULL_INPUT`` masks null rows *before* the call
-  and re-inserts nulls after (the reference's batched-mode null mask,
-  javascript/mod.rs:568-618).
+- Functions execute as **Arrow UDFs** (``arrow_udf``, Spark's
+  ``SQL_SCALAR_ARROW_UDF``): each batch reaches the worker as
+  :class:`pyarrow.Array` columns and the result goes back as one Arrow
+  array built straight into the return type — Arrow in, Arrow out, the
+  reference's ``RecordBatch -> RecordBatch`` contract.
+- ``batch=True`` functions receive whole columns (the reference's
+  batched/columnar mode, A11): :class:`pyarrow.Array` when every parameter
+  is annotated ``pa.Array``, :class:`pandas.Series` otherwise.  The choice
+  is read once from the signature, like pyspark's own type-hint inference.
+  ``batch=False`` functions are called once per row (the reference's
+  default row loop, A1) with plain Python values: NaN reads as None, maps
+  as dicts, structs as dicts.
+- A float NaN in a result comes back NULL (pandas' missing-value rule).
+- ``CallMode.RETURN_NULL_ON_NULL_INPUT`` masks null (and NaN) rows *before*
+  the call and re-inserts nulls after (the reference's batched-mode null
+  mask, javascript/mod.rs:568-618).
 - Fallible functions (declared ``fallible=True``, the analogue of a Rust
   ``Result<T>`` return — codegen_utils.rs:398-414) produce a
   ``struct<value: T, error: string>`` column: per-row errors yield NULL
@@ -36,23 +42,20 @@ from __future__ import annotations
 
 import enum
 import inspect
+import typing
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FuturesTimeout
 from dataclasses import dataclass, field
 from typing import Any, Callable, NamedTuple, Optional, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-try:  # explicit SCALAR eval type (hint inference can't see through our wrapper)
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    _SCALAR_EVAL = PandasUDFType.SCALAR
-except ImportError:  # pragma: no cover
-    _SCALAR_EVAL = 200
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, expand_signature, parse_type, struct_to_row
@@ -67,48 +70,91 @@ class CallMode(enum.Enum):
     RETURN_NULL_ON_NULL_INPUT = "return_null_on_null_input"
 
 
-def _is_null(v: Any) -> bool:
-    # covers None, float('nan'), pandas NA/NaT without importing numpy paths
+# ---------------------------------------------------------------------------
+# Arrow <-> Python views of one column
+# ---------------------------------------------------------------------------
+
+
+def takes_arrow(fn: Callable) -> bool:
+    """True when every parameter of ``fn`` is annotated ``pa.Array``."""
     try:
-        return v is None or v != v or v is pd.NA
-    except Exception:
+        hints = typing.get_type_hints(fn)
+        params = inspect.signature(fn).parameters
+    except (NameError, TypeError, ValueError):
         return False
+    return bool(params) and all(hints.get(p) is pa.Array for p in params)
 
 
-_INT_DTYPES = {
-    T.ByteType: ("int8", "Int8"),
-    T.ShortType: ("int16", "Int16"),
-    T.IntegerType: ("int32", "Int32"),
-    T.LongType: ("int64", "Int64"),
-}
+def _has_map(t: pa.DataType) -> bool:
+    if pa.types.is_map(t):
+        return True
+    if pa.types.is_struct(t):
+        return any(_has_map(f.type) for f in t)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return _has_map(t.value_type)
+    return False
 
 
-def _coerce(result: Any, dtype: T.DataType, n: int) -> pd.Series:
-    """Coerce a user return (Series | list | scalar) to a pandas Series
-    whose dtype round-trips cleanly through Arrow into ``dtype``."""
-    if isinstance(result, pd.Series):
-        s = result.reset_index(drop=True)
-    elif isinstance(result, (list, tuple)):
-        s = pd.Series(list(result), dtype="object")
-    else:  # broadcast scalar (e.g. zero-arg functions)
-        s = pd.Series([result] * n, dtype="object")
-    for cls, (plain, nullable) in _INT_DTYPES.items():
-        if isinstance(dtype, cls):
-            try:
-                return s.astype(plain if not s.isna().any() else nullable)
-            except (TypeError, ValueError):
-                return s
-    if isinstance(dtype, T.DoubleType):
-        try:
-            return s.astype("float64")
-        except (TypeError, ValueError):
-            return s
-    if isinstance(dtype, T.FloatType):
-        try:
-            return s.astype("float32")
-        except (TypeError, ValueError):
-            return s
-    return s
+def _dictify(v: Any, t: pa.DataType) -> Any:
+    """``to_pylist`` renders a map as (key, value) pairs; make it a dict."""
+    if v is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _dictify(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        return {f.name: _dictify(v[f.name], f.type) for f in t}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return [_dictify(x, t.value_type) for x in v]
+    return v
+
+
+def py_values(arr: pa.Array) -> list:
+    """Row-function view of a column: Python values, NaN as None."""
+    vals = arr.to_pylist()
+    if pa.types.is_floating(arr.type):
+        return [None if v != v else v for v in vals]
+    if _has_map(arr.type):
+        return [_dictify(v, arr.type) for v in vals]
+    return vals
+
+
+def pandas_values(arr: pa.Array) -> pd.Series:
+    """Batch-function view of a column, as a pandas UDF would see it."""
+    if _has_map(arr.type):
+        return pd.Series(py_values(arr), dtype="object")
+    return arr.to_pandas(coerce_temporal_nanoseconds=True)
+
+
+def to_arrow(values: Any, atype: pa.DataType, n: int) -> pa.Array:
+    """Build a result column of type ``atype`` from a user return: an Arrow
+    array, a Series, a DataFrame of struct fields, a list, or a scalar
+    broadcast to ``n`` rows.  Casts are unchecked, as in a pandas UDF."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    if isinstance(values, pa.Array):
+        return values if values.type == atype else values.cast(atype, safe=False)
+    if isinstance(values, pd.DataFrame):  # batch struct contract: field columns
+        cols = [to_arrow(values.get(f.name), f.type, len(values)) for f in atype]
+        return pa.StructArray.from_arrays(cols, fields=list(atype))
+    if isinstance(values, pd.Series):
+        if values.dtype != object:
+            return pa.Array.from_pandas(values, type=atype, safe=False)
+        values = values.tolist()
+    elif not isinstance(values, (list, tuple)):
+        values = [values] * n
+    if pa.types.is_struct(atype):
+        names = [f.name for f in atype]
+        values = [None if v is None else struct_to_row(v, names) for v in values]
+    try:
+        return pa.array(values, type=atype, from_pandas=True, safe=False)
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        # e.g. integral floats for an int column: infer, then cast
+        return pa.array(values, from_pandas=True).cast(atype, safe=False)
+
+
+# ---------------------------------------------------------------------------
+# executor-side evaluation
+# ---------------------------------------------------------------------------
 
 
 class _EvalSpec(NamedTuple):
@@ -127,8 +173,8 @@ class _EvalSpec(NamedTuple):
     # RLIMIT_AS; a row whose allocations blow the cap raises MemoryError in
     # the child and becomes an error row — the executor never OOMs
     memory_limit: Optional[int] = None
-    # zero-arg function: Spark pandas UDFs need >=1 column, so the caller
-    # passes a dummy column that only provides the batch length
+    # zero-arg function: Spark UDFs need >=1 column, so the caller passes a
+    # dummy column that only provides the batch length
     nullary: bool = False
     # coroutine function: rows of a batch run concurrently on one event
     # loop (reference A12 async mode, javascript/mod.rs:954-974); io_threads
@@ -140,6 +186,8 @@ class _EvalSpec(NamedTuple):
     # Python runtime, python/mod.rs:374 e.to_string() — e.g.
     # "TypeError: neg() takes 1 positional argument but 2 were given")
     error_style: str = "message"
+    # batch fn annotated with pa.Array parameters: gets the arrays as-is
+    arrow_in: bool = False
 
 
 def _format_error(style: str) -> Callable[[BaseException], str]:
@@ -150,23 +198,27 @@ def _format_error(style: str) -> Callable[[BaseException], str]:
 
 
 def _eval_rows(
-    spec: _EvalSpec, cols: Sequence[pd.Series], n: int
-) -> tuple[list, Optional[pd.Series]]:
-    lists = [c.tolist() for c in cols]
-    rows = list(zip(*lists)) if lists else [()] * n
+    spec: _EvalSpec, arrays: Sequence[pa.Array], n: int
+) -> tuple[list, Optional[list]]:
+    rows = list(zip(*(py_values(a) for a in arrays))) if arrays else [()] * n
     fn = spec.fn
     if spec.batch:
-        # row-wise fallback of a batch fn: call on length-1 Series
-        user = spec.fn
+        # row-wise fallback of a batch fn: call it on length-1 columns
+        user, types = spec.fn, [a.type for a in arrays]
+        atype = to_arrow_type(spec.dtype)
 
         def fn(*args):  # noqa: ANN001
-            return user(*(pd.Series([a]) for a in args)).iloc[0]
+            cols = (
+                pa.array([a], type=t) if spec.arrow_in else pd.Series([a])
+                for a, t in zip(args, types)
+            )
+            return to_arrow(user(*cols), atype, 1)[0].as_py()
 
     fmt = _format_error(spec.error_style)
 
     def call_one(args: tuple) -> tuple[Any, Optional[str]]:
         try:
-            return fn(*(None if _is_null(a) else a for a in args)), None
+            return fn(*args), None
         except MemoryError:  # A21 cap tripped (str(MemoryError()) is empty)
             return None, "memory limit exceeded"
         except Exception as e:  # row-level isolation, never abort the batch
@@ -181,7 +233,7 @@ def _eval_rows(
             async def one(args: tuple) -> tuple[Any, Optional[str]]:
                 async with sem:
                     try:
-                        coro = fn(*(None if _is_null(a) else a for a in args))
+                        coro = fn(*args)
                         if spec.timeout is not None:
                             return await asyncio.wait_for(coro, spec.timeout), None
                         return await coro, None
@@ -231,15 +283,13 @@ def _eval_rows(
         results = [call_one(r) for r in rows]
     values = [v for v, _ in results]
     errs = [e for _, e in results]
-    errors = (
-        pd.Series(errs, dtype="object") if any(e is not None for e in errs) else None
-    )
-    if not spec.fallible and errors is not None:
+    if not any(e is not None for e in errs):
+        return values, None
+    if not spec.fallible:
         # non-fallible function raised: surface the first error loudly,
         # matching Spark (and reference non-Result) behavior
-        first = next(e for e in errs if e is not None)
-        raise RuntimeError(first)
-    return values, errors
+        raise RuntimeError(next(e for e in errs if e is not None))
+    return values, errs
 
 
 def _vm_bytes() -> int:
@@ -255,8 +305,8 @@ def _vm_bytes() -> int:
 
 
 def _eval_memcapped(
-    spec: _EvalSpec, cols: Sequence[pd.Series], n: int
-) -> tuple[Any, Optional[pd.Series]]:
+    spec: _EvalSpec, arrays: Sequence[pa.Array], n: int
+) -> tuple[Any, Any]:
     """Run the batch in a forked child under ``RLIMIT_AS = current + cap``.
 
     Fork (not spawn) so the function and columns transfer by page sharing —
@@ -286,18 +336,16 @@ def _eval_memcapped(
             saved_soft, saved_hard = resource.getrlimit(resource.RLIMIT_AS)
             soft = cap if saved_hard == resource.RLIM_INFINITY else min(cap, saved_hard)
             resource.setrlimit(resource.RLIMIT_AS, (soft, saved_hard))
-            values, errors = _eval_clean(inner, cols, n)
-            # Series/DataFrame pickle natively; list(DataFrame) would yield
-            # its column labels — only listify opaque iterables.  The
-            # listify still runs UNDER the cap (it may drive a user
+            values, errors = _eval_clean(inner, arrays, n)
+            # arrays, Series and DataFrames pickle natively; list(DataFrame)
+            # would yield its column labels — only listify opaque iterables.
+            # The listify still runs UNDER the cap (it may drive a user
             # generator); serialization of the already-materialized result
             # runs after the soft limit is restored, so a legitimately
             # large result doesn't MemoryError inside pickling and get
             # misreported as over-limit.
-            if not isinstance(values, (list, pd.Series, pd.DataFrame)):
+            if not isinstance(values, (list, pa.Array, pd.Series, pd.DataFrame)):
                 values = list(values)
-            if errors is not None:
-                errors = list(errors)
             resource.setrlimit(resource.RLIMIT_AS, (saved_soft, saved_hard))
             payload = pickle.dumps((values, errors))
             with os.fdopen(w_fd, "wb") as w:
@@ -312,8 +360,7 @@ def _eval_memcapped(
         data = r.read()
     _, status = os.waitpid(pid, 0)
     if data and status == 0:
-        values, errors = pickle.loads(data)
-        return values, (None if errors is None else pd.Series(errors, dtype="object"))
+        return pickle.loads(data)
     # the child died without delivering results.  Signal death (segfault in
     # a C extension, SIGKILL from the kernel OOM killer) is the reference's
     # wasm fault-injection scenario (tests/wasm.rs:33-70 segfault/oom
@@ -328,109 +375,80 @@ def _eval_memcapped(
             f"{spec.fn.__name__}: {msg} "
             f"(per-call limit {spec.memory_limit} bytes)"
         )
-    return [None] * n, pd.Series([msg] * n, dtype="object")
+    return [None] * n, [msg] * n
 
 
 def _eval_clean(
-    spec: _EvalSpec, cols: Sequence[pd.Series], n: int
-) -> tuple[Any, Optional[pd.Series]]:
-    """Evaluate on (possibly pre-masked) columns; return (values, errors)."""
+    spec: _EvalSpec, arrays: Sequence[pa.Array], n: int
+) -> tuple[Any, Any]:
+    """Evaluate on (possibly pre-masked) columns; return (values, errors)
+    where errors is None or one message-or-None per row."""
     if spec.memory_limit is not None:
-        return _eval_memcapped(spec, cols, n)
-    if spec.batch:
-        if not spec.fallible:
-            return spec.fn(*cols), None
-        try:
-            res = spec.fn(*cols)
-        except Exception:
-            # vectorized fast path failed -> re-run row-wise to isolate errors
-            return _eval_rows(spec, cols, n)
-        if isinstance(res, pd.DataFrame) and {"value", "error"}.issubset(res.columns):
-            # vectorized-fallible protocol: the batch fn computed the error
-            # column itself (masked numpy arithmetic), so bad rows never
-            # raise and the whole batch stays on the fast path.  Mirrors the
-            # reference's batched Result mode.
-            errs = res["error"].astype(object).where(res["error"].notna(), None)
-            has = errs.notna().any()
-            return res["value"].reset_index(drop=True), (
-                errs.reset_index(drop=True) if has else None
-            )
-        return res, None
-    return _eval_rows(spec, cols, n)
+        return _eval_memcapped(spec, arrays, n)
+    if not spec.batch:
+        return _eval_rows(spec, arrays, n)
+    args = arrays if spec.arrow_in else [pandas_values(a) for a in arrays]
+    if not spec.fallible:
+        return spec.fn(*args), None
+    try:
+        res = spec.fn(*args)
+    except Exception:
+        # vectorized fast path failed -> re-run row-wise to isolate errors
+        return _eval_rows(spec, arrays, n)
+    # vectorized-fallible protocol: the batch fn computed the error column
+    # itself (masked arithmetic) as a value/error DataFrame or StructArray,
+    # so bad rows never raise and the whole batch stays on the fast path.
+    # Mirrors the reference's batched Result mode.
+    if isinstance(res, pd.DataFrame) and {"value", "error"}.issubset(res.columns):
+        return res["value"], res["error"].astype(object)
+    if isinstance(res, pa.StructArray) and {"value", "error"} <= {
+        f.name for f in res.type
+    }:
+        return res.field("value"), res.field("error")
+    return res, None
 
 
-def _eval_batch(spec: _EvalSpec, *cols: pd.Series) -> pd.Series | pd.DataFrame:
+def _valid_rows(arrays: Sequence[pa.Array], n: int) -> Optional[np.ndarray]:
+    """Rows with no NULL (or float NaN) argument; None when that is all."""
+    keep = np.ones(n, dtype=bool)
+    for a in arrays:
+        if pa.types.is_floating(a.type):
+            keep &= ~np.isnan(a.to_numpy(zero_copy_only=False))
+        elif a.null_count:
+            keep &= a.is_valid().to_numpy(zero_copy_only=False)
+    return None if keep.all() else keep
+
+
+def _eval_arrays(spec: _EvalSpec, *arrays: pa.Array) -> pa.Array:
     """The executor-side batch evaluator (one Arrow batch per call)."""
-    # struct-typed arguments arrive as pandas DataFrames; normalize to a
-    # Series of dicts so row functions see plain values
-    cols = tuple(
-        pd.Series(c.to_dict("records")) if isinstance(c, pd.DataFrame) else c
-        for c in cols
-    )
-    n = len(cols[0]) if cols else 0
-    if spec.nullary:
-        # dummy column carries only the batch length
-        values, errors = _eval_clean(spec._replace(nullary=False), (), n)
-        out = _coerce(values, spec.dtype, n)
-        if spec.fallible:
-            if errors is None:
-                errors = pd.Series([None] * n, dtype="object")
-            return pd.DataFrame({"value": out, "error": errors})
-        return out
+    n = len(arrays[0]) if arrays else 0
+    if spec.nullary:  # the dummy column carries only the batch length
+        spec, arrays = spec._replace(nullary=False), ()
+    keep = _valid_rows(arrays, n) if spec.skip_null else None
+    if keep is not None:
+        arrays = tuple(a.filter(pa.array(keep)) for a in arrays)
+    m = n if keep is None else int(keep.sum())
 
-    null_mask = None
-    work_cols = cols
-    if spec.skip_null and cols:
-        null_mask = cols[0].isna()
-        for c in cols[1:]:
-            null_mask = null_mask | c.isna()
-        if null_mask.any():
-            work_cols = tuple(c[~null_mask].reset_index(drop=True) for c in cols)
-        else:
-            null_mask = None
-
-    m = len(work_cols[0]) if work_cols else n
-    values, errors = _eval_clean(spec, work_cols, m)
-    if isinstance(values, pd.DataFrame):
-        # batch struct contract: the fn returned a DataFrame of field
-        # columns; normalize to a Series of row dicts so null-mask
-        # reinsertion and _coerce treat it row-wise (a bare DataFrame would
-        # be broadcast as a single opaque scalar)
-        values = pd.Series(values.to_dict("records"))
-
-    out = _coerce(values, spec.dtype, m)
-    if null_mask is not None:
+    values, errors = _eval_clean(spec, arrays, m)
+    atype = to_arrow_type(spec.dtype)
+    out = to_arrow(values, atype, m)
+    err = pa.nulls(m, pa.string()) if errors is None else to_arrow(errors, pa.string(), m)
+    if keep is not None:
         # re-insert nulls at masked positions
-        full = pd.Series([None] * n, dtype="object")
-        full[~null_mask.to_numpy()] = out.to_numpy(dtype="object")
-        out = _coerce(full, spec.dtype, n)
-        if errors is not None:
-            full_e = pd.Series([None] * n, dtype="object")
-            full_e[~null_mask.to_numpy()] = errors.to_numpy(dtype="object")
-            errors = full_e
-
-    if spec.fallible:
-        if errors is None:
-            errors = pd.Series([None] * len(out), dtype="object")
-        return pd.DataFrame({"value": out, "error": errors})
-    if isinstance(spec.dtype, T.StructType):
-        # pandas-UDF struct contract: return a DataFrame of field columns.
-        # Accepts dicts or registered @struct_type class instances (reference
-        # class-or-dict returns, tests/python.rs:489-569).  An outer-NULL
-        # struct degrades to all-NULL fields (pandas limitation).
-        names = [f.name for f in spec.dtype.fields]
-        return pd.DataFrame(
-            [struct_to_row(v, names) for v in out.tolist()],
-            columns=names,
-        )
-    return out
+        idx = pa.array(np.cumsum(keep) - 1, mask=~keep)
+        out, err = out.take(idx), err.take(idx)
+    if not spec.fallible:
+        return out
+    return pa.StructArray.from_arrays(
+        [out, err], fields=[pa.field("value", atype), pa.field("error", pa.string())]
+    )
 
 
 def _make_wrapper(spec: _EvalSpec, name: str) -> Callable:
-    """Build the plain function handed to pandas_udf (captures only spec)."""
+    """Build the plain function handed to arrow_udf (captures only spec)."""
 
-    def eval_fn(*cols):
-        return _eval_batch(spec, *cols)
+    def eval_fn(*cols: pa.Array) -> pa.Array:
+        return _eval_arrays(spec, *cols)
 
     eval_fn.__name__ = name
     return eval_fn
@@ -460,12 +478,13 @@ class ScalarFunction:
 
     def _spec(self) -> _EvalSpec:
         is_async = inspect.iscoroutinefunction(self.fn)
+        # a coroutine fn is always row-wise: the batch path would return an
+        # un-awaited coroutine instead of a column
+        batch = self.batch and not is_async
         return _EvalSpec(
             fn=self.fn,
             dtype=self.result_field.dtype,
-            # a coroutine fn is always row-wise: the batch path would return
-            # an un-awaited coroutine instead of a Series
-            batch=self.batch and not is_async,
+            batch=batch,
             fallible=self.fallible,
             skip_null=self.mode is CallMode.RETURN_NULL_ON_NULL_INPUT,
             io_threads=self.io_threads,
@@ -474,11 +493,31 @@ class ScalarFunction:
             nullary=not self.input_fields,
             is_async=is_async,
             error_style=self.error_style,
+            arrow_in=batch and takes_arrow(self.fn),
         )
 
     def _eval(self, *cols: pd.Series):
-        """Driver-side direct evaluation (used by unit tests)."""
-        return _eval_batch(self._spec(), *cols)
+        """Driver-side direct evaluation (used by unit tests): pandas
+        columns in; an object Series, or a DataFrame of them for struct
+        and fallible results, out."""
+        arrays = [
+            pa.array(c, type=to_arrow_type(f.dtype), from_pandas=True)
+            for c, f in zip(cols, self.input_fields)
+        ]
+        spec = self._spec()
+        try:
+            out = _eval_arrays(spec, *arrays)
+        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            # a result the return type rejects (Spark fails the task) is
+            # surfaced raw here, never coerced to a wrong value
+            values, _ = _eval_clean(spec, arrays, len(arrays[0]) if arrays else 0)
+            return pd.Series(values, dtype="object")
+        if isinstance(self.spark_return_type, T.StructType):
+            return pd.DataFrame(
+                {f.name: pd.Series(c.to_pylist(), dtype="object")
+                 for f, c in zip(out.type, out.flatten())}
+            )
+        return pd.Series(out.to_pylist(), dtype="object")
 
     # ---- Spark surface ----
 
@@ -495,10 +534,9 @@ class ScalarFunction:
 
     def as_spark_udf(self):
         if self._udf is None:
-            u = pandas_udf(
+            u = arrow_udf(
                 _make_wrapper(self._spec(), self.sig.name),
                 returnType=self.spark_return_type,
-                functionType=_SCALAR_EVAL,
             )
             # error-capturing / masked UDFs must not be re-executed or
             # common-subexpression'd by Catalyst (SURVEY.md §7.9d)
@@ -582,7 +620,7 @@ def udf(
     Example::
 
         @udf(input_types=["int", "int"], result_type="int", batch=True)
-        def gcd(a: pd.Series, b: pd.Series) -> pd.Series: ...
+        def gcd(a: pa.Array, b: pa.Array) -> pa.Array: ...
 
     When ``result_type`` is omitted, it is inferred from the function's
     return annotation for plain Python types (the reference's ``type_infer``

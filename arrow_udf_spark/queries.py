@@ -58,32 +58,29 @@ def _scan_parallelism(path: str) -> int:
 def t(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.parquet(path)
+    # Adaptive spread (opt-in per query): a source whose scan parallelism is
+    # far below the cluster's leaves cores idle for the whole map-side of
+    # the plan (the testdata ships single-row-group files -> 1-task scans).
+    # One hash exchange on the parquet row index fixes that for queries
+    # whose per-row compute dominates (UDFs, per-token hashing): the spread
+    # is even and deterministic, so Spark does not sort every row first as
+    # it does before a round-robin exchange.  Queries that are cheap JVM
+    # projections or immediately shuffle anyway must NOT pay it (the
+    # exchange also blocks scan-level filter pushdown).  At 100 TB the
+    # branch never fires: a real scan yields >= parallelism splits.
+    par = spark.sparkContext.defaultParallelism
+    if spread and _scan_parallelism(path) < max(2, par // 2):
+        df = df.repartition(par, F.col("_metadata.row_index"))
     if name == "events":
         # schema-sensitive ts normalization: guarantees `ts` (timestamp) and
         # `us` (bigint micros-since-epoch == DuckDB epoch_us(ts)) whatever
         # physical type the fixture ships (int64 nanos or TIMESTAMP(MICROS)).
         from .sources.io import normalize_events
 
-        df = normalize_events(df, cache_key=f"{sf_dir}/{name}.parquet")
-    # Adaptive spread (opt-in per query): a source whose scan parallelism is
-    # far below the cluster's leaves cores idle for the whole map-side of
-    # the plan (the testdata ships single-row-group files -> 1-task scans).
-    # One cheap round-robin exchange fixes that for queries whose per-row
-    # compute dominates (UDFs, per-token hashing); queries that are cheap
-    # JVM projections or immediately shuffle anyway must NOT pay it (the
-    # exchange also blocks scan-level filter pushdown).  At 100 TB the
-    # branch never fires: a real scan yields >= parallelism splits.
-    if _FORCE_SPREAD is not None:  # A/B testing knob, never set in production
-        spread = _FORCE_SPREAD
-    par = spark.sparkContext.defaultParallelism
-    if spread and _scan_parallelism(f"{sf_dir}/{name}.parquet") < max(2, par // 2):
-        df = df.repartition(par)
+        df = normalize_events(df, cache_key=path)
     return df
-
-
-#: None = per-query `spread` argument decides; True/False = force (tests)
-_FORCE_SPREAD: bool | None = None
 
 
 def query(name: str, oracle: str | None = None):
@@ -418,7 +415,7 @@ def q_array_access(spark, sf):
 )
 def q_series(spark, sf):
     p = t(spark, sf, "part", spread=True)
-    out = C.series.apply(p, cols=["p_size"], passthrough=["p_partkey"], fan_out=True)
+    out = C.series.apply(p, cols=["p_size"], passthrough=["p_partkey"])
     return out.select("p_partkey", F.col("series").cast("long").alias("series"))
 
 
@@ -431,12 +428,12 @@ def q_series(spark, sf):
     """,
 )
 def q_key_values(spark, sf):
-    p = t(spark, sf, "part")
+    p = t(spark, sf, "part", spread=True)
     src = p.withColumn(
         "s",
         F.concat(F.lit("brand="), "p_brand", F.lit(",type="), "p_type"),
     )
-    out = C.key_values.apply(src, cols=["s"], passthrough=["p_partkey"], fan_out=True)
+    out = C.key_values.apply(src, cols=["s"], passthrough=["p_partkey"])
     return out.select(
         "p_partkey",
         F.col("key_values").getField("key").alias("key"),
@@ -458,7 +455,7 @@ def q_key_values(spark, sf):
     """,
 )
 def q_json_array_elements(spark, sf):
-    ev = t(spark, sf, "events")
+    ev = t(spark, sf, "events", spread=True)
     src = ev.withColumn(
         "j",
         F.when(
@@ -466,9 +463,7 @@ def q_json_array_elements(spark, sf):
             F.to_json(F.array("user_id", "event_id")),
         ).otherwise(F.col("user_id").cast("string")),  # scalar JSON text
     )
-    out = C.json_array_elements.apply(
-        src, cols=["j"], passthrough=["event_id"], fan_out=True
-    )
+    out = C.json_array_elements.apply(src, cols=["j"], passthrough=["event_id"])
     return out.select(
         "event_id", F.col("json_array_elements").alias("elem"), "error"
     )
@@ -2238,8 +2233,8 @@ def q_png_pixels(spark, sf):
     from .operators.multimodal import png_pipeline
 
     # spread: the fixture's single-row-group file scans as ONE task, which
-    # serializes the per-row decode; one round-robin exchange spreads the
-    # CPU-dominated map across every core (never fires on a real corpus)
+    # serializes the per-row decode; one row-index hash exchange spreads
+    # the CPU-dominated map across every core (never fires on a real corpus)
     return png_pipeline(t(spark, sf, "documents", spread=True))
 
 
@@ -3251,8 +3246,8 @@ def q_array_identity(spark, sf):
     """,
 )
 def q_split_words(spark, sf):
-    d = t(spark, sf, "documents")
-    out = C.split_words.apply(d, cols=["text"], passthrough=["doc_id"], fan_out=True)
+    d = t(spark, sf, "documents", spread=True)
+    out = C.split_words.apply(d, cols=["text"], passthrough=["doc_id"])
     return out.select(
         "doc_id",
         F.col("split_words").getField("word").alias("word"),
@@ -4070,7 +4065,7 @@ def q_vocab_topk(spark, sf):
     # composition showcase: UDTF fan-out feeding a relational top-k —
     # the reference's table-fn protocol as one stage of a Spark plan
     d = t(spark, sf, "documents", spread=True)
-    words = C.split_words.apply(d, cols=["text"], fan_out=True)
+    words = C.split_words.apply(d, cols=["text"])
     return (
         words.select(F.col("split_words").getField("word").alias("word"))
         .groupBy("word")
@@ -5007,13 +5002,13 @@ def q_rolling_7d_sum(spark, sf):
 def q_audio_chunks(spark, sf):
     from .operators.multimodal import audio_chunks
 
-    d = t(spark, sf, "documents").select(
+    d = t(spark, sf, "documents", spread=True).select(
         "doc_id",
         (F.col("n_chars") * 160).cast("long").alias("n"),
         F.lit(16000).cast("int").alias("sr"),
         F.lit(1000).cast("int").alias("cm"),
     )
-    out = audio_chunks.apply(d, cols=["n", "sr", "cm"], passthrough=["doc_id"], fan_out=True)
+    out = audio_chunks.apply(d, cols=["n", "sr", "cm"], passthrough=["doc_id"])
     c = F.col("audio_chunks")
     return out.select(
         "doc_id",
@@ -5785,7 +5780,7 @@ def q_view_roundtrip(spark, sf):
     so arrays are constructed as views directly.)"""
     import pyarrow as pa
 
-    from .operators.scalar import _eval_batch
+    from .operators.scalar import _eval_arrays
 
     len_spec = C.length._spec()
     lenb_spec = C.length_bin._spec()
@@ -5798,15 +5793,12 @@ def q_view_roundtrip(spark, sf):
                 [None if s is None else s.encode("utf-8") for s in txt],
                 type=pa.binary_view(),
             )
-            s, bs = sv.to_pandas(), bv.to_pandas()
-            ln = _eval_batch(len_spec, s)
-            bl = _eval_batch(lenb_spec, bs)
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(0),
-                    pa.Array.from_pandas(s, type=pa.string()),
-                    pa.Array.from_pandas(ln, type=pa.int32()),
-                    pa.Array.from_pandas(bl, type=pa.int32()),
+                    pa.array(sv.to_pylist(), type=pa.string()),
+                    _eval_arrays(len_spec, sv),
+                    _eval_arrays(lenb_spec, bv),
                 ],
                 names=["doc_id", "text_rt", "len", "blen"],
             )

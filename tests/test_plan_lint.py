@@ -131,3 +131,23 @@ def test_single_phase_pandas_agg_flagged(spark, sf_dir):
     plan = pair._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowAggregatePython") == 2
     assert "single-phase-pandas-agg" not in lint_plan(plan)
+
+
+def test_sorted_round_robin_flagged(spark, sf_dir):
+    """``df.repartition(n)`` plans a round-robin exchange, which Spark
+    sorts every row before; the row-index spread of ``queries.t`` is a
+    hash exchange and stays clean."""
+    from tools.plan_lint import lint_plan
+
+    from arrow_udf_spark.queries import QUERIES, t
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    plan = li.repartition(4)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan
+    assert "sorted-round-robin" in lint_plan(plan)
+    spread = t(spark, sf_dir, "lineitem", spread=True)
+    plan = spread._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(_extract_row_index" in plan
+    assert "sorted-round-robin" not in lint_plan(plan)
+    plan = QUERIES["series_udtf"](spark, sf_dir)._jdf.queryExecution()
+    assert "sorted-round-robin" not in lint_plan(plan.executedPlan().toString())

@@ -2,6 +2,8 @@
 not their results — pushdown reaches the scan, small dims broadcast, and
 native-expression operators never fall out of the JVM into Python."""
 
+import re
+
 from pyspark.sql import functions as F
 
 
@@ -521,17 +523,45 @@ def test_cte_sql_agg_two_phase_plan(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(l_extendedprice), GreaterThan(l_extendedprice" in p
 
 
+def _assert_only_row_index_spread(p: str) -> None:
+    """The one exchange a map-only plan may carry is the adaptive spread
+    that fans the 1-task fixture scan across cores, hash-partitioned on
+    the parquet row index; a real corpus scan never pays it."""
+    exchanges = [line for line in p.splitlines() if "Exchange " in line]
+    assert len(exchanges) <= 1, exchanges
+    for line in exchanges:
+        assert "Exchange hashpartitioning(_extract_row_index" in line, line
+        assert "REPARTITION_BY_NUM" in line, line
+    assert not re.search(r"hashpartitioning\((?!_extract_row_index)", p), p
+    assert "RoundRobinPartitioning" not in p
+
+
 def test_png_pipeline_single_map_stage(spark, sf_dir):
     """r8: png_pixels is one mapInPandas over the scan — no KEYED shuffle
-    anywhere (the embarrassing-parallel contract).  The only exchange the
-    plan may carry is the adaptive round-robin spread that fans the
-    1-task fixture scan across cores; a real corpus scan never pays it."""
+    anywhere (the embarrassing-parallel contract); the row-index spread is
+    the only exchange."""
     from arrow_udf_spark.queries import QUERIES
 
     p = _plan(QUERIES["png_pixels"](spark, sf_dir))
     assert "MapInPandas" in p
-    assert "Exchange hashpartitioning" not in p
+    _assert_only_row_index_spread(p)
     assert "Exchange rangepartitioning" not in p
+
+
+def test_udf_boundary_runs_on_arrow(spark, sf_dir):
+    """Scalar functions are Arrow UDFs (eval type 250, SQL_SCALAR_ARROW_UDF)
+    and table functions run on mapInArrow, each over the sort-free
+    row-index spread."""
+    from arrow_udf_spark.queries import QUERIES
+
+    p = _plan(QUERIES["decimal_add_fn"](spark, sf_dir))
+    evals = [line for line in p.splitlines() if "ArrowEvalPython" in line]
+    assert len(evals) == 1 and evals[0].rstrip().endswith(", 250"), evals
+    _assert_only_row_index_spread(p)
+
+    p = _plan(QUERIES["series_udtf"](spark, sf_dir))
+    assert "MapInArrow" in p and "MapInPandas" not in p
+    _assert_only_row_index_spread(p)
 
 
 def test_dup_span_cascade_digest_only_shuffles(spark, sf_dir):

@@ -233,3 +233,30 @@ def test_result_type_inference(reg):
         return None if s is None else s.upper()
 
     assert shout.sig.return_type == "string"
+
+
+def test_batch_view_follows_annotations(reg):
+    """A batch fn whose parameters are annotated ``pa.Array`` gets the
+    Arrow columns as they are (NaN stays NaN, NULL stays NULL); any other
+    batch fn gets pandas Series."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    seen = []
+
+    @udf(input_types=["double"], result_type="double", batch=True, registry=reg)
+    def twice(x: pa.Array) -> pa.Array:
+        seen.append(type(x))
+        return pc.multiply(x, 2)
+
+    @udf(input_types=["double"], result_type="double", batch=True, registry=reg)
+    def twice_pd(x):
+        seen.append(type(x))
+        return x * 2
+
+    out = twice._eval(pd.Series([1.5, None]))
+    assert out.tolist() == [3.0, None]
+    assert issubclass(seen[-1], pa.Array)
+    out = twice_pd._eval(pd.Series([1.5, None]))
+    assert out.tolist() == [3.0, None]
+    assert seen[-1] is pd.Series

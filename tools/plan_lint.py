@@ -18,6 +18,11 @@ class the plan tests guard):
   (``ArrowAggregatePython`` in Spark 4.1, ``AggregateInPandas`` before)
   calling anything but the two-phase ``__partial`` / ``__merge`` pair —
   every row of a hot group on one worker.
+- ``sorted-round-robin``: a ``RoundRobinPartitioning`` exchange — Spark
+  sorts every row before it (``spark.sql.execution.sortBeforeRepartition``)
+  so a retried task sees the same order; on a one-task fixture scan that
+  sort runs on one core.  Spread on a hash of the parquet row index
+  instead (``queries.t(..., spread=True)``).
 
 Usage:  python tools/plan_lint.py [--record PLANLINT.json] [query ...]
 Exit 1 when any non-whitelisted flag fires.
@@ -140,6 +145,8 @@ def lint_plan(plan: str) -> list[str]:
         for call in _pandas_agg_calls(plan)
     ):
         flags.append("single-phase-pandas-agg")
+    if "RoundRobinPartitioning" in plan:
+        flags.append("sorted-round-robin")
     return flags
 
 
