@@ -19,8 +19,17 @@ Spark realization — a genuinely distributed two-phase plan:
       At 100 TB this is the difference between shuffling the table and
       shuffling a few KB per key.
   phase 2 (reduce side): a native ``collect_list`` of the states per key,
-      then one vectorized UDF call per batch of groups that merges them
-      with ``merge`` and applies ``finish``.
+      then one scalar ``arrow_udf`` call per batch of groups that merges
+      them with ``merge`` and applies ``finish``
+      (:meth:`AggregateFunction.as_spark_mergevec`).
+
+Every aggregate surface shares that one fold (:func:`_fold_spans`, the
+only caller of ``accumulate`` / ``accumulate_batch``) and that one merge.
+The DataFrame :meth:`AggregateFunction.agg` and ``Registry.sql`` fold in
+``mapInArrow``; the SQL names ``f`` and ``f__partial`` fold a whole group
+in one grouped aggregate ``arrow_udf``
+(:meth:`AggregateFunction.as_spark_grouped_agg`); ``f__mergevec`` is the
+phase-2 UDF above.
 
 This exercises the reference's ``merge`` exactly the way its distributed
 hosts do (partial + final agg).  Pickle-typed opaque state
@@ -49,9 +58,12 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, parse_type
+from .scalar import to_arrow
 
 __all__ = ["AggregateFunction", "udaf", "build_multi_fold"]
 
@@ -391,184 +403,103 @@ class AggregateFunction:
     retract: Optional[Callable[..., Any]] = None
     finish: Optional[Callable[[Any], Any]] = None
     #: optional vectorized fold: (state, *pandas.Series) -> state.  When
-    #: present, phase 1 groups each Arrow batch with pandas and folds whole
-    #: column slices instead of Python rows (~50x on numeric aggregates).
+    #: present, the fold hands a group of more than ``_ROW_FOLD_MAX`` rows
+    #: to it as column slices instead of Python rows (~50x on numeric
+    #: aggregates).
     accumulate_batch: Optional[Callable[..., Any]] = None
 
     # ------------------------------------------------------------------
-    def as_spark_grouped_agg(self):
-        """SQL surface: wrap the 5-phase protocol as a pandas GROUPED_AGG
-        UDF so ``SELECT f(x) ... GROUP BY`` works after ``register_sql``
-        (the reference's hosts call aggregates from SQL the same way).
+    def as_spark_grouped_agg(self, partial: bool = False):
+        """SQL surface: the group's rows fold in one grouped aggregate
+        ``arrow_udf`` (``SQL_GROUPED_AGG_ARROW_UDF``).  It runs
+        :func:`_fold_spans` over one span of the whole group, so NULL,
+        NaN and wide-int handling is the DataFrame fold's, and returns a
+        typed ``pa.Scalar``: ``finish(state)`` for ``f`` or, with
+        ``partial``, the pickled state for ``f__partial``, which
+        ``f__mergevec(collect_list(...))`` merges (the salted two-level
+        GROUP BY of ``sum_udaf_two_phase_sql``).
 
-        The whole group arrives as Series; accumulate_batch (or the row
-        fold) runs once, then finish.  Spark does not split GROUPED_AGG
-        into partials — for the distributed two-phase plan use
-        :meth:`agg`; this path is the SQL-compatibility surface.
-
-        SCALE WARNING (emitted once per aggregate at wrap time): Spark
-        ships every row of a group to a single Python worker for
-        GROUPED_AGG — there is no map-side combine, so a hot key at large
-        scale concentrates the whole group's rows on one task.  The
-        DataFrame :meth:`agg` path shuffles only O(groups) pickled partial
-        states and is the one to use in pipelines.
-
-        The wrapped UDF is memoized per instance, so the warning really
-        does fire once per aggregate — not once per ``register_sql``
-        call (the suite calls it from many tests/queries).
+        SCALE WARNING (once per aggregate, at wrap time, for ``f``): Spark
+        gives a grouped aggregate UDF no map-side combine, so every row of
+        a group moves to one worker.  ``Registry.sql`` and the DataFrame
+        :meth:`agg` fold map-side and shuffle only O(groups) pickled
+        states.  The bare wrapper is memoized per instance so the warning
+        fires once per aggregate, not once per ``register_sql`` call.
         """
-        cached = getattr(self, "_grouped_agg_cache", None)
-        if cached is not None:
-            return cached
-        import warnings
+        if not partial:
+            cached = getattr(self, "_grouped_agg_cache", None)
+            if cached is not None:
+                return cached
+            import warnings
 
-        warnings.warn(
-            f"aggregate '{self.sig.name}' registered for SQL via GROUPED_AGG: "
-            "a raw spark.sql() call evaluates this without partial "
-            "aggregation (every row of a group moves to one worker). Run SQL "
-            "through Registry.sql(spark, query) — it rewrites bare aggregate "
-            "calls to the two-phase map-side fold + merge plan — or use "
-            "the DataFrame AggregateFunction.agg(df, by=..., args=...) path.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        from pyspark.sql.functions import pandas_udf
+            warnings.warn(
+                f"aggregate '{self.sig.name}' registered for SQL as a grouped "
+                "aggregate UDF: a raw spark.sql() call evaluates this without "
+                "partial aggregation (every row of a group moves to one "
+                "worker). Run SQL through Registry.sql(spark, query) — it "
+                "rewrites bare aggregate calls to the two-phase map-side fold "
+                "+ merge plan — or use the DataFrame "
+                "AggregateFunction.agg(df, by=..., args=...) path.",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        create = self.create_state
+        fn = (create, self.accumulate, self.accumulate_batch, None)
+        if partial:
+            dtype, out = T.BinaryType(), pickle.dumps
+        else:
+            dtype, out = self.result_field.dtype, self.finish or (lambda st: st)
+        atype = to_arrow_type(dtype)
 
-        try:
-            from pyspark.sql.pandas.functions import PandasUDFType
+        def agg_fn(*cols: pa.Array) -> pa.Scalar:
+            states = [[create()]]
+            n = len(cols[0]) if cols else 0
+            _fold_spans(fn, 0, cols, None, [(0, 0, n)], states)
+            res = to_arrow([out(states[0][0])], atype, 1)[0]
+            # pyarrow cannot rebuild an array from a NULL nested scalar;
+            # a bare None arrives as a null-typed array Spark casts
+            return res if res.is_valid else None
 
-            _GROUPED = PandasUDFType.GROUPED_AGG
-        except ImportError:  # pragma: no cover
-            _GROUPED = 201
-
-        create, acc, acc_b, finish = (
-            self.create_state,
-            self.accumulate,
-            self.accumulate_batch,
-            self.finish,
-        )
-
-        def agg_fn(*series):
-            st = create()
-            if acc_b is not None:
-                st = acc_b(st, *series)
-            else:
-                for row in zip(*[s.tolist() for s in series]):
-                    st = acc(st, *[None if _is_null(v) else v for v in row])
-            return finish(st) if finish is not None else st
-
-        agg_fn.__name__ = self.sig.name
-        udf = pandas_udf(
-            agg_fn, returnType=self.result_field.dtype, functionType=_GROUPED
-        )
-        self._grouped_agg_cache = udf
+        agg_fn.__name__ = self.sig.name + ("__partial" if partial else "")
+        udf = arrow_udf(agg_fn, returnType=dtype)
+        if not partial:
+            self._grouped_agg_cache = udf
         return udf
 
     # ------------------------------------------------------------------
-    def as_spark_grouped_agg_partial(self):
-        """SQL two-phase surface, phase 1: fold a group slice into ONE
-        pickled state (BinaryType).  Pair with
-        :meth:`as_spark_grouped_agg_merge` in a salted two-level GROUP BY::
-
-            SELECT k, f__merge(p) FROM (
-                SELECT k, f__partial(x) AS p
-                FROM t GROUP BY k, pmod(hash(x), 32)
-            ) GROUP BY k
-
-        Scale posture vs the single-phase GROUPED_AGG surface: a hot key's
-        rows split across the 32 salt buckets (no single Python worker
-        receives the whole group), and the outer aggregation moves only
-        O(groups x 32) pickled states.  The one inherent cost SQL can't
-        avoid — Python aggregates get no JVM map-side combine, so rows
-        shuffle once either way — is shared with every GROUP BY surface;
-        the DataFrame :meth:`agg` path (mapInPandas partials, zero row
-        shuffle) remains the pipeline-grade option.
-        """
-        from pyspark.sql.functions import pandas_udf
-
-        try:
-            from pyspark.sql.pandas.functions import PandasUDFType
-
-            _GROUPED = PandasUDFType.GROUPED_AGG
-        except ImportError:  # pragma: no cover
-            _GROUPED = 201
-
-        create, acc, acc_b = self.create_state, self.accumulate, self.accumulate_batch
-
-        def partial_fn(*series):
-            st = create()
-            if acc_b is not None:
-                st = acc_b(st, *series)
-            else:
-                for row in zip(*[s.tolist() for s in series]):
-                    st = acc(st, *[None if _is_null(v) else v for v in row])
-            return pickle.dumps(st)
-
-        partial_fn.__name__ = f"{self.sig.name}__partial"
-        return pandas_udf(partial_fn, returnType=T.BinaryType(), functionType=_GROUPED)
-
-    def as_spark_grouped_agg_merge(self):
-        """SQL two-phase surface, phase 2: merge pickled partial states and
-        finish (see :meth:`as_spark_grouped_agg_partial`)."""
-        from pyspark.sql.functions import pandas_udf
-
-        try:
-            from pyspark.sql.pandas.functions import PandasUDFType
-
-            _GROUPED = PandasUDFType.GROUPED_AGG
-        except ImportError:  # pragma: no cover
-            _GROUPED = 201
-
-        merge, finish = self.merge, self.finish
-
-        def merge_fn(blobs):
-            state = None
-            for blob in blobs:
-                if blob is None:
-                    continue
-                s = pickle.loads(blob)
-                state = s if state is None else merge(state, s)
-            return finish(state) if finish is not None else state
-
-        merge_fn.__name__ = f"{self.sig.name}__merge"
-        return pandas_udf(
-            merge_fn, returnType=self.result_field.dtype, functionType=_GROUPED
-        )
-
-    # ------------------------------------------------------------------
     def as_spark_mergevec(self):
-        """Phase-2 VECTORIZED form (r10 perf): scalar pandas UDF over
-        ``collect_list(<pickled state>)`` rows — merge + finish for a whole
-        Arrow batch of groups per Python invocation, replacing the
-        per-group GROUPED_AGG ``__merge`` call (and the per-group
-        ``applyInPandas`` call of the DataFrame :meth:`agg` path).  Merge
-        order over the collected states is arbitrary exactly as it is for
-        the GROUPED_AGG/applyInPandas surfaces — the UDAF contract makes
-        merge commutative+associative, so the result is unchanged.
+        """Phase 2 of every two-phase surface: a scalar ``arrow_udf`` over
+        ``collect_list(<pickled state>)`` that merges and finishes a whole
+        Arrow batch of groups per Python call.  Merge order over the
+        collected states is arbitrary; the UDAF contract makes merge
+        commutative and associative, so the result is unchanged.
 
-        NOT memoized on the instance: a used pandas_udf wrapper holds a
-        JVM handle, and streaming closures (streaming_running_agg)
-        pickle the AggregateFunction — a cached wrapper attribute makes
-        the instance unpicklable."""
-        from pyspark.sql.functions import pandas_udf
-
+        NOT memoized on the instance: a used UDF wrapper holds a JVM
+        handle, and streaming closures (streaming_running_agg) pickle the
+        AggregateFunction — a cached wrapper attribute makes the instance
+        unpicklable."""
         merge, finish = self.merge, self.finish
+        atype = to_arrow_type(self.result_field.dtype)
 
-        def mergevec_fn(blob_lists: pd.Series) -> pd.Series:
+        def mergevec_fn(blob_lists: pa.Array) -> pa.Array:
+            # one flat list of states sliced by the list offsets: building
+            # the Python bytes through to_numpy is ~30x faster than
+            # to_pylist, which dominated the merge of 20k groups
+            blobs = blob_lists.values.to_numpy(zero_copy_only=False).tolist()
+            offs = blob_lists.offsets.to_numpy().tolist()
             out = []
-            for blobs in blob_lists:
+            for a, b in zip(offs, offs[1:]):
                 state = None
-                if blobs is not None:
-                    for blob in blobs:
-                        if blob is None:
-                            continue
-                        s = pickle.loads(blob)
-                        state = s if state is None else merge(state, s)
+                for blob in blobs[a:b]:
+                    if blob is None:
+                        continue
+                    s = pickle.loads(blob)
+                    state = s if state is None else merge(state, s)
                 out.append(finish(state) if finish is not None else state)
-            return pd.Series(out, dtype=object)
+            return to_arrow(out, atype, len(out))
 
         mergevec_fn.__name__ = f"{self.sig.name}__mergevec"
-        return pandas_udf(mergevec_fn, returnType=self.result_field.dtype)
+        return arrow_udf(mergevec_fn, returnType=self.result_field.dtype)
 
     # ------------------------------------------------------------------
     def agg(
@@ -599,7 +530,7 @@ class AggregateFunction:
         partials = proj.mapInArrow(fold, schema=phase1_schema)
         # merge+finish VECTORIZED (r10 perf): a native collect_list of the
         # O(partitions)-bounded pickled states per key (map-side partial,
-        # codegen) and ONE scalar pandas UDF invocation per Arrow batch of
+        # codegen) and ONE scalar arrow_udf invocation per Arrow batch of
         # groups — applyInPandas called Python once per group, which at
         # high key cardinality is pure per-call overhead.  State merge
         # order stays arbitrary (UDAF contract: commutative+associative).

@@ -128,13 +128,14 @@ class KmvAgg:
         return tuple(sorted(state + (int(h),))[: self.K])
 
     def accumulate_batch(self, state, hs):
-        # The DataFrame agg bridge (mapInArrow phase 1) delivers NULL-bearing
-        # int64 batches as exact masked Int64, so null keys just drop out
-        # below.  A float64 batch can still arrive from bridges we don't
-        # control (Spark's own GROUPED_AGG pandas conversion on the SQL
-        # surface): there the 53-bit mantissa has ALREADY corrupted hashes
-        # >= 2^53 and astype back cannot detect it — refuse loudly and tell
-        # the caller to pre-filter nulls (kmv_distinct does).
+        # Every batch surface (the DataFrame agg, Registry.sql and the SQL
+        # grouped-aggregate UDFs, all through the Arrow fold) delivers
+        # NULL-bearing int64 batches as exact masked Int64, so null keys
+        # just drop out below.  Only the pandas streaming bridges
+        # (applyInPandasWithState in streaming.stateful) can still hand
+        # over float64: there the 53-bit mantissa has ALREADY corrupted
+        # hashes >= 2^53 and astype back cannot detect it — refuse loudly
+        # and tell the caller to pre-filter nulls (kmv_distinct does).
         if hs.dtype.kind == "f":
             raise ValueError(
                 "kmv_udaf: hash batch arrived as float64 (input column has "

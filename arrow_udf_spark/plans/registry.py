@@ -90,19 +90,29 @@ class Registry:
     # or mangled); used by the two-phase SQL rewrite in :meth:`sql`
     _agg_sql_names: dict[str, str] = field(default_factory=dict)
     #: sticky flag set by ``register_sql(strict=True)``: the single-phase
-    #: GROUPED_AGG SQL surface is never registered and unprovable query
+    #: grouped aggregate SQL surface is never registered and unprovable query
     #: shapes raise instead of falling back to it
     _strict_sql: bool = False
     #: register_sql memo (r11 perf): a repeat registration of the full
     #: catalog costs ~0.5 s of py4j round trips per call, and every
     #: two-phase SQL query used to pay it inside the timed region.  Keyed
     #: WEAKLY by the live SparkSession and by a fingerprint of the
-    #: registry contents + the effective strict flag, so adding a new
-    #: function (tests do) or toggling strict re-registers for real.
+    #: registered function objects + the effective strict flag, so adding
+    #: or redefining a function (tests do) or toggling strict re-registers
+    #: for real.
     _reg_memo: Any = None
 
     def add(self, fn: Any) -> None:
-        self._fns.setdefault(fn.sig.name, []).append(fn)
+        """Register ``fn``; a function of the same name, kind and argument
+        types is replaced, so a redefinition is never shadowed by the old
+        body."""
+        fns = self._fns.setdefault(fn.sig.name, [])
+        key = (fn.sig.kind, fn.sig.arg_types, fn.sig.variadic)
+        for i, f in enumerate(fns):
+            if (f.sig.kind, f.sig.arg_types, f.sig.variadic) == key:
+                fns[i] = fn
+                return
+        fns.append(fn)
 
     def get(
         self,
@@ -140,15 +150,23 @@ class Registry:
         under the bare name, so ``SELECT gcd(a, b)`` works for the common
         case.
 
-        ``strict=True`` REFUSES to register the single-phase GROUPED_AGG
-        surface for aggregates (the scale trap: plain ``spark.sql`` plans
-        it without partial aggregation, every row of a group on one
-        worker).  Only the scale-safe ``__partial``/``__merge`` pair is
-        registered; a bare aggregate call then fails analysis-time with
-        UNRESOLVED_ROUTINE instead of silently planning the single-phase
-        shape, and :meth:`sql` raises (with the rewrite pointer) rather
-        than falling back.  Strict mode is sticky on the registry so a
-        later :meth:`sql` call honors it.
+        Each aggregate registers three names, all Arrow UDFs over the
+        fold and merge of ``AggregateFunction.agg``: ``f`` (single-phase
+        grouped aggregate, eval type 252), ``f__partial`` (the group's
+        pickled state, 252) and ``f__mergevec`` (scalar merge + finish
+        over ``collect_list`` of states, 250).  ``f__partial`` under a
+        salted GROUP BY, then ``f__mergevec(collect_list(p))`` under the
+        real one, is the two-phase form in plain SQL.
+
+        ``strict=True`` REFUSES to register the single-phase ``f`` (the
+        scale trap: plain ``spark.sql`` plans it without partial
+        aggregation, every row of a group on one worker), leaving two
+        names per aggregate: ``f__partial`` and ``f__mergevec``.  A bare
+        aggregate call then fails analysis-time with UNRESOLVED_ROUTINE
+        instead of silently planning the single-phase shape, and
+        :meth:`sql` raises (with the rewrite pointer) rather than falling
+        back.  Strict mode is sticky on the registry so a later
+        :meth:`sql` call honors it.
         """
         if strict:
             self._strict_sql = True
@@ -162,14 +180,10 @@ class Registry:
             import weakref
 
             self._reg_memo = weakref.WeakKeyDictionary()
-        fprint = (
-            strict,
-            tuple(
-                (n, f.sig.kind, f.sig.mangled())
-                for n in sorted(self._fns)
-                for f in self._fns[n]
-            ),
-        )
+        # function identities: the memo entry holds the functions, so an
+        # id is never reused by a redefinition while it is recorded
+        fns_now = self.all()
+        fprint = (strict, tuple(map(id, fns_now)))
         memo_hit = self._reg_memo.get(spark)
         if memo_hit is not None and memo_hit[0] == fprint:
             return list(memo_hit[1])
@@ -202,30 +216,21 @@ class Registry:
                     sql_name = name if bare_ok else f.sig.mangled()
                     self._agg_sql_names.setdefault(name, sql_name)
                     if not strict:
-                        # single-phase GROUPED_AGG surface (warns at wrap
+                        # single-phase grouped aggregate (warns at wrap
                         # time); strict mode refuses it outright
                         spark.udf.register(
                             sql_name, f.as_spark_grouped_agg()
                         )
-                    # two-phase SQL pair: the salted GROUP BY pattern
-                    # (partial -> pickled state, merge -> finish) splits
-                    # hot keys across workers; see
-                    # AggregateFunction.as_spark_grouped_agg_partial
+                    # phase 1 -> pickled state, and the batched merge +
+                    # finish over collect_list of states, which the
+                    # two-phase rewrite also emits over its fold view
                     spark.udf.register(
-                        f"{sql_name}__partial", f.as_spark_grouped_agg_partial()
+                        f"{sql_name}__partial", f.as_spark_grouped_agg(partial=True)
                     )
-                    spark.udf.register(
-                        f"{sql_name}__merge", f.as_spark_grouped_agg_merge()
-                    )
-                    # batched merge the two-phase rewrite emits over the
-                    # map-side fold's states: one Python call per Arrow
-                    # batch of groups instead of one GROUPED_AGG call per
-                    # group
                     spark.udf.register(
                         f"{sql_name}__mergevec", f.as_spark_mergevec()
                     )
                     registered.append(f"{sql_name}__partial")
-                    registered.append(f"{sql_name}__merge")
                     registered.append(f"{sql_name}__mergevec")
                     bare_ok = False
                     if strict:
@@ -239,7 +244,7 @@ class Registry:
                     self._sql_names.add(name)
                 registered.append(sql_name)
         try:
-            self._reg_memo[spark] = (fprint, list(registered))
+            self._reg_memo[spark] = (fprint, list(registered), fns_now)
         except TypeError:  # session not weak-referenceable (mock in tests)
             pass
         return registered
@@ -344,7 +349,7 @@ class Registry:
     #: window functions the select-item rewriter may pass through with an
     #: ``OVER (...)`` clause.  Built-in aggregates (_BUILTIN_AGGS) are also
     #: legal as window functions (``SUM(...) OVER ()`` share-of-total).
-    #: Registered UDAFs are NOT: a pandas GROUPED_AGG over window frames is
+    #: Registered UDAFs are NOT: a grouped aggregate UDF over window frames is
     #: exactly the every-row-to-one-worker trap the rewrite exists to avoid.
     _WINDOW_FUNCS = {
         "rank", "dense_rank", "row_number", "ntile", "percent_rank",
@@ -366,7 +371,8 @@ class Registry:
         "HAVING / ORDER BY), or use the DataFrame "
         "AggregateFunction.agg(df, by=..., args=...) path"
     )
-    #: Spark's refusals of a single-phase pandas UDAF plan
+    #: Spark's refusals of a single-phase grouped aggregate UDF plan (it
+    #: still names Arrow ones "pandas UDAF")
     _SINGLE_PHASE_REFUSED = {
         "INVALID_PANDAS_UDF_PLACEMENT",
         "UNSUPPORTED_FEATURE.PANDAS_UDAF_IN_PIVOT",
@@ -375,7 +381,7 @@ class Registry:
     def sql(self, spark: "SparkSession", query: str) -> "DataFrame":
         """Run SQL with bare aggregate names made scale-safe by default.
 
-        Spark plans a GROUPED_AGG pandas UDF without partial aggregation:
+        Spark plans a grouped aggregate UDF without partial aggregation:
         every row of a group moves to ONE worker — a scale trap on hot keys
         (the reference's hosts always run partial+final agg,
         arrow-udf-runtime/src/python/mod.rs:456-656).  This front door
@@ -399,7 +405,7 @@ class Registry:
         clause, and a grouping_id() join keeps data-NULL groups distinct
         from super-aggregate rows), and top-level PIVOT over a named
         projection (expanded to the GROUP BY + CASE form — which native
-        Spark cannot even run with a pandas UDAF head,
+        Spark cannot even run with a Python UDAF head,
         UNSUPPORTED_FEATURE.PANDAS_UDAF_IN_PIVOT).
         Anything unprovable falls back to the single-phase form with the
         registration warning, raises under ``register_sql(strict=True)``,
@@ -434,13 +440,13 @@ class Registry:
             raise ValueError(
                 "query shape not rewritable to two-phase aggregation "
                 "and strict SQL mode refuses the single-phase "
-                "GROUPED_AGG fallback (every row of a group on one "
+                "grouped aggregate fallback (every row of a group on one "
                 f"worker). {self._REWRITE_HINT}, "
                 "or re-register with register_sql(strict=False)."
             )
         warnings.warn(
             "query shape not rewritable to two-phase aggregation; "
-            "running single-phase GROUPED_AGG (every row of a group "
+            "running single-phase grouped aggregate (every row of a group "
             "moves to one worker)",
             RuntimeWarning,
             stacklevel=2,
@@ -449,7 +455,7 @@ class Registry:
 
         try:
             df = spark.sql(query)
-            # Spark refuses a pandas UDAF next to a native aggregate only
+            # Spark refuses a Python UDAF next to a native aggregate only
             # when it plans the query
             df._jdf.queryExecution().executedPlan()
             return df
@@ -707,7 +713,7 @@ class Registry:
             args / PARTITION BY / ORDER BY is replaced by its merged
             column (``SUM(sum_udaf(v)) OVER ()`` share-of-total,
             ``rank() OVER (ORDER BY sum_udaf(v) DESC)``).  Registered
-            UDAFs as the window HEAD are refused — a GROUPED_AGG pandas
+            UDAFs as the window HEAD are refused — a grouped aggregate
             UDF over window frames is exactly the every-row-to-one-worker
             trap this rewrite exists to avoid.  Returns
             ``(rewritten, default_alias)`` or None."""
@@ -1559,7 +1565,7 @@ class Registry:
         explicit names.  Output column order (group keys, then one column
         per IN value, in IN order) and names (value alias, else the
         literal's text) match Spark's native PIVOT output — which is the
-        only reference point, since native Spark refuses pandas UDAFs in
+        only reference point, since native Spark refuses Python UDAFs in
         PIVOT outright (UNSUPPORTED_FEATURE.PANDAS_UDAF_IN_PIVOT): this
         expansion is what makes a UDAF pivot runnable at all.
 
@@ -1902,8 +1908,8 @@ class Registry:
                     a.strip() for a in _split_top_level(args) if a.strip()
                 ]
                 if not arg_items:
-                    # a zero-arg UDAF is not expressible as a GROUPED_AGG
-                    # pandas UDF either — fall back loudly
+                    # a zero-arg UDAF is not expressible as a grouped
+                    # aggregate UDF either — fall back loudly
                     return None
                 if key not in memo:
                     memo[key] = f"__u{len(agg_args)}"

@@ -501,13 +501,13 @@ def q_sum_udaf(spark, sf):
 )
 def q_sum_udaf_two_phase_sql(spark, sf):
     """The SQL-surface aggregate on its scale path: the salted two-level
-    GROUP BY over the ``__partial`` / ``__merge`` GROUPED_AGG pair.  A hot
-    key's rows split across 32 salt buckets (each folds to one pickled
-    state on its own worker), and the outer aggregation moves only
-    O(groups x 32) states — the same two-phase shape as
-    ``AggregateFunction.agg``, expressible in plain SQL.  Result must
-    equal the single-phase oracle exactly (merge associativity at the
-    gate)."""
+    GROUP BY of ``__partial`` (a grouped aggregate UDF folding to one
+    pickled state) and ``__mergevec(collect_list(...))``.  A hot key's
+    rows split across 32 salt buckets (each folds to one pickled state on
+    its own worker), and the outer aggregation moves only O(groups x 32)
+    states — the same two-phase shape as ``AggregateFunction.agg``,
+    expressible in plain SQL.  Result must equal the single-phase oracle
+    exactly (merge associativity at the gate)."""
     from .plans.registry import GLOBAL
 
     GLOBAL.register_sql(spark)
@@ -516,7 +516,7 @@ def q_sum_udaf_two_phase_sql(spark, sf):
     return spark.sql(
         """
         SELECT l_returnflag,
-               CAST(sum_udaf__merge(p) AS BIGINT) AS sum_udaf
+               CAST(sum_udaf__mergevec(collect_list(p)) AS BIGINT) AS sum_udaf
         FROM (
             SELECT l_returnflag, sum_udaf__partial(q) AS p
             FROM li_two_phase
@@ -618,7 +618,7 @@ def q_sql_agg_window_two_phase(spark, sf):
     replaces every aggregate inside their args / ORDER BY with its merged
     column — the UDAF still runs two-phase (fold view + merge)
     underneath, and the window sees only O(groups) rows.  A registered UDAF as the window
-    HEAD is refused (strict raises): a GROUPED_AGG pandas UDF over window
+    HEAD is refused (strict raises): a grouped aggregate UDF over window
     frames is the every-row-to-one-worker trap itself.  Unit coverage in
     tests/test_registry.py (PARTITION BY keys, frames, refusal shapes)."""
     from .plans.registry import GLOBAL
@@ -789,7 +789,7 @@ def q_sql_agg_pivot_two_phase(spark, sf):
     (literals))`` — expands to the GROUP BY + CASE form (exactly Spark's
     own ResolvePivot expansion for null-ignoring aggregates) and rides
     the two-phase rewrite underneath.  Native Spark REFUSES
-    pandas UDAFs in PIVOT outright (UNSUPPORTED_FEATURE.
+    Python UDAFs in PIVOT outright (UNSUPPORTED_FEATURE.
     PANDAS_UDAF_IN_PIVOT), so this front door is the only way to run
     one at all — and it runs partial+merge.  Output names/order match
     native PIVOT; sum_udaf's empty-slice-is-0 contract is pinned in the
@@ -9439,7 +9439,7 @@ _GATE_PRIORITY = [
     "sql_agg_pivot_two_phase",
     "sql_agg_cte_two_phase",
     "sql_agg_expr_key_two_phase",
-    "sum_udaf_two_phase_sql",  # hand-written GROUPED_AGG pair (unchanged surface, shared registrations)
+    "sum_udaf_two_phase_sql",  # hand-written __partial + __mergevec pair
     "sum_udaf",  # DataFrame agg(): vectorized collect_list+__mergevec merge
     "weighted_avg_udaf",
     "retract_udaf",

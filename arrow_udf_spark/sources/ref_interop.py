@@ -19,6 +19,7 @@ import os
 import socket
 import subprocess
 import sys
+import tempfile
 import threading
 import time
 from typing import Optional
@@ -42,7 +43,9 @@ def _free_port() -> int:
         return s.getsockname()[1]
 
 
-def _wait_port(port: int, timeout: float = 15.0) -> None:
+def _wait_port(port: int, stderr, timeout: float = 15.0) -> None:
+    """Wait for the server to listen; if it exits first, raise with the
+    last line it wrote to ``stderr`` (a file) as the cause."""
     deadline = time.monotonic() + timeout
     while time.monotonic() < deadline:
         try:
@@ -50,8 +53,11 @@ def _wait_port(port: int, timeout: float = 15.0) -> None:
                 return
         except OSError:
             if _proc is not None and _proc.poll() is not None:
+                stderr.seek(0)
+                lines = stderr.read().decode(errors="replace").split("\n")
+                last = next((ln for ln in reversed(lines) if ln.strip()), "")
                 raise RuntimeError(
-                    f"reference server exited rc={_proc.returncode}"
+                    f"reference server exited rc={_proc.returncode}: {last}"
                 )
             time.sleep(0.1)
     raise TimeoutError(f"reference server did not listen on :{port}")
@@ -78,13 +84,19 @@ def serve_reference() -> str:
         repo_root = os.path.dirname(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
-        _proc = subprocess.Popen(
-            [sys.executable, "-m", "arrow_udf_spark.sources.ref_server_main", str(port)],
-            cwd=repo_root,
-            stdout=subprocess.DEVNULL,
-            stderr=subprocess.DEVNULL,
-        )
-        atexit.register(_shutdown)
-        _wait_port(port)
+        # stderr goes to a file, not a pipe: a pipe nobody drains can
+        # fill up and block the server
+        with tempfile.TemporaryFile() as stderr:
+            _proc = subprocess.Popen(
+                [
+                    sys.executable, "-m",
+                    "arrow_udf_spark.sources.ref_server_main", str(port),
+                ],
+                cwd=repo_root,
+                stdout=subprocess.DEVNULL,
+                stderr=stderr,
+            )
+            atexit.register(_shutdown)
+            _wait_port(port, stderr)
         _uri = f"grpc://127.0.0.1:{port}"
         return _uri

@@ -1,6 +1,7 @@
 """Type matrix across the Python UDF boundary (modelled on pyspark's
 pandas-UDF type tests): identity scalar and table functions, row mode and
-batch mode, over every type the signature parser maps to Spark.
+batch mode, and an identity aggregate on the SQL front, over every type
+the signature parser maps to Spark.
 
 Each case round-trips Spark values through the worker and back, so it pins
 what a caller sees, whatever the executor-side evaluator is:
@@ -15,13 +16,15 @@ what a caller sees, whatever the executor-side evaluator is:
 from __future__ import annotations
 
 import math
+import re
+import warnings
 from datetime import date, datetime
 from decimal import Decimal
 
 import pytest
 from pyspark.sql import types as T
 
-from arrow_udf_spark import CallMode, Registry, udf, udtf
+from arrow_udf_spark import CallMode, Registry, udaf, udf, udtf
 from arrow_udf_spark.plans.types import parse_type
 
 NAN = float("nan")
@@ -156,3 +159,51 @@ def test_outer_null_struct_stays_null(spark):
     df = spark.createDataFrame([(None,)], schema)
     row = df.select(kind("x").alias("k"), row_id("x").alias("r")).collect()[0]
     assert row.k == "NoneType" and row.r is None, row
+
+
+@pytest.mark.parametrize("tstr,values", CASES, ids=[c[0] for c in CASES])
+def test_sql_aggregate_identity(spark, tstr, values):
+    """A first-non-NULL aggregate over one-row groups returns each value
+    unchanged through every SQL aggregate surface: the bare name,
+    ``__partial`` + ``__mergevec(collect_list(...))``, and
+    ``Registry.sql``."""
+    name = "first_" + re.sub(r"\W", "_", tstr)
+    reg = Registry()
+
+    @udaf(input_types=[tstr], result_type=tstr, name=name, registry=reg)
+    class FirstNonNull:
+        def create_state(self):
+            return None
+
+        def accumulate(self, s, x):
+            return x if s is None else s
+
+        def merge(self, a, b):
+            return b if a is None else a
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("x", parse_type(tstr).dtype)]
+    )
+    df = spark.createDataFrame(list(enumerate(values)), schema)
+    df.createOrReplaceTempView("agg_types")
+    sent = {r.id: r.x for r in df.collect()}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        reg.register_sql(spark)
+        bare = f"SELECT id, {name}(x) AS a FROM agg_types GROUP BY id"
+        surfaces = {
+            "bare": spark.sql(bare),
+            "pair": spark.sql(
+                f"""
+                SELECT id, {name}__mergevec(collect_list(p)) AS a FROM (
+                    SELECT id, {name}__partial(x) AS p FROM agg_types GROUP BY id
+                ) GROUP BY id
+                """
+            ),
+            "Registry.sql": reg.sql(spark, bare),
+        }
+    for surface, out in surfaces.items():
+        rows = out.collect()
+        assert sorted(r.id for r in rows) == sorted(sent), (tstr, surface)
+        for r in rows:
+            assert _same(r.a, sent[r.id]), (tstr, surface, r)

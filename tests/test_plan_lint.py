@@ -110,7 +110,7 @@ def test_streaming_micro_batch_plan_captured_and_linted(spark, sf_dir):
 def test_single_phase_pandas_agg_flagged(spark, sf_dir):
     """A raw spark.sql call of a registered UDAF plans Spark 4.1's
     single-phase ``ArrowAggregatePython``: the lint flags it, and not the
-    salted ``__partial`` / ``__merge`` pair of sum_udaf_two_phase_sql."""
+    salted ``__partial`` + ``__mergevec`` pair of sum_udaf_two_phase_sql."""
     import warnings
 
     from tools.plan_lint import lint_plan
@@ -129,7 +129,7 @@ def test_single_phase_pandas_agg_flagged(spark, sf_dir):
     assert "single-phase-pandas-agg" in lint_plan(plan)
     pair = QUERIES["sum_udaf_two_phase_sql"](spark, sf_dir)
     plan = pair._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowAggregatePython") == 2
+    assert plan.count("ArrowAggregatePython") == 1
     assert "single-phase-pandas-agg" not in lint_plan(plan)
 
 

@@ -235,13 +235,16 @@ def test_lsh_join_is_band_bucketed_equi_join(spark, sf_dir):
 
 
 def test_two_phase_sql_agg_salted_plan(spark, sf_dir):
-    """The __partial/__merge SQL pattern compiles to the two-level shape:
-    inner aggregate keyed by (group, salt) so hot keys split, outer
-    exchange keyed by group alone carrying only pickled states."""
+    """The __partial + __mergevec(collect_list(...)) SQL pattern compiles
+    to the two-level shape: inner aggregate keyed by (group, salt) so hot
+    keys split, outer exchange keyed by group alone carrying only pickled
+    states."""
     from arrow_udf_spark.queries import QUERIES
 
     p = _plan(QUERIES["sum_udaf_two_phase_sql"](spark, sf_dir))
-    assert p.count("ArrowAggregatePython") == 2
+    # one Python grouped aggregate (the partial) and the batched merge
+    assert p.count("ArrowAggregatePython") == 1
+    assert "sum_udaf__mergevec" in p
     # inner grouping carries the pmod salt expression
     assert "pmod(hash(l_orderkey" in p
     # exactly two exchanges: (group, salt) then (group)

@@ -113,10 +113,10 @@ def test_udaf_sql_registration(spark):
 
 
 def test_udaf_sql_two_phase_pair(spark):
-    """The __partial/__merge GROUPED_AGG pair gives SQL the salted
-    two-level plan: partial folds per (key, salt) bucket, merge+finish per
-    key.  weighted_avg carries a struct state, so a wrong merge (e.g.
-    averaging averages) diverges immediately."""
+    """``__partial`` and ``__mergevec(collect_list(...))`` give SQL the
+    salted two-level plan: partial folds per (key, salt) bucket,
+    merge+finish per key.  weighted_avg carries a struct state, so a
+    wrong merge (e.g. averaging averages) diverges immediately."""
     from arrow_udf_spark.plans.registry import GLOBAL
 
     GLOBAL.register_sql(spark)
@@ -125,8 +125,8 @@ def test_udaf_sql_two_phase_pair(spark):
     got = spark.sql(
         """
         SELECT l_returnflag,
-               sum_udaf__merge(ps) AS s,
-               weighted_avg__merge(pw) AS w
+               sum_udaf__mergevec(collect_list(ps)) AS s,
+               weighted_avg__mergevec(collect_list(pw)) AS w
         FROM (
             SELECT l_returnflag,
                    sum_udaf__partial(l_orderkey) AS ps,
@@ -153,6 +153,82 @@ def test_udaf_sql_two_phase_pair(spark):
         assert r.s == s and abs(r.w - w) < 1e-6
 
 
+#: NULL-bearing bigint rows whose k=1 sum needs all 64 bits: a float64
+#: detour rounds 2^60 + 4 to 2^60
+_EXACT_ROWS = [(1, 2**60 + 1), (1, 3), (1, None), (2, 5)]
+
+
+def test_sql_udaf_surfaces_exact_on_null_bearing_bigint(spark):
+    """The bare SQL name and the ``__partial`` +
+    ``__mergevec(collect_list(...))`` pair fold a NULL-bearing bigint
+    column exactly, as native SUM does."""
+    import warnings
+
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(_EXACT_ROWS, "k int, x bigint") \
+        .createOrReplaceTempView("exact_sum_t")
+    exp = dict(spark.sql("SELECT k, SUM(x) FROM exact_sum_t GROUP BY k").collect())
+    assert exp[1] == 2**60 + 4
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        bare = spark.sql(
+            "SELECT k, sum_udaf(x) FROM exact_sum_t GROUP BY k"
+        ).collect()
+    pair = spark.sql(
+        """
+        SELECT k, sum_udaf__mergevec(collect_list(p)) FROM (
+            SELECT k, sum_udaf__partial(x) AS p FROM exact_sum_t GROUP BY k
+        ) GROUP BY k
+        """
+    ).collect()
+    assert dict(bare) == exp
+    assert dict(pair) == exp
+
+
+def test_raw_sql_kmv_udaf_matches_dataframe_agg(spark):
+    """A raw ``spark.sql`` call of ``kmv_udaf`` over a NULL-bearing bigint
+    column sees exact hashes, as the DataFrame path does."""
+    import warnings
+
+    from arrow_udf_spark.operators.sketch import KmvAgg
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    df = spark.createDataFrame(_EXACT_ROWS, "k int, x bigint")
+    df.createOrReplaceTempView("exact_kmv_t")
+    exp = {r.k: r.kmv_udaf for r in KmvAgg.agg(df, by=["k"], args=["x"]).collect()}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        got = spark.sql(
+            "SELECT k, kmv_udaf(x) AS e FROM exact_kmv_t GROUP BY k"
+        ).collect()
+    assert {r.k: r.e for r in got} == exp
+
+
+def test_redefinition_replaces_the_entry(spark):
+    """Re-running ``@udf(name=...)`` with the same signature replaces the
+    registered body: ``get`` and ``SELECT f(...)`` both see the new one."""
+    reg = Registry()
+
+    @udf(input_types=["bigint"], result_type="bigint", name="redef_f", registry=reg)
+    def f(x):
+        return x + 1
+
+    reg.register_sql(spark)
+    assert spark.sql("SELECT redef_f(1) AS v").collect()[0].v == 2
+
+    @udf(input_types=["bigint"], result_type="bigint", name="redef_f", registry=reg)
+    def f(x):  # noqa: F811 (the redefinition under test)
+        return x + 2
+
+    assert len(reg.all()) == 1
+    assert reg.get("redef_f").fn(1) == 3
+    reg.register_sql(spark)
+    assert spark.sql("SELECT redef_f(1) AS v").collect()[0].v == 3
+
+
 def test_udaf_sql_surface_warns_no_partial_agg(spark):
     """The SQL GROUPED_AGG surface cannot do map-side combine (Spark ships
     the whole group to one worker); wrapping must warn loudly so pipelines
@@ -172,7 +248,7 @@ def test_udaf_sql_surface_warns_no_partial_agg(spark):
 
 
 def test_udaf_overloads_all_get_two_phase_pair(spark):
-    """EVERY aggregate overload must register its __partial/__merge pair —
+    """EVERY aggregate overload must register its __partial/__mergevec pair —
     the second (mangled-name) overload included, not just the bare-named
     first one (ADVICE r3)."""
     from arrow_udf_spark.operators.aggregate import udaf
@@ -204,12 +280,12 @@ def test_udaf_overloads_all_get_two_phase_pair(spark):
 
     registered = set(reg.register_sql(spark))
     # first overload owns the bare name; the second registers mangled —
-    # and BOTH must expose partial/merge
-    assert {"ovl_sum__partial", "ovl_sum__merge"} <= registered
-    assert {"ovl_sum__double__partial", "ovl_sum__double__merge"} <= registered
+    # and BOTH must expose partial/mergevec
+    assert {"ovl_sum__partial", "ovl_sum__mergevec"} <= registered
+    assert {"ovl_sum__double__partial", "ovl_sum__double__mergevec"} <= registered
     got = spark.sql(
         """
-        SELECT ovl_sum__double__merge(p) AS s FROM (
+        SELECT ovl_sum__double__mergevec(collect_list(p)) AS s FROM (
             SELECT ovl_sum__double__partial(CAST(id AS DOUBLE)) AS p
             FROM range(10) GROUP BY pmod(id, 3)
         )
@@ -288,7 +364,7 @@ def test_register_sql_strict_refuses_single_phase(spark):
     """VERDICT r6 ask #5: ``register_sql(strict=True)`` never registers
     the single-phase GROUPED_AGG surface — the bare aggregate name fails
     analysis instead of silently planning the whole-group-on-one-worker
-    shape — while the __partial/__merge pair still works, and
+    shape — while the __partial/__mergevec pair still works, and
     ``Registry.sql`` raises (with the DataFrame-path pointer) on shapes
     it cannot rewrite instead of falling back."""
     import warnings
@@ -320,7 +396,7 @@ def test_register_sql_strict_refuses_single_phase(spark):
         "without partial" in str(w.message) for w in caught
     ), [str(w.message) for w in caught]
     assert "strict_sum" not in registered
-    assert {"strict_sum__partial", "strict_sum__merge"} <= registered
+    assert registered == {"strict_sum__partial", "strict_sum__mergevec"}
     # the pair is the only SQL surface: bare name fails analysis
     spark.range(10).selectExpr(
         "id AS x", "pmod(id, 3) AS g"
@@ -329,7 +405,7 @@ def test_register_sql_strict_refuses_single_phase(spark):
         spark.sql("SELECT g, strict_sum(x) FROM strict_t GROUP BY g").collect()
     got = spark.sql(
         """
-        SELECT strict_sum__merge(p) AS s FROM (
+        SELECT strict_sum__mergevec(collect_list(p)) AS s FROM (
             SELECT strict_sum__partial(x) AS p FROM strict_t
             GROUP BY pmod(x, 4)
         )

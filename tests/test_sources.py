@@ -227,3 +227,16 @@ def test_compact_parquet_small_files(spark, sf_dir):
     a = sorted(map(tuple, li.collect()))
     b = sorted(map(tuple, spark.read.parquet(d + "/compact").collect()))
     assert a == b
+
+
+def test_reference_server_failure_names_its_cause():
+    """Without the reference tree the server exits at once; the error
+    says why, from the server's own stderr."""
+    import pytest
+
+    from arrow_udf_spark.sources.ref_interop import reference_available, serve_reference
+
+    if reference_available():
+        pytest.skip("the reference tree is present, so the server starts")
+    with pytest.raises(RuntimeError, match="reference package not found"):
+        serve_reference()

@@ -14,10 +14,11 @@ class the plan tests guard):
 - ``heavy-above-generate``: a tokenize/transform expression in the
   Project ABOVE a Generate — ExtractGenerator hoisting the expensive
   producer so it recomputes per exploded row.
-- ``single-phase-pandas-agg``: a pandas aggregate node
+- ``single-phase-pandas-agg``: a Python grouped aggregate node
   (``ArrowAggregatePython`` in Spark 4.1, ``AggregateInPandas`` before)
-  calling anything but the two-phase ``__partial`` / ``__merge`` pair —
-  every row of a hot group on one worker.
+  calling anything but a two-phase ``__partial`` (whose states
+  ``__mergevec(collect_list(...))`` merges) — every row of a hot group
+  on one worker.
 - ``sorted-round-robin``: a ``RoundRobinPartitioning`` exchange — Spark
   sorts every row before it (``spark.sql.execution.sortBeforeRepartition``)
   so a retried task sees the same order; on a one-task fixture scan that
@@ -141,7 +142,7 @@ def lint_plan(plan: str) -> list[str]:
             flags.append("heavy-above-generate")
             break
     if any(
-        not re.fullmatch(r"\w+__(partial|merge)", call)
+        not re.fullmatch(r"\w+__partial", call)
         for call in _pandas_agg_calls(plan)
     ):
         flags.append("single-phase-pandas-agg")
