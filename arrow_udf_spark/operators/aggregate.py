@@ -523,7 +523,7 @@ class AggregateFunction:
         )
         # phase 1 over Arrow batches: exact nullable ints (no float64
         # coercion of NULL-bearing int columns, which destroys bits above
-        # 2^53) and one conversion less than mapInPandas
+        # 2^53) and no pandas conversion
         fold = build_multi_fold(
             [self], len(by), [len(args)], retract=_ops_col is not None
         )

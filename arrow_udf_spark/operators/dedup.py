@@ -787,7 +787,7 @@ def semdedup_keep_numpy(
     threshold: float = 0.95,
 ) -> DataFrame:
     """:func:`semdedup_keep` with the per-cell pair scoring vectorized in
-    numpy (``applyInPandas`` per cell): normalize the cell's vectors
+    numpy (``applyInArrow`` per cell): normalize the cell's vectors
     once, one matmul for the full similarity matrix, round half-up to
     6 dp, and apply the strict-upper-triangle smaller-id drop rule —
     identical verdicts to the Catalyst form (same 6 dp decision value;
@@ -802,7 +802,8 @@ def semdedup_keep_numpy(
     instead).  This is the scale path; :func:`semdedup_keep` is the
     pure-Catalyst referee."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -813,21 +814,23 @@ def semdedup_keep_numpy(
         ]
     )
 
-    def per_cell(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids = pdf["id"].to_numpy()
+    # no type hints: this module's annotations are strings, and
+    # applyInArrow's eval-type inference fails on them
+    def per_cell(key, cell):
+        ids = cell.column("id").to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        m = np.array(list(pdf["v"].iloc[order]), dtype="float64")
+        m = pc.list_flatten(cell.column("v")).to_numpy().reshape(len(ids), -1)[order]
         m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
         sim = m @ m.T
         # floor(x*1e6+0.5)/1e6 == HALF_UP for the positive values that
         # can reach a positive threshold — the repo's rounding discipline
         rounded = np.floor(sim * 1e6 + 0.5) / 1e6
         dropped = np.triu(rounded >= threshold, 1).any(axis=0)
-        return pd.DataFrame(
+        return pa.table(
             {
                 "id": ids,
-                "cell": int(key[0]),
+                "cell": np.full(len(ids), key[0].as_py(), dtype="int64"),
                 "kept": (~dropped).astype("int32"),
             }
         )
@@ -837,7 +840,7 @@ def semdedup_keep_numpy(
         F.col(cell_col).cast("long").alias("cell"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    return base.groupBy("cell").applyInPandas(per_cell, out_schema)
+    return base.groupBy("cell").applyInArrow(per_cell, out_schema)
 
 
 def dup_clusters(

@@ -1,9 +1,11 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with typed metadata structs;
-decode / feature-extract / frame-sample run as Arrow-batched functions over
-``mapInPandas``.  The Spark-side plumbing — schemas, batch iteration,
-partition-parallel decode, UDTF-style frame fan-out — is real and tested.
+decode / feature-extract / frame-sample run as per-row table functions
+(``TableFunction.apply`` on ``mapInArrow``): each operator keeps only the
+body that yields its output rows for one input row.  The Spark-side
+plumbing — schemas, batch iteration, partition-parallel decode, frame
+fan-out — is real and tested.
 
 Decode status by format:
 
@@ -52,14 +54,14 @@ perfectly across executors; the only sizing concern is Arrow batch bytes
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.table import udtf
+from ..plans.registry import Registry
 
 __all__ = [
     "synthesize_payload",
@@ -361,27 +363,24 @@ def wav_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Proves the binary-column plumbing on genuine WAV bytes: encoder and
     parser share nothing but the format spec, so a bug in either breaks
     the oracle (metadata is integer math on the id → SQL-expressible).
-    Per-row map work over ``mapInPandas``; no shuffle.
+    Per-row map work over ``TableFunction.apply``; no shuffle.
     """
+
+    @udtf(["int64"], WAV_META.simpleString(), name="meta", registry=Registry())
+    def meta(i):
+        yield parse_wav_meta(_synth_wav(i))
+
+    return meta.apply(df, cols=[id_col], passthrough=[id_col])
+
+
+def _synth_wav(i) -> bytes:
+    """The deterministic 8 kHz PCM16 WAV of id ``i``: 400 + (i % 50)·16
+    samples of the integer ramp ``(s·(i % 797 + 1)) % 2048 - 1024``."""
     import numpy as np
 
-    out_schema = T.StructType([df.schema[id_col], T.StructField("meta", WAV_META)])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf.iloc[:, 0]
-            metas = []
-            for i in ids:
-                n = 400 + int(i) % 50 * 16
-                sr = 8000
-                tone = (np.arange(n, dtype=np.int64) * (int(i) % 797 + 1) % 2048 - 1024).astype("<i2")
-                payload = encode_wav_pcm16(tone, sr)
-                metas.append(parse_wav_meta(payload))
-            out = pdf.iloc[:, :1].copy()
-            out["meta"] = metas
-            yield out
-
-    return df.select(id_col).mapInPandas(gen, out_schema)
+    n = 400 + int(i) % 50 * 16
+    tone = np.arange(n, dtype=np.int64) * (int(i) % 797 + 1) % 2048 - 1024
+    return encode_wav_pcm16(tone.astype("<i2"), 8000)
 
 
 def parse_wav_samples(payload):
@@ -426,45 +425,26 @@ def wav_frame_energy(
     gate is bit-exact in any engine — the corpus_divergence rule).  The
     oracle recomputes the same integers from the synthesis formula in
     SQL; encoder and parser share only the WAV spec, so either one
-    breaking a byte breaks the gate.  Per-row map work in
-    ``mapInPandas``; output fan-out is n_samples/frame rows; no shuffle.
+    breaking a byte breaks the gate.  Per-row map work over
+    ``TableFunction.apply``; output fan-out is n_samples/frame rows; no
+    shuffle.
     """
     import numpy as np
 
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("frame", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("sumsq", T.LongType()),
-        ]
+    @udtf(
+        ["int64"],
+        "struct<frame:int,n_samples:bigint,sumsq:bigint>",
+        name="wav_frame_energy",
+        registry=Registry(),
     )
+    def energy(i):
+        samples = parse_wav_samples(_synth_wav(i))
+        for f in range(0, len(samples), frame):
+            seg = samples[f : f + frame]
+            yield f // frame, len(seg), int(np.sum(seg * seg))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf.iloc[:, 0]:
-                n = 400 + int(i) % 50 * 16
-                tone = (
-                    np.arange(n, dtype=np.int64) * (int(i) % 797 + 1) % 2048
-                    - 1024
-                ).astype("<i2")
-                samples = parse_wav_samples(encode_wav_pcm16(tone, 8000))
-                for f in range(0, len(samples), frame):
-                    seg = samples[f : f + frame]
-                    rows.append(
-                        (
-                            i,
-                            f // frame,
-                            int(len(seg)),
-                            int(np.sum(seg * seg)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame", "n_samples", "sumsq"]
-            )
-
-    return df.select(id_col).mapInPandas(gen, out_schema)
+    out = energy.apply(df, cols=[id_col], passthrough=[id_col])
+    return out.select(id_col, "wav_frame_energy.*")
 
 
 def decode_image_meta(
@@ -479,13 +459,10 @@ def decode_image_meta(
     payload bytes — bit-identical to the SQL oracle (works on ANY binary
     payload, including the 16-byte synthetic digests).  Real path: parses
     PPM/BMP/PNG/JPEG headers with :func:`parse_image_header`; payloads of
-    any other codec raise ``NotImplementedError``.
+    any other codec raise ``NotImplementedError``.  Per-row map work over
+    ``TableFunction.apply``; output ``(passthrough..., meta)``, or
+    ``(row, meta)`` with no passthrough column.
     """
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough]
-        + [T.StructField("meta", IMAGE_META)]
-    )
-    n_pt = len(passthrough)
 
     def meta_of(b):
         if b is None:
@@ -505,14 +482,11 @@ def decode_image_meta(
             "n_bytes": len(b),
         }
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf.iloc[:, n_pt]
-            out = pdf.iloc[:, :n_pt].copy()
-            out["meta"] = [meta_of(b) for b in payloads]
-            yield out
+    @udtf(["binary"], IMAGE_META.simpleString(), name="meta", registry=Registry())
+    def meta(b):
+        yield meta_of(b)
 
-    return df.select(*passthrough, payload_col).mapInPandas(decode, out_schema)
+    return meta.apply(df, cols=[payload_col], passthrough=passthrough)
 
 
 def synth_ppm(text: str) -> bytes:
@@ -596,9 +570,9 @@ def ppm_pixel_sum(payload: bytes) -> int:
 def resize_pipeline(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Full image plumbing over ``mapInPandas``: synthesize a real PPM per
-    row, stride-2 downsample it, then decode the RESULT independently and
-    emit dims + pixel checksum.  Per-row binary work in one map stage —
+    """Full image plumbing over ``TableFunction.apply``: synthesize a real
+    PPM per row, stride-2 downsample it, then decode the RESULT
+    independently and emit dims + pixel checksum.  Per-row binary work in one map stage —
     no shuffle, no driver involvement; at 100 TB this is an embarrassing
     parallel scan shape.
 
@@ -606,40 +580,24 @@ def resize_pipeline(
     is computed by re-parsing the resized bytes, so a bug anywhere in the
     chain breaks the (analytic) oracle.
     """
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("ow", T.IntegerType()),
-            T.StructField("oh", T.IntegerType()),
-            T.StructField("checksum", T.LongType()),
-        ]
+
+    @udtf(
+        ["string"],
+        "struct<w:int,h:int,ow:int,oh:int,checksum:bigint>",
+        name="resize_pipeline",
+        registry=Registry(),
     )
+    def resize(text):
+        src = synth_ppm(text)
+        m0 = parse_image_header(src)
+        small = downsample_ppm_2x(src)
+        m1 = parse_image_header(small)
+        yield (
+            m0["width"], m0["height"], m1["width"], m1["height"], ppm_pixel_sum(small)
+        )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                src = synth_ppm(r[text_col])
-                m0 = parse_image_header(src)
-                small = downsample_ppm_2x(src)
-                m1 = parse_image_header(small)
-                rows.append(
-                    (
-                        r[id_col],
-                        m0["width"],
-                        m0["height"],
-                        m1["width"],
-                        m1["height"],
-                        ppm_pixel_sum(small),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "w", "h", "ow", "oh", "checksum"]
-            )
-
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = resize.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "resize_pipeline.*")
 
 
 @udtf(
@@ -1339,6 +1297,9 @@ _PNG_DEEP_VARIANTS = (
     ("pal4", synth_png_pal4),
 )
 
+#: per-variant decode row of the deep-PNG and subsampled-JPEG gates
+_VARIANT_PIXELS = "struct<variant:string,w:int,h:int,channels:int,checksum:bigint>"
+
 
 def png_deep_pipeline(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -1353,33 +1314,16 @@ def png_deep_pipeline(
     palette+alpha indirection, and the MSB-first bit unpacking at once.
 
     Scale shape: per-row CPU work, no shuffle — the :func:`png_pipeline`
-    contract with a 3-way fan-out."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("variant", T.StringType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("checksum", T.LongType()),
-        ]
-    )
+    contract with a 5-way fan-out."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                for variant, synth in _PNG_DEEP_VARIANTS:
-                    w, h, ch, raw = decode_png(synth(text))
-                    rows.append(
-                        (did, variant, w, h, ch, int(raw.astype("int64").sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "variant", "w", "h", "channels", "checksum"],
-            )
+    @udtf(["string"], _VARIANT_PIXELS, name="png_deep_pipeline", registry=Registry())
+    def deep(text):
+        for variant, synth in _PNG_DEEP_VARIANTS:
+            w, h, ch, raw = decode_png(synth(text))
+            yield variant, w, h, ch, int(raw.astype("int64").sum())
 
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = deep.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "png_deep_pipeline.*")
 
 
 def jpeg_subsampled_pipeline(
@@ -1399,34 +1343,16 @@ def jpeg_subsampled_pipeline(
     contract with a 2-way variant fan-out."""
     from .jpeg import decode_jpeg, synth_jpeg_subsampled
 
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("variant", T.StringType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("checksum", T.LongType()),
-        ]
+    @udtf(
+        ["string"], _VARIANT_PIXELS, name="jpeg_subsampled_pipeline", registry=Registry()
     )
+    def subsampled(text):
+        for variant, mode in (("420", "4:2:0"), ("422", "4:2:2")):
+            w, h, ch, raw = decode_jpeg(synth_jpeg_subsampled(text, mode))
+            yield variant, w, h, ch, int(raw.astype("int64").sum())
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                for variant, mode in (("420", "4:2:0"), ("422", "4:2:2")):
-                    w, h, ch, raw = decode_jpeg(
-                        synth_jpeg_subsampled(text, mode)
-                    )
-                    rows.append(
-                        (did, variant, w, h, ch, int(raw.astype("int64").sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "variant", "w", "h", "channels", "checksum"],
-            )
-
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = subsampled.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "jpeg_subsampled_pipeline.*")
 
 
 def image_autodecode_pipeline(
@@ -1454,33 +1380,21 @@ def image_autodecode_pipeline(
         synth_jpeg_flat,
         synth_jpeg_progressive,
     ]
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("format", T.StringType()),
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("checksum", T.LongType()),
-        ]
+
+    @udtf(
+        ["string"],
+        "struct<format:string,w:int,h:int,channels:int,checksum:bigint>",
+        name="image_autodecode_pipeline",
+        registry=Registry(),
     )
+    def autodecode(text):
+        text = str(text)
+        sel = int(hashlib.md5(text.encode()).hexdigest()[15], 16) % 7
+        fmt, w, h, ch, raw = decode_image(synths[sel](text))
+        yield fmt, w, h, ch, int(raw.astype("int64").sum())
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                text = str(text)
-                sel = int(hashlib.md5(text.encode()).hexdigest()[15], 16) % 7
-                fmt, w, h, ch, raw = decode_image(synths[sel](text))
-                rows.append(
-                    (did, fmt, w, h, ch, int(raw.astype("int64").sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "format", "w", "h", "channels", "checksum"],
-            )
-
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = autodecode.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "image_autodecode_pipeline.*")
 
 
 def png_pipeline(
@@ -1490,8 +1404,8 @@ def png_pipeline(
     synth=synth_png,
     decode=decode_png,
 ) -> DataFrame:
-    """Real PNG plumbing over ``mapInPandas``: synthesize a genuine RGBA
-    PNG per row (filter type cycling through all five per scanline), then
+    """Real PNG plumbing over ``TableFunction.apply``: synthesize a genuine
+    RGBA PNG per row (filter type cycling through all five per scanline), then
     FULLY decode it back — chunk walk, CRC check, inflate, per-filter
     reconstruction — and emit dims + the pixel checksum.  Encoder and
     decoder share only the PNG spec, so a bug in either (or in any one
@@ -1499,30 +1413,19 @@ def png_pipeline(
 
     Scale shape: per-row CPU work, no shuffle — an embarrassingly
     parallel scan, the same contract as :func:`resize_pipeline`."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("w", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("checksum", T.LongType()),
-        ]
+
+    @udtf(
+        ["string"],
+        "struct<w:int,h:int,channels:int,checksum:bigint>",
+        name="png_pipeline",
+        registry=Registry(),
     )
+    def pixels(text):
+        w, h, ch, raw = decode(synth(text))
+        yield w, h, ch, int(raw.astype("int64").sum())
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # zip, not iterrows: per-row Series construction costs more
-            # than the decode itself at corpus batch sizes
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                payload = synth(text)
-                w, h, ch, raw = decode(payload)
-                rows.append((did, w, h, ch, int(raw.astype("int64").sum())))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "w", "h", "channels", "checksum"]
-            )
-
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = pixels.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "png_pipeline.*")
 
 
 # ---------------------------------------------------------------------------
@@ -1934,33 +1837,20 @@ def gif_frames_pipeline(
     reordering, LZW — emitting one row per frame with its offset
     rectangle and RGB checksum.  Per-row CPU work, no shuffle — the
     :func:`png_pipeline` contract with a frame fan-out."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("x0", T.IntegerType()),
-            T.StructField("y0", T.IntegerType()),
-            T.StructField("fw", T.IntegerType()),
-            T.StructField("fh", T.IntegerType()),
-            T.StructField("checksum", T.LongType()),
-        ]
+
+    @udtf(
+        ["string"],
+        "struct<frame_idx:int,x0:int,y0:int,fw:int,fh:int,checksum:bigint>",
+        name="gif_frames_pipeline",
+        registry=Registry(),
     )
+    def frames_of(text):
+        _w, _h, frames = decode_gif_frames(synth_gif_anim(text))
+        for fi, (x0, y0, fw, fh, rgb) in enumerate(frames):
+            yield fi, x0, y0, fw, fh, int(rgb.astype("int64").sum())
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                _w, _h, frames = decode_gif_frames(synth_gif_anim(text))
-                for fi, (x0, y0, fw, fh, rgb) in enumerate(frames):
-                    rows.append(
-                        (did, fi, x0, y0, fw, fh, int(rgb.astype("int64").sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "x0", "y0", "fw", "fh", "checksum"],
-            )
-
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = frames_of.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "gif_frames_pipeline.*")
 
 
 # ---------------------------------------------------------------------------
@@ -2045,39 +1935,30 @@ def g711_pipeline(
     the length from md5(text)), compress through BOTH laws, decode, and
     emit each law's decoded-sample sum — the companding quantization is
     pure integer math, so a SQL oracle predicts every decoded sample.
-    Per-row map work, no shuffle (the png_pipeline contract)."""
+    Per-row map work over ``TableFunction.apply``, no shuffle (the
+    png_pipeline contract)."""
     import hashlib
 
     import numpy as np
 
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("ulaw_sum", T.LongType()),
-            T.StructField("alaw_sum", T.LongType()),
-        ]
+    @udtf(
+        ["string"],
+        "struct<n_samples:int,ulaw_sum:bigint,alaw_sum:bigint>",
+        name="g711_pipeline",
+        registry=Registry(),
     )
+    def roundtrip(text):
+        hx = hashlib.md5(str(text).encode()).hexdigest()
+        s = int(hx[25:27], 16)
+        n = int(hx[27:29], 16) % 64 + 32
+        i = np.arange(n, dtype=np.int64)
+        pcm = ((s * 4093 + i * 3797) % 65536 - 32768).astype(np.int16)
+        u = int(ulaw_decode(ulaw_encode(pcm)).astype(np.int64).sum())
+        a = int(alaw_decode(alaw_encode(pcm)).astype(np.int64).sum())
+        yield n, u, a
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                hx = hashlib.md5(str(text).encode()).hexdigest()
-                s = int(hx[25:27], 16)
-                n = int(hx[27:29], 16) % 64 + 32
-                i = np.arange(n, dtype=np.int64)
-                pcm = ((s * 4093 + i * 3797) % 65536 - 32768).astype(
-                    np.int16
-                )
-                u = int(ulaw_decode(ulaw_encode(pcm)).astype(np.int64).sum())
-                a = int(alaw_decode(alaw_encode(pcm)).astype(np.int64).sum())
-                rows.append((did, n, u, a))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_samples", "ulaw_sum", "alaw_sum"]
-            )
-
-    return df.select(id_col, text_col).mapInPandas(work, out_schema)
+    out = roundtrip.apply(df, cols=[text_col], passthrough=[id_col])
+    return out.select(id_col, "g711_pipeline.*")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ Two execution strategies with identical semantics:
   partial top-k under AQE); this is the exact-answer baseline and scales
   linearly with the corpus.
 - **brute_force_topk_numpy** — same contract via one numpy matmul per
-  Arrow batch inside ``mapInPandas`` (queries broadcast as a closure).
+  Arrow batch inside ``mapInArrow`` (queries broadcast as a closure).
   ~10-50× faster per row at high dimensions; used by the benchmark.
 - **ivf_topk** — the scale path: restrict scoring to the query's coarse
   bucket (IVF cell).  Given 100 TB of vectors bucketed into n_list cells,
@@ -21,7 +21,7 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -166,7 +166,7 @@ def brute_force_topk_numpy(
             f"brute_force_topk_numpy: query set exceeds {MAX_QUERY_ROWS} rows; "
             "use brute_force_topk (broadcast) or ivf_topk for large query sides"
         )
-    q_ids = np.array([r[0] for r in qrows])
+    q_ids = np.array([r[0] for r in qrows], dtype="int64")
     qm = np.array([r[1] for r in qrows], dtype="float64")
     qm /= np.linalg.norm(qm, axis=1, keepdims=True)
 
@@ -178,25 +178,26 @@ def brute_force_topk_numpy(
         ]
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ids = pdf.iloc[:, 0].to_numpy()
-            m = np.array(list(pdf.iloc[:, 1]), dtype="float64")
+            ids = rb.column(0).to_numpy(zero_copy_only=False).astype("int64")
+            vecs = rb.column(1)
+            m = vecs.flatten().to_numpy(zero_copy_only=False).astype("float64")
+            m = m.reshape(len(vecs), -1)
             m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
             scores = m @ qm.T  # (n_items, n_queries)
             kk = min(k, len(ids))
             top = np.argpartition(-scores, kk - 1, axis=0)[:kk]  # per query
-            rows = []
-            for qi in range(len(q_ids)):
-                sel = top[:, qi]
-                rows.extend(
-                    (int(q_ids[qi]), int(ids[i]), float(scores[i, qi])) for i in sel
-                )
-            yield pd.DataFrame(rows, columns=["q_id", "n_id", "score_raw"])
+            qi = np.repeat(np.arange(len(q_ids)), kk)
+            ni = top.T.ravel()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q_ids[qi]), pa.array(ids[ni]), pa.array(scores[ni, qi])],
+                names=["q_id", "n_id", "score_raw"],
+            )
 
-    partial = items.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
+    partial = items.select(id_col, vec_col).mapInArrow(score, schema=out_schema)
     w = Window.partitionBy("q_id").orderBy(
         F.col("score_raw").desc(), F.col("n_id").asc()
     )

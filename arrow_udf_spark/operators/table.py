@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..plans.registry import GLOBAL, Registry, Signature
-from ..plans.types import ExtField, parse_type
+from ..plans.types import ExtField, parse_type, struct_to_row
 from .scalar import pandas_values, py_values, takes_arrow, to_arrow
 
 __all__ = ["TableFunction", "udtf", "BATCH_SIZE"]
@@ -125,11 +125,8 @@ class TableFunction:
             names = [f.name for f in out_fields]
 
             def to_tuple(v):
-                if v is None:
-                    return (None,) * len(names)
-                if isinstance(v, dict):
-                    return tuple(v.get(n) for n in names)
-                return tuple(getattr(v, n, None) for n in names)
+                row = struct_to_row(v, names)
+                return tuple(row.get(n) for n in names)
 
         else:
             out_fields = [T.StructField(self.sig.name, dtype)]

@@ -1260,12 +1260,14 @@ def unigram_lm_fit(
 
     Scale: the model is O(vocab_size) driver/broadcast state (the
     kmeans-centroid pattern); each round is ONE distributed
-    mapInPandas pass over the zipf-bounded word-vocab table plus an
+    mapInArrow pass over the zipf-bounded word-vocab table plus an
     O(vocab) count collect; documents are touched once at the start
     (word compaction) and once at the end (encode join)."""
-    import pandas as pd
-
+    import pyarrow as pa
     from pyspark.sql import types as T
+
+    from ..plans.registry import Registry
+    from .table import udtf
 
     words = _bpe_words_of(df, text_col, id_col)
     wf = (
@@ -1322,20 +1324,23 @@ def unigram_lm_fit(
         cur = dict(probs)  # snapshot for the closure
 
         def estep(batches):
-            for pdf in batches:
+            for rb in batches:
                 counts: dict[str, int] = {}
-                for w, fq in zip(pdf["w"], pdf["freq"]):
-                    for piece in _viterbi_segment(str(w), cur, max_piece):
-                        counts[piece] = counts.get(piece, 0) + int(fq)
-                yield pd.DataFrame(
-                    list(counts.items()) or [("", 0)],
-                    columns=["piece", "cnt"],
+                ws, fqs = rb.column(0).to_pylist(), rb.column(1).to_pylist()
+                for w, fq in zip(ws, fqs):
+                    for piece in _viterbi_segment(w, cur, max_piece):
+                        counts[piece] = counts.get(piece, 0) + fq
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(list(counts), pa.string()),
+                        pa.array(list(counts.values()), pa.int64()),
+                    ],
+                    names=["piece", "cnt"],
                 )
 
         rows = (
             tr.select("w", "freq")
-            .mapInPandas(estep, seg_schema)
-            .where(F.col("piece") != "")
+            .mapInArrow(estep, seg_schema)
             .groupBy("piece")
             .agg(F.sum("cnt").alias("cnt"))
             .collect()
@@ -1356,26 +1361,14 @@ def unigram_lm_fit(
     # per-doc join (the bpe_train_encode epilogue shape)
     final_probs = dict(probs)
 
-    def encode(batches):
-        for pdf in batches:
-            out = []
-            for w, n in zip(pdf["w"], pdf["n"]):
-                w = str(w)
-                if int(n) > max_len:
-                    out.append((w, int(n)))  # char fallback
-                else:
-                    out.append(
-                        (w, len(_viterbi_segment(w, final_probs, max_piece)))
-                    )
-            yield pd.DataFrame(out, columns=["w", "n_pieces"])
+    @udtf(["string", "int"], "bigint", name="n_pieces", registry=Registry())
+    def encode(w, n):
+        if n > max_len:
+            yield n  # char fallback
+        else:
+            yield len(_viterbi_segment(w, final_probs, max_piece))
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("w", T.StringType()),
-            T.StructField("n_pieces", T.LongType()),
-        ]
-    )
-    model = wf.select("w", "n").mapInPandas(encode, enc_schema).persist()
+    model = encode.apply(wf, cols=["w", "n"], passthrough=["w"]).persist()
     model.count()
     wf.unpersist()
     out = (

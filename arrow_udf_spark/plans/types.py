@@ -307,13 +307,21 @@ def struct_type(cls: type) -> type:
 
 def struct_to_row(v, names: list[str]) -> dict:
     """Normalize a UDF struct return (dict | registered class instance |
-    Row-like) to a field dict; None-safe."""
+    Row-like | plain tuple or list, read positionally) to a field dict;
+    None-safe."""
     if v is None:
         return dict.fromkeys(names)
     if isinstance(v, dict):
         return v
     if hasattr(v, "asDict"):
         return v.asDict()
+    if isinstance(v, (tuple, list)) and not hasattr(v, "_fields"):
+        if len(v) != len(names):
+            raise ValueError(
+                f"struct result has {len(v)} values, expected {len(names)}: "
+                f"({', '.join(names)})"
+            )
+        return dict(zip(names, v))
     return {n: getattr(v, n, None) for n in names}
 
 

@@ -2176,12 +2176,10 @@ def q_png_meta(spark, sf):
     closed-form function of md5(text), so the oracle predicts them
     without any image code.  JPEG remains a documented descope."""
     from .operators.multimodal import decode_image_meta, synth_png
+    from .operators.scalar import udf
+    from .plans.registry import Registry
 
-    # no type hints: queries.py stringifies annotations (PEP 563), which
-    # pandas_udf cannot resolve — the hintless form is the portable one
-    @F.pandas_udf("binary")
-    def mk_png(texts):
-        return texts.map(synth_png)
+    mk_png = udf(["string"], "binary", name="mk_png", registry=Registry())(synth_png)
 
     d = t(spark, sf, "documents", spread=True).withColumn(
         "payload", mk_png("text")
@@ -2225,11 +2223,11 @@ def q_png_meta(spark, sf):
 def q_png_pixels(spark, sf):
     """Full PNG DECODE gate: synthesize → decode (chunk walk, CRC verify,
     zlib inflate, per-scanline None/Sub/Up/Average/Paeth reconstruction)
-    → pixel checksum, per doc over ``mapInPandas``.  The encoder cycles
-    the filter type per row, so every one of the five reconstruction
-    paths is load-bearing in every image (h >= 8 rows); encoder and
-    decoder share only the spec.  Embarrassingly parallel scan — no
-    shuffle, no driver state."""
+    → pixel checksum, per doc as a table function on ``mapInArrow``.
+    The encoder cycles the filter type per row, so every one of the five
+    reconstruction paths is load-bearing in every image (h >= 8 rows);
+    encoder and decoder share only the spec.  Embarrassingly parallel
+    scan — no shuffle, no driver state."""
     from .operators.multimodal import png_pipeline
 
     # spread: the fixture's single-row-group file scans as ONE task, which
@@ -7151,7 +7149,7 @@ def q_wav_frame_energy(spark, sf):
     by the independent RIFF walker (encoder and parser share only the
     spec), and the oracle recomputes the integers from the synthesis
     formula — a byte-level bug on either side breaks the gate.  Per-row
-    mapInPandas, no shuffle; frames fan out n/256 rows."""
+    table function on mapInArrow, no shuffle; frames fan out n/256 rows."""
     from .operators.multimodal import wav_frame_energy
 
     return wav_frame_energy(t(spark, sf, "documents"), "doc_id", frame=256)
@@ -7637,7 +7635,7 @@ def q_unigram_lm_fit(spark, sf):
     backtrack per round).
 
     Scale: model = O(vocab) driver/broadcast state (kmeans-centroid
-    pattern); each round is ONE mapInPandas pass over the zipf-bounded
+    pattern); each round is ONE mapInArrow pass over the zipf-bounded
     WORD table (never raw docs) + an O(vocab) collect; docs are touched
     once to compact and once to encode-join."""
     from .operators.text import unigram_lm_fit
@@ -7682,21 +7680,21 @@ def q_streaming_unigram_encode(spark, sf):
     engine ships one: kmeans→streaming_kmeans assign, PQ→
     streaming_pq_encode, BPE→streaming_bpe_encode): the model trains
     batch-side (yesterday's corpus) and its O(vocab) probability table
-    rides into the stream FROZEN inside a stateless ``mapInPandas`` —
-    per arriving document, whitespace words Viterbi-segment under the
-    broadcast model (char fallback over ``max_len``, the training
-    contract), emitting (doc_id, n_pieces, n_words) in append mode with
-    ZERO state-store state.  The gate pins the drained stream against
-    the SAME unrolled-CTE trajectory oracle as the batch trainer.
+    rides into the stream FROZEN inside a stateless table function
+    (``TableFunction.apply`` on ``mapInArrow``) — per arriving document,
+    whitespace words Viterbi-segment under the broadcast model (char
+    fallback over ``max_len``, the training contract), emitting
+    (doc_id, n_pieces, n_words) in append mode with ZERO state-store
+    state.  The gate pins the drained stream against the SAME
+    unrolled-CTE trajectory oracle as the batch trainer.
 
     Scale: per-row CPU + an O(vocab) broadcast — the firehose serving
     shape; no shuffle, no state."""
+    import re
     import tempfile
     import uuid
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    from .operators.table import udtf
     from .operators.text import (
         _BPE_M as _UNI_MARKER,
         UNIGRAM_MAX_LEN as _UNI_MAX_LEN,
@@ -7704,6 +7702,7 @@ def q_streaming_unigram_encode(spark, sf):
         _viterbi_segment,
         unigram_lm_fit,
     )
+    from .plans.registry import Registry
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
     out_batch, probs = unigram_lm_fit(
@@ -7717,46 +7716,33 @@ def q_streaming_unigram_encode(spark, sf):
     docs.write.mode("overwrite").parquet(d)
     stream = spark.readStream.schema(docs.schema).parquet(d)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", docs.schema["doc_id"].dataType),
-            T.StructField("n_pieces", T.LongType()),
-            T.StructField("n_words", T.LongType()),
-        ]
-    )
-
-    import re
-
     # ASCII \s+ to match the batch trainer's JVM F.split(r"\s+") word
     # boundaries (python str.split() also breaks on Unicode whitespace
     # like U+00A0, which Java \s does not — review catch)
     ws = re.compile(r"\s+", re.ASCII)
 
-    def encode(batches):
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [
-                    w.replace(_UNI_MARKER, "")
-                    for w in ws.split(str(text or ""))
-                ]
-                words = [w for w in words if w]
-                if not words:
-                    continue  # the batch/oracle emit no row either
-                np_total = 0
-                for w in words:
-                    if len(w) > _UNI_MAX_LEN:
-                        np_total += len(w)  # char fallback (contract)
-                    else:
-                        np_total += len(
-                            _viterbi_segment(w, frozen, _UNI_MAX_PIECE)
-                        )
-                rows.append((did, np_total, len(words)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_pieces", "n_words"]
-            )
+    @udtf(
+        ["string"],
+        "struct<n_pieces:bigint,n_words:bigint>",
+        name="unigram_encode",
+        registry=Registry(),
+    )
+    def encode(text):
+        words = [w.replace(_UNI_MARKER, "") for w in ws.split(text or "")]
+        words = [w for w in words if w]
+        if not words:
+            return  # the batch/oracle emit no row either
+        np_total = 0
+        for w in words:
+            if len(w) > _UNI_MAX_LEN:
+                np_total += len(w)  # char fallback (contract)
+            else:
+                np_total += len(_viterbi_segment(w, frozen, _UNI_MAX_PIECE))
+        yield np_total, len(words)
 
-    out = stream.mapInPandas(encode, out_schema)
+    out = encode.apply(stream, cols=["text"], passthrough=["doc_id"]).select(
+        "doc_id", "unigram_encode.*"
+    )
     sink = f"stream_unigram_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.format("memory")
@@ -8640,7 +8626,7 @@ def q_semdedup_prune(spark, sf):
 def q_semdedup_prune_numpy(spark, sf):
     """The SCALE PATH for SemDeDup: same cells, same keep rule, same
     oracle as ``semdedup_prune``, but the per-cell pair scoring is one
-    numpy matmul over the cell's normalized vectors (``applyInPandas``)
+    numpy matmul over the cell's normalized vectors (``applyInArrow``)
     instead of per-pair Catalyst array folds — Spark's higher-order
     array functions are interpreted (CodegenFallback), so the fold form
     pays an interpreter visit per element per pair, while the matmul is

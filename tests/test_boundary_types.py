@@ -22,9 +22,11 @@ from datetime import date, datetime
 from decimal import Decimal
 
 import pytest
+import pyarrow as pa
 from pyspark.sql import types as T
 
 from arrow_udf_spark import CallMode, Registry, udaf, udf, udtf
+from arrow_udf_spark.operators.scalar import to_arrow
 from arrow_udf_spark.plans.types import parse_type
 
 NAN = float("nan")
@@ -138,6 +140,107 @@ def test_identity_roundtrip(spark, tstr, values):
         assert sorted(r.id for r in out) == sorted(sent), (tstr, name)
         for r in out:
             assert _same(r[name], sent[r.id]), (tstr, name, r)
+
+
+def _sql_lit(v, dtype: T.DataType) -> str:
+    """A Spark SQL expression of type ``dtype`` holding the value ``v``."""
+    if v is None:
+        body = "NULL"
+    elif isinstance(dtype, T.StructType):
+        body = "named_struct({})".format(
+            ", ".join(
+                f"'{f.name}', {_sql_lit(v[f.name], f.dataType)}" for f in dtype.fields
+            )
+        )
+    elif isinstance(dtype, T.ArrayType):
+        body = "array({})".format(", ".join(_sql_lit(x, dtype.elementType) for x in v))
+    elif isinstance(dtype, T.MapType):
+        body = "map({})".format(
+            ", ".join(
+                f"{_sql_lit(k, dtype.keyType)}, {_sql_lit(x, dtype.valueType)}"
+                for k, x in v.items()
+            )
+        )
+    elif isinstance(v, bytes):
+        body = f"X'{v.hex()}'"
+    elif isinstance(v, bool):
+        body = str(v).upper()
+    elif isinstance(v, float):
+        # quoted, so -0.0 is not read as the negation of a decimal zero
+        body = "'{}'".format(repr(v).replace("nan", "NaN").replace("inf", "Infinity"))
+    else:  # ints, decimals, strings, dates and timestamps: cast from text
+        body = f"'{v}'"
+    return f"CAST({body} AS {dtype.simpleString()})"
+
+
+@pytest.mark.parametrize("tstr,values", CASES, ids=[c[0] for c in CASES])
+def test_sql_table_function_identity(spark, tstr, values):
+    """``row_tid`` through ``register_sql`` returns what ``.apply`` does,
+    both as ``SELECT * FROM row_tid(<literal>)`` and as ``LATERAL
+    row_tid(t.x)``: values unchanged, NaN as NULL, ±0.0 keeps its sign, an
+    outer-NULL struct has no non-NULL field."""
+    dtype = parse_type(tstr).dtype
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("x", dtype)]
+    )
+    df = spark.createDataFrame(list(enumerate(values)), schema)
+    df.createOrReplaceTempView("tf_types")
+    sent = {r.id: r.x for r in df.collect()}
+    row_tid = _functions(tstr)[4]
+    reg = Registry()
+    reg.add(row_tid)
+    # the bare name is taken once an earlier case registered it; the
+    # registry then uses the signature-mangled name
+    (fname,) = reg.register_sql(spark)
+    names = [f.name for f in dtype.fields] if isinstance(dtype, T.StructType) else None
+
+    def value(r):
+        return T.Row(*(r[n] for n in names)) if names else r["row_tid"]
+
+    literal = " UNION ALL ".join(
+        f"SELECT {i} AS id, * FROM `{fname}`({_sql_lit(v, dtype)})"
+        for i, v in enumerate(values)
+    )
+    lateral = f"SELECT t.id, s.* FROM tf_types t, LATERAL `{fname}`(t.x) s"
+    for surface, q in (("literal", literal), ("lateral", lateral)):
+        rows = spark.sql(q).collect()
+        assert sorted(r.id for r in rows) == sorted(sent), (tstr, surface)
+        for r in rows:
+            assert _same(value(r), sent[r.id]), (tstr, surface, r)
+
+
+def test_tuple_struct_result_reads_positionally(spark):
+    """A plain tuple returned for a struct result fills the fields in
+    order through a scalar ``@udf``, ``.apply`` and ``SELECT * FROM
+    f(...)``; a tuple of the wrong length names the expected fields."""
+    tstr = "struct<a:int32,b:string>"
+    reg = Registry()
+
+    @udf(input_types=["int64"], result_type=tstr, name="tuple_pair", registry=reg)
+    def tuple_pair(n):
+        return (int(n), str(n))
+
+    @udtf(input_types=["int64"], result_type=tstr, name="tuple_pairs", registry=reg)
+    def tuple_pairs(n):
+        for i in range(n):
+            yield (i, str(i))
+
+    df = spark.createDataFrame([(1,), (3,)], "n bigint")
+    got = df.select(tuple_pair("n").alias("p")).collect()
+    assert sorted(tuple(r.p) for r in got) == [(1, "1"), (3, "3")]
+    got = tuple_pairs.apply(df, cols=["n"], passthrough=["n"]).collect()
+    assert sorted((r.n, tuple(r.tuple_pairs)) for r in got) == [
+        (1, (0, "0")),
+        (3, (0, "0")),
+        (3, (1, "1")),
+        (3, (2, "2")),
+    ]
+    reg.register_sql(spark)
+    got = spark.sql("SELECT * FROM tuple_pairs(2)").collect()
+    assert sorted(tuple(r) for r in got) == [(0, "0"), (1, "1")]
+    atype = pa.struct([("a", pa.int32()), ("b", pa.string())])
+    with pytest.raises(ValueError, match=r"expected 2: \(a, b\)"):
+        to_arrow([(1,)], atype, 1)
 
 
 def test_outer_null_struct_stays_null(spark):

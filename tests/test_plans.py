@@ -540,15 +540,33 @@ def _assert_only_row_index_spread(p: str) -> None:
 
 
 def test_png_pipeline_single_map_stage(spark, sf_dir):
-    """r8: png_pixels is one mapInPandas over the scan — no KEYED shuffle
+    """r8: png_pixels is one map stage over the scan — no KEYED shuffle
     anywhere (the embarrassing-parallel contract); the row-index spread is
-    the only exchange."""
+    the only exchange.  The map is the table-function core's mapInArrow."""
     from arrow_udf_spark.queries import QUERIES
 
     p = _plan(QUERIES["png_pixels"](spark, sf_dir))
-    assert "MapInPandas" in p
+    assert p.count("MapInArrow") == 1 and "MapInPandas" not in p
     _assert_only_row_index_spread(p)
     assert "Exchange rangepartitioning" not in p
+
+
+def test_operators_have_no_pandas_map():
+    """Every per-row or batch-shaped operator runs on the Arrow APIs: no
+    pandas UDF, mapInPandas or (grouped-map) applyInPandas under
+    ``operators/``.  Streaming's applyInPandasWithState is not matched."""
+    from pathlib import Path
+
+    import arrow_udf_spark.operators as ops
+
+    pat = re.compile(r"pandas_udf|mapInPandas|applyInPandas\(")
+    hits = [
+        f"{path.name}:{i}: {line.strip()}"
+        for path in sorted(Path(ops.__file__).parent.glob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert not hits, hits
 
 
 def test_udf_boundary_runs_on_arrow(spark, sf_dir):
