@@ -5,19 +5,67 @@ reference arrow-udf-macros/src/codegen_utils.rs:642) via
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` — configurable because at
 100 TB scale larger Arrow batches amortize the JVM<->Python boundary better
 (bench uses 10k).
+
+Importing this module also makes ``zipimporter.invalidate_caches`` lazy on
+CPython < 3.13 (see :func:`_lazy_zip_invalidation`), in the driver and in
+every Spark Python worker that unpickles one of the package's functions.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
 #: Arrow batch size at the JVM<->Python boundary.  The reference re-chunks at
-#: 1024; we default higher because vectorized pandas UDFs amortize per-batch
-#: overhead (the reference's per-batch fixed cost is exactly what made its
-#: Python mode 115x slower than native, BASELINE.md).
+#: 1024; we default higher because Arrow UDFs (``arrow_udf`` scalars,
+#: ``mapInArrow`` table functions) amortize per-batch overhead (the
+#: reference's per-batch fixed cost is exactly what made its Python mode 115x
+#: slower than native, BASELINE.md).
 DEFAULT_ARROW_BATCH = 10_000
+
+
+def _lazy_zip_invalidation() -> None:
+    """Backport CPython 3.13's lazy ``zipimporter.invalidate_caches``.
+
+    A Spark Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``pyspark.worker_util.setup_spark_files``).  Before
+    3.13 each zipimporter then re-parses its whole archive directory in
+    Python code: a worker holds a dozen or more importers over
+    ``$SPARK_HOME/python/lib/pyspark.zip`` (1,328 entries), 0.15-0.28 s per
+    task.  Here an archive is re-read only when its ``(st_mtime_ns,
+    st_size)`` differs from the last read in this process or it is missing
+    from ``zipimport._zip_directory_cache``; otherwise the importer points
+    at the cached directory.  A zip rewritten in place is still picked up,
+    and a new ``addPyFile`` zip is a new path with a fresh importer.
+    Idempotent; does nothing on 3.13+, where the stdlib is already lazy.
+    """
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "__wrapped__"):
+        return
+    reread = cls.invalidate_caches
+    stamps: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        stamps[self.archive] = stamp
+
+    invalidate_caches.__wrapped__ = reread
+    cls.invalidate_caches = invalidate_caches
+
+
+_lazy_zip_invalidation()
 
 
 def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = None):
