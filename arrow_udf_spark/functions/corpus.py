@@ -438,7 +438,8 @@ def fib(n: int):
 def max2(a: pd.Series, b: pd.Series) -> pd.Series:
     """Custom-handler max — reference tests/python.rs:71-112
     (add_function_with_handler)."""
-    return a.combine(b, lambda x, y: x if x >= y else y)
+    # a NULL on either side compares false, as NaN did under the float64 view
+    return a.where((a >= b).fillna(False), b)
 
 
 @udf(input_types=["string", "string"], result_type="string", name="concat2", batch=True)
@@ -725,8 +726,8 @@ class SumAgg:
     def accumulate(self, s, x):
         return s + (0 if x is None else int(x))
 
-    def accumulate_batch(self, s, xs):
-        return s + int(xs.dropna().sum())
+    def accumulate_batch(self, s, xs: pa.Array):
+        return s + int(pc.sum(xs).as_py() or 0)
 
     def retract(self, s, x):
         return s - (0 if x is None else int(x))
@@ -747,11 +748,13 @@ class WeightedAvg:
             return s
         return {"sum": s["sum"] + v * w, "weight": s["weight"] + w}
 
-    def accumulate_batch(self, s, vs, ws):
-        m = vs.notna() & ws.notna()
+    def accumulate_batch(self, s, vs: pa.Array, ws: pa.Array):
+        # rows where both hold a number: NULL masks drop, NaN is false
+        m = pc.invert(pc.or_(pc.is_nan(vs), pc.is_nan(ws)))
+        vs, ws = vs.filter(m), ws.filter(m)
         return {
-            "sum": s["sum"] + float((vs[m] * ws[m]).sum()),
-            "weight": s["weight"] + float(ws[m].sum()),
+            "sum": s["sum"] + float(pc.sum(pc.multiply(vs, ws)).as_py() or 0.0),
+            "weight": s["weight"] + float(pc.sum(ws).as_py() or 0.0),
         }
 
     def retract(self, s, v, w):
@@ -774,8 +777,8 @@ class CountAgg:
     def accumulate(self, s, x):
         return s + (0 if x is None else 1)
 
-    def accumulate_batch(self, s, xs):
-        return s + int(xs.notna().sum())
+    def accumulate_batch(self, s, xs: pa.Array):
+        return s + len(xs) - xs.null_count
 
     def retract(self, s, x):
         return s - (0 if x is None else 1)
@@ -785,8 +788,10 @@ class CountAgg:
 
 
 def _nan(v) -> bool:
+    """Missing in a Series view: None, NaN, or ``pd.NA`` (a masked Int64
+    column's NULL)."""
     try:
-        return v is None or v != v
+        return v is None or v is pd.NA or v != v
     except Exception:
         return False
 

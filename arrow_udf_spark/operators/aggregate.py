@@ -28,8 +28,9 @@ only caller of ``accumulate`` / ``accumulate_batch``) and that one merge.
 The DataFrame :meth:`AggregateFunction.agg` and ``Registry.sql`` fold in
 ``mapInArrow``; the SQL names ``f`` and ``f__partial`` fold a whole group
 in one grouped aggregate ``arrow_udf``
-(:meth:`AggregateFunction.as_spark_grouped_agg`); ``f__mergevec`` is the
-phase-2 UDF above.
+(:meth:`AggregateFunction.as_spark_grouped_agg`); the streaming operators
+fold each key's micro-batch; ``f__mergevec`` is the phase-2 UDF above.
+Columns reach the bodies through the scalar functions' two views.
 
 This exercises the reference's ``merge`` exactly the way its distributed
 hosts do (partial + final agg).  Pickle-typed opaque state
@@ -52,7 +53,6 @@ from dataclasses import dataclass
 from typing import Any, Callable, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -63,7 +63,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, parse_type
-from .scalar import to_arrow
+from .scalar import batch_values, py_values, takes_arrow, to_arrow
 
 __all__ = ["AggregateFunction", "udaf", "build_multi_fold"]
 
@@ -81,7 +81,9 @@ _CHUNK_BYTES = 64 << 20
 #: costs ~65-70 us for sum_udaf and ~600 us for weighted_avg, against
 #: ~0.45 and ~0.77 us per row through ``accumulate``: break-even at ~150
 #: and ~800 rows.  Taking the lower keeps every group within a few
-#: hundred microseconds of its faster path.
+#: hundred microseconds of its faster path.  (These are pandas-view
+#: costs; an Arrow-annotated ``accumulate_batch`` is cheaper per call,
+#: ~5 us for a ``pc.sum`` over a 500-row slice.)
 _ROW_FOLD_MAX = 128
 #: Arrow hash aggregate per built-in partial kind: over a chunk's rows
 #: (COUNT(*) counts the never-NULL group id column), then over the chunk
@@ -117,7 +119,7 @@ def build_multi_fold(
     to partition-wide groups with the equality of Spark's GROUP BY: NULL
     is its own group, all NaNs form one group, and -0.0 joins 0.0.  Per
     (group, chunk) the state then takes one ``accumulate_batch`` call on a
-    pandas slice, or per-row ``accumulate`` over Python values when the
+    column slice, or per-row ``accumulate`` over Python values when the
     group has at most ``_ROW_FOLD_MAX`` rows (the UDAF contract makes the
     two equivalent).
 
@@ -132,10 +134,7 @@ def build_multi_fold(
     """
     # the closure captures the user callables only: an AggregateFunction
     # may hold an unpicklable cached Spark UDF wrapper
-    fns = [
-        (f.create_state, f.accumulate, f.accumulate_batch, f.retract)
-        for f in udafs
-    ]
+    fns = [f._folder() for f in udafs]
     arg_offs = list(itertools.accumulate(arg_ns, initial=0))
     bp_chunk = [_BP_CHUNK_FN.get(k, k) for k, _ci in bp_kinds]
     bp_merge = [_BP_MERGE_FN.get(k, k) for k, _ci in bp_kinds]
@@ -235,41 +234,6 @@ def build_multi_fold(
     return fold
 
 
-def _is_null(v) -> bool:
-    # ``v is pd.NA`` must precede ``v != v``: pd.NA != pd.NA is pd.NA,
-    # whose truthiness RAISES — the except branch then mis-reported NA as
-    # non-null (masked-int .tolist() yields pd.NA, found by the r11 fold)
-    try:
-        return v is None or v is pd.NA or v != v
-    except Exception:
-        return False
-
-
-#: Arrow int type id -> pandas masked dtype, for exact null-bearing batches
-def _nullable_int_dtype(t):
-    return {
-        pa.int8(): pd.Int8Dtype(),
-        pa.int16(): pd.Int16Dtype(),
-        pa.int32(): pd.Int32Dtype(),
-        pa.int64(): pd.Int64Dtype(),
-        pa.uint8(): pd.UInt8Dtype(),
-        pa.uint16(): pd.UInt16Dtype(),
-        pa.uint32(): pd.UInt32Dtype(),
-        pa.uint64(): pd.UInt64Dtype(),
-    }.get(t)
-
-
-def _exact_series(col) -> pd.Series:
-    """Arrow column -> pandas Series without lossy null coercion.
-
-    int64-with-NULLs becomes masked ``Int64`` (all 64 bits intact) rather
-    than float64, whose 53-bit mantissa silently corrupts large values
-    (e.g. KMV hashes) before the aggregate ever sees them (ADVICE r4)."""
-    if col.null_count and pa.types.is_integer(col.type):
-        return col.to_pandas(types_mapper=_nullable_int_dtype)
-    return col.to_pandas()
-
-
 def _merged_columns(batches) -> list:
     """Record batches -> one contiguous Arrow array per column."""
     t = pa.Table.from_batches(batches).combine_chunks()
@@ -322,35 +286,27 @@ def _norm_key(v):
     return v
 
 
-def _py_values(col, series: pd.Series) -> list:
-    """Python values of an argument column with NULL (and float NaN) as
-    None, checked per value only when the column has any."""
-    vals = series.tolist()
-    if col.null_count or (
-        pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py()
-    ):
-        return [None if _is_null(v) else v for v in vals]
-    return vals
-
-
 def _fold_spans(fn, u, args, ops, spans, states) -> None:
     """Fold one chunk's group-sorted argument columns into state ``u`` of
     each ``(group id, start, end)`` span: one ``accumulate_batch`` call
     for a group above ``_ROW_FOLD_MAX`` rows, per-row ``accumulate`` (or
-    ``retract`` where ``ops`` is true) otherwise."""
-    _create, acc, acc_b, ret = fn
+    ``retract`` where ``ops`` is true) otherwise.  ``fn`` is
+    :meth:`AggregateFunction._folder`."""
+    _create, acc, acc_b, ret, arrow = fn
     if ops is not None:
         acc_b = None  # mixed accumulate/retract folds row by row
-    series = [_exact_series(a) for a in args]
-    rows = None
+    cols = rows = None
+    if acc_b is not None and any(a1 - a0 > _ROW_FOLD_MAX for _g, a0, a1 in spans):
+        # positional slicers: a pa.Array slices itself, a Series via .iloc
+        cols = [a if arrow else batch_values(a, False).iloc for a in args]
     if acc_b is None or any(a1 - a0 <= _ROW_FOLD_MAX for _g, a0, a1 in spans):
-        rows = [_py_values(a, s) for a, s in zip(args, series)]
+        rows = [py_values(a) for a in args]
     # functools.reduce loops in C: twice as fast as a Python loop here
     step = acc if len(args) == 1 else (lambda s, row: acc(s, *row))
     for g, a0, a1 in spans:
         st = states[g]
         if acc_b is not None and a1 - a0 > _ROW_FOLD_MAX:
-            st[u] = acc_b(st[u], *[s.iloc[a0:a1] for s in series])
+            st[u] = acc_b(st[u], *[c[a0:a1] for c in cols])
         elif ops is not None:
             s = st[u]
             for row, op in zip(zip(*[r[a0:a1] for r in rows]), ops[a0:a1]):
@@ -360,6 +316,14 @@ def _fold_spans(fn, u, args, ops, spans, states) -> None:
             st[u] = functools.reduce(step, rows[0][a0:a1], st[u])
         else:
             st[u] = functools.reduce(step, zip(*[r[a0:a1] for r in rows]), st[u])
+
+
+def _fold_all(fn, state, cols: Sequence[pa.Array], n: int):
+    """Fold all ``n`` rows of ``cols`` into ``state`` as one span (a SQL
+    group, a streaming micro-batch of one key); returns the new state."""
+    states = [[state]]
+    _fold_spans(fn, 0, cols, None, [(0, 0, n)], states)
+    return states[0][0]
 
 
 def _reduce_partials(gid, cols, fns) -> tuple:
@@ -402,11 +366,21 @@ class AggregateFunction:
     merge: Callable[[Any, Any], Any]
     retract: Optional[Callable[..., Any]] = None
     finish: Optional[Callable[[Any], Any]] = None
-    #: optional vectorized fold: (state, *pandas.Series) -> state.  When
+    #: optional vectorized fold: (state, *columns) -> state.  When
     #: present, the fold hands a group of more than ``_ROW_FOLD_MAX`` rows
     #: to it as column slices instead of Python rows (~50x on numeric
-    #: aggregates).
+    #: aggregates): ``pa.Array`` slices when every column parameter is
+    #: annotated ``pa.Array`` (the scalar ``takes_arrow`` rule), exact
+    #: pandas Series slices otherwise.
     accumulate_batch: Optional[Callable[..., Any]] = None
+
+    def _folder(self) -> tuple:
+        """``(create_state, accumulate, accumulate_batch, retract, arrow)``
+        for :func:`_fold_spans`: plain callables, since a fold closure must
+        not capture the instance (it may hold a Spark UDF wrapper)."""
+        acc_b = self.accumulate_batch
+        arrow = acc_b is not None and takes_arrow(acc_b, skip=1)
+        return self.create_state, self.accumulate, acc_b, self.retract, arrow
 
     # ------------------------------------------------------------------
     def as_spark_grouped_agg(self, partial: bool = False):
@@ -443,8 +417,7 @@ class AggregateFunction:
                 RuntimeWarning,
                 stacklevel=2,
             )
-        create = self.create_state
-        fn = (create, self.accumulate, self.accumulate_batch, None)
+        fn, create = self._folder(), self.create_state
         if partial:
             dtype, out = T.BinaryType(), pickle.dumps
         else:
@@ -452,10 +425,8 @@ class AggregateFunction:
         atype = to_arrow_type(dtype)
 
         def agg_fn(*cols: pa.Array) -> pa.Scalar:
-            states = [[create()]]
-            n = len(cols[0]) if cols else 0
-            _fold_spans(fn, 0, cols, None, [(0, 0, n)], states)
-            res = to_arrow([out(states[0][0])], atype, 1)[0]
+            state = _fold_all(fn, create(), cols, len(cols[0]) if cols else 0)
+            res = to_arrow([out(state)], atype, 1)[0]
             # pyarrow cannot rebuild an array from a NULL nested scalar;
             # a bare None arrives as a null-typed array Spark casts
             return res if res.is_valid else None
@@ -523,7 +494,7 @@ class AggregateFunction:
         )
         # phase 1 over Arrow batches: exact nullable ints (no float64
         # coercion of NULL-bearing int columns, which destroys bits above
-        # 2^53) and no pandas conversion
+        # 2^53), and pandas only for an accumulate_batch that asks for it
         fold = build_multi_fold(
             [self], len(by), [len(args)], retract=_ops_col is not None
         )

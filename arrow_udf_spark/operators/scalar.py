@@ -15,8 +15,11 @@ Design (SURVEY.md §2.A A1-A4, A11, A12):
   reference's ``RecordBatch -> RecordBatch`` contract.
 - ``batch=True`` functions receive whole columns (the reference's
   batched/columnar mode, A11): :class:`pyarrow.Array` when every parameter
-  is annotated ``pa.Array``, :class:`pandas.Series` otherwise.  The choice
-  is read once from the signature, like pyspark's own type-hint inference.
+  is annotated ``pa.Array``, :class:`pandas.Series` otherwise (an int
+  column with NULLs arrives as masked ``Int64``, never float64).  The
+  choice is read once from the signature, like pyspark's own type-hint
+  inference.  Every front shares these two column views
+  (:func:`py_values`, :func:`batch_values`).
   ``batch=False`` functions are called once per row (the reference's
   default row loop, A1) with plain Python values: NaN reads as None, maps
   as dicts, structs as dicts.
@@ -75,11 +78,12 @@ class CallMode(enum.Enum):
 # ---------------------------------------------------------------------------
 
 
-def takes_arrow(fn: Callable) -> bool:
-    """True when every parameter of ``fn`` is annotated ``pa.Array``."""
+def takes_arrow(fn: Callable, skip: int = 0) -> bool:
+    """True when every parameter of ``fn`` after the first ``skip`` is
+    annotated ``pa.Array`` (``skip=1`` passes over an aggregate's state)."""
     try:
         hints = typing.get_type_hints(fn)
-        params = inspect.signature(fn).parameters
+        params = list(inspect.signature(fn).parameters)[skip:]
     except (NameError, TypeError, ValueError):
         return False
     return bool(params) and all(hints.get(p) is pa.Array for p in params)
@@ -108,20 +112,50 @@ def _dictify(v: Any, t: pa.DataType) -> Any:
     return v
 
 
+#: Arrow int type -> pandas masked dtype (see :func:`batch_values`)
+_MASKED_INT = {
+    getattr(pa, n)(): pd.api.types.pandas_dtype(n.title().replace("Uint", "UInt"))
+    for n in ("int8", "int16", "int32", "int64", "uint8", "uint16", "uint32", "uint64")
+}
+_TEXT = (pa.string(), pa.large_string(), pa.binary(), pa.large_binary())
+
+
 def py_values(arr: pa.Array) -> list:
-    """Row-function view of a column: Python values, NaN as None."""
-    vals = arr.to_pylist()
-    if pa.types.is_floating(arr.type):
-        return [None if v != v else v for v in vals]
-    if _has_map(arr.type):
-        return [_dictify(v, arr.type) for v in vals]
+    """Row-function view of a column: Python values, NaN and NULL as None,
+    maps as dicts.  Numbers, strings and binary are read through numpy
+    (an order of magnitude faster than ``to_pylist``)."""
+    t = arr.type
+    if pa.types.is_integer(t) or pa.types.is_boolean(t):
+        # filled first: a NULL-bearing int column would read as float64
+        vals = arr.fill_null(False if pa.types.is_boolean(t) else 0)
+        vals = vals.to_numpy(zero_copy_only=False).tolist()
+        missing = np.flatnonzero(arr.is_null().to_numpy(zero_copy_only=False))
+    elif pa.types.is_float32(t) or pa.types.is_float64(t):
+        data = arr.to_numpy(zero_copy_only=False)  # NULL reads as NaN
+        vals, missing = data.tolist(), np.flatnonzero(np.isnan(data))
+    elif t in _TEXT:
+        return arr.to_numpy(zero_copy_only=False).tolist()  # NULL is None
+    elif _has_map(t):
+        return [_dictify(v, t) for v in arr.to_pylist()]
+    else:
+        return arr.to_pylist()
+    for i in missing.tolist():
+        vals[i] = None
     return vals
 
 
-def pandas_values(arr: pa.Array) -> pd.Series:
-    """Batch-function view of a column, as a pandas UDF would see it."""
+def batch_values(arr: pa.Array, arrow: bool) -> pa.Array | pd.Series:
+    """Batch-function view of a column: the array itself for a function
+    whose parameters are annotated ``pa.Array`` (``arrow``); otherwise a
+    pandas Series that loses nothing: a NULL-bearing int column is masked
+    ``Int64`` (float64 would drop the bits above 2^53) and a map column
+    holds dicts."""
+    if arrow:
+        return arr
     if _has_map(arr.type):
         return pd.Series(py_values(arr), dtype="object")
+    if arr.null_count and pa.types.is_integer(arr.type):
+        return arr.to_pandas(types_mapper=_MASKED_INT.get)
     return arr.to_pandas(coerce_temporal_nanoseconds=True)
 
 
@@ -200,19 +234,20 @@ def _format_error(style: str) -> Callable[[BaseException], str]:
 def _eval_rows(
     spec: _EvalSpec, arrays: Sequence[pa.Array], n: int
 ) -> tuple[list, Optional[list]]:
-    rows = list(zip(*(py_values(a) for a in arrays))) if arrays else [()] * n
     fn = spec.fn
     if spec.batch:
         # row-wise fallback of a batch fn: call it on length-1 columns
-        user, types = spec.fn, [a.type for a in arrays]
-        atype = to_arrow_type(spec.dtype)
+        rows = [
+            tuple(batch_values(a.slice(i, 1), spec.arrow_in) for a in arrays)
+            for i in range(n)
+        ]
+        user, atype = spec.fn, to_arrow_type(spec.dtype)
 
-        def fn(*args):  # noqa: ANN001
-            cols = (
-                pa.array([a], type=t) if spec.arrow_in else pd.Series([a])
-                for a, t in zip(args, types)
-            )
+        def fn(*cols):  # noqa: ANN001
             return to_arrow(user(*cols), atype, 1)[0].as_py()
+
+    else:
+        rows = list(zip(*map(py_values, arrays))) if arrays else [()] * n
 
     fmt = _format_error(spec.error_style)
 
@@ -387,7 +422,7 @@ def _eval_clean(
         return _eval_memcapped(spec, arrays, n)
     if not spec.batch:
         return _eval_rows(spec, arrays, n)
-    args = arrays if spec.arrow_in else [pandas_values(a) for a in arrays]
+    args = [batch_values(a, spec.arrow_in) for a in arrays]
     if not spec.fallible:
         return spec.fn(*args), None
     try:

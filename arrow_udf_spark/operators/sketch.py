@@ -108,6 +108,14 @@ def kmv_distinct(
     return out.select(*by, _estimate_expr(F.col("__kmv_mins"), k).alias("approx_distinct"))
 
 
+def _refuse_float_hashes():
+    raise ValueError(
+        "kmv_udaf: hash batch arrived as float64 (input column has "
+        "NULLs); filter NULL keys before the aggregate — float "
+        "coercion destroys hash bits above 2^53"
+    )
+
+
 @udaf(input_types=["bigint"], result_type="bigint", name="kmv_udaf")
 class KmvAgg:
     """KMV sketch as a 5-phase aggregate: state = sorted tuple of ≤ k
@@ -121,6 +129,8 @@ class KmvAgg:
         return ()
 
     def accumulate(self, state, h):
+        if isinstance(h, float):  # see accumulate_batch
+            _refuse_float_hashes()
         if h is None or (state and len(state) == self.K and h >= state[-1]):
             return state
         if h in state:
@@ -128,20 +138,18 @@ class KmvAgg:
         return tuple(sorted(state + (int(h),))[: self.K])
 
     def accumulate_batch(self, state, hs):
-        # Every batch surface (the DataFrame agg, Registry.sql and the SQL
-        # grouped-aggregate UDFs, all through the Arrow fold) delivers
-        # NULL-bearing int64 batches as exact masked Int64, so null keys
-        # just drop out below.  Only the pandas streaming bridges
-        # (applyInPandasWithState in streaming.stateful) can still hand
-        # over float64: there the 53-bit mantissa has ALREADY corrupted
-        # hashes >= 2^53 and astype back cannot detect it — refuse loudly
-        # and tell the caller to pre-filter nulls (kmv_distinct does).
+        # Unannotated, so the fold hands over the exact Series view
+        # (scalar.batch_values): a NULL-bearing int64 batch arrives as
+        # masked Int64 on every surface and null keys just drop out
+        # below.  The streaming operators fold through the same core, but
+        # Spark's applyInPandasWithState has already turned such a column
+        # into float64 before our code runs: the 53-bit mantissa has
+        # corrupted hashes >= 2^53 and astype back cannot detect it —
+        # refuse loudly (here and, for small micro-batches, in
+        # accumulate) and tell the caller to pre-filter nulls
+        # (kmv_distinct does).
         if hs.dtype.kind == "f":
-            raise ValueError(
-                "kmv_udaf: hash batch arrived as float64 (input column has "
-                "NULLs); filter NULL keys before the aggregate — float "
-                "coercion destroys hash bits above 2^53"
-            )
+            _refuse_float_hashes()
         vals = hs.dropna()
         if not len(vals):
             return state

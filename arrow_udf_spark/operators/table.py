@@ -30,6 +30,7 @@ from __future__ import annotations
 import inspect
 import itertools
 from dataclasses import dataclass
+from functools import partial
 from typing import Callable, Iterable, Iterator, Optional, Sequence
 
 import numpy as np
@@ -41,19 +42,12 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, parse_type, struct_to_row
-from .scalar import pandas_values, py_values, takes_arrow, to_arrow
+from .scalar import batch_values, py_values, takes_arrow, to_arrow
 
 __all__ = ["TableFunction", "udtf", "BATCH_SIZE"]
 
 #: reference BATCH_SIZE (codegen_utils.rs:642); output re-chunk unit
 BATCH_SIZE = 1024
-
-
-def _is_null(v) -> bool:
-    try:
-        return v is None or v != v
-    except Exception:
-        return False
 
 
 def _sync_gen(fn: Callable) -> Callable:
@@ -73,6 +67,37 @@ def _sync_gen(fn: Callable) -> Callable:
 
     sync_fn.__name__ = getattr(fn, "__name__", "async_udtf")
     return sync_fn
+
+
+def _fan_out(
+    fn: Callable, args: Sequence[pa.Array], n: int, csize: int, fallible: bool
+) -> Iterator[tuple[list, list, list]]:
+    """The row loop of a table function over one input batch: ``fn`` runs
+    on each row's Python values (:func:`py_values`) and the output comes
+    in ``(src, values, errors)`` chunks of at most ``csize`` rows, ``src``
+    holding each output row's 0-based input row within this batch.  A
+    fallible row that raises yields one ``(row, None, message)``."""
+    rows = zip(*map(py_values, args)) if args else [()] * n
+    src: list[int] = []
+    flat: list = []
+    errs: list = []
+    for r, row in enumerate(rows):
+        try:
+            for v in fn(*row):
+                src.append(r)
+                flat.append(v)
+                errs.append(None)
+                if len(flat) >= csize:
+                    yield src, flat, errs
+                    src, flat, errs = [], [], []
+        except Exception as e:  # row-level error isolation
+            if not fallible:
+                raise
+            src.append(r)
+            flat.append(None)
+            errs.append(str(e))
+    if flat:
+        yield src, flat, errs
 
 
 @dataclass
@@ -142,7 +167,8 @@ class TableFunction:
 
         class _Udtf:
             def eval(self, *args):
-                args = tuple(None if _is_null(a) else a for a in args)
+                # the row view's rule: NaN reads as None
+                args = tuple(None if isinstance(a, float) and a != a else a for a in args)
                 try:
                     for v in fn(*args):
                         t = to_tuple(v)
@@ -196,64 +222,43 @@ class TableFunction:
                 out.append(errs if isinstance(errs, pa.Array) else pa.array(errs, pa.string()))
             return pa.RecordBatch.from_arrays(out, names=out_names)
 
-        def run_vec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            row_base = 0
-            for rb in batches:
-                args = [rb.column(n_pt + i) for i in range(len(cols))]
-                if not arrow_in:
-                    args = [pandas_values(a) for a in args]
+        def vec_chunks(args: list, n: int) -> Iterator[tuple]:
+            args = [batch_values(a, arrow_in) for a in args]
+            if fallible:
+                # fallible contract: (per_row_iterables, per_row_errs)
+                # where errs[i] is a message or None; an errored input
+                # row emits exactly one (NULL, error) output row
+                per_row, row_errs = batch_fn(*args)
+                lists = [
+                    [None] if row_errs[i] is not None else list(x)
+                    for i, x in enumerate(per_row)
+                ]
+            else:
+                lists = [list(x) for x in batch_fn(*args)]
+            lens = np.fromiter(map(len, lists), dtype="int64", count=len(lists))
+            if lens.sum():
+                src = np.repeat(np.arange(n), lens)
+                errs = None
                 if fallible:
-                    # fallible contract: (per_row_iterables, per_row_errs)
-                    # where errs[i] is a message or None; an errored input
-                    # row emits exactly one (NULL, error) output row
-                    per_row, row_errs = batch_fn(*args)
-                    lists = [
-                        [None] if row_errs[i] is not None else list(x)
-                        for i, x in enumerate(per_row)
-                    ]
-                else:
-                    lists = [list(x) for x in batch_fn(*args)]
-                lens = np.fromiter(map(len, lists), dtype="int64", count=len(lists))
-                if lens.sum():
-                    src = np.repeat(np.arange(rb.num_rows), lens)
-                    errs = None
-                    if fallible:
-                        errs = pa.array(row_errs, pa.string(), from_pandas=True).take(src)
-                    # no manual re-chunk here: Spark re-batches the Arrow
-                    # stream at maxRecordsPerBatch; slicing into 1024-row
-                    # batches would just multiply serialization overhead
-                    flat = list(itertools.chain.from_iterable(lists))
-                    yield emit(rb, src, row_base, flat, errs)
-                row_base += rb.num_rows
+                    errs = pa.array(row_errs, pa.string(), from_pandas=True).take(src)
+                # no manual re-chunk here: Spark re-batches the Arrow
+                # stream at maxRecordsPerBatch; slicing into 1024-row
+                # batches would just multiply serialization overhead
+                yield src, list(itertools.chain.from_iterable(lists)), errs
+
+        chunks = (
+            vec_chunks if batch_fn else partial(_fan_out, fn, csize=csize, fallible=fallible)
+        )
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             row_base = 0  # partition-local input row counter
             for rb in batches:
-                arg_lists = [py_values(rb.column(n_pt + i)) for i in range(len(cols))]
-                rows = zip(*arg_lists) if arg_lists else [()] * rb.num_rows
-                src: list[int] = []
-                flat: list = []
-                errs: list = []
-                for r, args in enumerate(rows):
-                    try:
-                        for v in fn(*args):
-                            src.append(r)
-                            flat.append(v)
-                            errs.append(None)
-                            if len(flat) >= csize:
-                                yield emit(rb, src, row_base, flat, errs)
-                                src, flat, errs = [], [], []
-                    except Exception as e:  # row-level error isolation
-                        if not fallible:
-                            raise
-                        src.append(r)
-                        flat.append(None)
-                        errs.append(str(e))
-                if flat:
+                args = [rb.column(n_pt + i) for i in range(len(cols))]
+                for src, flat, errs in chunks(args, rb.num_rows):
                     yield emit(rb, src, row_base, flat, errs)
                 row_base += rb.num_rows
 
-        return proj.mapInArrow(run if batch_fn is None else run_vec, schema=out_schema)
+        return proj.mapInArrow(run, schema=out_schema)
 
 
 def udtf(

@@ -36,8 +36,8 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..operators.scalar import ScalarFunction
-from ..operators.table import TableFunction
+from ..operators.scalar import ScalarFunction, _eval_arrays, to_arrow
+from ..operators.table import TableFunction, _fan_out, _sync_gen
 from ..plans.registry import Registry
 
 __all__ = [
@@ -66,6 +66,17 @@ def _storage_type(t: pa.DataType) -> pa.DataType:
 def _unwrap_ext(arr: pa.Array) -> pa.Array:
     """ExtensionArray -> its storage array (no copy)."""
     return arr.storage if isinstance(arr, pa.ExtensionArray) else arr
+
+
+def _edge_columns(batch: pa.RecordBatch, schema: pa.Schema) -> list[pa.Array]:
+    """A request batch's argument columns as the advertised input types:
+    extension arrays unwrap to their storage; other types convert by
+    value (pyarrow has no cast kernel for some, e.g. ``string_view``)."""
+    cols = [_unwrap_ext(batch.column(i)) for i in range(len(schema))]
+    return [
+        c if c.type == f.type else pa.array(c.to_pylist(), f.type)
+        for c, f in zip(cols, schema)
+    ]
 
 
 class _GenericExt(pa.ExtensionType):
@@ -215,75 +226,42 @@ class UdfFlightServer(flight.FlightServerBase if flight else object):
         raise NotImplementedError(action.type)
 
     def do_exchange(self, context, descriptor, reader, writer):
-        import pandas as pd
-
+        """Evaluate one call with the executor-side core of the Spark
+        path (``_eval_arrays``): Arrow in, Arrow out."""
         name = descriptor.path[0].decode()
         if name in self._tfs:
             return self._exchange_table(self._tfs[name], reader, writer)
         fn = self._fns[name]
-        _, out_s = self._schemas(fn)
+        spec = fn._spec()
+        in_s, out_s = self._schemas(fn)
         writer.begin(out_s)
         for chunk in reader:
-            batch = chunk.data
-            cols = [batch.column(i).to_pandas() for i in range(batch.num_columns)]
-            result = fn._eval(*cols)
-            if isinstance(result, pd.DataFrame):  # fallible -> value+error
-                out = pa.RecordBatch.from_arrays(
-                    [
-                        pa.Array.from_pandas(result["value"], type=out_s.field(0).type),
-                        pa.Array.from_pandas(result["error"], type=pa.string()),
-                    ],
-                    schema=out_s,
-                )
-            else:
-                out = pa.RecordBatch.from_arrays(
-                    [pa.Array.from_pandas(result, type=out_s.field(0).type)],
-                    schema=out_s,
-                )
-            writer.write_batch(out)
+            out = _eval_arrays(spec, *_edge_columns(chunk.data, in_s))
+            res = out.flatten() if fn.fallible else [out]  # value, error
+            writer.write_batch(pa.RecordBatch.from_arrays(res, schema=out_s))
         writer.close()
 
     def _exchange_table(self, tf: TableFunction, reader, writer) -> None:
-        """Stream (row, value[, error]) batches per input batch, re-chunked
-        at the reference BATCH_SIZE (codegen_utils.rs:634-667)."""
-        from ..operators.table import BATCH_SIZE, _sync_gen
-
-        _, out_s = self._tf_schemas(tf)
+        """Stream (row, value[, error]) batches: the row loop of
+        ``TableFunction.apply`` fed one input batch at a time, so ``row``
+        indexes that batch, re-chunked at the function's chunk size (the
+        reference BATCH_SIZE, codegen_utils.rs:634-667)."""
+        in_s, out_s = self._tf_schemas(tf)
         fn = _sync_gen(tf.fn)
-        val_t = out_s.field(1).type
         writer.begin(out_s)
-
-        def flush(rows, vals, errs):
-            arrays = [
-                pa.array(rows, type=pa.int32()),
-                pa.array(vals, type=val_t),
-            ]
-            if tf.fallible:
-                arrays.append(pa.array(errs, type=pa.string()))
-            writer.write_batch(pa.RecordBatch.from_arrays(arrays, schema=out_s))
-
         for chunk in reader:
             batch = chunk.data
-            arg_cols = [batch.column(i).to_pylist() for i in range(batch.num_columns)]
-            rows, vals, errs = [], [], []
-            for r in range(batch.num_rows):
-                args = [c[r] for c in arg_cols]
-                try:
-                    for v in fn(*args):
-                        rows.append(r)
-                        vals.append(v)
-                        errs.append(None)
-                        if len(rows) >= BATCH_SIZE:
-                            flush(rows, vals, errs)
-                            rows, vals, errs = [], [], []
-                except Exception as e:
-                    if not tf.fallible:
-                        raise
-                    rows.append(r)
-                    vals.append(None)
-                    errs.append(str(e))
-            if rows:
-                flush(rows, vals, errs)
+            args = _edge_columns(batch, in_s)
+            for src, vals, errs in _fan_out(
+                fn, args, batch.num_rows, tf.chunk_size, tf.fallible
+            ):
+                arrays = [
+                    pa.array(src, pa.int32()),
+                    to_arrow(vals, out_s.field(1).type, len(vals)),
+                ]
+                if tf.fallible:
+                    arrays.append(pa.array(errs, pa.string()))
+                writer.write_batch(pa.RecordBatch.from_arrays(arrays, schema=out_s))
         writer.close()
 
 

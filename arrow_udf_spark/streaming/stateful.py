@@ -8,9 +8,10 @@ Three layers, each the idiomatic Spark choice for its semantics
   Catalyst handles state, late data, and incremental execution.
 - :func:`streaming_running_agg` — a *custom* stateful operator via
   ``applyInPandasWithState``: per key, the pickled UDAF state is folded
-  with ``accumulate`` (vectorized via ``accumulate_batch`` when defined)
-  and the running ``finish`` value is emitted every micro-batch.  This is
-  the reference's aggregate protocol (A6-A10) lifted onto a stream.
+  through the batch aggregates' fold core (``accumulate``, or
+  ``accumulate_batch`` for a large micro-batch) and the running
+  ``finish`` value is emitted every micro-batch.  This is the
+  reference's aggregate protocol (A6-A10) lifted onto a stream.
 - :func:`sliding_window_agg` — exercises ``retract`` (A8, the reference's
   accumulate-or-retract bitmap, python/mod.rs:537-582) the way its
   streaming hosts do: rows enter the aggregate as they arrive and are
@@ -29,12 +30,14 @@ import pickle
 from typing import Any, Iterator, Optional, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.aggregate import AggregateFunction
+from ..operators.aggregate import AggregateFunction, _fold_all
+from ..operators.scalar import py_values
 
 __all__ = [
     "windowed_agg",
@@ -132,6 +135,13 @@ def _state_schema() -> T.StructType:
     return T.StructType([T.StructField("blob", T.BinaryType())])
 
 
+def _columns(pdf: pd.DataFrame, args: list) -> list:
+    """A micro-batch frame's argument columns as Arrow arrays for the
+    aggregate fold core; ``from_pandas``, so a NULL that pandas carries
+    as NaN reaches ``accumulate`` as None."""
+    return [pa.Array.from_pandas(pdf[a]) for a in args]
+
+
 def streaming_running_agg(
     df: DataFrame,
     agg: AggregateFunction,
@@ -153,13 +163,7 @@ def streaming_running_agg(
         + [T.StructField(agg.sig.name, agg.result_field.dtype)]
         + ([T.StructField("__seq", T.LongType())] if emit_seq else [])
     )
-    create, acc, acc_b, merge, finish = (
-        agg.create_state,
-        agg.accumulate,
-        agg.accumulate_batch,
-        agg.merge,
-        agg.finish,
-    )
+    create, fold, finish = agg.create_state, agg._folder(), agg.finish
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -170,11 +174,7 @@ def streaming_running_agg(
             st, seen = create(), 0
         for pdf in pdfs:
             seen += len(pdf)
-            if acc_b is not None:
-                st = acc_b(st, *[pdf[a] for a in args])
-            else:
-                for row in pdf.itertuples(index=False):
-                    st = acc(st, *[getattr(row, a) for a in args])
+            st = _fold_all(fold, st, _columns(pdf, args), len(pdf))
         state.update((pickle.dumps((st, seen)),))
         value = finish(st) if finish is not None else st
         out = dict(zip(by, key)) | {agg.sig.name: value}
@@ -231,12 +231,7 @@ def streaming_running_agg_tws(
         [df.schema[c] for c in by]
         + [T.StructField(agg.sig.name, agg.result_field.dtype)]
     )
-    create, acc, acc_b, finish = (
-        agg.create_state,
-        agg.accumulate,
-        agg.accumulate_batch,
-        agg.finish,
-    )
+    create, fold, finish = agg.create_state, agg._folder(), agg.finish
     name = agg.sig.name
 
     class _Proc(StatefulProcessor):
@@ -250,11 +245,7 @@ def streaming_running_agg_tws(
                 else create()
             )
             for pdf in rows:
-                if acc_b is not None:
-                    st = acc_b(st, *[pdf[a] for a in args])
-                else:
-                    for row in pdf.itertuples(index=False):
-                        st = acc(st, *[getattr(row, a) for a in args])
+                st = _fold_all(fold, st, _columns(pdf, args), len(pdf))
             self._state.update((pickle.dumps(st),))
             value = finish(st) if finish is not None else st
             yield pd.DataFrame([dict(zip(by, key)) | {name: value}])
@@ -302,12 +293,8 @@ def sliding_window_agg(
         + [T.StructField(agg.sig.name, agg.result_field.dtype)]
         + ([T.StructField("__seq", T.LongType())] if emit_seq else [])
     )
-    create, acc, ret, finish = (
-        agg.create_state,
-        agg.accumulate,
-        agg.retract,
-        agg.finish,
-    )
+    create, fold, finish = agg.create_state, agg._folder(), agg.finish
+    ret = agg.retract
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -317,13 +304,14 @@ def sliding_window_agg(
         else:
             st, buf, max_ts, seen = create(), [], None, 0
         for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                ts = getattr(row, ts_col)
-                vals = [getattr(row, a) for a in args]
-                st = acc(st, *vals)
-                buf.append((ts, vals))
-                seen += 1
+            cols = _columns(pdf, args)
+            st = _fold_all(fold, st, cols, len(pdf))
+            # buffered as accumulate saw them, for the retract below
+            rows = zip(*map(py_values, cols)) if cols else [()] * len(pdf)
+            for ts, vals in zip(pdf[ts_col].tolist(), rows):
+                buf.append((ts, list(vals)))
                 max_ts = ts if max_ts is None or ts > max_ts else max_ts
+            seen += len(pdf)
         # retract rows that fell out of the window
         if max_ts is not None:
             cutoff = max_ts - pd.Timedelta(seconds=window_seconds)

@@ -14,6 +14,7 @@ import pickle
 from collections import Counter
 from unittest import mock
 
+import pandas as pd
 import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -24,6 +25,15 @@ from arrow_udf_spark.plans.registry import Registry
 
 _NAN = ("nan",)
 _BIG = 1 << 60
+
+
+def _is_null(v) -> bool:
+    """Missing in a Series view: None, NaN, or ``pd.NA`` (a masked Int64
+    column's NULL; ``pd.NA != pd.NA`` is NA, whose truthiness raises)."""
+    try:
+        return v is None or v is pd.NA or v != v
+    except Exception:
+        return False
 
 
 @A.udaf(input_types=["bigint"], result_type="bigint", name="seen",
@@ -41,7 +51,7 @@ class Seen:
 
     def accumulate_batch(self, s, xs):
         for x in xs.tolist():
-            s[None if A._is_null(x) else x] += 1
+            s[None if _is_null(x) else x] += 1
         return s
 
     def retract(self, s, x):

@@ -16,11 +16,13 @@ what a caller sees, whatever the executor-side evaluator is:
 from __future__ import annotations
 
 import math
+import pickle
 import re
 import warnings
 from datetime import date, datetime
 from decimal import Decimal
 
+import pandas as pd
 import pytest
 import pyarrow as pa
 from pyspark.sql import types as T
@@ -310,3 +312,91 @@ def test_sql_aggregate_identity(spark, tstr, values):
         assert sorted(r.id for r in rows) == sorted(sent), (tstr, surface)
         for r in rows:
             assert _same(r.a, sent[r.id]), (tstr, surface, r)
+
+
+#: a bigint above 2^53 next to a NULL: a float64 view of the column drops
+#: its low bit, an exact view keeps it
+WIDE = [2**60 + 1, None, 3]
+NEG_WIDE = [-(2**60 + 1), None, -3]
+
+
+def test_wide_int_batch_scalar(spark):
+    """A ``pd.Series`` batch function sees a NULL-bearing bigint column as
+    masked ``Int64``, all 64 bits intact."""
+    from arrow_udf_spark.functions.corpus import neg_i64
+
+    # one partition, so the NULL and the wide value share an Arrow batch
+    df = spark.createDataFrame(list(enumerate(WIDE)), "id bigint, x bigint").coalesce(1)
+    got = [r.n for r in df.select("id", neg_i64("x").alias("n")).orderBy("id").collect()]
+    assert got == NEG_WIDE
+
+
+def test_wide_int_batch_table_function(spark):
+    """The same exact view reaches a ``pd.Series`` ``batch_fn``."""
+    reg = Registry()
+
+    @udtf(input_types=["bigint"], result_type="bigint", name="neg_rows", registry=reg)
+    def neg_rows(x):
+        if x is not None:
+            yield -x
+
+    def neg_rows_batch(xs: pd.Series):
+        return [[] if pd.isna(v) else [-v] for v in xs.tolist()]
+
+    neg_rows.vectorize(neg_rows_batch)
+    # one partition, so the NULL and the wide value share an Arrow batch
+    df = spark.createDataFrame(list(enumerate(WIDE)), "id bigint, x bigint").coalesce(1)
+    got = {r.id: r.neg_rows for r in neg_rows.apply(df, cols=["x"], passthrough=["id"]).collect()}
+    assert got == {0: NEG_WIDE[0], 2: NEG_WIDE[2]}
+
+
+def test_wide_int_flight_server():
+    """The Flight server evaluates with the Spark path's core: the batch
+    function ``neg`` and the (fallible) row function ``sleepy_double``
+    both see exact values."""
+    pytest.importorskip("pyarrow.flight")
+    from arrow_udf_spark import GLOBAL
+    from arrow_udf_spark.sources.flight import FlightUdfClient, serve_registry
+
+    c = FlightUdfClient(serve_registry(GLOBAL))
+    try:
+        x = pa.array(WIDE, pa.int64())
+        out = c.call("neg__bigint", pa.RecordBatch.from_arrays([x], ["arg0"]))
+        assert out.column(0).to_pylist() == NEG_WIDE
+        out = c.call("sleepy_double", pa.RecordBatch.from_arrays([x], ["arg0"]))
+        assert out.column("sleepy_double").to_pylist() == [2**61 + 2, None, 6]
+        assert out.column("error").to_pylist() == [None] * 3
+    finally:
+        c.close()
+
+
+def test_wide_int_arrow_accumulate_batch():
+    """An ``accumulate_batch`` whose column parameter is annotated
+    ``pa.Array`` gets Arrow slices from the fold; the per-row path and the
+    batch path give the same exact state."""
+    from unittest import mock
+
+    from arrow_udf_spark.operators import aggregate as A
+
+    @udaf(input_types=["bigint"], result_type="bigint", name="wide_sum", registry=Registry())
+    class WideSum:
+        def create_state(self):
+            return 0
+
+        def accumulate(self, s, x):
+            return s if x is None else s + x
+
+        def accumulate_batch(self, s, xs: pa.Array):
+            assert isinstance(xs, pa.Array), type(xs)
+            return s + sum(v for v in xs.to_pylist() if v is not None)
+
+        def merge(self, a, b):
+            return a + b
+
+    x = pa.array(WIDE * 100, pa.int64())
+    want = 100 * (2**60 + 4)
+    for row_max in (0, 1 << 30):  # every group on the batch, then the row path
+        with mock.patch.object(A, "_ROW_FOLD_MAX", row_max):
+            fold = A.build_multi_fold([WideSum], 0, [1])
+            (out,) = fold(iter([pa.RecordBatch.from_arrays([x], ["x"])]))
+        assert pickle.loads(out.column(0)[0].as_py()) == want

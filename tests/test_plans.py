@@ -569,6 +569,41 @@ def test_operators_have_no_pandas_map():
     assert not hits, hits
 
 
+def test_one_column_view():
+    """One Arrow view of a column for every front: the aggregate fold,
+    table functions and the Flight server read columns through the scalar
+    views (``py_values`` / ``batch_values``), the Flight server evaluates
+    with ``_eval_arrays`` (not the pandas ``_eval`` test entry), and the
+    streaming folds run the aggregate fold core, not a row loop of their
+    own.  ``streaming_transitions`` is not a UDF body and is not matched."""
+    import ast
+    from pathlib import Path
+
+    import arrow_udf_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    hits = [
+        f"{rel}:{i}: {line.strip()}"
+        for rel, pat in (
+            ("operators/aggregate.py", r"to_pandas\("),
+            ("operators/table.py", r"to_pandas\("),
+            ("sources/flight.py", r"to_pandas\(|\b_eval\("),
+        )
+        for i, line in enumerate((root / rel).read_text().splitlines(), 1)
+        if re.search(pat, line)
+    ]
+    assert not hits, hits
+    src = (root / "streaming/stateful.py").read_text()
+    folds = {"streaming_running_agg", "streaming_running_agg_tws", "sliding_window_agg"}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef) and node.name in folds:
+            body = ast.get_source_segment(src, node)
+            assert "itertuples" not in body, node.name
+            assert "_fold_all(" in body, node.name
+            folds.discard(node.name)
+    assert not folds, folds
+
+
 def test_udf_boundary_runs_on_arrow(spark, sf_dir):
     """Scalar functions are Arrow UDFs (eval type 250, SQL_SCALAR_ARROW_UDF)
     and table functions run on mapInArrow, each over the sort-free

@@ -142,6 +142,18 @@ def test_kmv_batch_refuses_float_coerced_hashes():
     assert ok == (5, 9)
 
 
+def test_kmv_row_fold_refuses_float_coerced_hash():
+    """A micro-batch of at most ``_ROW_FOLD_MAX`` rows folds through
+    ``accumulate``: a float hash is refused there too."""
+    import pytest as _pytest
+
+    from arrow_udf_spark.operators.sketch import KmvAgg
+
+    with _pytest.raises(ValueError, match="float"):
+        KmvAgg.accumulate(KmvAgg.create_state(), float(2**60 + 1))
+    assert KmvAgg.accumulate(KmvAgg.create_state(), 2**60 + 1) == (2**60 + 1,)
+
+
 def test_kmv_source_similarity_exact_when_union_small(spark):
     from arrow_udf_spark.operators.sketch import kmv_source_similarity
 

@@ -127,6 +127,38 @@ def test_sliding_window_retract(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_sliding_window_null_argument(spark):
+    """A NULL argument reaches ``accumulate`` and ``retract`` as None on
+    the sliding window: the micro-batch folds through the batch fold core,
+    not the NaN that pandas carries a NULL bigint as."""
+    import pandas as pd
+
+    from arrow_udf_spark.streaming.stateful import sliding_window_agg
+
+    d = tempfile.mkdtemp(prefix="slide_null_")
+    try:
+        base = pd.Timestamp("2024-01-01 00:00:00")
+        pdf = pd.DataFrame(
+            {
+                "k": ["a"] * 4,
+                "ts": [base + pd.Timedelta(seconds=s) for s in (0, 10, 20, 100)],
+                "x": pd.array([1, None, 4, 8], dtype="Int64"),
+            }
+        )
+        spark.createDataFrame(pdf, "k string, ts timestamp, x bigint").write.mode(
+            "overwrite"
+        ).parquet(d)
+        schema = spark.read.parquet(d).schema
+        stream = spark.readStream.schema(schema).parquet(d)
+        out = sliding_window_agg(
+            stream, SumAgg, by=["k"], args=["x"], ts_col="ts", window_seconds=30
+        )
+        table = _run_stream(spark, out, f"slide_null_{uuid.uuid4().hex[:8]}")
+        assert table.collect()[-1]["sum_udaf"] == 8
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_streaming_dedup_first_wins(spark, stream_dir, tmp_path):
     """Duplicate payloads arriving on a stream are emitted once."""
     import uuid
