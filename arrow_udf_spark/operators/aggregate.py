@@ -449,7 +449,7 @@ class AggregateFunction:
         handle, and streaming closures (streaming_running_agg) pickle the
         AggregateFunction — a cached wrapper attribute makes the instance
         unpicklable."""
-        merge, finish = self.merge, self.finish
+        merge, finish, create = self.merge, self.finish, self.create_state
         atype = to_arrow_type(self.result_field.dtype)
 
         def mergevec_fn(blob_lists: pa.Array) -> pa.Array:
@@ -466,6 +466,8 @@ class AggregateFunction:
                         continue
                     s = pickle.loads(blob)
                     state = s if state is None else merge(state, s)
+                if state is None:  # no rows: a global aggregate of nothing
+                    state = create()
                 out.append(finish(state) if finish is not None else state)
             return to_arrow(out, atype, len(out))
 

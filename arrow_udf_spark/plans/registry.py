@@ -15,7 +15,7 @@ import re
 import threading
 import warnings
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING, Any, Optional
+from typing import TYPE_CHECKING, Any, NamedTuple, Optional
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -26,29 +26,217 @@ if TYPE_CHECKING:
 _FOLD_VIEWS = threading.local()
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split on commas not nested inside parentheses / quotes."""
-    parts, depth, buf, quote = [], 0, [], None
-    for ch in text:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
+# ----------------------------------------------------------------------
+# SQL text, read once: the tokenizer and the scanners built on its stream
+# ----------------------------------------------------------------------
+
+
+class _Tok(NamedTuple):
+    """One token of comment-free SQL text: its text, its span in that
+    text, the parens around it (a paren counts as outside itself) and its
+    kind: ``str`` (a quoted literal), ``name`` (a backticked identifier),
+    ``word`` (identifier, keyword or number) or ``op``."""
+
+    text: str
+    start: int
+    end: int
+    depth: int
+    kind: str
+
+
+#: multi-character operators, each read as one token
+_OPS = ("<=>", "<=", ">=", "<>", "!=", "==", "||", "::", "->")
+
+
+def _lex(text: str) -> Optional[tuple[str, list[_Tok]]]:
+    """``(comment-free text, tokens)``, the token spans indexing the
+    comment-free text.  A quoted literal (``''`` doubling and backslash
+    escapes inside) and a backticked identifier are each one token; a
+    ``--`` or ``/* */`` comment becomes one space.  None when the text is
+    unreadable: an unclosed quote or comment, a nested ``/*``, or
+    unbalanced parens."""
+    out: list[str] = []
+    toks: list[_Tok] = []
+    i = pos = depth = 0  # pos: length of the comment-free text so far
+    n = len(text)
+    while i < n:
+        ch = text[i]
+        if text.startswith(("--", "/*"), i):
+            if ch == "-":
+                j = text.find("\n", i)
+                i = n if j < 0 else j
+            else:
+                j = text.find("*/", i + 2)
+                if j < 0 or "/*" in text[i + 2 : j]:
+                    return None  # unclosed or nested
+                i = j + 2
+            out.append(" ")
+            pos += 1
             continue
-        if ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
+        kind = None
+        if ch.isspace():
+            j = i + 1
+            while j < n and text[j].isspace():
+                j += 1
+        elif ch in "'\"`":
+            j = i + 1
+            while j < n and not (text[j] == ch and not text.startswith(ch, j + 1)):
+                # a doubled quote or a backslash escape is two characters
+                j += 2 if text[j] == ch or (text[j] == "\\" and ch != "`") else 1
+            if j >= n:
+                return None
+            j += 1
+            kind = "name" if ch == "`" else "str"
+        elif ch.isalnum() or ch == "_":
+            j = i + 1
+            while j < n and (text[j].isalnum() or text[j] == "_"):
+                j += 1
+            kind = "word"
+        else:
+            j = i + next((len(o) for o in _OPS if text.startswith(o, i)), 1)
+            kind = "op"
+        piece = text[i:j]
+        if kind:
+            if piece == ")":
+                depth -= 1
+                if depth < 0:
+                    return None
+            toks.append(_Tok(piece, pos, pos + len(piece), depth, kind))
+            if piece == "(":
+                depth += 1
+        out.append(piece)
+        pos += len(piece)
+        i = j
+    return None if depth else ("".join(out), toks)
+
+
+def _read(text: str) -> tuple[str, list[_Tok]]:
+    """:func:`_lex` of text the caller has already read once (a slice of
+    a readable query at token boundaries)."""
+    lexed = _lex(text)
+    if lexed is None:
+        raise ValueError(f"unreadable SQL text: {text!r}")
+    return lexed
+
+
+def _is_ident(t: _Tok) -> bool:
+    return t.kind == "word" and not t.text[0].isdigit()
+
+
+def _close(toks: list[_Tok], k: int) -> int:
+    """Index of the ``)`` matching the ``(`` at ``toks[k]``."""
+    return next(j for j in range(k + 1, len(toks)) if toks[j].depth == toks[k].depth)
+
+
+def _split_top(text: str, *phrases: str) -> list[tuple[str, str]]:
+    """Cut ``text`` at each depth-0 occurrence of one of ``phrases`` (a
+    punctuation token such as ``","`` or one or more words such as
+    ``"ORDER BY"``; the longest phrase wins): ``[(phrase as written,
+    piece), ...]``, the first phrase ``""``, every piece stripped."""
+    clean, toks = _read(text)
+    seps = sorted((p.upper().split() for p in phrases), key=len, reverse=True)
+    out, sep, start, i = [], "", 0, 0
+    while i < len(toks):
+        run = toks[i].depth == 0 and next(
+            (toks[i : i + len(w)] for w in seps
+             if [t.text.upper() for t in toks[i : i + len(w)]] == w),
+            None,
+        )
+        if not run:
+            i += 1
             continue
-        buf.append(ch)
-    if buf:
-        parts.append("".join(buf).strip())
-    return parts
+        out.append((sep, clean[start : run[0].start].strip()))
+        sep, start = " ".join(t.text for t in run), run[-1].end
+        i += len(run)
+    out.append((sep, clean[start:].strip()))
+    return out
+
+
+def _items(text: str, sep: str = ",") -> list[str]:
+    """The depth-0 ``sep``-separated items of ``text`` ([] when empty)."""
+    parts = _split_top(text, sep)
+    return [] if parts == [("", "")] else [p for _, p in parts]
+
+
+#: the clauses of one query block, in the order SQL requires them
+_CLAUSES = ("SELECT", "FROM", "WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT")
+
+
+def _clauses(text: str) -> Optional[dict[str, str]]:
+    """``{clause keyword: body}`` of one query block, cut at its depth-0
+    clause keywords (:data:`_CLAUSES`).  None unless the text starts with
+    a clause, every clause has a body and comes at most once and in SQL's
+    order, and LIMIT is a number."""
+    parts = _split_top(text, *_CLAUSES)
+    if parts[0][1]:
+        return None
+    out: dict[str, str] = {}
+    for kw, body in parts[1:]:
+        kw = kw.upper()
+        if not body or (out and _CLAUSES.index(kw) <= _CLAUSES.index([*out][-1])):
+            return None
+        out[kw] = body
+    return out if re.fullmatch(r"\d+", out.get("LIMIT", "0")) else None
+
+
+def _call(text: str) -> Optional[tuple[str, str, str]]:
+    """``(head, inner, rest)`` of text that reads ``head (inner) rest``,
+    ``head`` being zero or more words (``GROUPING SETS``, ``OVER``);
+    ``inner`` is verbatim, ``rest`` stripped.  None for any other text."""
+    clean, toks = _read(text)
+    k = 0
+    while k < len(toks) and _is_ident(toks[k]):
+        k += 1
+    if k == len(toks) or toks[k].text != "(":
+        return None
+    c = _close(toks, k)
+    head = " ".join(t.text for t in toks[:k])
+    return head, clean[toks[k].end : toks[c].start], clean[toks[c].end :].strip()
+
+
+def _words(text: str) -> list[tuple[str, str]]:
+    """``(identifier, next token)`` for each identifier of ``text`` not
+    after a dot, lowercased: a ``(`` next marks a call, a ``.`` a
+    qualifier, anything else a bare word."""
+    _, toks = _read(text)
+    return [
+        (t.text.lower(), toks[i + 1].text if i + 1 < len(toks) else "")
+        for i, t in enumerate(toks)
+        if _is_ident(t) and (i == 0 or toks[i - 1].text != ".")
+    ]
+
+
+def _calls(text: str) -> set[str]:
+    """Lowercased names ``text`` calls.  Unreadable text is scanned
+    crudely, so a UDAF call in it still takes the warned fallback."""
+    if _lex(text) is None:
+        return {w.lower() for w in re.findall(r"([A-Za-z_]\w*)\s*\(", text)}
+    return {w for w, nxt in _words(text) if nxt == "("}
+
+
+def _norm(text: str) -> str:
+    """Token texts one space apart, lowercased outside quoted literals:
+    two spellings of one expression compare equal, ``'MM'`` and ``'mm'``
+    do not."""
+    return " ".join(
+        t.text if t.kind == "str" else t.text.lower() for t in _read(text)[1]
+    )
+
+
+def _unqualify(text: str, qual: str) -> str:
+    """``text`` with each ``qual.`` qualifier removed; literals untouched."""
+    clean, toks = _read(text)
+    out, at = [], 0
+    for i, t in enumerate(toks[:-2]):
+        if (
+            _is_ident(t)
+            and t.text.lower() == qual.lower()
+            and toks[i + 1].text == "."
+            and (i == 0 or toks[i - 1].text != ".")
+        ):
+            out.append(clean[at : t.start])
+            at = toks[i + 2].start
+    return "".join(out) + clean[at:]
 
 
 @dataclass
@@ -252,14 +440,11 @@ class Registry:
     # ------------------------------------------------------------------
     # Scale-safe SQL front door for aggregates
     # ------------------------------------------------------------------
-    #: GROUP BY is optional: a GLOBAL aggregate (SELECT agg(x) FROM t) is
-    #: the worst single-phase case — EVERY row moves to one worker — so it
-    #: needs the two-phase rewrite most of all
-    _GROUPBY_SHAPE = re.compile(
-        r"(?is)^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<frm>.*?)"
-        r"(?:\s+WHERE\s+(?P<where>.*?))?"
-        r"(?:\s+GROUP\s+BY\s+(?P<grp>.*?))?"
-        r"(?P<tail>\s+(?:HAVING|ORDER\s+BY|LIMIT)\b.*)?\s*;?\s*$"
+    #: the set operators between query blocks
+    _SET_OPS = tuple(
+        f"{op} {q}".strip()
+        for op in ("UNION", "INTERSECT", "EXCEPT")
+        for q in ("ALL", "DISTINCT", "")
     )
     _AGG_ITEM = re.compile(
         r"(?is)^(?:CAST\s*\(\s*)?(?P<fn>[A-Za-z_]\w*)\s*\((?P<args>.*?)\)"
@@ -267,6 +452,11 @@ class Registry:
         r"(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?$"
     )
     _PLAIN_COL = re.compile(r"(?i)^[A-Za-z_][\w.]*$")
+    #: an ORDER BY item: the expression and its ASC/DESC/NULLS suffix
+    _ORDER_SUFFIX = re.compile(
+        r"(?is)^(?P<e>.*?)(?P<suffix>\s+(?:ASC|DESC)"
+        r"(?:\s+NULLS\s+(?:FIRST|LAST))?|\s+NULLS\s+(?:FIRST|LAST))?\s*$"
+    )
     #: built-in aggregates the map-side fold computes as one partial per
     #: (group, input partition), re-aggregated in U: SUM of partial
     #: COUNTs/SUMs, MIN of MINs, MAX of MAXes (the partial/merge
@@ -407,6 +597,12 @@ class Registry:
         projection (expanded to the GROUP BY + CASE form — which native
         Spark cannot even run with a Python UDAF head,
         UNSUPPORTED_FEATURE.PANDAS_UDAF_IN_PIVOT).
+        The query is read as SQL reads it: comments are dropped (the
+        rewritten SQL never carries one), and quoted literals and
+        backticked identifiers are opaque, so a keyword, comma or paren
+        inside one never splits a clause.  A backticked group key rides
+        as an expression key: it rewrites when its select item has an
+        alias and otherwise falls back.
         Anything unprovable falls back to the single-phase form with the
         registration warning, raises under ``register_sql(strict=True)``,
         and raises ``ValueError`` where Spark refuses the single-phase
@@ -417,11 +613,8 @@ class Registry:
             for n, fns in self._fns.items()
             if any(f.sig.kind == "aggregate" for f in fns)
         }
-        used = {
-            n
-            for n in agg_names
-            if re.search(rf"(?i)\b{re.escape(n)}\s*\(", query)
-        }
+        calls = _calls(query)
+        used = {n for n in agg_names if n.lower() in calls}
         if not used:
             return spark.sql(query)
         self.register_sql(spark)
@@ -505,22 +698,27 @@ class Registry:
         view.  Returns None when the shape is unprovable or the fold view
         cannot be built.
         """
+        lexed = _lex(query)
+        if lexed is None:
+            return None  # unclosed quote or comment, unbalanced parens
+        # everything below reads (and the rewrite emits) the comment-free
+        # text, without a trailing semicolon
+        query, toks = lexed
+        if toks and toks[-1].text == ";":
+            query = query[: toks[-1].start]
         sw = self._split_with(query)
         if sw is None:
             return None  # malformed / RECURSIVE CTE block — fall back
         cte_prefix, main = sw
         pre = f"{cte_prefix} " if cte_prefix else ""
         scope = scope or pre
-        if cte_prefix and any(
-            re.search(rf"(?i)\b{re.escape(n)}\s*\(", cte_prefix)
-            for n in used
-        ):
+        if _calls(cte_prefix) & used:
             # a UDAF call INSIDE a CTE body would stay single-phase no
             # matter how we rewrite the main block — refuse rather than
             # silently leave the trap in the prefix
             return None
-        blocks = self._split_set_ops(main)
-        if blocks is None:
+        blocks = _split_top(main, *self._SET_OPS)
+        if not all(blk for _, blk in blocks):
             return None
         if len(blocks) > 1:
             # set operations between aggregate blocks: each block rewrites
@@ -528,31 +726,27 @@ class Registry:
             # scopes share nothing), blocks without a UDAF call pass
             # verbatim, and a trailing ORDER BY/LIMIT belongs to the UNION
             # per the grammar, so it is stripped off the last block and
-            # re-appended after reassembly (plain output columns only —
-            # anything fancier refuses)
-            last_i = len(blocks) - 1
-            st = self._strip_union_tail(blocks[last_i][0])
-            if st is None:
-                return None
-            blocks[last_i] = (st[0], blocks[last_i][1])
-            union_tail = st[1]
-            parts = []
-            for blk, op in blocks:
-                if not any(
-                    re.search(rf"(?i)\b{re.escape(n)}\s*\(", blk)
-                    for n in used
-                ):
-                    rb = blk.strip()  # no UDAF — verbatim
-                else:
+            # re-appended after reassembly (plain output columns only,
+            # LIMIT a number — anything fancier refuses)
+            tail = _split_top(blocks[-1][1], "ORDER BY", "LIMIT")
+            blocks[-1] = (blocks[-1][0], tail.pop(0)[1])
+            union_tail = "".join(f" {kw} {body}" for kw, body in tail)
+            cl = _clauses(union_tail)
+            if cl is None or not all(
+                re.fullmatch(r"[A-Za-z_]\w*", self._ORDER_SUFFIX.match(it)["e"])
+                for it in _items(cl.get("ORDER BY", ""))
+            ):
+                return None  # expression/positional order key — refuse
+            out_sql = ""
+            for op, blk in blocks:
+                rb = blk  # no UDAF — verbatim
+                if _calls(blk) & used:
                     rb = self._rewrite_two_phase(blk, used, spark, scope)
                     if rb is None:
                         return None
-                parts.append((rb, op))
-            out_sql = parts[0][0]
-            for rb, op in parts[1:]:
-                out_sql += f" {op} {rb}"
+                out_sql += f" {op.upper()} {rb}" if op else rb
             return f"{pre}{out_sql}{union_tail}"
-        if self._has_top_level_kw(main, "PIVOT"):
+        if len(_split_top(main, "PIVOT")) > 1:
             # PIVOT with a UDAF head: expand to the GROUP BY + CASE form
             # (exactly Spark's own ResolvePivot expansion for null-ignoring
             # aggregates), then rewrite the expansion two-phase.  Anything
@@ -569,11 +763,14 @@ class Registry:
             # under plain internal aliases the select-item parser accepts
             sql = f"SELECT {outer_items} FROM ({rb}) __aus_pvt"
             return f"{pre}{sql} {tail}" if tail else f"{pre}{sql}"
-        m = self._GROUPBY_SHAPE.match(main)
-        if not m:
+        # GROUP BY is optional: a GLOBAL aggregate (SELECT agg(x) FROM t)
+        # is the worst single-phase case — EVERY row moves to one worker —
+        # so it needs the two-phase rewrite most of all
+        cl = _clauses(main)
+        if cl is None or "SELECT" not in cl or "FROM" not in cl:
             return None
-        frm_txt = m.group("frm")
-        where_txt = m.group("where")
+        frm_txt = cl["FROM"]
+        where_txt = cl.get("WHERE")
         # correlated scalar aggregate subqueries in WHERE (the TPC-H q17
         # shape): decorrelate each UDAF-headed one to a GROUP BY derived
         # table + equi-join (itself rewritten two-phase), then either
@@ -581,29 +778,27 @@ class Registry:
         # is) or continue below with the joined FROM/WHERE.  A UDAF call
         # in WHERE that does NOT decorrelate refuses (returning None)
         # rather than riding single-phase into the U/B sources.
-        if where_txt and any(
-            re.search(rf"(?i)\b{re.escape(n)}\s*\(", where_txt)
-            for n in used
-        ):
+        if where_txt and _calls(where_txt) & used:
             dc = self._decorrelate_where(
                 frm_txt, where_txt, used, spark, scope
             )
             if dc is None:
                 return None
             frm_txt, where_txt = dc
-            rest = f"{m.group('sel')} {m.group('tail') or ''}"
             if not any(
-                re.search(rf"(?i)\b{re.escape(n)}\s*\(", rest)
-                for n in used
+                _calls(cl.get(kw, "")) & used
+                for kw in ("SELECT", "HAVING", "ORDER BY")
             ):
-                grp_sql = (
-                    f" GROUP BY {m.group('grp')}" if m.group("grp") else ""
+                rest = "".join(
+                    f" {kw} {cl[kw]}"
+                    for kw in ("GROUP BY", "HAVING", "ORDER BY", "LIMIT")
+                    if kw in cl
                 )
                 return (
-                    f"{pre}SELECT {m.group('sel')} FROM {frm_txt} "
-                    f"WHERE {where_txt}{grp_sql}{m.group('tail') or ''}"
+                    f"{pre}SELECT {cl['SELECT']} FROM {frm_txt} "
+                    f"WHERE {where_txt}{rest}"
                 )
-        grp_items = _split_top_level(m.group("grp")) if m.group("grp") else []
+        grp_items = _items(cl.get("GROUP BY", ""))
         # multi-grouping clauses (GROUP BY ROLLUP(a, b) / CUBE(a, b) /
         # GROUPING SETS ((a, b), (a), ())): the clause text passes to the
         # U and B subqueries VERBATIM, the fold runs at the
@@ -613,34 +808,27 @@ class Registry:
         # grouping_id() so the join can tell a data-NULL group from a
         # super-aggregate row.  Plain columns only; anything else refuses.
         multi_clause = None
-        if len(grp_items) == 1:
-            mg = re.match(
-                r"(?is)^(?:ROLLUP|CUBE)\s*\((?P<cols>[^()]*)\)$"
-                r"|^GROUPING\s+SETS\s*\((?P<sets>.*)\)$",
-                grp_items[0],
-            )
-            if mg:
-                cols: list[str] = []
-                if mg.group("cols") is not None:
-                    raw = _split_top_level(mg.group("cols"))
-                else:
-                    raw = []
-                    for s_ in _split_top_level(mg.group("sets")):
-                        s_ = s_.strip()
-                        if not (s_.startswith("(") and s_.endswith(")")):
-                            return None
-                        raw.extend(
-                            c for c in _split_top_level(s_[1:-1]) if c
-                        )
-                for c in raw:
-                    if not self._PLAIN_COL.match(c):
-                        return None  # expressions inside the sets — refuse
-                    if c.lower() not in {x.lower() for x in cols}:
-                        cols.append(c)
-                if not cols:
-                    return None
-                multi_clause = grp_items[0]
-                grp_items = cols  # the finest keys drive everything else
+        mg = _call(grp_items[0]) if len(grp_items) == 1 else None
+        head = mg[0].upper() if mg and not mg[2] else ""
+        if head in ("ROLLUP", "CUBE", "GROUPING SETS"):
+            raw = _items(mg[1])
+            if head == "GROUPING SETS":
+                sets, raw = raw, []
+                for s_ in sets:
+                    one = _call(s_)
+                    if one is None or one[0] or one[2]:
+                        return None
+                    raw.extend(c for c in _items(one[1]) if c)
+            cols: list[str] = []
+            for c in raw:
+                if not self._PLAIN_COL.match(c):
+                    return None  # expressions inside the sets — refuse
+                if c.lower() not in {x.lower() for x in cols}:
+                    cols.append(c)
+            if not cols:
+                return None
+            multi_clause = grp_items[0]
+            grp_items = cols  # the finest keys drive everything else
         # EXPRESSION group keys (GROUP BY pmod(x, 10), date_trunc('day',
         # ts), ...) are provable when built from columns/literals and
         # whitelisted deterministic scalar functions.  A bare column key
@@ -657,33 +845,11 @@ class Registry:
         if multi_clause is not None and g_names != grp_items:
             return None  # U re-groups under the clause text verbatim
 
-        def _norm(e: str) -> str:
-            # normalize case/whitespace OUTSIDE quoted literals only:
-            # date_format(ts,'MM') and date_format(ts,'mm') are DIFFERENT
-            # expressions, and lowercasing inside '...' would silently
-            # project the wrong one as the group key where Spark's own
-            # analyzer rejects the query (ADVICE r7)
-            out = []
-            quote = None
-            for ch in e:
-                if quote:
-                    out.append(ch)
-                    if ch == quote:
-                        quote = None
-                elif ch in "'\"":
-                    quote = ch
-                    out.append(ch)
-                elif ch.isspace():
-                    continue
-                else:
-                    out.append(ch.lower())
-            return "".join(out)
-
         grp_norm = {_norm(g): i for i, g in enumerate(grp_items)}
-        sel_items = _split_top_level(m.group("sel"))
+        sel_items = _items(cl["SELECT"])
         agg_args: list[tuple] = []  # (udaf name, [arg exprs]) per __u{i}
         b_cols: list = []  # built-in agg calls as (name, args) -> __b{i}
-        memo: dict = {}  # lowercased call -> replacement token
+        memo: dict = {}  # normalized call -> replacement token
         outer_items: list[str] = []
         grp_set = {g.lower() for g in grp_items}
 
@@ -706,6 +872,17 @@ class Registry:
             rw = _rw(e)
             return None if rw == e else rw
 
+        def _rw_order(items: list[str], rw_expr) -> Optional[str]:
+            # ORDER BY items with their ASC/DESC/NULLS suffix kept
+            out = []
+            for it in items:
+                sm = self._ORDER_SUFFIX.match(it)
+                expr = rw_expr(sm.group("e"))
+                if expr is None:
+                    return None
+                out.append(expr + (sm.group("suffix") or ""))
+            return ", ".join(out)
+
         def _rw_win(expr_src: str) -> Optional[tuple]:
             """Rewrite a ``head(args) OVER (spec)`` select item: window
             functions evaluate over the GROUPED result, so the call stays
@@ -717,46 +894,23 @@ class Registry:
             UDF over window frames is exactly the every-row-to-one-worker
             trap this rewrite exists to avoid.  Returns
             ``(rewritten, default_alias)`` or None."""
-            # CAST-wrapped window (CAST(rank() OVER (...) AS BIGINT)):
-            # unwrap, rewrite the inner window, re-wrap
-            cm = re.match(r"(?is)^\s*CAST\s*\(", expr_src)
-            if cm:
-                ci = cm.end() - 1
-                cj = self._match_paren(expr_src, ci)
-                if cj is not None and not expr_src[cj + 1 :].strip():
-                    inner = expr_src[ci + 1 : cj]
-                    am2 = re.match(
-                        r"(?is)^(?P<e>.+)\s+AS\s+"
-                        r"(?P<t>\w+(\s*\(\s*\d+(\s*,\s*\d+)?\s*\))?)\s*$",
-                        inner,
-                    )
-                    if am2 is None:
-                        return None
-                    sub = _rw_win(am2.group("e"))
-                    if sub is None:
-                        return None
-                    return (
-                        f"CAST({sub[0]} AS {am2.group('t')})",
-                        sub[1],
-                    )
-            hm = re.match(r"(?is)^\s*([A-Za-z_]\w*)\s*\(", expr_src)
-            if not hm:
+            call = _call(expr_src)
+            if call is None:
                 return None
-            head = hm.group(1)
-            i0 = hm.end() - 1
-            j0 = self._match_paren(expr_src, i0)
-            if j0 is None:
+            head, args, rest = call
+            if head.upper() == "CAST" and not rest:
+                # CAST-wrapped window (CAST(rank() OVER (...) AS BIGINT)):
+                # unwrap, rewrite the inner window, re-wrap
+                am2 = re.match(
+                    r"(?is)^(?P<e>.+)\s+AS\s+"
+                    r"(?P<t>\w+(\s*\(\s*\d+(\s*,\s*\d+)?\s*\))?)\s*$",
+                    args,
+                )
+                sub = am2 and _rw_win(am2.group("e"))
+                return sub and (f"CAST({sub[0]} AS {am2.group('t')})", sub[1])
+            over = _call(rest) if head and " " not in head else None
+            if over is None or over[0].upper() != "OVER" or over[2]:
                 return None
-            args = expr_src[i0 + 1 : j0]
-            rest = expr_src[j0 + 1 :]
-            om = re.match(r"(?is)^\s*OVER\s*\(", rest)
-            if not om:
-                return None
-            k0 = om.end() - 1
-            k1 = self._match_paren(rest, k0)
-            if k1 is None or rest[k1 + 1 :].strip():
-                return None
-            spec = rest[k0 + 1 : k1]
             hl = head.lower()
             if hl in used:
                 return None
@@ -767,45 +921,34 @@ class Registry:
                 args_rw = _rw_key(args) or _rw(args)
                 if args_rw is None:
                     return None
-            sm = re.match(
-                r"(?is)^\s*(?:PARTITION\s+BY\s+(?P<pb>.*?))?"
-                r"(?:\s*ORDER\s+BY\s+(?P<ob>.*?))?"
-                r"(?:\s*(?P<frame>(?:ROWS|RANGE|GROUPS)\b[^()'\"]*))?\s*$",
-                spec,
+            spec = _split_top(
+                over[1], "PARTITION BY", "ORDER BY", "ROWS", "RANGE", "GROUPS"
             )
-            if not sm:
-                return None
+            ranks = [
+                {"PARTITION BY": 0, "ORDER BY": 1}.get(kw.upper(), 2)
+                for kw, _ in spec[1:]
+            ]
+            if spec[0][1] or ranks != sorted(set(ranks)):
+                return None  # text before, or clauses out of order/twice
             parts = []
-            if sm.group("pb"):
-                its = []
-                for it2 in _split_top_level(sm.group("pb")):
-                    r2 = _rw_spec_expr(it2)
-                    if r2 is None:
+            for kw, body in spec[1:]:
+                if kw.upper() == "PARTITION BY":
+                    its = [_rw_spec_expr(it) for it in _items(body)]
+                    if None in its:
                         return None
-                    its.append(r2)
-                parts.append("PARTITION BY " + ", ".join(its))
-            if sm.group("ob"):
-                its = []
-                for it2 in _split_top_level(sm.group("ob")):
-                    sm2 = re.match(
-                        r"(?is)^(?P<e>.*?)(?P<suffix>\s+(?:ASC|DESC)"
-                        r"(?:\s+NULLS\s+(?:FIRST|LAST))?|"
-                        r"\s+NULLS\s+(?:FIRST|LAST))?\s*$",
-                        it2,
-                    )
-                    r2 = _rw_spec_expr(sm2.group("e"))
-                    if r2 is None:
+                    parts.append("PARTITION BY " + ", ".join(its))
+                elif kw.upper() == "ORDER BY":
+                    ob = _rw_order(_items(body), _rw_spec_expr)
+                    if ob is None:
                         return None
-                    its.append(r2 + (sm2.group("suffix") or ""))
-                parts.append("ORDER BY " + ", ".join(its))
-            frame = sm.group("frame")
-            if frame:
-                toks = re.findall(r"[A-Za-z_]\w*", frame)
-                if any(
-                    tk.lower() not in self._OVER_BARE_WORDS for tk in toks
-                ):
-                    return None
-                parts.append(" ".join(frame.split()))
+                    parts.append("ORDER BY " + ob)
+                else:
+                    frame = f"{kw} {body}"
+                    if set(frame) & set("()'\"`") or any(
+                        w not in self._OVER_BARE_WORDS for w, _ in _words(frame)
+                    ):
+                        return None
+                    parts.append(" ".join(frame.split()))
             return f"{head}({args_rw}) OVER ({' '.join(parts)})", hl
         for item in sel_items:
             expr_src, alias = self._split_alias(item)
@@ -825,7 +968,7 @@ class Registry:
                 # already projected by U for the join — reuse it
                 outer_items.append(f"__gid AS {alias or 'grouping_id'}")
                 continue
-            if re.search(r"(?i)\bOVER\b", expr_src):
+            if any(w == "over" for w, _ in _words(expr_src)):
                 wrw = _rw_win(expr_src)
                 if wrw is None:
                     return None
@@ -857,47 +1000,50 @@ class Registry:
 
         def _subst_aliases(expr: str) -> str:
             # group keys (qualified ones too) to their U names, then
-            # select aliases to their expressions
-            return re.sub(
-                r"(?<![\w.])[A-Za-z_][\w.]*",
-                lambda mm: _rw_key(mm.group(0))
-                or alias_map.get(mm.group(0).lower(), mm.group(0)),
-                expr,
-            )
+            # select aliases to their expressions; a run of adjacent
+            # words and dots is one name, and literals and the names of
+            # calls are never substituted
+            clean, toks = _read(expr)
+            out, at, i = [], 0, 0
+            while i < len(toks):
+                prev = toks[i - 1] if i else None
+                if not _is_ident(toks[i]) or (
+                    prev and prev.text == "." and prev.end == toks[i].start
+                ):
+                    i += 1
+                    continue
+                j = i + 1
+                while j < len(toks) and toks[j].start == toks[j - 1].end and (
+                    toks[j].kind == "word" or toks[j].text == "."
+                ):
+                    j += 1
+                if j < len(toks) and toks[j].text == "(":
+                    i = j
+                    continue
+                name = clean[toks[i].start : toks[j - 1].end]
+                out.append(clean[at : toks[i].start])
+                out.append(_rw_key(name) or alias_map.get(name.lower(), name))
+                at, i = toks[j - 1].end, j
+            return "".join(out) + clean[at:]
 
         having_sql = order_sql = limit_sql = ""
-        tail = m.group("tail") or ""
-        if tail:
-            parts = self._split_tail(tail)
-            if parts is None:
+        if "HAVING" in cl:
+            if not grp_items:
+                return None  # HAVING without GROUP BY — let Spark error
+            hav_rw = _rw(cl["HAVING"])
+            if hav_rw is None:
                 return None
-            hav, order, limit = parts
-            if hav is not None:
-                if not grp_items:
-                    return None  # HAVING without GROUP BY — let Spark error
-                hav_rw = _rw(hav)
-                if hav_rw is None:
-                    return None
-                having_sql = f" WHERE {_subst_aliases(hav_rw)}"
-            if order is not None:
-                items = []
-                for it in _split_top_level(order):
-                    sm = re.match(
-                        r"(?is)^(?P<e>.*?)(?P<suffix>\s+(?:ASC|DESC)"
-                        r"(?:\s+NULLS\s+(?:FIRST|LAST))?|"
-                        r"\s+NULLS\s+(?:FIRST|LAST))?\s*$",
-                        it,
-                    )
-                    expr, suffix = sm.group("e"), sm.group("suffix") or ""
-                    expr = _rw_key(expr) or (
-                        expr if self._PLAIN_COL.match(expr) else _rw(expr)
-                    )
-                    if expr is None:
-                        return None
-                    items.append(expr + suffix)
-                order_sql = f" ORDER BY {', '.join(items)}"
-            if limit is not None:
-                limit_sql = f" LIMIT {limit}"
+            having_sql = f" WHERE {_subst_aliases(hav_rw)}"
+        if "ORDER BY" in cl:
+            order = _rw_order(
+                _items(cl["ORDER BY"]),
+                lambda e: _rw_key(e) or (e if self._PLAIN_COL.match(e) else _rw(e)),
+            )
+            if order is None:
+                return None
+            order_sql = f" ORDER BY {order}"
+        if "LIMIT" in cl:
+            limit_sql = f" LIMIT {cl['LIMIT']}"
         if not agg_args:
             return None  # no registered-UDAF call — nothing to protect
         where = f" WHERE {where_txt}" if where_txt else ""
@@ -1014,7 +1160,7 @@ class Registry:
         fold_b = bool(b_cols) and all(
             bn.lower() in self._B_FOLD_MERGE
             and not re.match(r"(?is)^\s*DISTINCT\b", ba)
-            and len(_split_top_level(ba)) == 1
+            and len(_items(ba)) == 1
             for bn, ba in b_cols
         )
         star = [bn.lower() == "count" and ba.strip() == "*" for bn, ba in b_cols]
@@ -1108,72 +1254,21 @@ class Registry:
 
     def _safe_group_expr(self, expr: str) -> bool:
         """True when a GROUP BY expression is provably safe to alias
-        through the U/B split: balanced parens, single-quoted literals
-        only (no escapes), every call a whitelisted deterministic scalar
-        (_GRP_FUNCS), no scope-opening bare words.  Anything else —
-        unknown functions (could be rand() or an aggregate), double
-        quotes, backslashes, subqueries — returns False and the caller
-        falls back to single-phase."""
+        through the U/B split: single-quoted literals only (no escapes),
+        every call a whitelisted deterministic scalar (_GRP_FUNCS), no
+        scope-opening bare words.  Anything else — unknown functions
+        (could be rand() or an aggregate), double quotes, backslashes,
+        subqueries — returns False and the caller falls back to
+        single-phase."""
         if '"' in expr or "\\" in expr:
             return False
-        s = re.sub(r"'[^']*'", "''", expr)
-        if s.replace("''", "").count("'"):
-            return False  # unbalanced quote
-        depth = 0
-        i, n = 0, len(s)
-        while i < n:
-            ch = s[i]
-            if ch == "(":
-                depth += 1
-                i += 1
-                continue
-            if ch == ")":
-                depth -= 1
-                if depth < 0:
-                    return False
-                i += 1
-                continue
-            mm = re.match(r"[A-Za-z_]\w*", s[i:])
-            if mm:
-                w = mm.group(0)
-                j = i + len(w)
-                k = j
-                while k < n and s[k].isspace():
-                    k += 1
-                if k < n and s[k] == "(":
-                    if w.lower() not in self._GRP_FUNCS:
-                        return False
-                elif w.lower() in self._UNSAFE_BARE_WORDS:
-                    return False
-                i = j
-                continue
-            i += 1
-        return depth == 0
+        return all(
+            w in self._GRP_FUNCS if nxt == "(" else w not in self._UNSAFE_BARE_WORDS
+            for w, nxt in _words(expr)
+        )
 
     @staticmethod
-    def _match_paren(s: str, i: int) -> Optional[int]:
-        """Index of the ``)`` matching the ``(`` at ``s[i]``, skipping
-        quoted strings; None when unbalanced."""
-        depth, quote = 0, None
-        n = len(s)
-        while i < n:
-            ch = s[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-            i += 1
-        return None
-
-    @classmethod
-    def _split_with(cls, query: str) -> Optional[tuple[str, str]]:
+    def _split_with(query: str) -> Optional[tuple[str, str]]:
         """Split a leading ``WITH name [(cols)] AS (body), ...`` block off
         ``query``.  Returns ``(prefix, main)`` — prefix ``""`` when there
         is no CTE block — or None when the block is malformed or
@@ -1183,92 +1278,26 @@ class Registry:
         passed to Spark verbatim, which is sound because Spark scopes a
         query's CTEs over every subquery of the following SELECT — the
         U/B subqueries the rewrite builds still resolve the CTE names."""
-        s = query.strip()
-        if not re.match(r"(?is)^WITH\s", s):
-            return "", query
-        if re.match(r"(?is)^WITH\s+RECURSIVE\b", s):
+        clean, toks = _read(query)
+        up = [t.text.upper() for t in toks]
+        if up[:1] != ["WITH"]:
+            return "", clean
+        if up[1:2] == ["RECURSIVE"]:
             return None
-        i = len("WITH")
-        n = len(s)
-        while True:
-            while i < n and s[i].isspace():
-                i += 1
-            mm = re.match(r"[A-Za-z_]\w*", s[i:])
-            if not mm:
-                return None
-            i += mm.end()
-            while i < n and s[i].isspace():
-                i += 1
-            if i < n and s[i] == "(":  # optional column alias list
-                j = cls._match_paren(s, i)
-                if j is None:
-                    return None
-                i = j + 1
-                while i < n and s[i].isspace():
-                    i += 1
-            ma = re.match(r"(?is)^AS\s*\(", s[i:])
-            if not ma:
-                return None
-            i += ma.end() - 1  # at the body's '('
-            j = cls._match_paren(s, i)
-            if j is None:
-                return None
-            i = j + 1
-            while i < n and s[i].isspace():
-                i += 1
-            if i < n and s[i] == ",":
-                i += 1
-                continue
-            break
-        prefix, main = s[:i], s[i:]
-        if not re.match(r"(?is)^SELECT\b", main.strip()):
-            return None
-        return prefix, main
-
-    @staticmethod
-    def _split_and(text: str) -> list[str]:
-        """Split on top-level ``AND`` (word boundary, outside parens and
-        quotes).  A ``BETWEEN x AND y`` mis-splits into two pieces, but
-        the caller rejoins untouched pieces with " AND " verbatim, so a
-        fragment that matches nothing reassembles bit-identically — only
-        a piece that FULLY matches the correlated-subquery shape is ever
-        replaced."""
-        parts, depth, quote, buf = [], 0, None, []
-        i, n = 0, len(text)
-        while i < n:
-            ch = text[i]
-            if quote:
-                buf.append(ch)
-                if ch == quote:
-                    quote = None
-                i += 1
-                continue
-            if ch in "'\"":
-                quote = ch
-                buf.append(ch)
-                i += 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if (
-                depth == 0
-                and text[i : i + 3].lower() == "and"
-                and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-                and (
-                    i + 3 >= n
-                    or not (text[i + 3].isalnum() or text[i + 3] == "_")
-                )
-            ):
-                parts.append("".join(buf).strip())
-                buf = []
-                i += 3
-                continue
-            buf.append(ch)
+        i = 1
+        while i < len(toks) and _is_ident(toks[i]):
             i += 1
-        parts.append("".join(buf).strip())
-        return parts
+            if up[i : i + 1] == ["("]:  # optional column alias list
+                i = _close(toks, i) + 1
+            if up[i : i + 2] != ["AS", "("]:
+                return None
+            i = _close(toks, i + 1) + 1
+            if up[i : i + 1] != [","]:
+                if up[i : i + 1] != ["SELECT"]:
+                    return None
+                return clean[: toks[i - 1].end], clean[toks[i].start :]
+            i += 1
+        return None
 
     #: bare words that may appear in the OUTER comparison expression of a
     #: correlated-subquery conjunct without changing the inner-join
@@ -1289,6 +1318,13 @@ class Registry:
         "double", "float", "real", "decimal", "numeric", "string",
         "varchar", "char", "boolean", "date", "timestamp",
     }
+
+    #: depth-0 words that take a scalar subquery out of the provable
+    #: one-table, one-aggregate shape
+    _CORR_REFUSED = (
+        "GROUP", "HAVING", "ORDER", "LIMIT", "JOIN", "UNION", "INTERSECT",
+        "EXCEPT", "DISTINCT", "WITH",
+    )
 
     def _decorrelate_where(
         self, frm: str, where: str, used: set, spark, scope: str
@@ -1319,15 +1355,14 @@ class Registry:
         NULL — on an empty group, so the join-drop equivalence breaks);
         the outer comparison side contains no OR / subquery / unknown
         call."""
-        pieces = self._split_and(where)
+        # a BETWEEN x AND y mis-splits into two pieces, but untouched
+        # pieces rejoin with " AND " verbatim — only a piece that FULLY
+        # matches the correlated-subquery shape is ever replaced
         new_pieces: list[str] = []
         extra_from: list[str] = []
         ci = 0
-        for piece in pieces:
-            if not any(
-                re.search(rf"(?i)\b{re.escape(n)}\s*\(", piece)
-                for n in used
-            ):
+        for piece in _items(where, "AND"):
+            if not _calls(piece) & used:
                 new_pieces.append(piece)
                 continue
             rep = self._decorrelate_conjunct(piece, used, ci, spark, scope)
@@ -1349,74 +1384,58 @@ class Registry:
     ) -> Optional[tuple[list[str], str]]:
         """One conjunct ``lhs OP (SELECT ...)`` → (replacement conjunct
         list, derived-table SQL).  See _decorrelate_where."""
-        p = piece.strip()
+        clean, toks = _read(piece)
         # the conjunct must END with a balanced "(SELECT ...)" group
-        sub = None
-        for i, ch in enumerate(p):
-            if ch == "(" and re.match(r"(?is)^\(\s*SELECT\b", p[i:]):
-                j = self._match_paren(p, i)
-                if j is not None and not p[j + 1 :].strip():
-                    sub = p[i + 1 : j]
-                    lhs_full = p[:i]
-                    break
-        if sub is None:
+        if not toks or toks[-1].text != ")":
             return None
+        o = max(j for j in range(len(toks) - 1) if toks[j].depth == toks[-1].depth)
+        if toks[o + 1].text.upper() != "SELECT":
+            return None
+        sub = clean[toks[o].end : toks[-1].start]
         om = re.match(
-            r"(?is)^(?P<e>.+?)\s*(?P<op><=|>=|<>|!=|<|>|=)\s*$", lhs_full
+            r"(?is)^(?P<e>.+?)\s*(?P<op><=|>=|<>|!=|<|>|=)\s*$",
+            clean[: toks[o].start],
         )
         if om is None:
             return None
         lhs, op = om.group("e").strip(), om.group("op")
         if not lhs or ("(" in lhs and not self._safe_group_expr(lhs)):
             return None
-        for wm in re.finditer(r"(?<![\w.])([A-Za-z_]\w*)", lhs):
-            w = wm.group(1).lower()
-            rest = lhs[wm.end():].lstrip()
-            if rest.startswith("(") or rest.startswith("."):
-                continue  # call (vetted by _safe_group_expr) / qualifier
+        for w, nxt in _words(lhs):
             # a BARE word must be a column ref or a whitelisted literal;
-            # OR is the load-bearing refusal (see _CORR_LHS_BARE_OK)
-            if w in self._UNSAFE_BARE_WORDS or w in {
-                "or", "in", "between", "like", "case", "when", "then",
-                "else", "end", "is", "distinct",
-            }:
+            # OR is the load-bearing refusal (see _CORR_LHS_BARE_OK).  A
+            # call was vetted by _safe_group_expr; a qualifier passes.
+            if nxt not in ("(", ".") and (
+                w in self._UNSAFE_BARE_WORDS or w in {
+                    "or", "in", "between", "like", "case", "when", "then",
+                    "else", "end", "is", "distinct",
+                }
+            ):
                 return None
         # ---- parse the subquery --------------------------------------
-        for kw in (
-            "GROUP", "HAVING", "ORDER", "LIMIT", "JOIN", "UNION",
-            "INTERSECT", "EXCEPT", "DISTINCT", "WITH",
-        ):
-            if self._has_top_level_kw(sub, kw):
-                return None
-        sm = re.match(
-            r"(?is)^\s*SELECT\s+(?P<item>.+?)\s+FROM\s+"
-            r"(?P<tbl>[A-Za-z_][\w.]*)\s+(?:AS\s+)?(?P<al>[A-Za-z_]\w*)"
-            r"(?:\s+WHERE\s+(?P<conds>.+?))?\s*$",
-            sub,
-        )
-        if sm is None:
+        if len(_split_top(sub, *self._CORR_REFUSED)) > 1:
             return None
-        item, tbl, al, conds = (
-            sm.group("item"),
-            sm.group("tbl"),
-            sm.group("al"),
-            sm.group("conds"),
+        cl = _clauses(sub)
+        tm = cl and re.match(
+            r"(?is)^(?P<tbl>[A-Za-z_][\w.]*)\s+(?:AS\s+)?(?P<al>[A-Za-z_]\w*)$",
+            cl.get("FROM", ""),
         )
+        if not tm or "SELECT" not in cl:
+            return None
+        item, conds = cl["SELECT"], cl.get("WHERE")
+        tbl, al = tm.group("tbl"), tm.group("al")
         if al.lower() in self._UNSAFE_BARE_WORDS:
             return None
-        if not any(
-            re.search(rf"(?i)\b{re.escape(n)}\s*\(", item) for n in used
-        ):
+        if not _calls(item) & used:
             return None  # builtin-only subquery: Spark decorrelates natively
         # ---- classify the inner conjuncts ----------------------------
-        qual = re.compile(r"(?i)\b([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)")
         corr_keys: list[tuple[str, str]] = []  # (inner col, outer ref)
         inner_conds: list[str] = []
         eq = re.compile(
             r"(?is)^\s*(?P<a>[A-Za-z_]\w*\.[A-Za-z_]\w*)\s*=\s*"
             r"(?P<b>[A-Za-z_]\w*\.[A-Za-z_]\w*)\s*$"
         )
-        for c in self._split_and(conds) if conds else []:
+        for c in _items(conds, "AND") if conds else []:
             em = eq.match(c)
             if em:
                 a, b = em.group("a"), em.group("b")
@@ -1434,30 +1453,25 @@ class Registry:
             # non-equality conjunct: must reference ONLY the inner alias
             # (a non-equi correlation like t2.k < t1.k is NOT
             # decorrelatable by a GROUP BY — refuse)
-            for qm in qual.finditer(c):
-                if qm.group(1).lower() != al.lower():
-                    return None
-            for wm in re.finditer(r"(?<![\w.])([A-Za-z_]\w*)", c):
-                w = wm.group(1).lower()
-                rest = c[wm.end():].lstrip()
-                if rest.startswith("."):
-                    continue  # qualifier — vetted against al above
-                if rest.startswith("("):
+            for w, nxt in _words(c):
+                if nxt == ".":
+                    if w != al.lower():
+                        return None  # qualified ref to another table
+                elif nxt == "(":
                     if (
                         w not in self._GRP_FUNCS
                         and w not in self._SCALAR_PASSTHROUGH
                     ):
                         return None  # unknown call — could be anything
-                    continue
-                if (
+                elif (
                     w not in self._CORR_INNER_BARE_OK
                     and w != al.lower()
                 ):
                     return None  # bare unqualified identifier — ambiguous
             inner_conds.append(c)
-        if corr_keys and (
-            re.search(r"(?i)\bcount\w*\s*\(", item)
-            or re.search(r"(?i)\bapprox_count_distinct\s*\(", item)
+        if corr_keys and any(
+            w.startswith("count") or w == "approx_count_distinct"
+            for w in _calls(item)
         ):
             # 0-on-empty aggregates break the join-drop trick for KEYED
             # subqueries (no group row where COUNT would say 0).  An
@@ -1469,28 +1483,22 @@ class Registry:
         # column — correlation through the aggregate's args — which a
         # GROUP BY over the inner table cannot express: refuse)
         item = re.sub(r"(?is)\s+AS\s+[A-Za-z_]\w*\s*$", "", item)
-        for wm in re.finditer(r"(?<![\w.])([A-Za-z_]\w*)", item):
-            w = wm.group(1).lower()
-            rest = item[wm.end():].lstrip()
-            if rest.startswith("."):
+        for w, nxt in _words(item):
+            if nxt == ".":
                 if w != al.lower():
                     return None  # qualified ref to another table
-                continue
-            if rest.startswith("("):
+            elif nxt == "(":
                 if (
                     w not in used
                     and w not in self._BUILTIN_AGGS
                     and w not in self._SCALAR_PASSTHROUGH
                 ):
                     return None  # unknown call
-                continue
-            if w in self._CORR_LHS_BARE_OK or w in self._CORR_TYPE_WORDS:
-                continue
-            return None  # bare unqualified identifier — ambiguous scope
+            elif w not in self._CORR_LHS_BARE_OK and w not in self._CORR_TYPE_WORDS:
+                return None  # bare unqualified identifier — ambiguous scope
         # ---- build + recursively rewrite the decorrelated subquery ---
-        strip = re.compile(rf"(?i)\b{re.escape(al)}\s*\.\s*")
-        item_s = strip.sub("", item)
-        conds_s = [strip.sub("", c) for c in inner_conds]
+        item_s = _unqualify(item, al)
+        conds_s = [_unqualify(c, al) for c in inner_conds]
         keys_s: list[str] = []
         for k, _ in corr_keys:
             if k.lower() not in {x.lower() for x in keys_s}:
@@ -1521,28 +1529,6 @@ class Registry:
         for k, outer_ref in corr_keys:
             out_conds.append(f"{alias}.__ck{kmap[k.lower()]} = {outer_ref}")
         return out_conds, f"({sub_rw}) {alias}"
-
-    @staticmethod
-    def _has_top_level_kw(s: str, kw: str) -> bool:
-        """True when ``kw`` appears at paren depth 0 outside quoted
-        literals — a PIVOT buried in a FROM subquery must NOT trigger the
-        top-level expansion (the subquery is opaque to the rewrite)."""
-        depth, quote = 0, None
-        pat = re.compile(rf"(?i)^{kw}\b")
-        for i, ch in enumerate(s):
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and pat.match(s[i : i + len(kw) + 1]):
-                if i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"):
-                    return True
-        return False
 
     @classmethod
     def _expand_pivot(
@@ -1575,48 +1561,39 @@ class Registry:
         public (possibly backticked) names, ``tail`` the ORDER BY/LIMIT
         to re-append outermost.
         """
-        m = re.match(r"(?is)^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s*\(", main)
-        if m is None or m.group("sel").strip() != "*":
+        clean, toks = _read(main)
+        up = [t.text.upper() for t in toks]
+        if up[:4] != ["SELECT", "*", "FROM", "("]:
             return None  # implicit keys are only decidable under SELECT *
-        open_i = main.rindex("(", 0, m.end())
-        close_i = cls._match_paren(main, open_i)
-        if close_i is None:
+        close = _close(toks, 3)
+        inner = clean[toks[3].end : toks[close].start].strip()
+        k = close + 1  # past an optional alias of the pivot source
+        if up[k : k + 1] == ["AS"]:
+            k += 2 if k + 1 < len(toks) and toks[k + 1].kind == "word" else 0
+        elif k < len(toks) and toks[k].kind == "word" and up[k] != "PIVOT":
+            k += 1
+        if up[k : k + 2] != ["PIVOT", "("]:
             return None
-        inner = main[open_i + 1 : close_i].strip()
-        rest = main[close_i + 1 :]
-        pm = re.match(
-            r"(?is)^\s*(?:AS\s+(?!PIVOT\b)\w+\s*|(?!PIVOT\b)(?!AS\b)\w+\s+)?"
-            r"PIVOT\s*\(",
-            rest,
-        )
-        if pm is None:
-            return None
-        p_open = rest.index("(", pm.end() - 1)
-        p_close = cls._match_paren(rest, p_open)
-        if p_close is None:
-            return None
-        spec = rest[p_open + 1 : p_close].strip()
-        tail = rest[p_close + 1 :].strip()
+        p_close = _close(toks, k + 1)
+        spec = clean[toks[k + 1].end : toks[p_close].start].strip()
+        tail = clean[toks[p_close].end :].strip()
         if tail and not re.match(r"(?is)^(ORDER\s+BY|LIMIT)\b", tail):
             return None  # WHERE-after-pivot etc. — out of the shape
         sm = re.match(
             r"(?is)^(?P<agg>[A-Za-z_]\w*)\s*\(\s*(?P<arg>[A-Za-z_]\w*)\s*\)"
-            r"\s*(?:AS\s+\w+\s*)?FOR\s+(?P<pcol>[A-Za-z_]\w*)\s+IN\s*\(",
+            r"\s*(?:AS\s+\w+\s*)?FOR\s+(?P<pcol>[A-Za-z_]\w*)\s+IN\s*(?=\()",
             spec,
         )
-        if sm is None:
+        in_list = sm and _call(spec[sm.end() :])
+        if not in_list or in_list[2]:
             return None  # multiple aggs / expression args — refuse
-        v_open = spec.index("(", sm.end() - 1)
-        v_close = cls._match_paren(spec, v_open)
-        if v_close is None or spec[v_close + 1 :].strip():
-            return None
         agg, arg, pcol = sm.group("agg"), sm.group("arg"), sm.group("pcol")
         values: list[tuple[str, str]] = []  # (literal, output name)
-        for item in _split_top_level(spec[v_open + 1 : v_close]):
+        for item in _items(in_list[1]):
             vm = re.match(
                 r"(?is)^(?P<lit>'(?:[^']|'')*'|-?\d+(?:\.\d+)?)"
                 r"\s*(?:AS\s+(?P<alias>\w+))?$",
-                item.strip(),
+                item,
             )
             if vm is None:
                 return None  # non-literal pivot value — refuse
@@ -1629,34 +1606,16 @@ class Registry:
             values.append((lit, name))
         if not values:
             return None
-        # inner output names: scan to the inner select's top-level FROM
-        im = re.match(r"(?is)^SELECT\s+(?P<rest>.*)$", inner)
-        if im is None:
-            return None
-        body = im.group("rest")
-        depth, quote, from_at = 0, None, None
-        for i, ch in enumerate(body):
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and body[i : i + 4].upper() == "FROM"
-                and (i == 0 or body[i - 1].isspace())
-                and (i + 4 == len(body) or body[i + 4].isspace())
-            ):
-                from_at = i
-                break
-        if from_at is None:
+        # inner output names: the inner select's list, up to its FROM
+        parts = _split_top(inner, "SELECT", "FROM")
+        if (
+            len(parts) < 3
+            or parts[0][1]
+            or [kw.upper() for kw, _ in parts[1:3]] != ["SELECT", "FROM"]
+        ):
             return None
         out_names: list[str] = []
-        for item in _split_top_level(body[:from_at]):
+        for item in _items(parts[1][1]):
             am = re.match(
                 r"(?is)^.*\sAS\s+(?P<n>[A-Za-z_]\w*)\s*$", item
             ) or re.match(r"(?is)^(?P<n>[A-Za-z_]\w*)\s*$", item)
@@ -1701,142 +1660,6 @@ class Registry:
         )
         return core, outer, tail
 
-    _SET_OP = re.compile(
-        r"(?is)^(UNION|INTERSECT|EXCEPT)(\s+(ALL|DISTINCT))?\b"
-    )
-
-    @classmethod
-    def _split_set_ops(cls, main: str) -> Optional[list]:
-        """Split ``main`` into top-level set-operation blocks:
-        ``[(block_sql, op_before), ...]`` with ``op_before == ""`` for the
-        first block.  Set operators are matched at paren depth 0 outside
-        quoted literals only; a single-block query returns one entry.
-        Returns None when a block is empty (malformed)."""
-        blocks = []
-        depth, quote = 0, None
-        start, cur_op = 0, ""
-        i, n = 0, len(main)
-        while i < n:
-            ch = main[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and ch.isalpha():
-                prev = main[i - 1] if i > 0 else " "
-                if not (prev.isalnum() or prev == "_"):
-                    m = cls._SET_OP.match(main[i:])
-                    if m:
-                        blk = main[start:i].strip()
-                        if not blk:
-                            return None
-                        blocks.append((blk, cur_op))
-                        cur_op = " ".join(m.group(0).split()).upper()
-                        i += m.end()
-                        start = i
-                        continue
-            i += 1
-        blk = main[start:].strip()
-        if not blk:
-            return None
-        blocks.append((blk, cur_op))
-        return blocks
-
-    @staticmethod
-    def _strip_union_tail(blk: str) -> Optional[tuple]:
-        """Strip a trailing union-level ``ORDER BY ... LIMIT n`` off the
-        LAST set-op block (the grammar binds it to the whole union, so
-        leaving it inside the block's rewrite would order the block, not
-        the union).  Provable shapes only: ORDER BY plain output columns
-        with optional ASC/DESC/NULLS FIRST|LAST, LIMIT integer.  Returns
-        ``(block_without_tail, tail_sql)`` or None (→ fall back)."""
-        depth, quote = 0, None
-        first = None
-        for i, ch in enumerate(blk):
-            if quote:
-                if ch == quote:
-                    quote = None
-                continue
-            if ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and ch.isalpha() and first is None:
-                prev = blk[i - 1] if i > 0 else " "
-                if not (prev.isalnum() or prev == "_"):
-                    if re.match(r"(?is)(ORDER\s+BY|LIMIT)\b", blk[i:]):
-                        first = i
-        if first is None:
-            return blk, ""
-        tail = blk[first:]
-        tm = re.match(
-            r"(?is)^(?:ORDER\s+BY\s+(?P<ob>.+?))?\s*"
-            r"(?:LIMIT\s+(?P<n>\d+))?\s*;?\s*$",
-            tail,
-        )
-        if not tm or (tm.group("ob") is None and tm.group("n") is None):
-            return None
-        if tm.group("ob") is not None:
-            for it in tm.group("ob").split(","):
-                if not re.match(
-                    r"(?is)^\s*[A-Za-z_]\w*"
-                    r"(\s+(ASC|DESC))?(\s+NULLS\s+(FIRST|LAST))?\s*$",
-                    it,
-                ):
-                    return None  # expression/positional order key — refuse
-        return blk[:first].rstrip(), " " + " ".join(tail.split())
-
-    @staticmethod
-    def _split_tail(tail: str) -> Optional[tuple]:
-        """Split ``HAVING ... ORDER BY ... LIMIT n`` into its clauses at
-        paren depth 0.  Returns (having, order_by, limit) — each None when
-        absent — or None when the tail has another shape.
-
-        Unbalanced parens mean the non-paren-aware _GROUPBY_SHAPE regex
-        mis-split the query (e.g. ``WHERE x IN (SELECT y FROM u ORDER BY
-        z)`` truncates WHERE and hands this function ``ORDER BY z)``) —
-        return None so the caller falls back to single-phase execution
-        instead of emitting malformed SQL (ADVICE r6, medium)."""
-        marks = []  # (pos, kind, match_end)
-        depth = 0
-        for i, ch in enumerate(tail):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    return None
-            elif depth == 0:
-                m = re.match(
-                    r"(?i)\b(HAVING|ORDER\s+BY|LIMIT)\b", tail[i:]
-                )
-                if m and (i == 0 or not tail[i - 1].isalnum()):
-                    kind = re.sub(r"\s+", " ", m.group(1).upper())
-                    marks.append((i, kind, i + m.end()))
-        if depth != 0:
-            return None  # unbalanced tail — regex mis-split the query
-        if not marks or tail[: marks[0][0]].strip():
-            return None
-        seen_order = [k for _, k, _ in marks]
-        if seen_order != sorted(
-            seen_order, key=["HAVING", "ORDER BY", "LIMIT"].index
-        ) or len(set(seen_order)) != len(seen_order):
-            return None
-        out = {"HAVING": None, "ORDER BY": None, "LIMIT": None}
-        for j, (pos, kind, body_start) in enumerate(marks):
-            end = marks[j + 1][0] if j + 1 < len(marks) else len(tail)
-            out[kind] = tail[body_start:end].strip().rstrip(";").strip()
-        if out["LIMIT"] is not None and not re.match(r"^\d+$", out["LIMIT"]):
-            return None
-        return out["HAVING"], out["ORDER BY"], out["LIMIT"]
-
     def _rewrite_agg_calls(
         self,
         expr: str,
@@ -1854,49 +1677,28 @@ class Registry:
         once, not twice).  Whitelisted scalar functions are recursed
         into; anything unprovable returns None (→ single-phase
         fallback)."""
-        if "'" in expr or '"' in expr:
-            return None  # string literals could hide unbalanced parens
-        out = []
-        i = 0
-        n = len(expr)
-        while i < n:
-            m = re.match(r"[A-Za-z_]\w*", expr[i:])
-            if not m:
-                out.append(expr[i])
+        clean, toks = _read(expr)
+        out, at, i = [], 0, 0  # at: end of the text already copied
+        while i < len(toks):
+            t = toks[i]
+            if not _is_ident(t) or (i and toks[i - 1].text == "."):
                 i += 1
                 continue
-            name = m.group(0)
-            j = i + len(name)
-            k = j
-            while k < n and expr[k].isspace():
-                k += 1
-            if k >= n or expr[k] != "(":
+            if (toks[i + 1].text if i + 1 < len(toks) else "") != "(":
                 # bare word (no call parens).  Column references and
                 # operator/literal keywords (AND, OR, NOT, IN, NULL, CASE,
                 # ...) pass through, but scope-opening keywords mean a
                 # subquery / window we cannot prove hoist-safe: fall back
                 # to single-phase instead of hoisting an inner scope's
                 # aggregate over the outer table.
-                if name.lower() in self._UNSAFE_BARE_WORDS:
+                if t.text.lower() in self._UNSAFE_BARE_WORDS:
                     return None
-                out.append(expr[i:j])
-                i = j
+                i += 1
                 continue
-            depth = 0
-            e = k
-            while e < n:
-                if expr[e] == "(":
-                    depth += 1
-                elif expr[e] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                e += 1
-            if e >= n:
-                return None
-            args = expr[k + 1 : e]
+            e = _close(toks, i + 1)
+            name, args = t.text, clean[toks[i + 1].end : toks[e].start]
             ln = name.lower()
-            key = (ln, re.sub(r"\s+", " ", args.strip().lower()))
+            key = (ln, _norm(args))
             if ln in used and ln in self._agg_sql_names:
                 # DISTINCT inside a UDAF call cannot be split: per-
                 # partition DISTINCT before the merge misses cross-
@@ -1904,9 +1706,7 @@ class Registry:
                 # COUNT(DISTINCT x) there is fine.)
                 if re.match(r"(?is)^\s*DISTINCT\b", args):
                     return None
-                arg_items = [
-                    a.strip() for a in _split_top_level(args) if a.strip()
-                ]
+                arg_items = [a for a in _items(args) if a]
                 if not arg_items:
                     # a zero-arg UDAF is not expressible as a grouped
                     # aggregate UDF either — fall back loudly
@@ -1914,22 +1714,22 @@ class Registry:
                 if key not in memo:
                     memo[key] = f"__u{len(agg_args)}"
                     agg_args.append((ln, arg_items))
-                out.append(memo[key])
+                rep = memo[key]
             elif ln in self._BUILTIN_AGGS:
                 if key not in memo:
-                    idx = len(b_cols)
+                    memo[key] = f"__b{len(b_cols)}"
                     b_cols.append((name, args))
-                    memo[key] = f"__b{idx}"
-                out.append(memo[key])
+                rep = memo[key]
             elif ln in self._SCALAR_PASSTHROUGH:
                 sub = self._rewrite_agg_calls(args, used, agg_args, b_cols, memo)
                 if sub is None:
                     return None
-                out.append(f"{name}({sub})")
+                rep = f"{name}({sub})"
             else:
                 return None  # unknown call — could be an aggregate
-            i = e + 1
-        return "".join(out)
+            out += [clean[at : t.start], rep]
+            at, i = toks[e].end, e + 1
+        return "".join(out) + clean[at:]
 
 
 #: the default global registry (analogue of the reference's linkme slice,

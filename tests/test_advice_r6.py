@@ -1,6 +1,15 @@
-"""Regression tests for the round-5 ADVICE items fixed in round 6."""
+"""Regression tests for the round-5 ADVICE items fixed in round 6.
+
+The rewriter's tail-split case moved to ``tests/test_registry.py``
+(``test_clause_split_edges``, on the clause split that replaced the tail
+splitter); the import below keeps its name here.
+"""
 
 from pyspark.sql import functions as F
+
+from test_registry import (  # noqa: F401 (moved; the old name stays)
+    test_clause_split_edges as test_registry_split_tail_edges,
+)
 
 
 def test_lsh_bands_null_vector_drops_instead_of_raising(spark):
@@ -30,25 +39,6 @@ def test_lsh_bands_null_vector_drops_instead_of_raising(spark):
     )
     with pytest.raises(Exception, match="length != dim"):
         lsh_bands(bad).collect()
-
-
-def test_registry_split_tail_edges():
-    """The tail splitter must reject malformed shapes (fallback to
-    single-phase) rather than mis-parse them."""
-    from arrow_udf_spark.plans.registry import Registry
-
-    split = Registry._split_tail
-    assert split(" HAVING x > 1 ORDER BY y LIMIT 3") == ("x > 1", "y", "3")
-    assert split(" ORDER BY y DESC") == (None, "y DESC", None)
-    assert split(" LIMIT 5") == (None, None, "5")
-    # out-of-order clauses are not SQL
-    assert split(" ORDER BY y HAVING x > 1") is None
-    # duplicate clause
-    assert split(" LIMIT 5 LIMIT 6") is None
-    # non-numeric LIMIT
-    assert split(" LIMIT all") is None
-    # leading junk
-    assert split(" WINDOW w AS (ORDER BY x)") is None
 
 
 def test_kmeans_oracle_orders_by_squared_distance():

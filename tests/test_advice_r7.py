@@ -1,128 +1,28 @@
 """Regression tests for the round-6 ADVICE items fixed in round 7.
 
-1. (high) registry._rewrite_agg_calls must not hoist aggregates out of
-   scalar subqueries — a SELECT keyword in HAVING/ORDER BY/select items
-   falls back to single-phase instead of computing the inner aggregate
-   over the OUTER table.
-2. (medium) registry._split_tail must reject unbalanced-paren tails
-   (the non-paren-aware shape regex truncating ``WHERE x IN (SELECT ...
-   ORDER BY z)``) instead of emitting malformed SQL.
+1-2. The rewriter cases (scalar subqueries are never hoisted out of
+   their scope; unbalanced parens are refused) moved to
+   ``tests/test_registry.py``, and the imports below keep their
+   names here.  The two ``WHERE x IN (SELECT ... ORDER BY ...)`` cases
+   now rewrite there (``test_where_subquery_with_order_by_rewrites``,
+   ``..._limit_rewrites``): the clause split no longer cuts WHERE at the
+   subquery's ORDER BY.
 3. (low) count_min_estimate's truth side counts the same (empty-token
    filtered) stream the sketch ingested, keeping est >= true.
 4. (low) source_token_tv computes its numerator in DECIMAL(38,0) so the
    c_A(t)*N_B products cannot silently wrap int64 at 100 TB corpora.
 """
 
-import warnings
-from decimal import Decimal
-
-import pytest
-
-
-# -- 1. scalar subqueries must not be hoisted ------------------------------
-
-
-def test_scalar_subquery_in_having_falls_back(rewrite):
-    q = (
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "HAVING s > (SELECT max(y) FROM u)"
-    )
-    assert rewrite(q) is None
-
-
-def test_scalar_subquery_in_select_falls_back(rewrite):
-    q = (
-        "SELECT g, sum_udaf(x) + (SELECT max(y) FROM u) AS s "
-        "FROM t GROUP BY g"
-    )
-    assert rewrite(q) is None
-
-
-def test_exists_subquery_in_having_falls_back(rewrite):
-    q = (
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "HAVING EXISTS (SELECT 1 FROM u)"
-    )
-    assert rewrite(q) is None
-
-
-def test_scalar_subquery_in_order_by_falls_back(rewrite):
-    q = (
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "ORDER BY sum_udaf(x) - (SELECT max(y) FROM u)"
-    )
-    assert rewrite(q) is None
-
-
-def test_plain_having_still_rewrites(rewrite):
-    """The fix must not regress the provable shapes."""
-    ok = rewrite(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "HAVING sum_udaf(x) > 5 AND g IS NOT NULL"
-    )
-    assert ok is not None and "__u0" in ok
-
-
-def test_having_with_builtin_and_case_still_rewrites(rewrite):
-    ok = rewrite(
-        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
-        "HAVING CASE WHEN count(x) > 2 THEN sum_udaf(x) ELSE 0 END > 5"
-    )
-    assert ok is not None and "__b0" in ok and "__u0" in ok
-
-
-# -- 2. unbalanced tails from the shape regex ------------------------------
-
-
-def test_where_subquery_with_order_by_falls_back(rewrite):
-    """_GROUPBY_SHAPE truncates WHERE at the inner ORDER BY; the depth
-    guard in _split_tail rejects the resulting ``ORDER BY z)`` tail."""
-    q = (
-        "SELECT sum_udaf(x) AS s FROM t "
-        "WHERE x IN (SELECT y FROM u ORDER BY z)"
-    )
-    assert rewrite(q) is None
-
-
-def test_where_subquery_with_order_by_limit_falls_back(rewrite):
-    q = (
-        "SELECT g, sum_udaf(x) AS s FROM t "
-        "WHERE x IN (SELECT y FROM u ORDER BY z LIMIT 5) GROUP BY g"
-    )
-    assert rewrite(q) is None
-
-
-def test_split_tail_depth_guard():
-    from arrow_udf_spark.plans.registry import Registry
-
-    split = Registry._split_tail
-    assert split(" ORDER BY z)") is None  # closes a paren it never opened
-    assert split(" HAVING (x > 1") is None  # never closes
-    assert split(" HAVING (x > 1) ORDER BY y") == ("(x > 1)", "y", None)
-
-
-def test_e2e_having_scalar_subquery_single_phase(spark):
-    """End-to-end: the unprovable shape runs single-phase (with the
-    registration warning) and returns the right answer."""
-    from arrow_udf_spark.functions import corpus  # noqa: F401 (registers)
-    from arrow_udf_spark.plans.registry import GLOBAL
-
-    spark.createDataFrame(
-        [(1, 10), (1, 20), (2, 5)], "g: int, x: int"
-    ).createOrReplaceTempView("adv7_t")
-    spark.createDataFrame([(12,)], "y: int").createOrReplaceTempView(
-        "adv7_u"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        df = GLOBAL.sql(
-            spark,
-            "SELECT g, sum_udaf(x) AS s FROM adv7_t GROUP BY g "
-            "HAVING s > (SELECT max(y) FROM adv7_u)",
-        )
-        rows = [(r["g"], r["s"]) for r in df.collect()]
-    assert rows == [(1, 30)]
-    assert any(issubclass(x.category, RuntimeWarning) for x in w)
+from test_registry import (  # noqa: F401 (moved; the old names stay)
+    test_e2e_having_scalar_subquery_single_phase,
+    test_exists_subquery_in_having_falls_back,
+    test_having_with_builtin_and_case_still_rewrites,
+    test_plain_having_still_rewrites,
+    test_scalar_subquery_in_having_falls_back,
+    test_scalar_subquery_in_order_by_falls_back,
+    test_scalar_subquery_in_select_falls_back,
+    test_unbalanced_parens_refused as test_split_tail_depth_guard,
+)
 
 
 # -- 3. CMS truth side matches the sketch stream ---------------------------

@@ -12,14 +12,21 @@
    the column exists: staging tokens on the raw side only no longer
    raises an AnalysisException on the un-staged target branch.
 
-Plus the r9 rewriter widening (VERDICT r8 ask #3): correlated scalar
-aggregate subqueries — the provable q17 shape decorrelates to a
-GROUP-BY-key derived table joined into FROM; everything outside the
-contract refuses loudly (falls back / strict raises) rather than
-mangling.
+The r9 rewriter widening (VERDICT r8 ask #3, correlated scalar
+aggregate subqueries decorrelated to a GROUP-BY-key derived table) has
+its cases in ``tests/test_registry.py``; the imports below keep
+their names here.
 """
 
 import pytest
+
+from test_registry import (  # noqa: F401 (moved; the old names stay)
+    test_builtin_outer_returns_directly,
+    test_correlated_refusals,
+    test_count_allowed_uncorrelated,
+    test_q17_shape_decorrelates,
+    test_uncorrelated_global_cross_joins,
+)
 
 
 # -- 1. decode_gif bounds-checks -------------------------------------------
@@ -124,84 +131,3 @@ def test_dsir_one_sided_toks_col(spark):
     assert [r.asDict() for r in got.collect()] == [
         r.asDict() for r in ref.collect()
     ]
-
-
-# -- 4. correlated-subquery rewrite: contract and refusals ------------------
-
-
-_U = {"sum_udaf", "count_udaf"}
-
-
-def test_q17_shape_decorrelates(rewrite, spark):
-    from arrow_udf_spark.plans.registry import GLOBAL
-
-    q = (
-        "SELECT g, CAST(sum_udaf(v) AS BIGINT) AS s FROM t o "
-        "WHERE o.q * 5 < (SELECT sum_udaf(i.q) FROM t i "
-        "WHERE i.k = o.k) GROUP BY g"
-    )
-    rw = rewrite(q, _U)
-    assert rw is not None and "sum_udaf__mergevec" in rw
-    # the derived table carries the two-phase agg keyed by the join key;
-    # it joins the outer block's source, which its fold view reads
-    plan = GLOBAL.sql(spark, q)._jdf.queryExecution().analyzed().toString()
-    assert "__aus_corr0" in plan and "__ck0" in plan
-    # the outer UDAF is ALSO two-phase (two distinct fold views)
-    assert plan.count("MapInArrow") == 2
-
-
-def test_builtin_outer_returns_directly(rewrite):
-    # outer aggregates are native SUM/COUNT: after decorrelation nothing
-    # else needs protecting, so the rewrite returns the joined form
-    # without wrapping the outer block
-    q = (
-        "SELECT g, CAST(SUM(v) AS BIGINT) AS s FROM t o "
-        "WHERE o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k) "
-        "GROUP BY g"
-    )
-    rw = rewrite(q, _U)
-    assert rw is not None and "__aus_corr0" in rw
-    assert "__aus_u" in rw  # the subquery's own two-phase scope
-    assert "SELECT g, CAST(SUM(v) AS BIGINT) AS s" in rw  # outer verbatim
-
-
-def test_uncorrelated_global_cross_joins(rewrite):
-    q = (
-        "SELECT o.id FROM t o "
-        "WHERE o.q < (SELECT count_udaf(i.v) FROM t i)"
-    )
-    rw = rewrite(q, _U)
-    assert rw is not None and "__aus_corr0" in rw
-    assert "__ck" not in rw  # no key columns — single-row cross join
-
-
-@pytest.mark.parametrize(
-    "where",
-    [
-        # non-equi correlation: a GROUP BY cannot express it
-        "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k < o.k)",
-        # COUNT-headed KEYED subquery: 0-on-empty breaks the join-drop
-        "o.q < (SELECT count_udaf(i.q) FROM t i WHERE i.k = o.k)",
-        # unqualified correlation column: ambiguous scope
-        "q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = k)",
-        # OR around the comparison: TRUE via the other arm on join miss
-        "o.x OR o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k)",
-        # subquery with its own GROUP BY: not a scalar-per-key shape
-        "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k GROUP BY i.j)",
-        # outer column inside the aggregate args: correlation through
-        # the argument, not expressible as a per-key GROUP BY
-        "o.q < (SELECT sum_udaf(i.q + o.z) FROM t i WHERE i.k = o.k)",
-        # bare unqualified identifier in the select item
-        "o.q < (SELECT sum_udaf(q2) FROM t i WHERE i.k = o.k)",
-        # unknown function inside an inner predicate
-        "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k AND rand(i.j) > 0)",
-    ],
-)
-def test_correlated_refusals(rewrite, where):
-    assert rewrite(f"SELECT o.a FROM t o WHERE {where}", _U) is None
-
-
-def test_count_allowed_uncorrelated(rewrite):
-    # global aggregates always yield exactly one row — COUNT is exact
-    q = "SELECT o.a FROM t o WHERE o.q < (SELECT count_udaf(i.q) FROM t i WHERE i.q > 0)"
-    assert rewrite(q, _U) is not None

@@ -604,6 +604,35 @@ def test_one_column_view():
     assert not folds, folds
 
 
+def test_one_sql_tokenizer():
+    """The ``Registry.sql`` rewriter reads SQL text through one tokenizer:
+    quote tracking and paren-depth counting appear once each, in
+    ``_lex``, and the scanners it replaced are gone."""
+    import ast
+    from pathlib import Path
+
+    from arrow_udf_spark.plans import registry as R
+
+    src = Path(R.__file__).read_text()
+    lex = next(
+        ast.get_source_segment(src, node)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef) and node.name == "_lex"
+    )
+    for pattern in ('in "\'\\"', "depth += 1"):
+        assert src.count(pattern) == 1 and pattern in lex, pattern
+    gone = [
+        name
+        for name in (
+            "_GROUPBY_SHAPE", "_split_tail", "_split_and", "_split_set_ops",
+            "_strip_union_tail", "_has_top_level_kw", "_match_paren",
+            "_split_top_level",
+        )
+        if re.search(rf"\b{name}\b", src)
+    ]
+    assert not gone, gone
+
+
 def test_udf_boundary_runs_on_arrow(spark, sf_dir):
     """Scalar functions are Arrow UDFs (eval type 250, SQL_SCALAR_ARROW_UDF)
     and table functions run on mapInArrow, each over the sort-free

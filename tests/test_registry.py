@@ -1,6 +1,10 @@
+import re
+import warnings
 from decimal import Decimal
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from arrow_udf_spark import Registry, udf
 
@@ -525,10 +529,12 @@ def test_pivot_refusal_shapes(rewrite):
         assert rewrite(q) is None, q
     # PIVOT buried in a FROM subquery (no UDAF inside) must not trip the
     # top-level expansion: the k-in-subquery shape is not top level
-    assert not Registry._has_top_level_kw(
+    from arrow_udf_spark.plans.registry import _split_top
+
+    assert _split_top(
         "x FROM (SELECT * FROM t PIVOT (SUM(v) FOR k IN ('a'))) GROUP BY x",
         "PIVOT",
-    )
+    ) == [("", "x FROM (SELECT * FROM t PIVOT (SUM(v) FOR k IN ('a'))) GROUP BY x")]
 
 
 def test_pivot_matches_native_builtin(spark):
@@ -757,3 +763,751 @@ def test_refused_single_phase_fallback_raises(spark, query, condition):
         with pytest.raises(ValueError, match=condition) as err:
             GLOBAL.sql(spark, query)
     assert "AggregateFunction.agg" in str(err.value)
+
+
+# -- the clause split of a query block ------------------------------------
+
+
+def test_clause_split_edges():
+    """The clause split rejects malformed tails (the query falls back to
+    single-phase) rather than mis-parse them."""
+    from arrow_udf_spark.plans.registry import _clauses
+
+    assert _clauses(" HAVING x > 1 ORDER BY y LIMIT 3") == {
+        "HAVING": "x > 1", "ORDER BY": "y", "LIMIT": "3"
+    }
+    assert _clauses(" ORDER BY y DESC") == {"ORDER BY": "y DESC"}
+    assert _clauses(" LIMIT 5") == {"LIMIT": "5"}
+    # out-of-order clauses are not SQL
+    assert _clauses(" ORDER BY y HAVING x > 1") is None
+    # duplicate clause
+    assert _clauses(" LIMIT 5 LIMIT 6") is None
+    # non-numeric LIMIT
+    assert _clauses(" LIMIT all") is None
+    # leading junk
+    assert _clauses(" WINDOW w AS (ORDER BY x)") is None
+
+
+def test_unbalanced_parens_refused(rewrite):
+    """A query with unbalanced parens is refused as a whole; balanced
+    parens in a clause keep the clause whole."""
+    from arrow_udf_spark.plans.registry import _clauses
+
+    head = "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g"
+    assert rewrite(f"{head} ORDER BY z)") is None  # closes a paren never opened
+    assert rewrite(f"{head} HAVING (x > 1") is None  # never closes
+    assert _clauses(" HAVING (x > 1) ORDER BY y") == {
+        "HAVING": "(x > 1)", "ORDER BY": "y"
+    }
+
+
+# -- scalar subqueries must not be hoisted ---------------------------------
+
+
+def test_scalar_subquery_in_having_falls_back(rewrite):
+    q = (
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
+        "HAVING s > (SELECT max(y) FROM u)"
+    )
+    assert rewrite(q) is None
+
+
+def test_scalar_subquery_in_select_falls_back(rewrite):
+    q = (
+        "SELECT g, sum_udaf(x) + (SELECT max(y) FROM u) AS s "
+        "FROM t GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+def test_exists_subquery_in_having_falls_back(rewrite):
+    q = (
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
+        "HAVING EXISTS (SELECT 1 FROM u)"
+    )
+    assert rewrite(q) is None
+
+
+def test_scalar_subquery_in_order_by_falls_back(rewrite):
+    q = (
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
+        "ORDER BY sum_udaf(x) - (SELECT max(y) FROM u)"
+    )
+    assert rewrite(q) is None
+
+
+def test_plain_having_still_rewrites(rewrite):
+    """The fix must not regress the provable shapes."""
+    ok = rewrite(
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
+        "HAVING sum_udaf(x) > 5 AND g IS NOT NULL"
+    )
+    assert ok is not None and "__u0" in ok
+
+
+def test_having_with_builtin_and_case_still_rewrites(rewrite):
+    ok = rewrite(
+        "SELECT g, sum_udaf(x) AS s FROM t GROUP BY g "
+        "HAVING CASE WHEN count(x) > 2 THEN sum_udaf(x) ELSE 0 END > 5"
+    )
+    assert ok is not None and "__b0" in ok and "__u0" in ok
+
+def test_e2e_having_scalar_subquery_single_phase(spark):
+    """End-to-end: the unprovable shape runs single-phase (with the
+    registration warning) and returns the right answer."""
+    from arrow_udf_spark.functions import corpus  # noqa: F401 (registers)
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    spark.createDataFrame(
+        [(1, 10), (1, 20), (2, 5)], "g: int, x: int"
+    ).createOrReplaceTempView("adv7_t")
+    spark.createDataFrame([(12,)], "y: int").createOrReplaceTempView(
+        "adv7_u"
+    )
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        df = GLOBAL.sql(
+            spark,
+            "SELECT g, sum_udaf(x) AS s FROM adv7_t GROUP BY g "
+            "HAVING s > (SELECT max(y) FROM adv7_u)",
+        )
+        rows = [(r["g"], r["s"]) for r in df.collect()]
+    assert rows == [(1, 30)]
+    assert any(issubclass(x.category, RuntimeWarning) for x in w)
+
+
+# -- commented and quoted spellings read as SQL reads them -----------------
+
+
+#: NULL keys, a key literal that spells a clause, an all-NULL group
+_SPELL_ROWS = [
+    (1, "a", 5), (1, "b", -3), (2, "a GROUP BY b", 7), (None, "c", 2),
+    (2, None, None), (3, "x", 0), (4, "s", -1), (5, None, None),
+]
+
+
+def _spelling_vs_native(spark, query, ordered=False):
+    """Rows of ``Registry.sql(query)`` — asserting it took the rewrite,
+    not the warned single-phase fallback — and of native Spark running
+    ``query`` with ``COALESCE(SUM(x), 0)`` in place of ``sum_udaf(x)``
+    (sum_udaf is 0 on an all-NULL group), both over ``spell_t`` /
+    ``spell_u``; sorted unless ``ordered``."""
+    from arrow_udf_spark import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(_SPELL_ROWS, "g bigint, k string, x bigint") \
+        .createOrReplaceTempView("spell_t")
+    spark.createDataFrame([("a",), ("b",), ("c",)], "k string") \
+        .createOrReplaceTempView("spell_u")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ours = GLOBAL.sql(spark, query)
+    assert not [w for w in caught if "not rewritable" in str(w.message)]
+    native = spark.sql(
+        re.sub(r"(?i)sum_udaf\(x\)", "COALESCE(SUM(x), 0)", query)
+    )
+    assert ours.columns == native.columns
+    if ordered:
+        return ours.collect(), native.collect()
+    key = lambda r: repr([(v is None, v) for v in r])  # noqa: E731
+    return sorted(ours.collect(), key=key), sorted(native.collect(), key=key)
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        # a comment copied into the one-line B subquery used to comment
+        # out its GROUP BY (ParseException)
+        "SELECT g, sum_udaf(x) AS s, avg(x) AS a FROM spell_t\n"
+        "WHERE x > 0 -- positive only\nGROUP BY g",
+        # the comment of a HAVING next to a native aggregate used to
+        # swallow the ORDER BY that follows it
+        "SELECT g, sum_udaf(x) AS s FROM spell_t GROUP BY g "
+        "HAVING count(*) > 0 -- note\n ORDER BY g",
+        "SELECT g, sum_udaf(x) AS s FROM spell_t GROUP BY g -- per group",
+        "SELECT g, /* , */ sum_udaf(x) AS s FROM spell_t /* ( */ GROUP BY g",
+        "SELECT g, sum_udaf(x) AS s FROM spell_t "
+        "WHERE k <> 'a GROUP BY b' GROUP BY g",
+        "SELECT g, sum_udaf(x) AS s FROM spell_t "
+        "WHERE k IN (SELECT k FROM spell_u ORDER BY k LIMIT 2) GROUP BY g",
+    ],
+    ids=[
+        "comment-in-where", "comment-in-having", "trailing-comment",
+        "bracketed-comments", "literal-with-group-by", "in-subquery-limit",
+    ],
+)
+def test_commented_and_quoted_spellings_match_native(spark, query):
+    ours, native = _spelling_vs_native(
+        spark, query, ordered=query.endswith("ORDER BY g")
+    )
+    assert ours == native
+
+
+def test_where_subquery_with_order_by_rewrites(rewrite, spark):
+    """The clause split keeps a WHERE subquery's ORDER BY inside the
+    WHERE: the query rewrites, and the answer is the native one."""
+    assert rewrite(
+        "SELECT sum_udaf(x) AS s FROM t "
+        "WHERE x IN (SELECT y FROM u ORDER BY z)"
+    ) is not None
+    ours, native = _spelling_vs_native(
+        spark,
+        "SELECT sum_udaf(x) AS s FROM spell_t "
+        "WHERE x IN (SELECT x FROM spell_t ORDER BY g)",
+    )
+    assert ours == native
+
+
+def test_where_subquery_with_order_by_limit_rewrites(rewrite, spark):
+    assert rewrite(
+        "SELECT g, sum_udaf(x) AS s FROM t "
+        "WHERE x IN (SELECT y FROM u ORDER BY z LIMIT 5) GROUP BY g"
+    ) is not None
+    ours, native = _spelling_vs_native(
+        spark,
+        "SELECT g, sum_udaf(x) AS s FROM spell_t "
+        "WHERE x IN (SELECT x FROM spell_t ORDER BY x LIMIT 3) GROUP BY g",
+    )
+    assert ours == native
+
+
+def test_substitution_never_touches_a_literal_or_a_call(rewrite, spark):
+    """HAVING names the select alias ``s`` and compares a key with the
+    literal ``'s'``: the alias becomes its merged column, the literal
+    stays ``'s'``.  A select alias spelled like a function (``abs``)
+    leaves a call of that function alone."""
+    q = (
+        "SELECT k, sum_udaf(x) AS s FROM {t} GROUP BY k "
+        "HAVING s > 0 OR k = 's'"
+    )
+    ok = rewrite(q.format(t="t"))
+    assert ok is not None and "WHERE (__u0) > 0 OR k = 's'" in ok
+    ours, native = _spelling_vs_native(spark, q.format(t="spell_t"))
+    assert ours == native and ("s", -1) in [tuple(r) for r in ours]
+    q = "SELECT g, sum_udaf(x) AS abs FROM {t} GROUP BY g HAVING abs(g) > 1"
+    ok = rewrite(q.format(t="t"))
+    assert ok is not None and "WHERE abs(g) > 1" in ok
+    ours, native = _spelling_vs_native(spark, q.format(t="spell_t"))
+    assert ours == native
+
+
+def test_backticked_identifier_never_splits(rewrite, spark):
+    """A backticked name is one token: a comma inside it never splits a
+    key list, and the key ``g,h`` groups as one column (an aliased
+    backticked key rides as the expression key ``__g0``)."""
+    from arrow_udf_spark import GLOBAL
+    from arrow_udf_spark.plans.registry import _items
+
+    assert _items("`g,h`, x") == ["`g,h`", "x"]
+    spark.createDataFrame(
+        [(1, 1), (1, 2), (None, 4)], "`g,h` bigint, x bigint"
+    ).createOrReplaceTempView("tick_t")
+    q = "SELECT `g,h` AS gh, {A}(x) AS s FROM tick_t GROUP BY `g,h`"
+    rw = rewrite(q.format(A="sum_udaf"))
+    assert rw is not None and "GROUP BY __g0)" in rw and "__g1" not in rw
+    ours = GLOBAL.sql(spark, q.format(A="sum_udaf")).collect()
+    native = spark.sql(q.format(A="SUM")).collect()
+    assert sorted(map(tuple, ours), key=repr) == sorted(map(tuple, native), key=repr)
+
+
+# -- quoted literals are case/space-significant in group-key match --------
+
+
+def test_literal_case_not_folded_in_group_key_match(rewrite):
+    # 'mm' vs 'MM': different expressions — must NOT resolve to the key
+    # (falls back: the item is neither a key nor an aggregate)
+    q = (
+        "SELECT date_format(ts, 'mm') AS d, sum_udaf(v) AS s "
+        "FROM t GROUP BY date_format(ts, 'MM')"
+    )
+    assert rewrite(q) is None
+
+
+def test_literal_exact_match_still_resolves(rewrite):
+    # same literal, different OUTER whitespace/case — still the key
+    q = (
+        "SELECT DATE_FORMAT(ts,'MM') AS d, sum_udaf(v) AS s "
+        "FROM t GROUP BY date_format( ts , 'MM' )"
+    )
+    ok = rewrite(q)
+    assert ok is not None and "__g0 AS d" in ok
+
+
+def test_literal_internal_spaces_significant(rewrite):
+    # 'a b' vs 'ab': stripping spaces inside the literal would alias the
+    # wrong expression as the key
+    q = (
+        "SELECT concat(x, 'a b') AS k, sum_udaf(v) AS s "
+        "FROM t GROUP BY concat(x, 'ab')"
+    )
+    assert rewrite(q) is None
+
+
+# -- a CTE prefix rides above the rewritten main block ---------------------
+
+
+def test_cte_prefix_preserved(rewrite):
+    q = (
+        "WITH big AS (SELECT * FROM t WHERE v > 10) "
+        "SELECT g, sum_udaf(v) AS s FROM big GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    assert ok.startswith("WITH big AS (SELECT * FROM t WHERE v > 10)")
+    assert "FROM __aus_fold_" in ok and "sum_udaf__mergevec" in ok
+
+
+def test_cte_multiple_and_column_aliases(rewrite):
+    q = (
+        "WITH a (x) AS (SELECT v FROM t), b AS (SELECT x AS v, 1 AS g FROM a) "
+        "SELECT g, sum_udaf(v) AS s FROM b GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None and ok.startswith("WITH a (x) AS")
+
+
+def test_cte_recursive_refused(rewrite):
+    q = (
+        "WITH RECURSIVE c AS (SELECT 1 AS n UNION ALL SELECT n+1 FROM c) "
+        "SELECT g, sum_udaf(v) AS s FROM t GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+def test_cte_body_with_udaf_refused(rewrite):
+    # the UDAF inside the CTE body would stay single-phase — refuse
+    q = (
+        "WITH pre AS (SELECT g, sum_udaf(v) AS s FROM t GROUP BY g) "
+        "SELECT g, sum_udaf(s) AS s2 FROM pre GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+# -- window functions pass through -----------------------------------------
+
+
+def test_window_rank_over_udaf(rewrite):
+    q = (
+        "SELECT g, sum_udaf(v) AS s, "
+        "rank() OVER (ORDER BY sum_udaf(v) DESC) AS rnk "
+        "FROM t GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    assert "rank() OVER (ORDER BY __u0 DESC) AS rnk" in ok
+
+
+def test_window_share_of_total(rewrite):
+    q = (
+        "SELECT g, sum_udaf(v) AS s, SUM(SUM(v)) OVER () AS total "
+        "FROM t GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None and "SUM(__b0) OVER ()" in ok
+
+
+def test_window_partition_by_group_key_and_frame(rewrite):
+    q = (
+        "SELECT g, h, sum_udaf(v) AS s, "
+        "row_number() OVER (PARTITION BY g ORDER BY sum_udaf(v) DESC "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rn "
+        "FROM t GROUP BY g, h"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    assert "PARTITION BY g ORDER BY __u0 DESC" in ok
+    assert "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW" in ok
+
+
+def test_window_udaf_head_refused(rewrite):
+    # GROUPED_AGG over window frames = the every-row-to-one-worker trap
+    q = (
+        "SELECT g, sum_udaf(v) OVER (PARTITION BY g) AS s "
+        "FROM t GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+def test_window_unknown_head_refused(rewrite):
+    q = (
+        "SELECT g, sum_udaf(v) AS s, "
+        "my_mystery_fn() OVER (ORDER BY g) AS m FROM t GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+def test_window_non_key_column_in_spec_refused(rewrite):
+    # v is neither a group key nor an aggregate — it does not exist
+    # above the merge
+    q = (
+        "SELECT g, sum_udaf(v) AS s, rank() OVER (ORDER BY v) AS rnk "
+        "FROM t GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+def test_window_over_expression_group_key(rewrite):
+    q = (
+        "SELECT pmod(x, 7) AS b, sum_udaf(v) AS s, "
+        "rank() OVER (PARTITION BY pmod(x, 7) ORDER BY sum_udaf(v)) AS rnk "
+        "FROM t GROUP BY pmod(x, 7)"
+    )
+    ok = rewrite(q)
+    assert ok is not None and "PARTITION BY __g0 ORDER BY __u0" in ok
+
+
+def test_window_end_to_end(spark):
+    import arrow_udf_spark.functions.corpus  # noqa: F401 (registers)
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 10), ("c", 5)], ["g", "v"]
+    ).createOrReplaceTempView("win_e2e")
+    rows = GLOBAL.sql(
+        spark,
+        "SELECT g, CAST(sum_udaf(CAST(v AS BIGINT)) AS BIGINT) AS s, "
+        "rank() OVER (ORDER BY sum_udaf(CAST(v AS BIGINT)) DESC) AS rnk "
+        "FROM win_e2e GROUP BY g ORDER BY g",
+    ).collect()
+    assert [(r.g, r.s, r.rnk) for r in rows] == [
+        ("a", 3, 3), ("b", 10, 1), ("c", 5, 2)
+    ]
+
+
+# -- set operations between aggregate blocks -------------------------------
+
+
+def test_union_all_both_blocks_rewritten(rewrite):
+    q = (
+        "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
+        "UNION ALL SELECT g, sum_udaf(v) AS s FROM b GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    # an independent fold view and merge per block
+    assert ok.count("FROM __aus_fold_") == 2
+    assert ok.count("sum_udaf__mergevec") == 2
+    assert " UNION ALL " in ok
+
+
+def test_union_mixed_blocks_verbatim_passthrough(rewrite):
+    # second block calls no UDAF — passes through verbatim
+    q = (
+        "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
+        "UNION SELECT g, SUM(v) AS s FROM b GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    assert ok.count("FROM __aus_fold_") == 1
+    assert "SELECT g, SUM(v) AS s FROM b GROUP BY g" in ok
+
+
+def test_union_level_order_by_limit_preserved(rewrite):
+    q = (
+        "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
+        "UNION ALL SELECT g, sum_udaf(v) AS s FROM b GROUP BY g "
+        "ORDER BY s DESC LIMIT 5"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    # the tail binds to the UNION, not the last block
+    assert ok.endswith("ORDER BY s DESC LIMIT 5")
+    assert ok.count("FROM __aus_fold_") == 2
+
+
+def test_union_expression_order_key_refused(rewrite):
+    q = (
+        "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
+        "UNION ALL SELECT g, sum_udaf(v) AS s FROM b GROUP BY g "
+        "ORDER BY s + 1"
+    )
+    assert rewrite(q) is None
+
+
+def test_intersect_and_except_supported(rewrite):
+    for op in ("INTERSECT", "EXCEPT ALL"):
+        q = (
+            f"SELECT g, sum_udaf(v) AS s FROM a GROUP BY g {op} "
+            "SELECT g, sum_udaf(v) AS s FROM b GROUP BY g"
+        )
+        ok = rewrite(q)
+        assert ok is not None and f" {op} " in ok
+
+
+def test_union_inside_subquery_not_split(rewrite):
+    # a set op INSIDE parens belongs to the FROM subquery, not the top level
+    q = (
+        "SELECT g, sum_udaf(v) AS s "
+        "FROM (SELECT g, v FROM a UNION ALL SELECT g, v FROM b) "
+        "GROUP BY g"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    assert ok.count("FROM __aus_fold_") == 1
+
+
+def test_union_unrewritable_block_refuses_whole_query(rewrite):
+    # DISTINCT arg in block 2 is unprovable -> the WHOLE query falls back
+    q = (
+        "SELECT g, sum_udaf(v) AS s FROM a GROUP BY g "
+        "UNION ALL SELECT g, sum_udaf(DISTINCT v) AS s FROM b GROUP BY g"
+    )
+    assert rewrite(q) is None
+
+
+def test_union_end_to_end(spark):
+    import arrow_udf_spark.functions.corpus  # noqa: F401
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 7)], ["g", "v"]
+    ).createOrReplaceTempView("u_e2e_1")
+    spark.createDataFrame(
+        [("a", 10), ("c", 4)], ["g", "v"]
+    ).createOrReplaceTempView("u_e2e_2")
+    rows = GLOBAL.sql(
+        spark,
+        "SELECT g, CAST(sum_udaf(CAST(v AS BIGINT)) AS BIGINT) AS s "
+        "FROM u_e2e_1 GROUP BY g "
+        "UNION ALL "
+        "SELECT g, CAST(sum_udaf(CAST(v AS BIGINT)) AS BIGINT) AS s "
+        "FROM u_e2e_2 GROUP BY g "
+        "ORDER BY g, s",
+    ).collect()
+    assert [(r.g, r.s) for r in rows] == [
+        ("a", 3), ("a", 10), ("b", 7), ("c", 4)
+    ]
+
+
+# -- multi-grouping clauses (ROLLUP / CUBE / GROUPING SETS) ----------------
+
+
+def test_rollup_rewritten_with_grouping_id_join(rewrite):
+    q = (
+        "SELECT a, b, sum_udaf(v) AS s, COUNT(*) AS c "
+        "FROM t GROUP BY ROLLUP(a, b)"
+    )
+    ok = rewrite(q)
+    assert ok is not None
+    # U reads the fold's states at the finest granularity (a, b) and
+    # re-aggregates them under the ORIGINAL clause; the COUNT folds into
+    # the same view (finest partial counts summed by the rollup), so B —
+    # a second full-source aggregation — does not exist
+    assert "SELECT a, b, grouping_id() AS __gid" in ok
+    assert "FROM __aus_fold_" in ok
+    assert ok.count("GROUP BY ROLLUP(a, b)") == 1
+    assert "COALESCE(SUM(__bp0), 0) AS __b0" in ok and "__aus_b" not in ok
+    # grouping_id() still projected for GROUPING()/outer references
+    assert "grouping_id() AS __gid" in ok
+
+
+def test_grouping_sets_and_cube_rewritten(rewrite):
+    for clause in ("CUBE(a, b)", "GROUPING SETS ((a, b), (a), ())"):
+        q = f"SELECT a, b, sum_udaf(v) AS s FROM t GROUP BY {clause}"
+        ok = rewrite(q)
+        assert ok is not None, clause
+        assert f"GROUP BY {clause}" in ok
+
+
+def test_grouping_id_select_item_reuses_gid(rewrite):
+    q = (
+        "SELECT a, grouping_id() AS gid, sum_udaf(v) AS s "
+        "FROM t GROUP BY ROLLUP(a)"
+    )
+    ok = rewrite(q)
+    assert ok is not None and "__gid AS gid" in ok
+
+
+def test_rollup_expression_member_refused(rewrite):
+    q = (
+        "SELECT pmod(x, 2) AS p, sum_udaf(v) AS s "
+        "FROM t GROUP BY ROLLUP(pmod(x, 2))"
+    )
+    assert rewrite(q) is None
+
+
+def test_rollup_end_to_end(spark):
+    import arrow_udf_spark.functions.corpus  # noqa: F401
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(
+        [("a", "x", 1), ("a", "y", 2), ("b", "x", 4), (None, "x", 8)],
+        ["a", "b", "v"],
+    ).createOrReplaceTempView("ru_e2e")
+    q_u = (
+        "SELECT a, b, grouping_id() AS gid, "
+        "CAST(sum_udaf(CAST(v AS BIGINT)) AS BIGINT) AS s "
+        "FROM ru_e2e GROUP BY ROLLUP(a, b)"
+    )
+    q_n = q_u.replace("sum_udaf(", "SUM(")
+    key = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
+    got = sorted(map(tuple, GLOBAL.sql(spark, q_u).collect()), key=key)
+    exp = sorted(map(tuple, spark.sql(q_n).collect()), key=key)
+    # the data-NULL group (None, 'x') and the super-aggregate rows carry
+    # distinct gids — the exact ambiguity the __gid join resolves
+    assert got == exp
+
+
+# -- correlated scalar subqueries: decorrelation contract and refusals ------
+
+
+_U = {"sum_udaf", "count_udaf"}
+
+
+def test_q17_shape_decorrelates(rewrite, spark):
+    from arrow_udf_spark.plans.registry import GLOBAL
+
+    q = (
+        "SELECT g, CAST(sum_udaf(v) AS BIGINT) AS s FROM t o "
+        "WHERE o.q * 5 < (SELECT sum_udaf(i.q) FROM t i "
+        "WHERE i.k = o.k) GROUP BY g"
+    )
+    rw = rewrite(q, _U)
+    assert rw is not None and "sum_udaf__mergevec" in rw
+    # the derived table carries the two-phase agg keyed by the join key;
+    # it joins the outer block's source, which its fold view reads
+    plan = GLOBAL.sql(spark, q)._jdf.queryExecution().analyzed().toString()
+    assert "__aus_corr0" in plan and "__ck0" in plan
+    # the outer UDAF is ALSO two-phase (two distinct fold views)
+    assert plan.count("MapInArrow") == 2
+
+
+def test_builtin_outer_returns_directly(rewrite):
+    # outer aggregates are native SUM/COUNT: after decorrelation nothing
+    # else needs protecting, so the rewrite returns the joined form
+    # without wrapping the outer block
+    q = (
+        "SELECT g, CAST(SUM(v) AS BIGINT) AS s FROM t o "
+        "WHERE o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k) "
+        "GROUP BY g"
+    )
+    rw = rewrite(q, _U)
+    assert rw is not None and "__aus_corr0" in rw
+    assert "__aus_u" in rw  # the subquery's own two-phase scope
+    assert "SELECT g, CAST(SUM(v) AS BIGINT) AS s" in rw  # outer verbatim
+
+
+def test_uncorrelated_global_cross_joins(rewrite):
+    q = (
+        "SELECT o.id FROM t o "
+        "WHERE o.q < (SELECT count_udaf(i.v) FROM t i)"
+    )
+    rw = rewrite(q, _U)
+    assert rw is not None and "__aus_corr0" in rw
+    assert "__ck" not in rw  # no key columns — single-row cross join
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        # non-equi correlation: a GROUP BY cannot express it
+        "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k < o.k)",
+        # COUNT-headed KEYED subquery: 0-on-empty breaks the join-drop
+        "o.q < (SELECT count_udaf(i.q) FROM t i WHERE i.k = o.k)",
+        # unqualified correlation column: ambiguous scope
+        "q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = k)",
+        # OR around the comparison: TRUE via the other arm on join miss
+        "o.x OR o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k)",
+        # subquery with its own GROUP BY: not a scalar-per-key shape
+        "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k GROUP BY i.j)",
+        # outer column inside the aggregate args: correlation through
+        # the argument, not expressible as a per-key GROUP BY
+        "o.q < (SELECT sum_udaf(i.q + o.z) FROM t i WHERE i.k = o.k)",
+        # bare unqualified identifier in the select item
+        "o.q < (SELECT sum_udaf(q2) FROM t i WHERE i.k = o.k)",
+        # unknown function inside an inner predicate
+        "o.q < (SELECT sum_udaf(i.q) FROM t i WHERE i.k = o.k AND rand(i.j) > 0)",
+    ],
+)
+def test_correlated_refusals(rewrite, where):
+    assert rewrite(f"SELECT o.a FROM t o WHERE {where}", _U) is None
+
+
+def test_count_allowed_uncorrelated(rewrite):
+    # global aggregates always yield exactly one row — COUNT is exact
+    q = "SELECT o.a FROM t o WHERE o.q < (SELECT count_udaf(i.q) FROM t i WHERE i.q > 0)"
+    assert rewrite(q, _U) is not None
+
+
+# -- spelling invariance: random spellings against the native referee -----
+
+
+#: NULL keys, -0.0 and 0.0 in the MIN/MAX column, NULL and negative x
+_REF_ROWS = [
+    (1, 0.0, 3), (1, -0.0, -2), (None, 1.5, 4), (None, -0.0, None),
+    (2, -2.5, 7), (2, 0.0, 0), (3, None, None),
+]
+
+#: (select items, GROUP BY, HAVING, ORDER BY) per shape; ``{S}`` and
+#: ``{C}`` are the implicit-or-AS alias slots
+_REF_SHAPES = [
+    (["g", "sum_udaf(x){S}"], "g", None, None),
+    (["sum_udaf(x){S}"], None, None, None),
+    (["g", "sum_udaf(x){S}"], "g", "sum_udaf(x) > 0 OR g IS NULL", None),
+    (["g", "sum_udaf(x){S}"], "g", None, "s DESC, g"),
+    (["g", "sum_udaf(x){S}", "COUNT(*){C}", "MIN(d) AS mn", "MAX(d) AS mx"],
+     "g", None, None),
+    (["sum_udaf(x){S}", "COUNT(x){C}", "MIN(d) AS mn"], None, None, None),
+]
+
+
+@st.composite
+def _spellings(draw):
+    """``(query, ordered)``: a query of a random shape in a random
+    spelling — keyword case, whitespace and newlines, comments between
+    clauses, AS or implicit aliases — with a WHERE that keeps all, some
+    or no rows."""
+    items, grp, hav, order = draw(st.sampled_from(_REF_SHAPES))
+    where = draw(st.sampled_from([None, "x > 0", "x > 1000"]))
+    gap = lambda: draw(st.sampled_from([" ", "\n", "  \n\t", "\n  "]))  # noqa: E731
+    note = lambda: draw(st.sampled_from(  # noqa: E731
+        ["", " -- note, ( 'x\n", " /* GROUP BY ) */ ", "/**/"]
+    ))
+
+    def kw(word):
+        return gap().join(
+            draw(st.sampled_from([w.upper(), w.lower(), w.title()]))
+            for w in word.split()
+        )
+
+    alias = lambda name: draw(st.sampled_from([f" AS {name}", f" {name}"]))  # noqa: E731
+    sel = ("," + gap()).join(it.format(S=alias("s"), C=alias("c")) for it in items)
+    sql = f"{kw('SELECT')}{gap()}{sel}{note()}{gap()}{kw('FROM')} ref_t"
+    for clause, body in (("WHERE", where), ("GROUP BY", grp),
+                         ("HAVING", hav), ("ORDER BY", order)):
+        if body:
+            sql += f"{note()}{gap()}{kw(clause)}{gap()}{body}"
+    sql = re.sub("sum_udaf", lambda _: draw(
+        st.sampled_from(["sum_udaf", "SUM_UDAF"])), sql)
+    return sql + note(), order is not None
+
+
+@settings(max_examples=20, deadline=None)
+@given(_spellings())
+def test_spellings_match_native_without_fallback(spark, spelling):
+    """Each spelling rewrites (no single-phase warning) and returns the
+    native answer; MIN/MAX may return either zero of -0.0/0.0, which
+    compare equal."""
+    from arrow_udf_spark import GLOBAL
+
+    query, ordered = spelling
+
+    GLOBAL.register_sql(spark)
+    spark.createDataFrame(_REF_ROWS, "g bigint, d double, x bigint") \
+        .createOrReplaceTempView("ref_t")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ours = GLOBAL.sql(spark, query)
+    assert not [w for w in caught if "not rewritable" in str(w.message)], query
+    native = spark.sql(
+        re.sub(r"(?i)sum_udaf\(x\)", "COALESCE(SUM(x), 0)", query)
+    )
+    assert ours.columns == native.columns
+    key = lambda r: repr([(v is None, v if v is None else v + 0) for v in r])  # noqa: E731
+    got, exp = ours.collect(), native.collect()
+    if not ordered:
+        got, exp = sorted(got, key=key), sorted(exp, key=key)
+    assert got == exp, query
