@@ -886,30 +886,41 @@ _SPELL_ROWS = [
 ]
 
 
+#: NULL keys, -0.0 and 0.0 in the MIN/MAX column, NULL and negative x
+_REF_ROWS = [
+    (1, 0.0, 3), (1, -0.0, -2), (None, 1.5, 4), (None, -0.0, None),
+    (2, -2.5, 7), (2, 0.0, 0), (3, None, None),
+]
+
+
 def _spelling_vs_native(spark, query, ordered=False):
     """Rows of ``Registry.sql(query)`` — asserting it took the rewrite,
     not the warned single-phase fallback — and of native Spark running
     ``query`` with ``COALESCE(SUM(x), 0)`` in place of ``sum_udaf(x)``
-    (sum_udaf is 0 on an all-NULL group), both over ``spell_t`` /
-    ``spell_u``; sorted unless ``ordered``."""
+    (sum_udaf is 0 on an all-NULL group), over ``spell_t``, ``spell_u``
+    and ``ref_t``; sorted unless ``ordered`` (-0.0 sorts as 0.0)."""
     from arrow_udf_spark import GLOBAL
 
     GLOBAL.register_sql(spark)
-    spark.createDataFrame(_SPELL_ROWS, "g bigint, k string, x bigint") \
-        .createOrReplaceTempView("spell_t")
-    spark.createDataFrame([("a",), ("b",), ("c",)], "k string") \
-        .createOrReplaceTempView("spell_u")
+    for rows, schema, name in (
+        (_SPELL_ROWS, "g bigint, k string, x bigint", "spell_t"),
+        ([("a",), ("b",), ("c",)], "k string", "spell_u"),
+        (_REF_ROWS, "g bigint, d double, x bigint", "ref_t"),
+    ):
+        spark.createDataFrame(rows, schema).createOrReplaceTempView(name)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         ours = GLOBAL.sql(spark, query)
-    assert not [w for w in caught if "not rewritable" in str(w.message)]
+    assert not [w for w in caught if "not rewritable" in str(w.message)], query
     native = spark.sql(
         re.sub(r"(?i)sum_udaf\(x\)", "COALESCE(SUM(x), 0)", query)
     )
     assert ours.columns == native.columns
     if ordered:
         return ours.collect(), native.collect()
-    key = lambda r: repr([(v is None, v) for v in r])  # noqa: E731
+    key = lambda r: repr([  # noqa: E731
+        (v is None, v + 0.0 if isinstance(v, float) else v) for v in r
+    ])
     return sorted(ours.collect(), key=key), sorted(native.collect(), key=key)
 
 
@@ -1435,12 +1446,6 @@ def test_count_allowed_uncorrelated(rewrite):
 # -- spelling invariance: random spellings against the native referee -----
 
 
-#: NULL keys, -0.0 and 0.0 in the MIN/MAX column, NULL and negative x
-_REF_ROWS = [
-    (1, 0.0, 3), (1, -0.0, -2), (None, 1.5, 4), (None, -0.0, None),
-    (2, -2.5, 7), (2, 0.0, 0), (3, None, None),
-]
-
 #: (select items, GROUP BY, HAVING, ORDER BY) per shape; ``{S}`` and
 #: ``{C}`` are the implicit-or-AS alias slots
 _REF_SHAPES = [
@@ -1491,23 +1496,6 @@ def test_spellings_match_native_without_fallback(spark, spelling):
     """Each spelling rewrites (no single-phase warning) and returns the
     native answer; MIN/MAX may return either zero of -0.0/0.0, which
     compare equal."""
-    from arrow_udf_spark import GLOBAL
-
     query, ordered = spelling
-
-    GLOBAL.register_sql(spark)
-    spark.createDataFrame(_REF_ROWS, "g bigint, d double, x bigint") \
-        .createOrReplaceTempView("ref_t")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        ours = GLOBAL.sql(spark, query)
-    assert not [w for w in caught if "not rewritable" in str(w.message)], query
-    native = spark.sql(
-        re.sub(r"(?i)sum_udaf\(x\)", "COALESCE(SUM(x), 0)", query)
-    )
-    assert ours.columns == native.columns
-    key = lambda r: repr([(v is None, v if v is None else v + 0) for v in r])  # noqa: E731
-    got, exp = ours.collect(), native.collect()
-    if not ordered:
-        got, exp = sorted(got, key=key), sorted(exp, key=key)
+    got, exp = _spelling_vs_native(spark, query, ordered)
     assert got == exp, query
