@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import corpus as C
+from .sources.io import read_table
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -28,59 +29,10 @@ QUERIES: dict[str, Query] = {}
 ORACLE: dict[str, str] = {}
 
 
-def _scan_parallelism(path: str) -> int:
-    """Partitions a parquet scan of ``path`` will produce (file bytes over
-    ``spark.sql.files.maxPartitionBytes``, the planner's own formula).
-
-    Directory datasets: sum the first 64 file sizes and treat 64+ files as
-    already-wide — a partitioned 100 TB table must NEVER look small just
-    because ``getsize(dir)`` returns the directory inode size."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            sizes = []
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    sizes.append(os.path.getsize(os.path.join(root, f)))
-                    if len(sizes) >= 64:
-                        return 1 << 30  # many files -> scan is already wide
-            size = sum(sizes)
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return 1 << 30  # unknown → assume wide, never force a shuffle
-    return max(1, size // (128 << 20))
-
-
 def t(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    # Adaptive spread (opt-in per query): a source whose scan parallelism is
-    # far below the cluster's leaves cores idle for the whole map-side of
-    # the plan (the testdata ships single-row-group files -> 1-task scans).
-    # One hash exchange on the parquet row index fixes that for queries
-    # whose per-row compute dominates (UDFs, per-token hashing): the spread
-    # is even and deterministic, so Spark does not sort every row first as
-    # it does before a round-robin exchange.  Queries that are cheap JVM
-    # projections or immediately shuffle anyway must NOT pay it (the
-    # exchange also blocks scan-level filter pushdown).  At 100 TB the
-    # branch never fires: a real scan yields >= parallelism splits.
-    par = spark.sparkContext.defaultParallelism
-    if spread and _scan_parallelism(path) < max(2, par // 2):
-        df = df.repartition(par, F.col("_metadata.row_index"))
-    if name == "events":
-        # schema-sensitive ts normalization: guarantees `ts` (timestamp) and
-        # `us` (bigint micros-since-epoch == DuckDB epoch_us(ts)) whatever
-        # physical type the fixture ships (int64 nanos or TIMESTAMP(MICROS)).
-        from .sources.io import normalize_events
-
-        df = normalize_events(df, cache_key=path)
-    return df
+    return read_table(spark, f"{sf_dir}/{name}.parquet", spread)
 
 
 def query(name: str, oracle: str | None = None):

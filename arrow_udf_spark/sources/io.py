@@ -5,8 +5,9 @@ Everything relational is delegated to Spark's native connectors
 column pruning, and partition pruning come free from the parquet/csv/json
 DataSource V2 readers).  This module adds:
 
-- a :class:`Catalog` for the driver's testdata star schema (handles the
-  events table's nanosecond timestamps);
+- :func:`read_table`, the one reader of a catalog table file (used by
+  :class:`Catalog` and ``queries.t``): it infers a file's parquet schema
+  once per session and normalizes the events table's timestamps;
 - :func:`read_arrow_ipc` — a **distributed** Arrow IPC file reader Spark
   lacks natively: files land as ``binaryFile`` rows and are decoded to
   record batches inside ``mapInArrow``, so no byte ever passes through the
@@ -17,6 +18,7 @@ DataSource V2 readers).  This module adds:
 
 from __future__ import annotations
 
+import os
 from typing import Iterator, Optional, Sequence
 
 import pyarrow as pa
@@ -28,6 +30,7 @@ __all__ = [
     "conform_schema",
     "normalize_events",
     "read_arrow_ipc",
+    "read_table",
     "write_parquet",
     "write_bucketed",
     "TABLES",
@@ -57,9 +60,6 @@ _EPOCH_UNITS = (
     (100_000_000_000, "ms"),
 )
 
-#: micros-per-unit for each inferred unit
-_UNIT_TO_US = {"ns": ("DIV", 1000), "us": ("MUL", 1), "ms": ("MUL", 1000), "s": ("MUL", 1_000_000)}
-
 
 def _infer_epoch_unit(df: DataFrame, col: str) -> str:
     """Infer the epoch unit of a bigint column ONCE per column from
@@ -77,27 +77,23 @@ def _infer_epoch_unit(df: DataFrame, col: str) -> str:
 
 
 def _epoch_to_us(col: str, unit: str):
-    op, k = _UNIT_TO_US[unit]
-    if op == "DIV":
+    if unit == "ns":
         # integer DIV, not float /: double's 53-bit mantissa corrupts the
         # low bits of int64 nanos
-        return F.expr(f"`{col}` DIV {k}")
+        return F.expr(f"`{col}` DIV 1000")
+    k = {"us": 1, "ms": 1000, "s": 1_000_000}[unit]
     return F.col(col) * k if k != 1 else F.col(col)
 
 
-#: (cache_key, simpleSchema) -> inferred unit, so repeated reads of the same
-#: fixture don't re-run the max(abs) job (ADVICE r3: asof/sessionize/
-#: range_join/resample were each re-probing)
+#: (file identity, simpleSchema) -> inferred unit: a rewritten file has a
+#: new identity and is probed again
 _UNIT_CACHE: dict = {}
 
 
-def normalize_events(df: DataFrame, cache_key: Optional[str] = None) -> DataFrame:
-    """Schema-sensitive normalization of the events table's ``ts`` column.
-
-    The driver's fixtures have shipped ``ts`` under two physical types so
-    far (int64 nanos-since-epoch in round 1, parquet TIMESTAMP(MICROS) in
-    round 2+); deriving from the *observed* schema instead of assuming one
-    makes every downstream query robust to either.  Output contract:
+def normalize_events(df: DataFrame, cache_key: Optional[tuple] = None) -> DataFrame:
+    """Schema-sensitive normalization of the events table's ``ts`` column,
+    derived from the *observed* schema (fixtures have shipped int64
+    nanos-since-epoch and parquet TIMESTAMP(MICROS)).  Output contract:
 
     - ``ts``  — TimestampType (session tz is UTC, so NTZ->TZ cast is the
       identity on the wall-clock value, matching DuckDB's naive timestamp);
@@ -105,18 +101,15 @@ def normalize_events(df: DataFrame, cache_key: Optional[str] = None) -> DataFram
       returns), appended as the stable arithmetic-friendly column.
 
     For a bigint ``ts`` the unit is inferred once per column from
-    ``max(abs)`` (one tiny agg job) rather than assumed nanos — a fixture
-    shipping int64 micros or millis normalizes correctly instead of being
-    silently divided by 1000.
+    ``max(abs)`` (one tiny agg job, memoized per ``cache_key``) rather
+    than assumed nanos, so int64 micros or millis normalize correctly.
     """
     dt = dict(df.dtypes).get("ts")
     if dt == "bigint":  # integer epoch (unit inferred, not assumed)
         ck = (cache_key, df.schema.simpleString()) if cache_key else None
-        unit = _UNIT_CACHE.get(ck) if ck else None
-        if unit is None:
-            unit = _infer_epoch_unit(df, "ts")
-            if ck:
-                _UNIT_CACHE[ck] = unit
+        unit = _UNIT_CACHE.get(ck) or _infer_epoch_unit(df, "ts")
+        if ck:
+            _UNIT_CACHE[ck] = unit
         df = df.withColumn("us", _epoch_to_us("ts", unit)).withColumn(
             "ts", F.timestamp_micros(F.col("us"))
         )
@@ -124,6 +117,65 @@ def normalize_events(df: DataFrame, cache_key: Optional[str] = None) -> DataFram
         df = df.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
             "us", F.unix_micros(F.col("ts"))
         )
+    return df
+
+
+def _scan_parallelism(path: str) -> int:
+    """Partitions a parquet scan of ``path`` will produce (file bytes over
+    ``spark.sql.files.maxPartitionBytes``, the planner's own formula).
+
+    Directory datasets: sum the first 64 file sizes and treat 64+ files as
+    already-wide — a partitioned 100 TB table must NEVER look small just
+    because ``getsize(dir)`` returns the directory inode size."""
+    try:
+        if os.path.isdir(path):
+            sizes = []
+            for root, _dirs, files in os.walk(path):
+                for f in files:
+                    if f.startswith((".", "_")):
+                        continue
+                    sizes.append(os.path.getsize(os.path.join(root, f)))
+                    if len(sizes) >= 64:
+                        return 1 << 30  # many files -> scan is already wide
+            size = sum(sizes)
+        else:
+            size = os.path.getsize(path)
+    except OSError:
+        return 1 << 30  # unknown → assume wide, never force a shuffle
+    return max(1, size // (128 << 20))
+
+
+def read_table(spark: SparkSession, path: str, spread: bool = False) -> DataFrame:
+    """Read one catalog table file, normalizing ``events.parquet``'s ``ts``.
+
+    The first read of a regular file in a session infers its schema (a
+    one-task Spark job over the footer); later reads of the same file
+    (path, inode, mtime, size) pass it in and run no job.  The memo lives
+    on the session, whose parquet settings shape the schema, and holds
+    schemas only, so each call returns fresh attribute ids.  A directory
+    is inferred on every read (a partition's rewrite keeps its mtime)."""
+    st = os.stat(path) if os.path.isfile(path) else None
+    key = st and (os.path.abspath(path), st.st_ino, st.st_mtime_ns, st.st_size)
+    memo = spark.__dict__.setdefault("_aus_table_schemas", {})
+    known = memo.get(key)
+    df = (spark.read.schema(known) if known else spark.read).parquet(path)
+    if key and not known:
+        memo[key] = df.schema
+    # Adaptive spread (opt-in per query): a source whose scan parallelism is
+    # far below the cluster's leaves cores idle for the whole map-side of
+    # the plan (the testdata ships single-row-group files -> 1-task scans).
+    # One hash exchange on the parquet row index fixes that for queries
+    # whose per-row compute dominates (UDFs, per-token hashing): the spread
+    # is even and deterministic, so Spark does not sort every row first as
+    # it does before a round-robin exchange.  Queries that are cheap JVM
+    # projections or immediately shuffle anyway must NOT pay it (the
+    # exchange also blocks scan-level filter pushdown).  At 100 TB the
+    # branch never fires: a real scan yields >= parallelism splits.
+    par = spark.sparkContext.defaultParallelism
+    if spread and _scan_parallelism(path) < max(2, par // 2):
+        df = df.repartition(par, F.col("_metadata.row_index"))
+    if os.path.basename(path) == "events.parquet":
+        df = normalize_events(df, cache_key=key)
     return df
 
 
@@ -135,10 +187,7 @@ class Catalog:
         self.sf_dir = sf_dir
 
     def table(self, name: str) -> DataFrame:
-        df = self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
-        if name == "events":
-            df = normalize_events(df, cache_key=f"{self.sf_dir}/{name}.parquet")
-        return df
+        return read_table(self.spark, f"{self.sf_dir}/{name}.parquet")
 
     def register_views(self) -> None:
         for name in TABLES:
@@ -153,8 +202,6 @@ def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
     ``mapInArrow`` — driver never touches data.  All files must share one
     schema (sampled from the first file).
     """
-    import pyarrow.ipc as ipc
-
     bin_df = spark.read.format("binaryFile").load(path)
 
     # sample the schema from one file (driver reads only the header)
@@ -246,27 +293,23 @@ def compact_parquet(
 
     jvm = spark._jvm
     java_import(jvm, "org.apache.hadoop.fs.Path")
-    p = jvm.Path(src)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            total += f.getLen()
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
+
+    def sizes(path: str) -> list:  # bytes of each .parquet file under path
+        p = jvm.Path(path)
+        it = p.getFileSystem(spark._jsc.hadoopConfiguration()).listFiles(p, True)
+        out = []
+        while it.hasNext():
+            f = it.next()
+            if f.getPath().getName().endswith(".parquet"):
+                out.append(f.getLen())
+        return out
+
+    n_files = max(1, math.ceil(sum(sizes(src)) / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(src).repartition(n_files)
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
     df.write.mode("overwrite").parquet(dst)
-    out = jvm.Path(dst)
-    ofs = out.getFileSystem(spark._jsc.hadoopConfiguration())
-    oit = ofs.listFiles(out, True)
-    n_out = 0
-    while oit.hasNext():
-        if oit.next().getPath().getName().endswith(".parquet"):
-            n_out += 1
-    return n_out
+    return len(sizes(dst))
 
 
 #: physical-type families conform_schema knows how to reconcile

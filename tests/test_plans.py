@@ -604,6 +604,51 @@ def test_one_column_view():
     assert not folds, folds
 
 
+def test_one_table_reader():
+    """Catalog tables are read through one reader: ``queries.t`` and
+    ``Catalog.table`` call ``sources.io.read_table``, and no other batch
+    ``.read...parquet(...)`` in the package reads a catalog table path
+    (one built from the scale-factor directory or a ``.parquet`` name).
+    Re-reads of files a query has just written are not catalog reads."""
+    import ast
+    from pathlib import Path
+
+    import arrow_udf_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    callers = {("queries.py", "t"), ("sources/io.py", "table")}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            if (rel, fn.name) in callers:
+                called = {
+                    c.func.id
+                    for c in ast.walk(fn)
+                    if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+                }
+                assert "read_table" in called, (rel, fn.name)
+                callers.discard((rel, fn.name))
+            if (rel, fn.name) == ("sources/io.py", "read_table"):
+                continue
+            for c in ast.walk(fn):
+                if not (
+                    isinstance(c, ast.Call)
+                    and isinstance(c.func, ast.Attribute)
+                    and c.func.attr == "parquet"
+                ):
+                    continue
+                if not re.search(r"\.read\b", ast.unparse(c.func.value)):
+                    continue
+                arg = ast.unparse(c.args[0]) if c.args else ""
+                if re.search(r"\.parquet|\bsf(_dir)?\b", arg):
+                    hits.append(f"{rel}:{c.lineno}: {arg}")
+    assert not callers, callers
+    assert not hits, hits
+
+
 def test_one_sql_tokenizer():
     """The ``Registry.sql`` rewriter reads SQL text through one tokenizer:
     quote tracking and paren-depth counting appear once each, in

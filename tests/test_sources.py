@@ -240,3 +240,120 @@ def test_reference_server_failure_names_its_cause():
         pytest.skip("the reference tree is present, so the server starts")
     with pytest.raises(RuntimeError, match="reference package not found"):
         serve_reference()
+
+
+# -- one reader of a catalog table file (sources.io.read_table) ------------
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read_table_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _norm_plan(df) -> str:
+    import re
+
+    return re.sub(r"#\d+", "#", df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_read_table_memo_matches_inferred_read(spark, sf_dir):
+    """For every fixture table a memoized read (the schema passed in) has
+    the schema and the executed plan of an inferred read."""
+    from arrow_udf_spark.sources.io import TABLES, normalize_events, read_table
+
+    for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        read_table(spark, path)
+        memo = read_table(spark, path)
+        inferred = spark.read.parquet(path)
+        if name == "events":
+            inferred = normalize_events(inferred)
+        assert memo.schema.json() == inferred.schema.json(), name
+        assert _norm_plan(memo) == _norm_plan(inferred), name
+
+
+def test_read_table_infers_once_per_file(spark, tmp_path):
+    """The first read of a fresh file infers its schema with a Spark job;
+    the second read of the same file runs none."""
+    import pyarrow.parquet as pq
+
+    from arrow_udf_spark.sources.io import read_table
+
+    path = str(tmp_path / "fresh.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    first, n_first = _jobs(spark, lambda: read_table(spark, path))
+    second, n_second = _jobs(spark, lambda: read_table(spark, path))
+    assert n_first >= 1
+    assert n_second == 0
+    assert sorted(r.a for r in second.collect()) == [1, 2, 3]
+
+
+def test_read_table_sees_a_rewritten_schema(spark, tmp_path):
+    """Overwriting a file with another schema gives it a new identity, so
+    the next read infers again and sees the new columns."""
+    import pyarrow.parquet as pq
+
+    from arrow_udf_spark.sources.io import read_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1]}), path)
+    assert read_table(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"a": [2], "b": ["x"]}), path)
+    back = read_table(spark, path)
+    assert back.columns == ["a", "b"]
+    assert [tuple(r) for r in back.collect()] == [(2, "x")]
+
+
+def test_events_unit_follows_a_rewritten_file(spark, tmp_path):
+    """The epoch unit of a bigint ``ts`` is memoized per file identity:
+    rewriting ``events.parquet`` with the same instant in micros instead of
+    nanos (same path, same schema) must not reuse the nanos unit."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "events.parquet")
+    cat = Catalog(spark, str(tmp_path))
+    us = 1_700_000_000_000_000
+    pq.write_table(pa.table({"event_id": [1], "ts": [us * 1000]}), path)
+    assert cat.table("events").first()["us"] == us
+    pq.write_table(pa.table({"event_id": [1], "ts": [us]}), path)
+    assert cat.table("events").first()["us"] == us
+
+
+def test_two_reads_of_one_table_self_join(spark, sf_dir):
+    """Each read is a new relation with fresh attribute ids, so a column
+    from each side of a self-join resolves without ambiguity."""
+    from arrow_udf_spark.queries import t
+
+    a, b = t(spark, sf_dir, "lineitem"), t(spark, sf_dir, "lineitem")
+    j = a.join(b, a.l_orderkey == b.l_orderkey).select(a.l_partkey, b.l_suppkey)
+    per_order = a.groupBy("l_orderkey").count().collect()
+    assert j.count() == sum(r["count"] ** 2 for r in per_order)
+
+
+def test_read_table_directory_dataset(spark, tmp_path):
+    """A directory dataset reads, and is inferred on every read: a change
+    inside it need not touch the directory's own mtime."""
+    import pyarrow.parquet as pq
+
+    from arrow_udf_spark.sources.io import read_table
+
+    d = tmp_path / "dir.parquet"
+    (d / "k=1").mkdir(parents=True)
+    pq.write_table(pa.table({"a": [1, 2]}), str(d / "k=1" / "part-0.parquet"))
+    first, n_first = _jobs(spark, lambda: read_table(spark, str(d)))
+    assert sorted(map(tuple, first.collect())) == [(1, 1), (2, 1)]
+    (d / "k=2").mkdir()
+    pq.write_table(pa.table({"a": [3]}), str(d / "k=2" / "part-0.parquet"))
+    second, n_second = _jobs(spark, lambda: read_table(spark, str(d)))
+    assert n_first >= 1 and n_second >= 1
+    assert sorted(map(tuple, second.collect())) == [(1, 1), (2, 1), (3, 2)]
