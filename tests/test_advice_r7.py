@@ -1,10 +1,10 @@
 """Regression tests for the round-6 ADVICE items fixed in round 7.
 
 1-2. The rewriter cases (scalar subqueries are never hoisted out of
-   their scope; unbalanced parens are refused, as
-   ``test_unbalanced_parens_refused``) live in ``tests/test_registry.py``.
-   The two ``WHERE x IN (SELECT ... ORDER BY ...)`` cases now rewrite
-   there (``test_where_subquery_with_order_by_rewrites``,
+   their scope; unbalanced parens are refused) moved to
+   ``tests/test_registry.py``, and the imports below keep their
+   names here.  The two ``WHERE x IN (SELECT ... ORDER BY ...)`` cases
+   now rewrite there (``test_where_subquery_with_order_by_rewrites``,
    ``..._limit_rewrites``): the clause split no longer cuts WHERE at the
    subquery's ORDER BY.
 3. (low) count_min_estimate's truth side counts the same (empty-token
@@ -12,6 +12,18 @@
 4. (low) source_token_tv computes its numerator in DECIMAL(38,0) so the
    c_A(t)*N_B products cannot silently wrap int64 at 100 TB corpora.
 """
+
+from test_registry import (  # noqa: F401 (moved; the old names stay)
+    test_e2e_having_scalar_subquery_single_phase,
+    test_exists_subquery_in_having_falls_back,
+    test_having_with_builtin_and_case_still_rewrites,
+    test_plain_having_still_rewrites,
+    test_scalar_subquery_in_having_falls_back,
+    test_scalar_subquery_in_order_by_falls_back,
+    test_scalar_subquery_in_select_falls_back,
+    test_unbalanced_parens_refused as test_split_tail_depth_guard,
+)
+
 
 # -- 3. CMS truth side matches the sketch stream ---------------------------
 
