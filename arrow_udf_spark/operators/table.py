@@ -70,11 +70,11 @@ def _sync_gen(fn: Callable) -> Callable:
 
 
 def _fan_out(
-    fn: Callable, args: Sequence[pa.Array], n: int, csize: int, fallible: bool
+    fn: Callable, args: Sequence[pa.Array], n: int, fallible: bool
 ) -> Iterator[tuple[list, list, list]]:
     """The row loop of a table function over one input batch: ``fn`` runs
     on each row's Python values (:func:`py_values`) and the output comes
-    in ``(src, values, errors)`` chunks of at most ``csize`` rows, ``src``
+    in ``(src, values, errors)`` chunks of at most BATCH_SIZE rows, ``src``
     holding each output row's 0-based input row within this batch.  A
     fallible row that raises yields one ``(row, None, message)``."""
     rows = zip(*map(py_values, args)) if args else [()] * n
@@ -87,7 +87,7 @@ def _fan_out(
                 src.append(r)
                 flat.append(v)
                 errs.append(None)
-                if len(flat) >= csize:
+                if len(flat) >= BATCH_SIZE:
                     yield src, flat, errs
                     src, flat, errs = [], [], []
         except Exception as e:  # row-level error isolation
@@ -107,7 +107,6 @@ class TableFunction:
     input_fields: tuple[ExtField, ...]
     result_field: ExtField
     fallible: bool = False
-    chunk_size: int = BATCH_SIZE
     #: optional vectorized fan-out: (*columns) -> sequence of per-row
     #: iterables.  Output rows are assembled with one Arrow take per batch
     #: instead of a per-output-row Python loop.
@@ -181,40 +180,32 @@ class TableFunction:
         _Udtf.__name__ = self.sig.name
         return spark_udtf(_Udtf, returnType=schema)
 
-    def apply(
-        self,
-        df: DataFrame,
-        cols: Sequence[str],
-        passthrough: Sequence[str] = (),
-        chunk_size: Optional[int] = None,
-    ) -> DataFrame:
-        """Lateral-apply this table function over ``df``.
-
-        ``cols`` are the argument columns; ``passthrough`` columns are
-        repeated onto every output row (lateral-view style).  With no
-        passthrough, a partition-local 0-based ``row`` index column is
-        emitted instead (the reference's exact output shape).
+    def evaluator(
+        self, passthrough: Sequence[str] = ()
+    ) -> Callable[..., Iterator[pa.RecordBatch]]:
+        """The table-function evaluator of every front (:meth:`apply` and
+        the Flight server): ``evaluate(columns, n, row_base=0)`` fans out
+        one input batch of ``n`` rows whose leading columns are the
+        ``passthrough`` ones, repeated onto each output row, and whose
+        other columns are the arguments.  With no passthrough the leading
+        output column is ``row``: ``row_base`` plus the input row's index
+        in this batch.  A ``batch_fn`` gives one output batch per input
+        batch; the row path gives BATCH_SIZE-row chunks (:func:`_fan_out`).
         """
-        csize = chunk_size or self.chunk_size
         fn = _sync_gen(self.fn)
         batch_fn = self.batch_fn
         arrow_in = batch_fn is not None and takes_arrow(batch_fn)
         fallible = self.fallible
         vtype = to_arrow_type(self.result_field.dtype)
         n_pt = len(passthrough)
+        out_names = [*passthrough] if n_pt else ["row"]
+        out_names += [self.sig.name, "error"] if fallible else [self.sig.name]
 
-        proj = df.select(*passthrough, *cols)
-        pt_schema = (
-            T.StructType([df.schema[c] for c in passthrough]) if passthrough else None
-        )
-        out_schema = self.output_schema(pt_schema)
-        out_names = [f.name for f in out_schema.fields]
-
-        def emit(rb: pa.RecordBatch, src, row_base: int, flat: list, errs) -> pa.RecordBatch:
+        def emit(columns, src, row_base: int, flat: list, errs) -> pa.RecordBatch:
             """One output batch: output row k repeats input row ``src[k]``."""
             idx = pa.array(src, pa.int64())
             if n_pt:
-                out = [rb.column(i).take(idx) for i in range(n_pt)]
+                out = [columns[i].take(idx) for i in range(n_pt)]
             else:
                 out = [pc.add(idx, row_base).cast(pa.int32())]
             out.append(to_arrow(flat, vtype, len(flat)))
@@ -246,19 +237,43 @@ class TableFunction:
                 # batches would just multiply serialization overhead
                 yield src, list(itertools.chain.from_iterable(lists)), errs
 
-        chunks = (
-            vec_chunks if batch_fn else partial(_fan_out, fn, csize=csize, fallible=fallible)
+        chunks = vec_chunks if batch_fn else partial(_fan_out, fn, fallible=fallible)
+
+        def evaluate(
+            columns: Sequence[pa.Array], n: int, row_base: int = 0
+        ) -> Iterator[pa.RecordBatch]:
+            for src, flat, errs in chunks(columns[n_pt:], n):
+                yield emit(columns, src, row_base, flat, errs)
+
+        return evaluate
+
+    def apply(
+        self,
+        df: DataFrame,
+        cols: Sequence[str],
+        passthrough: Sequence[str] = (),
+    ) -> DataFrame:
+        """Lateral-apply this table function over ``df``.
+
+        ``cols`` are the argument columns; ``passthrough`` columns are
+        repeated onto every output row (lateral-view style).  With no
+        passthrough, a partition-local 0-based ``row`` index column is
+        emitted instead (the reference's exact output shape).
+        """
+        pt_schema = (
+            T.StructType([df.schema[c] for c in passthrough]) if passthrough else None
         )
+        evaluate = self.evaluator(passthrough)
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             row_base = 0  # partition-local input row counter
             for rb in batches:
-                args = [rb.column(n_pt + i) for i in range(len(cols))]
-                for src, flat, errs in chunks(args, rb.num_rows):
-                    yield emit(rb, src, row_base, flat, errs)
+                yield from evaluate(rb.columns, rb.num_rows, row_base)
                 row_base += rb.num_rows
 
-        return proj.mapInArrow(run, schema=out_schema)
+        return df.select(*passthrough, *cols).mapInArrow(
+            run, schema=self.output_schema(pt_schema)
+        )
 
 
 def udtf(
@@ -266,7 +281,6 @@ def udtf(
     result_type: str = "null",
     name: Optional[str] = None,
     fallible: bool = False,
-    chunk_size: int = BATCH_SIZE,
     registry: Registry = GLOBAL,
 ) -> Callable[[Callable], TableFunction]:
     """Declare a table function (reference ``#[function("f(t) ->> t")]``)::
@@ -291,7 +305,6 @@ def udtf(
             input_fields=tuple(parse_type(t) for t in input_types),
             result_field=parse_type(result_type),
             fallible=fallible,
-            chunk_size=chunk_size,
         )
         registry.add(tf)
         return tf

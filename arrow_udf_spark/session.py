@@ -68,7 +68,7 @@ def _lazy_zip_invalidation() -> None:
 _lazy_zip_invalidation()
 
 
-def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = None):
+def configure(builder: SparkSession.Builder):
     """Apply engine defaults to a SparkSession builder."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
@@ -83,9 +83,7 @@ def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = No
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_ARROW_BATCH))
-        .config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus))
-        )
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # split file scans into at least defaultParallelism partitions:

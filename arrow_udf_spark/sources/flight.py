@@ -13,18 +13,18 @@ arrow-udf-remote/python/arrow_udf/__init__.py:356-436):
 - a ``protocol_version`` action for version negotiation
   (remote/mod.rs:53-65).
 
-Spark integration: :func:`remote_scalar` runs the Flight client *inside*
-``mapInArrow`` — each executor task opens one connection and streams its
-Arrow batches through the exchange, which is exactly the reference's
-process boundary with Spark on the client side.  At cluster scale the
-server address can be any reachable UDF service; per-partition connections
-parallelize the calls.
+Spark integration: :func:`remote_scalar` and :func:`remote_table` run the
+Flight client *inside* ``mapInArrow`` — each executor task opens one
+connection and streams its Arrow batches through the exchange, which is
+exactly the reference's process boundary with Spark on the client side.
+At cluster scale the server address can be any reachable UDF service;
+per-partition connections parallelize the calls.
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Iterator, Optional, Sequence
+from typing import Iterable, Iterator, Sequence
 
 import pyarrow as pa
 
@@ -36,8 +36,8 @@ except ImportError:  # pragma: no cover
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..operators.scalar import ScalarFunction, _eval_arrays, to_arrow
-from ..operators.table import TableFunction, _fan_out, _sync_gen
+from ..operators.scalar import ScalarFunction, _eval_arrays
+from ..operators.table import TableFunction
 from ..plans.registry import Registry
 
 __all__ = [
@@ -137,11 +137,13 @@ def _spark_to_arrow_field(name: str, dtype: T.DataType, ext: str | None = None) 
 
 
 class UdfFlightServer(flight.FlightServerBase if flight else object):
-    """Arrow Flight server hosting registered scalar functions.
+    """Arrow Flight server hosting registered scalar and table functions.
 
-    Functions are evaluated with the same batch-eval core as local
-    execution (null modes, error column, batched mode all behave
-    identically whether a function runs in-process or remote).
+    Functions are evaluated with the same evaluators as local execution
+    (``_eval_arrays`` for scalars, :meth:`TableFunction.evaluator` for
+    table functions): null modes, error column, batched mode and a table
+    function's ``batch_fn`` all behave identically whether a function runs
+    in-process or remote.
     """
 
     def __init__(self, location: str = "grpc://127.0.0.1:0"):
@@ -151,23 +153,24 @@ class UdfFlightServer(flight.FlightServerBase if flight else object):
         # explicitly passing a location AND fronting it with auth/TLS
         # (Flight middleware) — see reference arrow-udf-remote server docs.
         super().__init__(location)
-        self._fns: dict[str, ScalarFunction] = {}
-        self._tfs: dict[str, TableFunction] = {}
+        self._fns: dict[str, ScalarFunction | TableFunction] = {}
 
     # -- registration ---------------------------------------------------
-    def add_function(self, fn: ScalarFunction) -> None:
-        # first overload owns the bare name; others are reachable by
-        # mangled name (mirrors Registry.register_sql)
-        self._fns.setdefault(fn.sig.name, fn)
-        self._fns[fn.sig.mangled()] = fn
+    def host(self, fns: Iterable) -> None:
+        """Serve exactly the scalar and table functions among ``fns``
+        (others, e.g. aggregates, are skipped).  The first overload owns
+        the bare name; others are reachable by mangled name (mirrors
+        Registry.register_sql).  The name map is built aside and swapped
+        in with one assignment, so a call in flight sees the old set or
+        the new one."""
+        named: dict[str, ScalarFunction | TableFunction] = {}
+        for f in fns:
+            if isinstance(f, (ScalarFunction, TableFunction)):
+                named.setdefault(f.sig.name, f)
+                named[f.sig.mangled()] = f
+        self._fns = named
 
-    def add_table_function(self, tf: TableFunction) -> None:
-        """Host a set-returning function (reference call_table_function,
-        remote/mod.rs:102-156; server @udtf, __init__.py:150-205)."""
-        self._tfs.setdefault(tf.sig.name, tf)
-        self._tfs[tf.sig.mangled()] = tf
-
-    def _schemas(self, fn: ScalarFunction) -> tuple[pa.Schema, pa.Schema]:
+    def _schemas(self, fn: ScalarFunction | TableFunction) -> tuple[pa.Schema, pa.Schema]:
         # ext-typed fields advertise their extension tag as Arrow field
         # metadata under the configurable key (reference pyarrow.rs:120-133)
         in_fields = [
@@ -179,34 +182,16 @@ class UdfFlightServer(flight.FlightServerBase if flight else object):
                 fn.sig.name, fn.result_field.dtype, fn.result_field.ext
             )
         ]
+        if isinstance(fn, TableFunction):
+            # reference table-fn output shape: (row: int32, value, [error])
+            out_fields.insert(0, pa.field("row", pa.int32()))
         if fn.fallible:
-            out_fields.append(pa.field("error", pa.string()))
-        return pa.schema(in_fields), pa.schema(out_fields)
-
-    def _tf_schemas(self, tf: TableFunction) -> tuple[pa.Schema, pa.Schema]:
-        in_fields = [
-            _spark_to_arrow_field(f"arg{i}", f.dtype, f.ext)
-            for i, f in enumerate(tf.input_fields)
-        ]
-        # reference table-fn output shape: (row: int32, value, [error])
-        out_fields = [
-            pa.field("row", pa.int32()),
-            _spark_to_arrow_field(
-                tf.sig.name, tf.result_field.dtype, tf.result_field.ext
-            ),
-        ]
-        if tf.fallible:
             out_fields.append(pa.field("error", pa.string()))
         return pa.schema(in_fields), pa.schema(out_fields)
 
     # -- Flight handlers ------------------------------------------------
     def get_flight_info(self, context, descriptor):
-        name = descriptor.path[0].decode()
-        if name in self._tfs:
-            in_s, out_s = self._tf_schemas(self._tfs[name])
-        else:
-            fn = self._fns[name]
-            in_s, out_s = self._schemas(fn)
+        in_s, out_s = self._schemas(self._fns[descriptor.path[0].decode()])
         # concat(input, output) fields; total_records = #args (the
         # reference's discovery encoding)
         full = pa.schema(list(in_s) + list(out_s))
@@ -215,7 +200,7 @@ class UdfFlightServer(flight.FlightServerBase if flight else object):
         )
 
     def list_flights(self, context, criteria):
-        for name in list(self._fns) + list(self._tfs):
+        for name in list(self._fns):
             yield self.get_flight_info(
                 context, flight.FlightDescriptor.for_path(name.encode())
             )
@@ -226,12 +211,12 @@ class UdfFlightServer(flight.FlightServerBase if flight else object):
         raise NotImplementedError(action.type)
 
     def do_exchange(self, context, descriptor, reader, writer):
-        """Evaluate one call with the executor-side core of the Spark
-        path (``_eval_arrays``): Arrow in, Arrow out."""
-        name = descriptor.path[0].decode()
-        if name in self._tfs:
-            return self._exchange_table(self._tfs[name], reader, writer)
-        fn = self._fns[name]
+        """Evaluate one call with the Spark path's evaluator (a scalar's
+        ``_eval_arrays``, a table function's ``evaluator``): Arrow in,
+        Arrow out."""
+        fn = self._fns[descriptor.path[0].decode()]
+        if isinstance(fn, TableFunction):
+            return self._exchange_table(fn, reader, writer)
         spec = fn._spec()
         in_s, out_s = self._schemas(fn)
         writer.begin(out_s)
@@ -242,26 +227,18 @@ class UdfFlightServer(flight.FlightServerBase if flight else object):
         writer.close()
 
     def _exchange_table(self, tf: TableFunction, reader, writer) -> None:
-        """Stream (row, value[, error]) batches: the row loop of
-        ``TableFunction.apply`` fed one input batch at a time, so ``row``
-        indexes that batch, re-chunked at the function's chunk size (the
-        reference BATCH_SIZE, codegen_utils.rs:634-667)."""
-        in_s, out_s = self._tf_schemas(tf)
-        fn = _sync_gen(tf.fn)
+        """Stream (row, value[, error]) batches from the evaluator of
+        ``TableFunction.apply``, fed one input batch at a time with no
+        passthrough and ``row_base`` 0, so ``row`` indexes that batch.
+        Each output batch goes out under the advertised schema, extension
+        metadata included."""
+        in_s, out_s = self._schemas(tf)
+        evaluate = tf.evaluator()
         writer.begin(out_s)
         for chunk in reader:
-            batch = chunk.data
-            args = _edge_columns(batch, in_s)
-            for src, vals, errs in _fan_out(
-                fn, args, batch.num_rows, tf.chunk_size, tf.fallible
-            ):
-                arrays = [
-                    pa.array(src, pa.int32()),
-                    to_arrow(vals, out_s.field(1).type, len(vals)),
-                ]
-                if tf.fallible:
-                    arrays.append(pa.array(errs, pa.string()))
-                writer.write_batch(pa.RecordBatch.from_arrays(arrays, schema=out_s))
+            args = _edge_columns(chunk.data, in_s)
+            for out in evaluate(args, chunk.data.num_rows):
+                writer.write_batch(pa.RecordBatch.from_arrays(out.columns, schema=out_s))
         writer.close()
 
 
@@ -305,30 +282,73 @@ class FlightUdfClient:
 
 
 # ---------------------------------------------------------------------------
-# module-level server lifecycle (one per driver process, ephemeral port)
+# module-level server lifecycle (one per registry object, ephemeral port)
 # ---------------------------------------------------------------------------
 
-_server: Optional[UdfFlightServer] = None
-_server_uri: Optional[str] = None
+#: id(registry) -> (registry, server, uri); holding the registry keeps its
+#: id from being reused while the server lives (``Registry`` is unhashable)
+_servers: dict[int, tuple[Registry, UdfFlightServer, str]] = {}
 _lock = threading.Lock()
 
 
 def serve_registry(registry: Registry, host: str = "127.0.0.1") -> str:
-    """Start (once) a background Flight server hosting every scalar function
-    of ``registry``; returns its grpc URI."""
-    global _server, _server_uri
+    """Serve every scalar and table function of ``registry`` from a
+    background Flight server, started on the first call for this registry
+    object; returns its grpc URI.  Every call re-reads ``registry``, so
+    functions added or redefined since the last call are served."""
     with _lock:
-        if _server_uri is None:
+        if id(registry) not in _servers:
             srv = UdfFlightServer(f"grpc://{host}:0")
-            for f in registry.all():
-                if isinstance(f, ScalarFunction):
-                    srv.add_function(f)
-                elif isinstance(f, TableFunction):
-                    srv.add_table_function(f)
             threading.Thread(target=srv.serve, daemon=True).start()
-            _server = srv
-            _server_uri = f"grpc://{host}:{srv.port}"
-    return _server_uri
+            _servers[id(registry)] = (registry, srv, f"grpc://{host}:{srv.port}")
+        _, srv, uri = _servers[id(registry)]
+        srv.host(registry.all())
+    return uri
+
+
+def _discover(
+    uri: str, name: str, cols: Sequence[str]
+) -> tuple[list[pa.Field], list[T.StructField]]:
+    """The remote function's advertised input fields and its result fields
+    as Spark fields, read from its flight info (input + output fields,
+    total_records = arg count); raises ``ValueError`` unless ``cols`` has
+    one column per argument.  Extension-typed results (reference
+    arrowudf.decimal / arrowudf.json) cross as their storage type (utf8)."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    disco = FlightUdfClient(uri)
+    try:
+        full_schema, n_args = disco.function_info(name)
+    finally:
+        disco.close()
+    if n_args != len(cols):
+        raise ValueError(f"{name} takes {n_args} args, got {len(cols)}")
+    fields = list(full_schema)
+    return fields[:n_args], [
+        T.StructField(f.name, from_arrow_type(_storage_type(f.type)))
+        for f in fields[n_args:]
+    ]
+
+
+def _exchange(
+    uri: str, name: str, in_fields: list, n_pt: int, batches: Iterator[pa.RecordBatch]
+) -> Iterator[tuple[pa.RecordBatch, pa.Table]]:
+    """One partition's calls over one client: each input batch's argument
+    columns (those after the ``n_pt`` passthrough columns) are wrapped as
+    the advertised input types and sent; yields ``(batch, result)``."""
+    client = FlightUdfClient(uri)
+    try:
+        for batch in batches:
+            wrapped = [
+                _wrap_for_server(batch.column(n_pt + i), f)
+                for i, f in enumerate(in_fields)
+            ]
+            args = pa.RecordBatch.from_arrays(
+                wrapped, names=[f"arg{i}" for i in range(len(in_fields))]
+            )
+            yield batch, client.call(name, args)
+    finally:
+        client.close()
 
 
 def remote_scalar(
@@ -340,59 +360,22 @@ def remote_scalar(
 ) -> DataFrame:
     """Evaluate a remote scalar function over ``df`` via Arrow Flight.
 
-    The result schema is *discovered* from the server's flight info (its
-    advertised schema is input fields + output fields, with total_records
-    = arg count).  Executors stream their Arrow batches through one
-    ``do_exchange`` per partition; results are zipped back onto the
-    passthrough columns.
+    The result schema is *discovered* from the server's flight info.
+    Executors stream their Arrow batches through one ``do_exchange`` per
+    partition; results are zipped back onto the passthrough columns.
     """
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    cols = list(cols)
-    passthrough = list(passthrough)
-
-    disco = FlightUdfClient(uri)
-    full_schema, n_args = disco.function_info(name)
-    disco.close()
-    if n_args != len(cols):
-        raise ValueError(f"{name} takes {n_args} args, got {len(cols)}")
-    in_fields = list(full_schema)[:n_args]
-    result_fields = list(full_schema)[n_args:]
-
-    # extension-typed fields (reference arrowudf.decimal / arrowudf.json)
-    # cross into Spark as their storage type (utf8)
-    out_fields = [T.StructField(c, df.schema[c].dataType) for c in passthrough]
-    out_fields.extend(
-        T.StructField(f.name, from_arrow_type(_storage_type(f.type)))
-        for f in result_fields
-    )
-    out_schema = T.StructType(out_fields)
+    in_fields, result_fields = _discover(uri, name, cols)
     n_pt = len(passthrough)
+    pt_fields = [T.StructField(c, df.schema[c].dataType) for c in passthrough]
+    out_schema = T.StructType(pt_fields + result_fields)
 
-    def exchange(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        client = FlightUdfClient(uri)
-        try:
-            for batch in batches:
-                wrapped = [
-                    _wrap_for_server(batch.column(n_pt + i), in_fields[i])
-                    for i in range(len(cols))
-                ]
-                args = pa.RecordBatch.from_arrays(
-                    wrapped, names=[f"arg{i}" for i in range(len(cols))]
-                )
-                result = client.call(name, args)
-                res_cols = [batch.column(i) for i in range(n_pt)]
-                res_cols.extend(
-                    _unwrap_ext(result.column(i).combine_chunks())
-                    for i in range(result.num_columns)
-                )
-                yield pa.RecordBatch.from_arrays(
-                    res_cols, names=[f.name for f in out_fields]
-                )
-        finally:
-            client.close()
+    def gather(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch, result in _exchange(uri, name, in_fields, n_pt, batches):
+            res_cols = batch.columns[:n_pt]
+            res_cols += [_unwrap_ext(c.combine_chunks()) for c in result.columns]
+            yield pa.RecordBatch.from_arrays(res_cols, names=out_schema.names)
 
-    return df.select(*(passthrough + cols)).mapInArrow(exchange, schema=out_schema)
+    return df.select(*passthrough, *cols).mapInArrow(gather, schema=out_schema)
 
 
 def remote_table(
@@ -411,58 +394,18 @@ def remote_table(
     side.  Without passthrough, the batch-local ``row`` index is emitted
     (the reference's exact shape).
     """
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    cols = list(cols)
-    passthrough = list(passthrough)
-
-    disco = FlightUdfClient(uri)
-    full_schema, n_args = disco.function_info(name)
-    disco.close()
-    if n_args != len(cols):
-        raise ValueError(f"{name} takes {n_args} args, got {len(cols)}")
-    in_fields = list(full_schema)[:n_args]
-    result_fields = list(full_schema)[n_args:]  # row, value, [error]
-    value_fields = result_fields[1:]
-
-    if passthrough:
-        out_fields = [T.StructField(c, df.schema[c].dataType) for c in passthrough]
-    else:
-        out_fields = [T.StructField("row", T.IntegerType())]
-    out_fields.extend(
-        T.StructField(f.name, from_arrow_type(_storage_type(f.type)))
-        for f in value_fields
-    )
-    out_schema = T.StructType(out_fields)
+    in_fields, result_fields = _discover(uri, name, cols)  # row, value, [error]
     n_pt = len(passthrough)
+    pt_fields = [T.StructField(c, df.schema[c].dataType) for c in passthrough]
+    out_schema = T.StructType(
+        (pt_fields or [T.StructField("row", T.IntegerType())]) + result_fields[1:]
+    )
 
-    def exchange(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        client = FlightUdfClient(uri)
-        try:
-            for batch in batches:
-                wrapped = [
-                    _wrap_for_server(batch.column(n_pt + i), in_fields[i])
-                    for i in range(len(cols))
-                ]
-                args = pa.RecordBatch.from_arrays(
-                    wrapped, names=[f"arg{i}" for i in range(len(cols))]
-                )
-                result = client.call_table_function(name, args)
-                row_idx = result.column(0).combine_chunks()
-                if passthrough:
-                    res_cols = [
-                        batch.column(i).take(row_idx) for i in range(n_pt)
-                    ]
-                else:
-                    res_cols = [row_idx]
-                res_cols.extend(
-                    _unwrap_ext(result.column(i).combine_chunks())
-                    for i in range(1, result.num_columns)
-                )
-                yield pa.RecordBatch.from_arrays(
-                    res_cols, names=[f.name for f in out_fields]
-                )
-        finally:
-            client.close()
+    def gather(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch, result in _exchange(uri, name, in_fields, n_pt, batches):
+            row = result.column(0).combine_chunks()
+            res_cols = [c.take(row) for c in batch.columns[:n_pt]] or [row]
+            res_cols += [_unwrap_ext(c.combine_chunks()) for c in result.columns[1:]]
+            yield pa.RecordBatch.from_arrays(res_cols, names=out_schema.names)
 
-    return df.select(*(passthrough + cols)).mapInArrow(exchange, schema=out_schema)
+    return df.select(*passthrough, *cols).mapInArrow(gather, schema=out_schema)

@@ -44,7 +44,6 @@ __all__ = [
     "session_agg",
     "stream_interval_join",
     "streaming_running_agg",
-    "streaming_running_agg_tws",
     "sliding_window_agg",
     "streaming_dedup",
 ]
@@ -191,73 +190,6 @@ def streaming_running_agg(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def streaming_running_agg_tws(
-    df: DataFrame,
-    agg: AggregateFunction,
-    by: Sequence[str],
-    args: Sequence[str],
-) -> DataFrame:
-    """:func:`streaming_running_agg` on Spark 4's ``transformWithState``
-    API (the successor to ``applyInPandasWithState``): the pickled UDAF
-    state lives in a named ``ValueState`` managed by the state store, and
-    the processor object carries the aggregate protocol (create/
-    accumulate[_batch]/finish) — same semantics, second (forward-looking)
-    execution layer.  At scale this is the API whose state store supports
-    RocksDB changelog checkpointing and per-state TTL.
-
-    Environment note: executing the plan requires the ``protobuf`` Python
-    package (Spark's transformWithState state-server protocol); this
-    function raises ``ImportError`` up front when it is missing rather
-    than letting the streaming query crash mid-run.
-    """
-    try:
-        import google.protobuf  # noqa: F401  (runtime dep of the TWS protocol)
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package at "
-            "runtime; it is not installed in this environment — use "
-            "streaming_running_agg (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    by, args = list(by), list(args)
-    out_schema = T.StructType(
-        [df.schema[c] for c in by]
-        + [T.StructField(agg.sig.name, agg.result_field.dtype)]
-    )
-    create, fold, finish = agg.create_state, agg._folder(), agg.finish
-    name = agg.sig.name
-
-    class _Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg_state", _state_schema())
-
-        def handleInputRows(self, key, rows, timerValues):
-            st = (
-                pickle.loads(self._state.get()[0])
-                if self._state.exists()
-                else create()
-            )
-            for pdf in rows:
-                st = _fold_all(fold, st, _columns(pdf, args), len(pdf))
-            self._state.update((pickle.dumps(st),))
-            value = finish(st) if finish is not None else st
-            yield pd.DataFrame([dict(zip(by, key)) | {name: value}])
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*by).transformWithStateInPandas(
-        _Proc(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -332,7 +332,9 @@ def test_wide_int_batch_scalar(spark):
 
 
 def test_wide_int_batch_table_function(spark):
-    """The same exact view reaches a ``pd.Series`` ``batch_fn``."""
+    """The same exact view reaches a ``pd.Series`` ``batch_fn``, through
+    ``.apply`` and through the Flight server, which runs the same
+    table-function evaluator (``batch_fn`` included)."""
     reg = Registry()
 
     @udtf(input_types=["bigint"], result_type="bigint", name="neg_rows", registry=reg)
@@ -340,7 +342,11 @@ def test_wide_int_batch_table_function(spark):
         if x is not None:
             yield -x
 
+    #: batch sizes seen in this process; the Spark path runs in workers
+    batch_calls = []
+
     def neg_rows_batch(xs: pd.Series):
+        batch_calls.append(len(xs))
         return [[] if pd.isna(v) else [-v] for v in xs.tolist()]
 
     neg_rows.vectorize(neg_rows_batch)
@@ -348,6 +354,19 @@ def test_wide_int_batch_table_function(spark):
     df = spark.createDataFrame(list(enumerate(WIDE)), "id bigint, x bigint").coalesce(1)
     got = {r.id: r.neg_rows for r in neg_rows.apply(df, cols=["x"], passthrough=["id"]).collect()}
     assert got == {0: NEG_WIDE[0], 2: NEG_WIDE[2]}
+
+    pytest.importorskip("pyarrow.flight")
+    from arrow_udf_spark.sources.flight import FlightUdfClient, serve_registry
+
+    c = FlightUdfClient(serve_registry(reg))
+    try:
+        x = pa.array(WIDE, pa.int64())
+        out = c.call_table_function("neg_rows", pa.RecordBatch.from_arrays([x], ["arg0"]))
+    finally:
+        c.close()
+    assert out.column("row").to_pylist() == [0, 2]
+    assert out.column("neg_rows").to_pylist() == [NEG_WIDE[0], NEG_WIDE[2]]
+    assert batch_calls == [3]
 
 
 def test_wide_int_flight_server():

@@ -211,6 +211,55 @@ def test_remote_table_function(spark):
     lrows = sorted((r.k, r.series) for r in local.collect())
     assert rows == lrows
 
+    # no passthrough: ``row`` is the input row's index in its batch (one
+    # partition, so one batch)
+    one = df.coalesce(1)
+    got = remote_table(one, uri, "series", cols=["n"])
+    assert got.columns == ["row", "series"]
+    rows = sorted((r.row, r.series) for r in got.collect())
+    assert rows == [(0, 0), (0, 1), (0, 2), (2, 0), (2, 1)]
+    local = C.series.apply(one, cols=["n"])
+    assert sorted((r.row, r.series) for r in local.collect()) == rows
+
+
+def test_serve_registry_serves_its_registry():
+    """``serve_registry`` serves the registry it is given, one server per
+    registry object, and each call re-reads it: a function added or
+    redefined after the first call is served by the same server."""
+    pytest.importorskip("pyarrow.flight")
+    import pyarrow as pa
+
+    from arrow_udf_spark.sources.flight import FlightUdfClient, serve_registry
+
+    reg = Registry()
+
+    @udf(input_types=["bigint"], result_type="bigint", name="plus_one", registry=reg)
+    def plus_one(x):
+        return x + 1
+
+    uri = serve_registry(reg)
+    assert uri != serve_registry(GLOBAL)
+
+    @udf(input_types=["bigint"], result_type="bigint", name="plus_two", registry=reg)
+    def plus_two(x):
+        return x + 2
+
+    @udf(input_types=["bigint"], result_type="bigint", name="plus_one", registry=reg)
+    def plus_one_again(x):
+        return x + 10
+
+    assert serve_registry(reg) == uri
+    c = FlightUdfClient(uri)
+    try:
+        assert sorted(c.list_functions()) == [
+            "plus_one", "plus_one__bigint", "plus_two", "plus_two__bigint"
+        ]
+        x = pa.RecordBatch.from_arrays([pa.array([1, 2], pa.int64())], ["arg0"])
+        assert c.call("plus_one", x).column(0).to_pylist() == [11, 12]
+        assert c.call("plus_two", x).column(0).to_pylist() == [3, 4]
+    finally:
+        c.close()
+
 
 def test_remote_table_function_fallible(spark):
     from arrow_udf_spark import GLOBAL

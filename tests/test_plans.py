@@ -594,7 +594,7 @@ def test_one_column_view():
     ]
     assert not hits, hits
     src = (root / "streaming/stateful.py").read_text()
-    folds = {"streaming_running_agg", "streaming_running_agg_tws", "sliding_window_agg"}
+    folds = {"streaming_running_agg", "sliding_window_agg"}
     for node in ast.parse(src).body:
         if isinstance(node, ast.FunctionDef) and node.name in folds:
             body = ast.get_source_segment(src, node)
@@ -602,6 +602,54 @@ def test_one_column_view():
             assert "_fold_all(" in body, node.name
             folds.discard(node.name)
     assert not folds, folds
+
+
+def test_one_table_fan_out():
+    """One table-function evaluator for every front: ``_fan_out`` (the row
+    path) is referenced once, by ``TableFunction.evaluator``, which both
+    ``TableFunction.apply`` and the Flight server's ``_exchange_table``
+    call; the server has one schema builder (no ``_tf_schemas``) and no
+    function or dataclass takes a ``chunk_size``."""
+    import ast
+    from pathlib import Path
+
+    import arrow_udf_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    fan_out_refs, calls, knobs = [], {}, []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        scopes = [(n.name, n) for n in tree.body if isinstance(n, ast.FunctionDef)]
+        scopes += [
+            (f"{c.name}.{m.name}", m)
+            for c in tree.body
+            if isinstance(c, ast.ClassDef)
+            for m in c.body
+            if isinstance(m, ast.FunctionDef)
+        ]
+        for qual, fn in scopes:
+            calls[(rel, qual)] = {
+                c.func.attr if isinstance(c.func, ast.Attribute) else c.func.id
+                for c in ast.walk(fn)
+                if isinstance(c, ast.Call) and isinstance(c.func, (ast.Name, ast.Attribute))
+            }
+            fan_out_refs += [
+                (rel, qual)
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Name) and n.id == "_fan_out"
+            ]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef):
+                args = node.args.args + node.args.kwonlyargs
+                knobs += [f"{rel}:{node.name}" for a in args if a.arg == "chunk_size"]
+            elif isinstance(node, ast.AnnAssign) and ast.unparse(node.target) == "chunk_size":
+                knobs.append(f"{rel}:{node.lineno}")
+    assert fan_out_refs == [("operators/table.py", "TableFunction.evaluator")]
+    assert "evaluator" in calls[("operators/table.py", "TableFunction.apply")]
+    assert "evaluator" in calls[("sources/flight.py", "UdfFlightServer._exchange_table")]
+    assert not [q for r, q in calls if r == "sources/flight.py" and "_tf_schemas" in q]
+    assert not knobs, knobs
 
 
 def test_one_table_reader():

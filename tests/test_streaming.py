@@ -273,39 +273,3 @@ def test_stream_interval_join_matches_across_batches(spark, tmp_path):
     )
     assert got == batch == [(1, 10), (2, 11)]
 
-
-def test_tws_running_agg_matches_batch_or_skips(spark, stream_dir):
-    """streaming_running_agg_tws (transformWithState, the Spark-4 successor
-    API) matches the batch aggregate when the runtime supports it; in
-    environments without the `protobuf` package (this container) it must
-    refuse up front with ImportError, not crash the streaming query."""
-    import uuid
-
-    from arrow_udf_spark.streaming.stateful import streaming_running_agg_tws
-
-    ev = spark.read.parquet(stream_dir).select("event_type", "value")
-    stream = spark.readStream.schema(ev.schema).parquet(stream_dir)
-    try:
-        out = streaming_running_agg_tws(
-            stream, SumAgg, by=["event_type"], args=["value"]
-        )
-    except ImportError as e:
-        assert "protobuf" in str(e)
-        pytest.skip("transformWithState runtime dep (protobuf) not installed")
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r[0]: r[1] for r in spark.sql(f"SELECT * FROM {name}").collect()}
-    exp = {
-        r[0]: r[1]
-        for r in ev.groupBy("event_type").agg(F.sum("value")).collect()
-    }
-    assert set(got) == set(exp)
-    for k in exp:
-        assert abs(got[k] - exp[k]) < 1e-6
